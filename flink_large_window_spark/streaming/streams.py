@@ -155,10 +155,8 @@ def ingest_chunk(buf, chunk, ts_col, id_col, cls_col, val_col=None):
     contract lives in one place, like :func:`split_by_watermark`."""
     uss = (chunk[ts_col].astype("int64") // 1_000).tolist()
     eids = chunk[id_col].tolist()
-    clss = [
-        None if c is None or (isinstance(c, float) and c != c) else c
-        for c in chunk[cls_col].tolist()
-    ]
+    clss = chunk[cls_col].to_numpy(dtype=object, copy=True)
+    clss[pd.isna(clss)] = None  # None, float NaN and pd.NA (string[pyarrow])
     if val_col is None:
         vs = [None] * len(uss)
     else:
@@ -168,7 +166,7 @@ def ingest_chunk(buf, chunk, ts_col, id_col, cls_col, val_col=None):
             .to_numpy(dtype="float64", na_value=float("nan"))
             .tolist()
         ]
-    buf.extend(zip(uss, eids, clss, vs))
+    buf.extend(zip(uss, eids, clss.tolist(), vs))
 
 
 def hold_timer_ms(hold, wm_ms):

@@ -87,11 +87,12 @@ class _FakeGroupState:
 
 
 def _replay(rows, pat: Pattern, n_batches: int, seed: int,
-            compile_fn=compile_stream):
+            compile_fn=compile_stream, cls_dtype=None):
     """Replay `rows` through the compiled handler in n_batches
     event-time-ordered cuts; returns the emitted tuples
     (user, anchor_event, n_<step>..., pattern_start_us,
-    pattern_end_us)."""
+    pattern_end_us). ``cls_dtype`` casts the event_type column of
+    every chunk (None keeps pandas' object inference)."""
     handler, out_schema, _ = compile_fn(pat)
     rng = np.random.default_rng(seed)
     ordered = sorted(rows, key=lambda r: (r[1], r[2]))  # global ts order
@@ -126,6 +127,8 @@ def _replay(rows, pat: Pattern, n_batches: int, seed: int,
                     "value": [e[4] for e in ev],
                 }
             )
+            if cls_dtype is not None:
+                df["event_type"] = df["event_type"].astype(cls_dtype)
             chunks = iter([df])
         else:
             chunks = iter([])
@@ -312,6 +315,31 @@ def test_suffix_stream_fuzz_matches_anchor_filtered_reference():
             assert want, f"degenerate suffix sweep for {pat.steps}"
             n_checked += 1
     assert n_checked == 2 * len(SUFFIX_PATTERNS)
+
+
+def test_pd_na_class_column_folds_like_none():
+    """A ``string[pyarrow]`` class column carries NULL as ``pd.NA``,
+    which is neither None nor a float NaN: ``ingest_chunk`` must
+    decode it to None, or the suffix machine's ``cls in anchor_clses``
+    raises TypeError on NA's ambiguous truth value. Both CEP machines
+    that share the decode emit exactly what the None input emits."""
+    rows = [
+        (u, ts, eid, None if eid % 5 == 0 else cls, val)
+        for u, ts, eid, cls, val in _random_streams(
+            n_users=120, max_len=14, seed=23,
+        )
+    ]
+    for compile_fn, pat in (
+        (compile_stream, STREAM_FUZZ_PATTERNS[0]),
+        (compile_suffix_stream, SUFFIX_PATTERNS[0]),
+    ):
+        want, _ = _replay(rows, pat, 3, 5, compile_fn=compile_fn)
+        got, _ = _replay(
+            rows, pat, 3, 5, compile_fn=compile_fn,
+            cls_dtype="string[pyarrow]",
+        )
+        assert want, f"degenerate replay for {compile_fn.__name__}"
+        assert list(map(repr, got)) == list(map(repr, want))
 
 
 def test_pending_state_machines_fuzz_match_bruteforce():
