@@ -1,25 +1,22 @@
-"""SURVEY.md §2 contract key list, in §2 table order.
-
-The driver's correctness checker walks ``queries()`` in dict-insertion
-order and may stop before exhausting all registered keys (round 1 it
-checked exactly the first 50 of 155 — CORRECTNESS_r01.json). The graded
-contract is the 76 §2 rows, so ``api.queries()`` / ``api.oracle_sql()``
-emit these keys FIRST, in this exact order, followed by every extra key
-in module-registration order. ``tests/test_contract.py`` pins the prefix
-so a future module reshuffle cannot silently push contract rows out of
-the driver's checked window.
-
-Source of truth: SURVEY.md §2.1–§2.10 tables (5+5+12+11+7+6+8+3+9+10
-= 76 rows; the "66" in the §2 prose was a typo, corrected round 2).
-"""
+"""SURVEY.md §2.1–§2.10 contract keys (5+5+12+11+7+6+8+3+9+10 = 76) and
+the driver order of ``queries()``. The driver checks only the first
+``DRIVER_PREFIX_BUDGET`` keys, so that prefix decides which keys get
+fresh evidence; :func:`ledger` computes it from the committed
+``CORRECTNESS_r<N>.json`` files and git history."""
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import re
+import subprocess
+from collections.abc import Iterable
+
+from .registry import REGISTRY
+
 # The driver's correctness checker walks queries() in dict order and
 # stops after exactly this many keys (observed every round since r1).
-# Single source of truth — tests/test_contract.py and
-# tools/staleness.py's window guard both import it, so a renegotiated
-# budget cannot leave the guard validating the wrong prefix.
 DRIVER_PREFIX_BUDGET = 50
 
 CONTRACT_KEYS: tuple[str, ...] = (
@@ -114,632 +111,90 @@ CONTRACT_KEYS: tuple[str, ...] = (
 assert len(CONTRACT_KEYS) == 76, len(CONTRACT_KEYS)
 assert len(set(CONTRACT_KEYS)) == 76, "duplicate contract key"
 
-# Keys with a driver-recorded CORRECTNESS row from earlier rounds
-# (union of CORRECTNESS_r01..r03.json — the driver checks an
-# exactly-50-key prefix per round, observed all three rounds).
-# r02 covered contract rows 1–50, r03 covered rows 51–76 plus the
-# round-3 priority extras, r01 covered the extras below. The prefix
-# rotates each round so the union of per-round CORRECTNESS files
-# converges on full coverage of all registered keys.
-_R01_EXTRAS: frozenset[str] = frozenset(
-    {
-        "agg_approx_percentile", "agg_bool", "agg_corr_covar",
-        "agg_grouping_id", "agg_histogram_fixed", "agg_mode_per_group",
-        "agg_string_agg", "join_asof_forward",
-        "join_dynamic_partition_pruning", "join_interval_banded",
-        "join_null_safe", "join_strategy_hints", "q3_shipping_priority",
-        "q5_local_supplier", "scan_file_metadata",
-        "sink_parquet_partitioned", "sql_entry_exists",
-    }
-)
-_R03_EXTRAS: frozenset[str] = frozenset(
-    {
-        "dedup_simhash", "dedup_simhash_hamming", "dedup_embed_cosine",
-        "dedup_embed_cosine_ivf", "dedup_cluster_cc",
-        "dedup_ngram_jaccard", "sim_ann_ivf_topk", "emb_kmeans_assign",
-        "text_quality_score", "text_token_count_bpe",
-        "text_fingerprint_rolling", "llm_corpus_pipeline",
-        "corpus_contamination_check", "corpus_mix_rebalance",
-        "corpus_pack_chunks", "agg_hll_sketch_merge", "ts_anomaly_zscore",
-        "winfn_running_distinct", "window_session_dynamic_gap",
-        "window_cascading_rollup", "window_sliding_agg_prebucket",
-        "pattern_detect_cep", "q10_returned_items", "q18_large_volume",
-    }
-)
-_R04_EXTRAS: frozenset[str] = frozenset(
-    {
-        "agg_bitwise_flags", "agg_distinct_multi", "agg_regression",
-        "agg_skew_kurtosis_pinned", "dedup_embed_cosine_ivf",
-        "emb_kmeans_assign", "join_asof_nearest",
-        "pattern_detect_followedby", "pivot_event_counts",
-        "q12_priority_class", "q13_customer_distribution",
-        "q14_promo_effect", "q15_top_supplier", "q17_small_quantity",
-        "q19_discounted_revenue", "q21_waiting_supplier",
-        "q22_global_sales", "q4_order_priority", "q6_forecast_revenue",
-        "q7_volume_shipping", "q8_market_share", "q9_product_profit",
-        "sample_hash_bernoulli", "sample_reservoir_hash",
-        "sample_stratified_hash", "scalar_bitwise", "scalar_hash",
-        "scalar_interval_arith", "scalar_json_struct",
-        "scalar_try_arith", "set_except_all", "set_intersect_all",
-        "sim_ann_ivf_multiprobe", "sim_ann_ivf_topk",
-        "sort_within_partitions", "ts_ewma_daily",
-        "ts_funnel_conversion", "ts_ohlc_bars", "ts_resample_gapfill",
-        "ts_retention_cohort", "udf_group_map_zscore",
-        "udtf_python_chunks", "unpivot_part_metrics",
-        "window_count_sliding", "window_count_tumbling",
-        "window_tumbling_offset", "winfn_first_ignore_nulls",
-        "winfn_moving_stddev", "winfn_nth_value",
-        "winfn_percent_rank_cume",
-    }
-)
-_R05_EXTRAS: frozenset[str] = frozenset(
-    {
-        "join_asof_tolerance", "join_bucketed_noshuffle",
-        "join_interval_stream", "join_skew_salted",
-        "join_window_tumbling_stream", "multimodal_blob_features",
-        "multimodal_embed_quantize", "multimodal_frame_sample",
-        "pattern_detect_notfollowedby", "pattern_detect_oneormore",
-        "pattern_detect_times", "scan_schema_evolution",
-        "source_csv_roundtrip", "source_jsonl_roundtrip",
-        "source_orc_roundtrip", "stateful_count_session_stream",
-        "stateful_session_timeout_stream", "stream_allowed_lateness_reemit",
-        "stream_foreachbatch_upsert", "stream_late_drop",
-        "stream_static_enrich", "stream_stream_full_outer",
-        "stream_stream_left_outer", "stream_watermark_skew",
-        "text_langid_ngram", "watermark_dedup_stream",
-        "window_early_fire_stream", "window_large_day_stream",
-        "window_session_agg_stream", "window_sliding_agg_stream",
-        "window_tumbling_agg_stream",
-    }
-)
-# round 6 first exposure (CORRECTNESS_r06.json): the six keys added
-# that round — everything else in the r6 window was a re-check.
-_R06_EXTRAS: frozenset[str] = frozenset(
-    {
-        "q2_min_cost_supplier", "q11_important_stock",
-        "q16_supplier_variety", "q20_excess_stock",
-        "stream_checkpoint_restart", "stream_rule_update_enrich",
-    }
-)
-# round 10 first exposure (CORRECTNESS_r10.json): the two CEP-compiler
-# showcase keys added late r10 — never-stamped leads of the r10 window.
-_R10_EXTRAS: frozenset[str] = frozenset(
-    {"pattern_match_recognize", "pattern_match_recognize_stream"}
-)
-# round 11 first exposure (CORRECTNESS_r11.json): the alternation
-# showcase added late r11, appended as the r11 window's 50th key.
-_R11_EXTRAS: frozenset[str] = frozenset({"pattern_match_alternation"})
-# round 12 first exposure (CORRECTNESS_r12.json): the twenty-one
-# never-stamped round-12 leads — the CEP extension wave (guards,
-# optional steps, skip strategies, each batch+stream, plus the
-# alternation stream twin), the state-TTL demonstration,
-# exact-substring dedup, the Gopher-repetition signals, and the
-# late-round streaming wave.
-_R12_EXTRAS: frozenset[str] = frozenset(
-    {
-        "dedup_substring", "join_asof_stream",
-        "pattern_detect_followedby_stream",
-        "pattern_detect_notfollowedby_stream",
-        "pattern_detect_oneormore_stream", "pattern_detect_times_stream",
-        "pattern_detect_value_guard", "pattern_detect_value_guard_stream",
-        "pattern_match_afterskip", "pattern_match_afterskip_stream",
-        "pattern_match_alternation_stream", "pattern_match_optional",
-        "pattern_match_optional_stream", "stateful_session_ttl_stream",
-        "text_repetition_stats", "ts_ohlc_bars_stream",
-        "window_cascading_rollup_stream", "window_count_tumbling_stream",
-        "window_session_dynamic_gap_stream", "window_topn_stream",
-        "window_tumbling_offset_stream",
-    }
-)
-# round 13 first exposure (CORRECTNESS_r13.json): the fourteen
-# never-stamped round-13 leads — the guard-composition showcases,
-# optional x skip, followedByAny, the timed-out-partials side output,
-# the sliding count window's stream twin, the statestore reader, and
-# middle negation (each batch+stream where applicable).
-_R13_EXTRAS: frozenset[str] = frozenset(
-    {
-        "pattern_match_optional_guard", "pattern_match_optional_guard_stream",
-        "pattern_match_skipguard", "pattern_match_skipguard_stream",
-        "pattern_detect_followedbyany", "pattern_detect_followedbyany_stream",
-        "pattern_timeout_partial", "pattern_timeout_partial_stream",
-        "window_count_sliding_stream", "pattern_match_optional_skip",
-        "pattern_match_optional_skip_stream", "stream_state_reader",
-        "pattern_detect_followedby_nobetween",
-        "pattern_detect_followedby_nobetween_stream",
-    }
-)
-# round 14 first exposure (CORRECTNESS_r14.json): the six
-# never-stamped round-14 leads — the run-close emission pairs
-# (final-step exact / non-'first' final guard, batch+stream), the
-# composite windowed-state reader, and the per-event suffix machine's
-# showcase twin.
-_R14_EXTRAS: frozenset[str] = frozenset(
-    {
-        "pattern_detect_times_exact", "pattern_detect_times_exact_stream",
-        "pattern_match_finalguard", "pattern_match_finalguard_stream",
-        "stream_state_reader_window", "pattern_detect_cep_stream",
-    }
-)
-# round 15 first exposure (CORRECTNESS_r15.json): the six
-# never-stamped round-15 leads — the oneOrMore().until() pair
-# (batch+stream), the automaton-state reader, the repeat_group
-# nested-group pair, and the session-window state reader. All six
-# passed rows+schema+hash in the r15 driver sweep (VERDICT r15).
-_R15_EXTRAS: frozenset[str] = frozenset(
-    {
-        "pattern_detect_until", "pattern_detect_until_stream",
-        "stream_state_reader_automaton", "pattern_detect_group_times",
-        "pattern_detect_group_times_stream", "stream_state_reader_session",
-    }
-)
-DRIVER_CHECKED: frozenset[str] = (
-    frozenset(CONTRACT_KEYS)
-    | _R01_EXTRAS
-    | _R03_EXTRAS
-    | _R04_EXTRAS
-    | _R05_EXTRAS
-    | _R06_EXTRAS
-    | _R10_EXTRAS
-    | _R11_EXTRAS
-    | _R12_EXTRAS
-    | _R13_EXTRAS
-    | _R14_EXTRAS
-    | _R15_EXTRAS
-)
-
-# Round 16 rotation (OPTIMIZATION round 2 — VERDICT r15 items 1, 8;
-# derived with tools/staleness.py, evidence capped at r15). First the
-# FOURTEEN behavioral re-stamps for this round's optimization churn,
-# each tri-SF hash-verified + bare hostile-tz driven at change time:
-# the partsupp quartet (supplier-count footer literal in both Spark
-# derive forms), emb_kmeans_assign (single-expr reduce build + column
-# pruning), the five single-spark.sql renders (sim_cosine_topk,
-# sim_ann_ivf_topk, join_asof, agg_hash_grouped, text_quality_score,
-# text_tfidf_topterms — six keys), dedup_embed_cosine (mapInArrow
-# score), and the two throughput-gated CEP machines (vectorized
-# ingest_chunk decode — the shared-launcher re-stamp convention from
-# r15's apply_until precedent). Then the rows-only SEXTET, due per
-# the 2-round cadence promised in the r15 ledger note (VERDICT r15
-# item 8 — the judge checks these by name). The remaining THIRTY
-# slots drain the OLDEST driver evidence in the registry: all
-# fifteen r7-evidence aggregations.py keys + the two r7-evidence
-# joins.py keys, the seven r8-evidence keys, and six of the eight
-# r9-evidence joins.py keys (join_right_outer/join_theta_range carry
-# the ledger with the joins.py cohort rationale). After this sweep no
-# SQL-oracle key's evidence predates r9. Exactly 50.
-#
-# LEDGER NOTE: the rows-only sextet re-stamps THIS round; by the
-# 2-round cadence it is next due ~r18.
-RECHECK_KEYS: tuple[str, ...] = (
-    # behavioral re-stamps — r16 optimization churn (leads)
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q16_supplier_variety",
-    "q20_excess_stock",
-    "emb_kmeans_assign",
-    "sim_cosine_topk",
-    "sim_ann_ivf_topk",
-    "join_asof",
-    "agg_hash_grouped",
-    "text_quality_score",
-    "text_tfidf_topterms",
-    "dedup_embed_cosine",
-    "pattern_detect_cep_stream",
-    "pattern_detect_oneormore_stream",
-    # rows-only sextet (2-round cadence, promised in the r15 ledger)
-    "source_rate_stream",
-    "agg_approx_count_distinct",
-    "agg_approx_percentile",
-    "window_large_day_stream",
-    "stream_late_drop",
-    "agg_hll_sketch_merge",
-    # oldest-evidence drain: r7-stamped aggregations.py cohort (15)
-    "agg_bool",
-    "agg_collect",
-    "agg_corr_covar",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_grouping_id",
-    "agg_grouping_sets",
-    "agg_hash_global",
-    "agg_histogram_fixed",
-    "agg_mode_per_group",
-    "agg_partial_final",
-    "agg_percentile",
-    "agg_rollup",
-    "agg_stats",
-    "agg_string_agg",
-    # r7-stamped joins.py pair
-    "join_interval",
-    "join_window_tumbling",
-    # r8-stamped cohort (7)
-    "agg_bitwise_flags",
-    "agg_distinct_multi",
-    "agg_regression",
-    "agg_skew_kurtosis_pinned",
-    "join_asof_nearest",
-    "q10_returned_items",
-    "q18_large_volume",
-    # r9-stamped joins.py drain (6 of 8 — the window is full at 50)
-    "join_inner_equi",
-    "join_sortmerge_large",
-    "join_full_outer",
-    "join_left_outer",
-    "join_left_semi",
-    "join_left_anti",
-)
-
-PRIORITY_EXTRAS: tuple[str, ...] = (
-    # TPC-H battery (operators/tpch.py)
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q12_priority_class",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_discounted_revenue",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    # joins / aggregates / window functions
-    "join_asof_nearest",
-    "agg_regression",
-    "agg_skew_kurtosis_pinned",
-    "agg_distinct_multi",
-    "agg_bitwise_flags",
-    "winfn_percent_rank_cume",
-    "winfn_nth_value",
-    "winfn_moving_stddev",
-    "winfn_first_ignore_nulls",
-    "pattern_detect_followedby",
-    "set_intersect_all",
-    "set_except_all",
-    "sort_within_partitions",
-    # sampling / reshape / timeseries
-    "sample_hash_bernoulli",
-    "sample_stratified_hash",
-    "sample_reservoir_hash",
-    "pivot_event_counts",
-    "unpivot_part_metrics",
-    "ts_resample_gapfill",
-    "ts_funnel_conversion",
-    "ts_ewma_daily",
-    "ts_retention_cohort",
-    "ts_ohlc_bars",
-    # scalars / UDF surface / count windows
-    "scalar_bitwise",
-    "scalar_hash",
-    "scalar_interval_arith",
-    "scalar_json_struct",
-    "scalar_try_arith",
-    "udf_group_map_zscore",
-    "udtf_python_chunks",
-    "window_count_tumbling",
-    "window_count_sliding",
-    "window_tumbling_offset",
-    # round-4 additions (SQL oracle, hash-verified at sf0.001/0.01/0.1)
-    "sim_ann_ivf_multiprobe",
-    "join_asof_tolerance",
-    "pattern_detect_notfollowedby",
-    # round-5 additions (SQL oracle)
-    "pattern_detect_times",
-    "pattern_detect_oneormore",
-    # round-11 addition (SQL oracle): alternation under ranged
-    # quantifiers through the generic CEP compiler
-    "pattern_match_alternation",
-    # sources / physical-plan keys
-    "source_csv_roundtrip",
-    "source_jsonl_roundtrip",
-    "source_orc_roundtrip",
-    "scan_schema_evolution",
-    "join_skew_salted",
-    "join_bucketed_noshuffle",
-    # SQL-oracle streaming keys (hash-checkable despite running a
-    # real micro-batch query — promoted ahead of the rows-only tail
-    # so the driver records strong evidence for them first; VERDICT
-    # r4 "Next round" item 1)
-    "stream_static_enrich",
-    "stream_foreachbatch_upsert",
-    # rows-only batch keys (pytest-covered)
-    "text_langid_ngram",
-    "multimodal_embed_quantize",
-    "multimodal_blob_features",
-    "multimodal_frame_sample",
-    # streaming twins, slowest last (local sweep timings, r3 verdict)
-    "join_interval_stream",
-    "watermark_dedup_stream",
-    "window_tumbling_agg_stream",
-    "window_session_agg_stream",
-    "window_sliding_agg_stream",
-    "window_early_fire_stream",
-    "join_window_tumbling_stream",
-    "stream_stream_left_outer",
-    "stream_stream_full_outer",
-    "stream_late_drop",
-    "stream_watermark_skew",
-    "stream_allowed_lateness_reemit",
-    "stateful_count_session_stream",
-    "stateful_session_timeout_stream",
-    "window_large_day_stream",
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EVIDENCE_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_MARKER = re.compile(r"round (\d+): verdict")
 
 
-# SQL-oracle keys whose implementation file changed after their last
-# driver stamp but which this round's window INTENTIONALLY defers,
-# each with the justification. tools/staleness.py --check-window and
-# tests/test_contract.py::test_window_covers_changed_since_stamp_keys
-# enforce that every changed-since-stamp key is either in the window
-# or listed here — a future rewire cannot ship stamp-less again
-# (VERDICT r10 item 4; the generalization of its item 1). Entries must
-# be re-justified or drained every round: a key may not sit here with
-# a stale rationale.
-#: r16 ledger (OPTIMIZATION round 2). Every entry re-justified this
-#: round per the ledger rule. The window spends its 30 free slots on
-#: the oldest evidence in the registry (r7-r9 stamps), so the
-#: fresher-stamped cohorts below defer with the cohort convention:
-#: each names the churn, why it is covered, and the recheck round.
-_R16_JOINS_DEFERRAL = (
-    "joins.py churn is confined to join_asof (single-spark.sql render,"
-    " rows/dtypes verified identical) whose own key re-stamps in this"
-    " window; this cohort's own text is unchanged and its oldest-"
-    "evidence members (r7-r9) drain into the window (10 joins.py keys"
-    " re-stamp this round); recheck r17"
-)
-_R16_TPCH_DEFERRAL = (
-    "tpch.py churn is the partsupp supplier-count footer literal"
-    " (derived_partsupp + _partsupp_spark_cte) plus a q11 docstring"
-    " note - consumed ONLY by the quartet, all four of which re-stamp"
-    " in this window (tri-SF hash + hostile-tz drive at change time);"
-    " this cohort's own text is unchanged; recheck r17"
-)
-_R16_SIM_DEFERRAL = (
-    "similarity.py churn = single-spark.sql renders of sim_cosine_topk"
-    " and sim_ann_ivf_topk, the kmeans reduce-expression build change,"
-    " and the additive ivf_centroids_sql_ref helper (used only by"
-    " sim_ann_ivf_topk) - all three changed keys re-stamp in this"
-    " window; this cohort's own text is unchanged; recheck r17"
-)
-_R16_TEXT_DEFERRAL = (
-    "text.py churn = single-spark.sql renders of text_quality_score"
-    " and text_tfidf_topterms, both of which re-stamp in this window;"
-    " this cohort's own text is unchanged; recheck r17"
-)
-_R16_DEDUP_DEFERRAL = (
-    "dedup.py churn = dedup_embed_cosine's mapInArrow score (re-stamps"
-    " in this window; byte-identical GEMM inputs, 3-SF hash + 10x"
-    " battery at change time) plus two documentation-only edits (the"
-    " ckpt_hash_partitioned concurrency note, the transpose-parity"
-    " comment rewording); this cohort's own text is unchanged;"
-    " recheck r17"
-)
-_R16_CEP_STREAM_DEFERRAL = (
-    "cep_stream.py churn is the vectorized ingest_chunk decode inside"
-    " the two shared machine handlers - verified tuple-identical"
-    " against the old loop, fake-GroupState fuzz green, 45 parity"
-    " tests green - and the two throughput-gated machine"
-    " representatives (pattern_detect_cep_stream,"
-    " pattern_detect_oneormore_stream) re-stamp in this window (the"
-    " r15 shared-launcher precedent); this cohort's own text is"
-    " unchanged; recheck r17"
-)
-_R16_STREAMS_DEFERRAL = (
-    "streams.py churn is the APPEND-ONLY ingest_chunk helper"
-    " definition (called only by the two cep_stream machines -"
-    " behaviorally inert for every streams.py key) and the sextet"
-    " members window_large_day_stream/stream_late_drop re-stamp in"
-    " this window; this cohort's own text is unchanged; recheck r17"
-)
-_R16_CEP_DEFERRAL = (
-    "cep.py is UNCHANGED in r16; the r15 additive-compiler churn"
-    " rationale stands (its entry points were covered by the five"
-    " in-window r15 siblings, all stamped green in CORRECTNESS_r15);"
-    " evidence r14; displaced by the r7-r9 oldest-evidence drain;"
-    " recheck r17"
-)
-_R16_READERS_DEFERRAL = (
-    "readers.py is UNCHANGED in r16; the r15 churn was the Kafka"
-    " re-probe docstring refresh, and the cohort's csv/schema keys"
-    " were stamped green in the r15 window; evidence r14; displaced"
-    " by the r7-r9 oldest-evidence drain; recheck r17"
-)
-
-RECHECK_DEFERRALS: dict[str, str] = {}
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_JOINS_DEFERRAL
-        for k in (
-            "join_right_outer",
-            "join_theta_range",
-            "join_asof_tolerance",
-            "join_cross",
-            "join_asof_forward",
-            "join_interval_banded",
-            "join_null_safe",
-            "join_strategy_hints",
-            "q3_shipping_priority",
-            "q5_local_supplier",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_TPCH_DEFERRAL
-        for k in (
-            "q4_order_priority",
-            "q6_forecast_revenue",
-            "q7_volume_shipping",
-            "q8_market_share",
-            "q9_product_profit",
-            "q12_priority_class",
-            "q13_customer_distribution",
-            "q14_promo_effect",
-            "q15_top_supplier",
-            "q17_small_quantity",
-            "q19_discounted_revenue",
-            "q21_waiting_supplier",
-            "q22_global_sales",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_SIM_DEFERRAL
-        for k in ("sim_knn_join_label", "sim_ann_ivf_multiprobe")
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_TEXT_DEFERRAL
-        for k in (
-            "text_fingerprint_rolling",
-            "text_lang_stats",
-            "text_langid_ngram",
-            "text_repetition_stats",
-            "text_token_count_bpe",
-            "text_ngrams",
-            "text_tokenize_wordcount",
-            "llm_corpus_pipeline",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_DEDUP_DEFERRAL
-        for k in (
-            "dedup_exact",
-            "dedup_near_minhash",
-            "dedup_simhash",
-            "dedup_simhash_hamming",
-            "dedup_embed_cosine_ivf",
-            "dedup_substring",
-            "dedup_ngram_jaccard",
-            "dedup_cluster_cc",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_CEP_STREAM_DEFERRAL
-        for k in (
-            "pattern_match_recognize_stream",
-            "pattern_match_alternation_stream",
-            "pattern_detect_value_guard_stream",
-            "pattern_match_optional_stream",
-            "pattern_match_afterskip_stream",
-            "pattern_detect_notfollowedby_stream",
-            "pattern_detect_followedby_stream",
-            "pattern_detect_times_stream",
-            "pattern_match_optional_guard_stream",
-            "pattern_match_skipguard_stream",
-            "pattern_detect_followedbyany_stream",
-            "pattern_timeout_partial_stream",
-            "pattern_match_optional_skip_stream",
-            "pattern_detect_followedby_nobetween_stream",
-            "pattern_match_finalguard_stream",
-            "pattern_detect_times_exact_stream",
-            "pattern_detect_until_stream",
-            "pattern_detect_group_times_stream",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_STREAMS_DEFERRAL
-        for k in (
-            "join_asof_stream",
-            "stateful_session_timeout_stream",
-            "stream_allowed_lateness_reemit",
-            "stream_foreachbatch_upsert",
-            "stream_state_reader",
-            "stream_state_reader_window",
-            "stream_static_enrich",
-            "stream_watermark_skew",
-            "ts_ohlc_bars_stream",
-            "window_cascading_rollup_stream",
-            "window_session_dynamic_gap_stream",
-            "window_tumbling_offset_stream",
-            "join_interval_stream",
-            "join_window_tumbling_stream",
-            "stateful_count_session_stream",
-            "stateful_session_ttl_stream",
-            "stream_checkpoint_restart",
-            "stream_rule_update_enrich",
-            "stream_state_reader_automaton",
-            "stream_state_reader_session",
-            "stream_stream_full_outer",
-            "stream_stream_left_outer",
-            "watermark_dedup_stream",
-            "window_count_sliding_stream",
-            "window_count_tumbling_stream",
-            "window_early_fire_stream",
-            "window_session_agg_stream",
-            "window_sliding_agg_stream",
-            "window_topn_stream",
-            "window_tumbling_agg_stream",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_CEP_DEFERRAL
-        for k in (
-            "pattern_detect_times_exact",
-            "pattern_match_afterskip",
-            "pattern_match_alternation",
-            "pattern_match_finalguard",
-            "pattern_match_optional",
-            "pattern_match_optional_guard",
-            "pattern_match_recognize",
-        )
-    }
-)
-RECHECK_DEFERRALS.update(
-    {
-        k: _R16_READERS_DEFERRAL
-        for k in ("source_jsonl_roundtrip", "source_orc_roundtrip")
-    }
-)
+def _evidence_rounds(root: str) -> dict[str, int]:
+    """key -> newest round N whose ``CORRECTNESS_r<N>.json`` under
+    ``root`` checked it: a hash match, or a rows-only run (``no_oracle``
+    with a recorded row count; a 0-row result counts too)."""
+    evidence: dict[str, int] = {}
+    for m in filter(None, map(_EVIDENCE_FILE.fullmatch, os.listdir(root))):
+        with open(os.path.join(root, m.group(0))) as f:
+            rows = json.load(f)
+        for key, row in rows.items():
+            if row.get("hash_match") or (
+                row.get("err") == "no_oracle"
+                and row.get("spark_rows") is not None
+            ):
+                evidence[key] = max(evidence.get(key, 0), int(m.group(1)))
+    return evidence
 
 
-def driver_priority_order(keys) -> list[str]:
-    """Round-5 checked-prefix order over ``keys``:
-
-    1. RECHECK_KEYS (oracle upgraded this round — re-record as SQL;
-       empty in round 5);
-    2. contract keys with no driver CORRECTNESS row yet (contract order;
-       empty as of round 4, kept as a safety net);
-    3. PRIORITY_EXTRAS with no row yet (listed order);
-    4. remaining contract keys (contract order — keeps the graded rows
-       near the front even if the driver's budget grows);
-    5. everything else in original registration order.
-    """
-    keys = list(keys)
-    kset = set(keys)
-    out: list[str] = [k for k in RECHECK_KEYS if k in kset]
-    seen = set(out)
-    for k in CONTRACT_KEYS:
-        if k in kset and k not in DRIVER_CHECKED and k not in seen:
-            out.append(k)
-            seen.add(k)
-    for k in PRIORITY_EXTRAS:
-        if k in kset and k not in DRIVER_CHECKED and k not in seen:
-            out.append(k)
-            seen.add(k)
-    for k in CONTRACT_KEYS:
-        if k in kset and k not in seen:
-            out.append(k)
-            seen.add(k)
-    for k in keys:
-        if k not in seen:
-            out.append(k)
-            seen.add(k)
-    return out
+def _changed_keys(
+    root: str, files: dict[str, str], evidence: dict[str, int]
+) -> set[str]:
+    """Checked keys whose implementation file (``files``: key -> path)
+    a commit touched at or after their evidence round's ``round N:
+    verdict`` marker commit, from one ``git log``. A round with no
+    marker counts as fresh; without a git checkout nothing changed."""
+    if not os.path.exists(os.path.join(root, ".git")):
+        return set()
+    try:
+        log = subprocess.run(
+            ["git", "log", "HEAD", "--name-only", "--format=%x00%s"],
+            cwd=root, capture_output=True, text=True, check=True,
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
+        return set()
+    touched: set[str] = set()
+    since: dict[int, frozenset[str]] = {}  # round -> files touched since
+    for commit in log.split("\0")[1:]:  # newest first
+        subject, _, names = commit.partition("\n")
+        touched.update(n for n in names.splitlines() if n)
+        m = _MARKER.match(subject)
+        if m:
+            since.setdefault(int(m.group(1)), frozenset(touched))
+    return {
+        k
+        for k, path in files.items()
+        if k in evidence
+        and os.path.relpath(path, root) in since.get(evidence[k], ())
+    }
 
 
-def contract_first(mapping: dict) -> dict:
-    """Reorder ``mapping`` for the driver's prefix-limited checker (see
-    :func:`driver_priority_order`)."""
-    return {k: mapping[k] for k in driver_priority_order(mapping)}
+def driver_order(
+    keys: Iterable[str], evidence: dict[str, int], changed: set[str]
+) -> list[str]:
+    """``keys`` (in registration order) in driver order: never-checked,
+    then changed since their stamp, then the rest; older evidence first
+    within each class; ties in contract order, then registration order
+    (``sorted`` is stable)."""
+    contract_pos = {k: i for i, k in enumerate(CONTRACT_KEYS)}
+
+    def rank(k: str) -> tuple[int, int, int]:
+        cls = 0 if k not in evidence else 1 if k in changed else 2
+        return cls, evidence.get(k, 0), contract_pos.get(k, len(CONTRACT_KEYS))
+
+    return sorted(keys, key=rank)
+
+
+@functools.cache
+def ledger() -> tuple[tuple[str, int | None, bool], ...]:
+    """(key, newest evidence round or None, changed since that stamp)
+    for every registered key, in driver order. Computed once per process
+    on first use, when ``api`` has filled the registry."""
+    evidence = _evidence_rounds(_ROOT)
+    files = {k: fn.__code__.co_filename for k, fn in REGISTRY.items()}
+    changed = _changed_keys(_ROOT, files, evidence)
+    return tuple(
+        (k, evidence.get(k), k in changed)
+        for k in driver_order(REGISTRY, evidence, changed)
+    )
+
+
+def in_driver_order(mapping: dict) -> dict:
+    """``mapping`` in the driver order of :func:`ledger`."""
+    return {k: mapping[k] for k, _, _ in ledger() if k in mapping}

@@ -17,7 +17,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import query
-from ..tables import prep, register_invalidation_hook, table, table_sql_ref
+from ..tables import (
+    prep,
+    register_invalidation_hook,
+    table,
+    table_sql_ref,
+    temp_view_ref,
+)
 
 
 def _with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
@@ -229,17 +235,9 @@ _CENTROID_CACHE_CAP = 128
 def _evict_centroids(ab: str) -> None:
     for k in [k for k in _TRAINED_CENTROIDS if k[2] == ab]:
         del _TRAINED_CENTROIDS[k]
-    for k in [k for k in _CENTROID_VIEWS if k[2] == ab]:
-        del _CENTROID_VIEWS[k]
 
 
 register_invalidation_hook(_evict_centroids)
-
-
-# view-name registry for single-spark.sql queries that reference the
-# trained quantizer (optimization r16) — the temp-view analogue of
-# tables._VIEW_REGISTERED, same key shape and revalidation rule.
-_CENTROID_VIEWS: dict[tuple[str, int, str], str] = {}
 
 
 def ivf_centroids_sql_ref(spark: SparkSession, sf_dir: str) -> str:
@@ -247,28 +245,13 @@ def ivf_centroids_sql_ref(spark: SparkSession, sf_dir: str) -> str:
     single-``spark.sql``-statement IVF queries (the SCALING.md §12
     build-cost remedy). The view wraps the memoized 16-row
     LocalTableScan, so referencing it in SQL is as cheap as the
-    DataFrame handle; registration happens once per (session, dir)
-    and is revalidated against the catalog like
-    ``tables.table_sql_ref`` (an id()-reused dead session cannot
-    serve a view its catalog never held). ``tables.invalidate``
-    evicts via ``_evict_centroids`` and the next call re-registers
-    over the stale name."""
-    import hashlib
-
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        os.path.abspath(sf_dir),
+    DataFrame handle. Registered through ``tables.temp_view_ref``, so
+    it shares ``table_sql_ref``'s once-per-(session, dir) registry,
+    catalog revalidation and ``tables.invalidate`` eviction (which
+    also retrains the quantizer via ``_evict_centroids``)."""
+    return temp_view_ref(
+        spark, sf_dir, "flws_ivf_cents", lambda: ivf_centroids(spark, sf_dir)
     )
-    view = _CENTROID_VIEWS.get(key)
-    if view is not None and spark.catalog.tableExists(view):
-        return view
-    if len(_CENTROID_VIEWS) >= _CENTROID_CACHE_CAP:
-        _CENTROID_VIEWS.clear()
-    view = f"flws_ivf_cents_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
-    ivf_centroids(spark, sf_dir).createOrReplaceTempView(view)
-    _CENTROID_VIEWS[key] = view
-    return view
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -59,9 +59,11 @@ def agg_hash_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single ``spark.sql`` statement since optimization r16 (SCALING.md
     §12 build-cost remedy): the chained build cost 54–95 ms of driver
     time per call — ~20% of fixture-scale wall — for the identical
-    plan. Same expressions (integer literals promote identically; the
-    sums accumulate the same addends in the same order), rows and
-    dtypes verified equal, hash-equal at all three SFs. Interleaved
+    plan. The expressions match up to operand order: the chained build
+    planned ``(l_tax + 1.0)``, the SQL text plans ``(1.0 + l_tax)``
+    (plans/r16/agg_hash_grouped_{before,after}.txt). IEEE addition is
+    commutative, so each addend and the result are identical; rows
+    and dtypes verified equal, hash-equal at all three SFs. Interleaved
     A/B: 0.276/0.242 → 0.219/0.201 s medians, build 57 → 17 ms.
     """
     prep(spark)

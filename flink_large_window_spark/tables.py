@@ -12,6 +12,7 @@ single entry point so that layout change stays in one place.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -107,7 +108,7 @@ def _resolve_key(
     # fresh instead of inheriting views/frames it cannot see. id()
     # reuse after a dead session is NOT fully harmless for the view
     # cache (a stale hit would name a view only the dead session's
-    # catalog ever held), which is why table_sql_ref revalidates
+    # catalog ever held), which is why temp_view_ref revalidates
     # catalog visibility on every cache hit.
     return (
         spark.sparkContext.applicationId,
@@ -242,21 +243,22 @@ def row_count(sf_dir: str, name: str) -> int:
 _VIEW_REGISTERED: dict[tuple[str, int, str, str], str] = {}
 
 
-def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """FROM-able SQL reference for a fixture table, for single-
-    ``spark.sql``-statement queries (SCALING.md §12).
+def temp_view_ref(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    build: Callable[[], DataFrame],
+) -> str:
+    """Register ``build()`` — a relation derived from ``sf_dir`` — as
+    the temp view ``{prefix}_<md5-16 of the dir>`` once per
+    (application, session, dir, prefix) and return the view name.
 
-    Returns a temp-view name backed by the CACHED ``table()`` relation:
-    a temp view stores the analyzed child plan, so referencing it in
-    SQL reuses the already-resolved file index + schema instead of the
-    re-list + footer re-read a raw ``parquet.`path``` reference pays
-    per occurrence (~0.10-0.19 s each — the dominant build term for
-    multi-table SQL bodies). Registration happens once per
-    (application, dir, table); layout knowledge stays in this module.
-    Because the view wraps ``table()``, events' ns→µs timestamp
-    conversion rides along too.
+    The shared registry behind :func:`table_sql_ref` and the IVF
+    quantizer's ``ivf_centroids_sql_ref``; :func:`invalidate` evicts
+    its entries for a dir, and the next call re-registers over the
+    same name.
     """
-    key = _resolve_key(spark, sf_dir, name)
+    key = _resolve_key(spark, sf_dir, prefix)
     view = _VIEW_REGISTERED.get(key)
     # Revalidate catalog visibility even on a hit: the id()-keyed
     # entry could (pathologically) have been registered by a dead
@@ -274,10 +276,29 @@ def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     # a collision here rebinds the shared view name to another dir's
     # data and tableExists revalidation cannot see it. 16 hex digits
     # puts a birthday collision past ~10^9 distinct dirs.
-    view = f"flws_tab_{name}_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
-    table(spark, sf_dir, name).createOrReplaceTempView(view)
+    view = f"{prefix}_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
+    build().createOrReplaceTempView(view)
     _VIEW_REGISTERED[key] = view
     return view
+
+
+def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """FROM-able SQL reference for a fixture table, for single-
+    ``spark.sql``-statement queries (SCALING.md §12).
+
+    Returns a temp-view name backed by the CACHED ``table()`` relation:
+    a temp view stores the analyzed child plan, so referencing it in
+    SQL reuses the already-resolved file index + schema instead of the
+    re-list + footer re-read a raw ``parquet.`path``` reference pays
+    per occurrence (~0.10-0.19 s each — the dominant build term for
+    multi-table SQL bodies). Registration happens once per
+    (application, dir, table); layout knowledge stays in this module.
+    Because the view wraps ``table()``, events' ns→µs timestamp
+    conversion rides along too.
+    """
+    return temp_view_ref(
+        spark, sf_dir, f"flws_tab_{name}", lambda: table(spark, sf_dir, name)
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -131,24 +131,21 @@ def test_partsupp_three_forms_identical(spark):
     between them silently shifts four hash-checked keys, so pin
     Spark-SQL ≡ DataFrame exactly (the DuckDB twin is pinned
     transitively by the quartet's oracle hash checks)."""
+    from pyspark.sql.types import LongType
+
     from flink_large_window_spark.operators.tpch import _partsupp_spark_cte
 
-    sql_rows = sorted(
-        map(
-            tuple,
-            spark.sql(
-                "WITH " + _partsupp_spark_cte(spark, SF_ORACLE)
-                + " SELECT ps_partkey, ps_suppkey, ps_availqty,"
-                " ps_cost_cents FROM partsupp"
-            ).collect(),
-        )
+    cols = ("ps_partkey", "ps_suppkey", "ps_availqty", "ps_cost_cents")
+    sql_df = spark.sql(
+        "WITH " + _partsupp_spark_cte(spark, SF_ORACLE)
+        + f" SELECT {', '.join(cols)} FROM partsupp"
     )
-    df_rows = sorted(
-        map(
-            tuple,
-            derived_partsupp(spark, SF_ORACLE)
-            .select("ps_partkey", "ps_suppkey", "ps_availqty", "ps_cost_cents")
-            .collect(),
-        )
+    df_df = derived_partsupp(spark, SF_ORACLE).select(*cols)
+    # Equal rows alone would let a dtype drift through whenever the
+    # fixture keys happen to fit either type; pin the schema too.
+    assert sql_df.schema == df_df.schema
+    for key in ("ps_partkey", "ps_suppkey"):
+        assert isinstance(sql_df.schema[key].dataType, LongType), key
+    assert sorted(map(tuple, sql_df.collect())) == sorted(
+        map(tuple, df_df.collect())
     )
-    assert sql_rows == df_rows

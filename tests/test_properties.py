@@ -132,20 +132,28 @@ def test_hash_sampling_partition_invariant(spark):
 
 def test_mapinpandas_kernels_survive_empty_partitions(spark):
     """At cluster scale, partitions CAN be empty (skew, pruning). Every
-    Arrow-batched kernel must tolerate a partitioning far wider than
-    the row count (Spark skips empty partitions; this pins that no
-    kernel assumes ≥1 batch or ≥1 row)."""
+    Arrow-batched kernel must tolerate input partitions with no rows
+    (Spark skips empty partitions; this pins that no kernel assumes
+    ≥1 batch or ≥1 row). Each table is hash-partitioned on a constant
+    into 2×cores partitions — one hot partition, the rest empty — and
+    the emptiness is counted, not assumed."""
+    import pyspark.sql.functions as F
+
     import flink_large_window_spark.llm.dedup as dedup_mod
     import flink_large_window_spark.llm.multimodal as mm_mod
     import flink_large_window_spark.llm.text as text_mod
     from flink_large_window_spark.registry import REGISTRY
     from flink_large_window_spark.tables import table as orig
 
+    n_parts = 2 * spark.sparkContext.defaultParallelism
     calls = []
 
-    def wide(spark_, sf_dir, name):
+    def skewed(spark_, sf_dir, name):
         calls.append(name)
-        return orig(spark_, sf_dir, name).repartition(700)
+        df = orig(spark_, sf_dir, name).repartition(n_parts, F.lit(0))
+        used = df.select(F.spark_partition_id()).distinct().count()
+        assert used < n_parts, f"no empty input partition for {name}"
+        return df
 
     # Operator modules bind `table` at import time (`from ..tables import
     # table`), so the wrapper must be patched into EACH consuming module —
@@ -162,7 +170,7 @@ def test_mapinpandas_kernels_survive_empty_partitions(spark):
     }
     for key, mod in cases.items():
         saved = mod.table
-        mod.table = wide
+        mod.table = skewed
         try:
             n0 = len(calls)
             assert REGISTRY[key](spark, SF_SMOKE).count() == 500, key

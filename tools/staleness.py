@@ -1,275 +1,36 @@
-"""Compute per-key driver-evidence staleness for the recheck rotation.
+"""Print the driver-window ledger that ``api.queries()`` is ordered by.
 
-Since round 5 every registered key has at least one driver CORRECTNESS
-row; from round 6 on, the 50-key driver window re-samples by RECENCY
-(VERDICT r5 item 3): keys whose implementation changed in a LATER
-round than their most recent driver evidence go first, ordered by that
-gap. Assembling that list by hand means cross-referencing five JSON
-files against per-module git history — this tool does it mechanically:
+One row per registered key, in driver order: the newest round with
+driver evidence (``-`` = never checked) and whether the key's
+implementation file changed since that round's marker commit. The
+first DRIVER_PREFIX_BUDGET rows are what the driver's next sweep
+checks. The ledger itself is computed in
+``flink_large_window_spark/contract.py``.
 
-    python tools/staleness.py            # ranked table
-    python tools/staleness.py --tuple    # paste-ready RECHECK_KEYS tail
-
-Method:
-- evidence round per key   = max N over CORRECTNESS_r0N.json files
-  whose entry for the key has hash_match=true (or, for rows-only keys,
-  a recorded spark_rows).
-- code round per key       = the round window containing the last
-  commit that touched the key's implementation FILE (resolved from the
-  registry via the function object), where round boundaries are the
-  driver's "round N: verdict/..." commits.
-- staleness                = code round − evidence round (only > 0 is
-  actionable); never-checked keys sort first with staleness = +inf.
-
-File-level granularity deliberately over-approximates: a commit to
-dedup.py marks every dedup key stale even if only one function
-changed. That errs toward re-checking, which is the cheap direction.
-
-Round 9 (VERDICT r8 item 1): round-granular code_rounds() blurs
-WITHIN-round ordering — the r8 minhash oracle restructure (c21dc59)
-landed after the r8 recheck window was fixed, so the driver stamped
-the OLD oracle text while both rounds read as "8". The git-diff-aware
-column closes that gap mechanically: for each key, count the commits
-touching its implementation file SINCE the driver marker commit of
-its evidence round ("round N: verdict..." — the commit that landed
-CORRECTNESS_r0N.json). post_stamp > 0 means the shipped text was
-never driver-checked, even when code_round == evidence_round.
+    python tools/staleness.py
 """
 
 from __future__ import annotations
 
-import argparse
-import glob
-import json
 import os
-import re
-import subprocess
 import sys
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if _REPO not in sys.path:
-    sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def round_boundaries() -> list[tuple[int, str]]:
-    """[(round N, commit sha of its 'round N: verdict' marker)] asc."""
-    out = subprocess.run(
-        ["git", "log", "--all", "--format=%H %s"],
-        capture_output=True, text=True, cwd=_REPO, check=True,
-    ).stdout
-    bounds = []
-    for line in out.splitlines():
-        sha, _, subj = line.partition(" ")
-        m = re.match(r"round (\d+): verdict", subj)
-        if m:
-            bounds.append((int(m.group(1)), sha))
-    return sorted(bounds)
-
-
-def evidence_rounds(upto: int | None = None) -> dict[str, int]:
-    """Per-key max evidence round. ``upto`` caps the rounds considered
-    — pass the round a rotation was DERIVED from so a later driver
-    window landing (CORRECTNESS_r{N+1}.json) cannot retroactively
-    change what that rotation's inputs were (round-7 review: the
-    window-shape test validated against live evidence and would have
-    failed the moment the very sweep it pins produced its file)."""
-    ev: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        n = int(re.search(r"r(\d+)\.json$", path).group(1))
-        if upto is not None and n > upto:
-            continue
-        for key, row in json.load(open(path)).items():
-            # rows-only evidence means the key RAN under the driver (a
-            # legitimate 0-row result still counts — `is not None`, not
-            # truthiness); "verified" for those keys lives in their
-            # compensating pytests, not here.
-            ok = row.get("hash_match") or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if ok:
-                ev[key] = max(ev.get(key, 0), n)
-    return ev
-
-
-def key_files() -> dict[str, str]:
-    """key -> repo-relative implementation file (from the registry)."""
-    import flink_large_window_spark.api  # noqa: F401 — populates REGISTRY
-    from flink_large_window_spark.registry import REGISTRY
-
-    return {
-        k: os.path.relpath(fn.__code__.co_filename, _REPO)
-        for k, fn in REGISTRY.items()
-    }
-
-
-def commits_since_stamp(
-    ev: dict[str, int], key_file: dict[str, str]
-) -> dict[str, int]:
-    """key -> number of commits touching its implementation file at or
-    after the driver marker commit of its evidence round
-    (git-diff-aware "changed after last driver check"; 0 = shipped
-    text is exactly what the driver stamped, at file granularity).
-
-    The range is ``marker^..HEAD`` (marker INCLUDED): the round-N
-    sweep runs against the tree as of the last pre-marker commit, so
-    a file change carried by the marker commit itself was never seen
-    by that sweep. Today markers only ever land evidence/verdict files
-    (verified r1–r8), so this is a no-op guard — but if a marker ever
-    bundles uncommitted implementation work, the key flags instead of
-    silently reading as stamped.
-
-    Sentinels: -1 = never stamped at all; -2 = evidence round has no
-    marker commit yet (a fresh CORRECTNESS file in the working tree
-    mid-driver-flow — evidence is NEWER than any marker, the opposite
-    of stale; resolves once the round's marker lands)."""
-    markers = dict(round_boundaries())
-    out: dict[str, int] = {}
-    # one `git log` per (marker, file) pair, memoized — most keys
-    # share both coordinates
-    memo: dict[tuple[str, str], int] = {}
-    for k, f in key_file.items():
-        er = ev.get(k)
-        if er is None:
-            out[k] = -1
-            continue
-        if er not in markers:
-            out[k] = -2
-            continue
-        coord = (markers[er], f)
-        if coord not in memo:
-            log = subprocess.run(
-                ["git", "log", "--format=%H", f"{coord[0]}^..HEAD", "--", f],
-                capture_output=True, text=True, cwd=_REPO, check=True,
-            ).stdout.split()
-            memo[coord] = len(log)
-        out[k] = memo[coord]
-    return out
-
-
-def code_rounds() -> dict[str, int]:
-    """key -> round in which its implementation file last changed."""
-    bounds = round_boundaries()  # round N marker ENDS round N
-    key_file = key_files()
-    file_round: dict[str, int] = {}
-    for f in set(key_file.values()):
-        # last commit touching f
-        sha = subprocess.run(
-            ["git", "log", "-1", "--format=%H", "--", f],
-            capture_output=True, text=True, cwd=_REPO, check=True,
-        ).stdout.strip()
-        if not sha:
-            file_round[f] = 0
-            continue
-        # the file's round = 1 + (highest round whose marker is an
-        # ancestor of-but-not-equal... simpler: count markers that are
-        # ancestors of sha^ — i.e. markers the commit comes AFTER)
-        r = 1
-        for n, marker in bounds:
-            anc = subprocess.run(
-                ["git", "merge-base", "--is-ancestor", marker, sha],
-                cwd=_REPO,
-            ).returncode
-            if anc == 0 and marker != sha:
-                r = n + 1
-        file_round[f] = r
-    return {k: file_round[f] for k, f in key_file.items()}
-
-
-def window_gaps(upto: int | None = None) -> set[str]:
-    """SQL-oracle keys whose implementation file changed after their
-    last driver stamp (post_stamp > 0, or never stamped) that the
-    proposed driver window does NOT cover and RECHECK_DEFERRALS does
-    not document — the guard VERDICT r10 item 4 asked for, so a
-    future rewire cannot ship stamp-less. The window here is the
-    driver's actual checked prefix (RECHECK_KEYS plus the unchecked
-    tail the priority order appends). ``upto`` caps evidence at the
-    round the current rotation was derived from (None = all landed
-    CORRECTNESS files — correct between rounds, since a just-landed
-    sweep only makes evidence fresher)."""
-    import flink_large_window_spark.api as api
-    from flink_large_window_spark.contract import (
-        DRIVER_PREFIX_BUDGET,
-        RECHECK_DEFERRALS,
-        driver_priority_order,
-    )
-
-    oracles = api.oracle_sql()
-    ev = evidence_rounds(upto=upto)
-    kf = key_files()
-    post = commits_since_stamp(ev, kf)
-    changed = {
-        k for k, p in post.items()
-        if (p > 0 or p == -1) and k in oracles
-    }
-    window = set(
-        driver_priority_order(api.queries())[:DRIVER_PREFIX_BUDGET]
-    )
-    return changed - window - set(RECHECK_DEFERRALS)
+import flink_large_window_spark.api  # noqa: E402, F401  (fills the registry)
+from flink_large_window_spark.contract import (  # noqa: E402
+    DRIVER_PREFIX_BUDGET,
+    ledger,
+)
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--tuple", action="store_true",
-                    help="print a paste-ready python tuple tail")
-    ap.add_argument("--check-window", action="store_true",
-                    help="verify the proposed driver window covers "
-                         "every changed-since-stamp SQL-oracle key "
-                         "(or a documented RECHECK_DEFERRALS entry); "
-                         "exit 1 on uncovered keys")
-    args = ap.parse_args()
-
-    if args.check_window:
-        uncovered = window_gaps()
-        if uncovered:
-            print("UNCOVERED changed-since-stamp SQL-oracle keys "
-                  "(not in RECHECK_KEYS/window tail, not in "
-                  "RECHECK_DEFERRALS):")
-            for k in sorted(uncovered):
-                print(f"  {k}")
-            sys.exit(1)
-        print("window OK: every changed-since-stamp SQL-oracle key is "
-              "in the window or documented in RECHECK_DEFERRALS")
-        return
-
-    ev = evidence_rounds()
-    code = code_rounds()
-    post = commits_since_stamp(ev, key_files())
-    rows = []
-    for k, cr in code.items():
-        er = ev.get(k)
-        stale = float("inf") if er is None else cr - er
-        rows.append((stale, post.get(k, -1), cr, er, k))
-    rows.sort(key=lambda r: (
-        -(r[0] if r[0] != float("inf") else 10**6), -r[1], r[4]))
-
-    def actionable(r):
-        # stale round math OR file commits after the evidence stamp.
-        # Strictly > 0: -1 (never stamped) is already caught by
-        # stale=inf, and -2 (evidence round's marker not landed yet —
-        # a just-run sweep) is the FRESHEST evidence on the board, not
-        # stale (review r9: `!= 0` flagged every freshly-swept key as
-        # a paste-ready recheck candidate mid-driver-flow).
-        return r[0] > 0 or r[1] > 0
-
-    if args.tuple:
-        for r in rows:
-            if actionable(r):
-                print(f'    "{r[4]}",')
-        return
-    print(f"{'key':34s} {'code_r':>6s} {'evid_r':>6s} {'stale':>6s} "
-          f"{'post_stamp':>10s}")
-    for stale, ps, cr, er, k in rows:
-        if not actionable((stale, ps, cr, er, k)):
-            continue
-        s = "NEW" if stale == float("inf") else str(int(stale))
-        p = {-1: "-", -2: "pending"}.get(ps, str(ps))
-        print(f"{k:34s} {cr:6d} {str(er or '-'):>6s} {s:>6s} {p:>10s}")
-    n_stale = sum(1 for r in rows if actionable(r))
-    n_post = sum(1 for r in rows if r[0] <= 0 and r[1] > 0)
-    print(f"\n{n_stale} actionable keys (evidence older than code, or "
-          f"file commits after the stamp) of {len(rows)} registered; "
-          f"{n_post} caught ONLY by the git-diff-aware post_stamp column")
+    print(f"{'#':>4s} {'key':40s} {'evidence':>8s} {'changed':>7s}")
+    for i, (key, evidence, changed) in enumerate(ledger(), 1):
+        ev = "-" if evidence is None else f"r{evidence}"
+        print(f"{i:4d} {key:40s} {ev:>8s} {'yes' if changed else '':>7s}")
+        if i == DRIVER_PREFIX_BUDGET:
+            print("---- end of the driver window ----")
 
 
 if __name__ == "__main__":
