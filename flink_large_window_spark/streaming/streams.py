@@ -776,6 +776,70 @@ def join_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000
 
+_SESSION_OUT_SCHEMA = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("session_start_us", LongType()),
+        StructField("last_ts_us", LongType()),
+        StructField("n_events", LongType()),
+    ]
+)
+_SESSION_STATE_SCHEMA = StructType(
+    [
+        StructField("start", LongType()),
+        StructField("last", LongType()),
+        StructField("n", LongType()),
+    ]
+)
+
+
+def compile_session_timeout_stream():
+    """Handler for stateful_session_timeout_stream (module-level so the
+    fake-GroupState sweep replays the exact shipped operator)."""
+
+    def handler(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        out = []
+        if state.hasTimedOut:
+            start, last, n = state.get
+            out.append((key[0], start, last, n))
+            state.remove()
+        else:
+            start, last, n = state.get if state.exists else (None, None, 0)
+            # One sort over the whole batch: the iterator's chunks carry
+            # no cross-chunk order guarantee. (Materialize before the
+            # emptiness test — an iterator is always truthy, so the
+            # guard must check the LIST or pd.concat([]) raises.)
+            chunks = list(pdfs)
+            whole = pd.concat(chunks) if chunks else pd.DataFrame()
+            if len(whole):
+                whole = whole.sort_values(["ts", "event_id"])
+                for ts in whole["ts"]:
+                    ts_us = int(ts.value) // 1_000
+                    if start is None:
+                        start, last, n = ts_us, ts_us, 1
+                    elif ts_us - last < _SESSION_GAP_US:
+                        last, n = ts_us, n + 1
+                    else:
+                        out.append((key[0], start, last, n))
+                        start, last, n = ts_us, ts_us, 1
+            if start is not None:
+                state.update((start, last, n))
+                # Event-time timer: fire when the watermark passes the
+                # session's gap deadline (ms granularity).
+                state.setTimeoutTimestamp((last + _SESSION_GAP_US) // 1_000)
+        yield pd.DataFrame(
+            {
+                "user_id": [r[0] for r in out],
+                "session_start_us": [r[1] for r in out],
+                "last_ts_us": [r[2] for r in out],
+                "n_events": [r[3] for r in out],
+            }
+        )
+
+    return handler
+
 
 @query(
     "stateful_session_timeout_stream",
@@ -829,72 +893,15 @@ def stateful_session_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFra
     (watermark never passes them); the pytest therefore checks
     emitted ⊆ batch and closed-sessions ⊆ emitted.
     """
-
-    def session_machine(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        out = []
-        if state.hasTimedOut:
-            start, last, n = state.get
-            out.append((key[0], start, last, n))
-            state.remove()
-        else:
-            start, last, n = state.get if state.exists else (None, None, 0)
-            # One sort over the whole batch: the iterator's chunks carry
-            # no cross-chunk order guarantee. (Materialize before the
-            # emptiness test — an iterator is always truthy, so the
-            # guard must check the LIST or pd.concat([]) raises.)
-            chunks = list(pdfs)
-            whole = pd.concat(chunks) if chunks else pd.DataFrame()
-            if len(whole):
-                whole = whole.sort_values(["ts", "event_id"])
-                for ts in whole["ts"]:
-                    ts_us = int(ts.value) // 1_000
-                    if start is None:
-                        start, last, n = ts_us, ts_us, 1
-                    elif ts_us - last < _SESSION_GAP_US:
-                        last, n = ts_us, n + 1
-                    else:
-                        out.append((key[0], start, last, n))
-                        start, last, n = ts_us, ts_us, 1
-            if start is not None:
-                state.update((start, last, n))
-                # Event-time timer: fire when the watermark passes the
-                # session's gap deadline (ms granularity).
-                state.setTimeoutTimestamp((last + _SESSION_GAP_US) // 1_000)
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out],
-                "session_start_us": [r[1] for r in out],
-                "last_ts_us": [r[2] for r in out],
-                "n_events": [r[3] for r in out],
-            }
-        )
-
     ev = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start_us", LongType()),
-            StructField("last_ts_us", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start", LongType()),
-            StructField("last", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
     result = ev.groupBy("user_id").applyInPandasWithState(
-        session_machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        compile_session_timeout_stream(),
+        outputStructType=_SESSION_OUT_SCHEMA,
+        stateStructType=_SESSION_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

@@ -530,3 +530,172 @@ def test_idle_evict_never_changes_emissions_on_random_streams():
             assert got_p, f"degenerate sweep for {pat.steps}"
             n_checked += 1
     assert n_checked >= 10
+
+
+def _canon(rows):
+    """Emitted rows as hashable tuples with NULL cells (None, float NaN
+    from a float64 column, pd.NA from a nullable column) all as None."""
+    return {
+        tuple(
+            None if x is None or x is pd.NA
+            or (isinstance(x, float) and x != x) else x
+            for x in r
+        )
+        for r in rows
+    }
+
+
+def test_streams_keyed_machines_fuzz_match_bruteforce():
+    """The five streams.py keyed machines (TTL, count-tumbling,
+    count-sliding, as-of join, session timeout) replayed through the
+    same fake-GroupState harness in 1 and 4/6 batch cuts, compared
+    against brute-force references over the per-user (ts, event_id)
+    order. Values are NULL on every seventh event so the NaN encoding
+    of the count-window states is exercised. Each reference encodes
+    its machine's emission boundary: TTL evicts a generation once its
+    successor's first event folded or its deadline strictly passed
+    the watermark; count windows emit once their completing event
+    folded (``ts_ms <= wm_ms``); an error settles at ``ts_ms < wm_ms``
+    with the max (ts, id) click at or before it; a session emits when
+    a later event opens the next session or its timer fires. The
+    harness fires a timer once the watermark REACHES it (Spark fires
+    only once the watermark passes it), and the session machine is the
+    one whose emission follows its timer directly, so its reference
+    uses the harness rule ``(last + gap) // 1000 <= wm``."""
+    from flink_large_window_spark.streaming.streams import (
+        _ASOF_OUT_SCHEMA,
+        _ASOF_STATE_SCHEMA,
+        _COUNTSLIDE_OUT_SCHEMA,
+        _COUNTSLIDE_STATE_SCHEMA,
+        _COUNTWIN_OUT_SCHEMA,
+        _COUNTWIN_STATE_SCHEMA,
+        _SESSION_OUT_SCHEMA,
+        _SESSION_STATE_SCHEMA,
+        _TTL_OUT_SCHEMA,
+        _TTL_STATE_SCHEMA,
+        compile_asof_stream,
+        compile_countwindow_sliding_stream,
+        compile_countwindow_stream,
+        compile_session_timeout_stream,
+        make_ttl_machine,
+    )
+
+    pat = Pattern(steps=(Step("x", "click"),))  # _replay cols only
+    rows_all = [
+        (u, ts, eid, cls, None if eid % 7 == 3 else val)
+        for u, ts, eid, cls, val in _random_streams(
+            n_users=200, max_len=16, seed=419,
+        )
+    ]
+    rows_ce = [r for r in rows_all if r[3] in ("click", "error")]
+
+    def by_user(rows):
+        out = defaultdict(list)
+        for r in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
+            out[r[0]].append(
+                (int(pd.Timestamp(r[1]).value) // 1_000, r[2], r[3], r[4])
+            )
+        return out
+
+    users, users_ce = by_user(rows_all), by_user(rows_ce)
+
+    def fsum(vals):  # sequential fold, NULLs skipped, all-NULL -> None
+        s = None
+        for v in vals:
+            if v is not None:
+                s = v if s is None else s + v
+        return s
+
+    def want_ttl(wm):
+        ttl = 3600 * 1_000_000
+        want = set()
+        for u, evs in users.items():
+            gens = []  # [first_us, last_us, n]
+            for us, *_ in evs:
+                if gens and us - gens[-1][1] < ttl:
+                    gens[-1][1:] = [us, gens[-1][2] + 1]
+                else:
+                    gens.append([us, us, 1])
+            for g, (_first, last, n) in enumerate(gens):
+                succ_folded = g + 1 < len(gens) and gens[g + 1][0] // 1000 <= wm
+                if succ_folded or (last + ttl) // 1000 < wm:
+                    want.add((u, last + ttl, last, n))
+        return want
+
+    def want_tumbling(wm):
+        want = set()
+        for u, evs in users.items():
+            for w in range(len(evs) // 5):
+                win = evs[5 * w:5 * w + 5]
+                if win[-1][0] // 1000 > wm:
+                    continue
+                s = fsum(e[3] for e in win)
+                want.add((u, w, 5, min(e[1] for e in win),
+                          max(e[1] for e in win),
+                          None if s is None else round(s, 4)))
+        return want
+
+    def want_sliding(wm):
+        want = set()
+        for u, evs in users.items():
+            for w in range(max(0, (len(evs) - 6) // 2 + 1)):
+                win = evs[2 * w:2 * w + 6]
+                if win[-1][0] // 1000 > wm:
+                    continue
+                vals = [e[3] for e in win if e[3] is not None]
+                want.add((u, w, 6, round(sum(vals), 4) if vals else None))
+        return want
+
+    def want_asof(wm):
+        want = set()
+        for evs in users_ce.values():
+            for us, eid, cls, _v in evs:
+                if cls != "error" or us // 1000 >= wm:
+                    continue
+                prior = [(c_us, c_id) for c_us, c_id, c, _ in evs
+                         if c == "click" and c_us <= us]
+                want.add((eid, max(prior)[1] if prior else None))
+        return want
+
+    def want_session(wm):
+        gap = 30 * 60 * 1_000_000
+        want = set()
+        for u, evs in users.items():
+            sess = []  # [start_us, last_us, n]
+            for us, *_ in evs:
+                if sess and us - sess[-1][1] < gap:
+                    sess[-1][1:] = [us, sess[-1][2] + 1]
+                else:
+                    sess.append([us, us, 1])
+            for k, (start, last, n) in enumerate(sess):
+                if k + 1 < len(sess) or (last + gap) // 1000 <= wm:
+                    want.add((u, start, last, n))
+        return want
+
+    machines = (
+        ("ttl", rows_all, want_ttl, lambda: (
+            make_ttl_machine(), _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA)),
+        ("count_tumbling", rows_all, want_tumbling, lambda: (
+            compile_countwindow_stream(), _COUNTWIN_OUT_SCHEMA,
+            _COUNTWIN_STATE_SCHEMA)),
+        ("count_sliding", rows_all, want_sliding, lambda: (
+            compile_countwindow_sliding_stream(), _COUNTSLIDE_OUT_SCHEMA,
+            _COUNTSLIDE_STATE_SCHEMA)),
+        ("asof", rows_ce, want_asof, lambda: (
+            compile_asof_stream(), _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA)),
+        ("session_timeout", rows_all, want_session, lambda: (
+            compile_session_timeout_stream(), _SESSION_OUT_SCHEMA,
+            _SESSION_STATE_SCHEMA)),
+    )
+    for name, rows, want_fn, build in machines:
+        for n_batches, seed in ((1, 3), (4, 17), (6, 29)):
+            got_raw, wm = _replay(
+                rows, pat, n_batches, seed, compile_fn=lambda _p: build(),
+            )
+            got, want = _canon(got_raw), want_fn(wm)
+            assert len(got) == len(got_raw), f"{name}: duplicate rows"
+            assert got == want and want, (
+                f"{name} n_batches={n_batches}: "
+                f"extra={sorted(got - want, key=repr)[:3]} "
+                f"missing={sorted(want - got, key=repr)[:3]}"
+            )
