@@ -16,16 +16,12 @@ as to a batch relation).
 
 How the compiled automaton works (per key):
 
-- **Watermark buffer** (unchanged from the round-11 handler —
-  Flink CEP's buffering rule): arriving events are appended to a
-  per-key buffer; only events the watermark has passed fold into the
-  run structure, in full (ts, order_id) event-time order ACROSS
-  batches. An event-time timer at the earliest held event (−1 ms)
-  re-folds once a later batch advances the watermark. The residual
-  hazard is an exact-millisecond tie across batches (Spark's drop
-  contract is ``ts < wm`` while the fold admits ``ts_ms <= wm_ms``)
-  — pinned by tests/test_streaming_parity.py::
-  test_pattern_stream_exact_watermark_tie_folds_in_arrival_order.
+- **Watermark buffer** (Flink CEP's buffering rule): arriving events
+  are appended to a per-key buffer and fold into the run structure
+  only once the watermark passes them, in full (ts, order_id)
+  event-time order ACROSS batches; a timer at the earliest held event
+  re-folds. The fold rule, its exact-ms tie residual and the timer
+  clamp are the keyed kernel's (keyed.py module docstring).
 - **Run window**: the last ``len(steps) − 1`` CLOSED maximal runs
   (class, length, start) plus the current open run — the streaming
   image of the batch greedy strategy's runs relation restricted to
@@ -118,6 +114,15 @@ bounded window of the last W folded events (W = pattern event length
 with it, EVERY batch CEP shape has a streaming twin
 (pattern_detect_cep_stream closes the last documented residual).
 
+Every machine here — the run-fold and suffix automata above and the
+pending-state machines (absence / preceding-horizon count, pairs ±
+blocker, timed-out partials) below — runs on keyed.py: one launcher
+(:func:`keyed.keyed_fold`), one state/event codec, and for the
+pending-state machines one settle kernel (:func:`keyed.settle_machine`)
+that owns class routing, the settle rule, the eviction floor, the
+clamped deadline timer and the emission frame; each machine keeps only
+its resolve rule.
+
 Scale: state per key is O(pattern length) for the run window plus
 O(events inside the watermark delay) for the buffer — the same bound
 Flink CEP's event-time NFA keeps. No joins, no window state; the one
@@ -130,12 +135,13 @@ by stateful_session_ttl_stream (streams.py, round 12).
 from __future__ import annotations
 
 import bisect
+from itertools import repeat
 from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -157,13 +163,26 @@ from ..operators.cep import (
 )
 from ..registry import query
 from ..scratch import scratch_dir
-from .streams import (
-    _events_stream,
+from .keyed import (
+    Machine,
+    dec_cls,
+    dec_val,
+    dump_events,
+    enc_cls,
+    enc_nul,
+    enc_val,
+    frame,
     hold_timer_ms,
     ingest_chunk,
-    run_to_memory,
+    keyed_fold,
+    load_events,
+    read_state,
+    settle_machine,
     split_by_watermark,
+    timer_ms,
+    write_state,
 )
+from .streams import _events_stream
 
 #: Generic automaton state: the closed-run window (arrays, most recent
 #: last, bounded at len(steps)-1), the current open run, the anchor
@@ -215,8 +234,10 @@ STREAM_STATE_SCHEMA_VAL = StructType(
     ]
 )
 
-#: Guard aggregate -> slot in the per-run value-aggregate tuple.
+#: Guard aggregate -> slot in the per-run value-aggregate tuple, and
+#: the slots' state-field suffixes (win_vf ... cur_vsm).
 _VA_SLOT = {"first": 0, "last": 1, "min": 2, "max": 3, "sum": 4}
+_VA = ("vf", "vl", "vmn", "vmx", "vsm")
 
 
 def _emit_on_close(pat: Pattern) -> bool:
@@ -286,8 +307,8 @@ def stream_out_schema(pat: Pattern) -> StructType:
 
 def compile_stream(pat: Pattern, idle_evict: bool = False):
     """Compile a greedy-strategy Pattern into an
-    ``applyInPandasWithState`` handler. Returns
-    ``(handler, out_schema, STREAM_STATE_SCHEMA)``.
+    ``applyInPandasWithState`` :class:`keyed.Machine` (handler,
+    out schema, STREAM_STATE_SCHEMA or its guarded extension).
 
     The caller canonicalizes alternation on the stream FIRST (see
     :func:`pattern_stream`), so every ``Step.cls`` reaching the
@@ -490,7 +511,6 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         else None
     )
     out_schema = stream_out_schema(pat)
-    out_cols = [f.name for f in out_schema.fields]
     ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
     # Iterative conditions (round 12, variant-local since round 13):
     # each variant carries its own plain-python guard spec — (this
@@ -504,57 +524,35 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
     needs_val = bool(guard_names)
     val_col = pat.val_col
     state_schema = STREAM_STATE_SCHEMA_VAL if needs_val else STREAM_STATE_SCHEMA
-    nan = float("nan")
 
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def dec(v):  # NaN-encoded NULL back to None
-            return None if v is None or v != v else float(v)
-
-        if state.exists:
-            if needs_val:
-                (w_cls, w_nul, w_len, w_start,
-                 cc, c_nul, cl, cs, cf, pend,
-                 b_id, b_us, b_cls, b_nul,
-                 w_vf, w_vl, w_vmn, w_vmx, w_vsm,
-                 c_vf, c_vl, c_vmn, c_vmx, c_vsm,
-                 b_val) = state.get
-                win = [
-                    (None if n else c, int(ln), int(st),
-                     (dec(vf), dec(vl), dec(mn), dec(mx), dec(sm)))
-                    for c, n, ln, st, vf, vl, mn, mx, sm in zip(
-                        w_cls, w_nul, w_len, w_start,
-                        w_vf, w_vl, w_vmn, w_vmx, w_vsm,
-                    )
-                ]
-                c_va = [dec(c_vf), dec(c_vl), dec(c_vmn),
-                        dec(c_vmx), dec(c_vsm)]
-                buf = [
-                    (int(u), int(i), None if n else c, dec(v))
-                    for u, i, c, n, v in zip(
-                        b_us, b_id, b_cls, b_nul, b_val
-                    )
-                ]
-            else:
-                (w_cls, w_nul, w_len, w_start,
-                 cc, c_nul, cl, cs, cf, pend,
-                 b_id, b_us, b_cls, b_nul) = state.get
-                win = [
-                    (None if n else c, int(ln), int(st), None)
-                    for c, n, ln, st in zip(w_cls, w_nul, w_len, w_start)
-                ]
-                c_va = None
-                buf = [
-                    (int(u), int(i), None if n else c, None)
-                    for u, i, c, n in zip(b_us, b_id, b_cls, b_nul)
-                ]
-            if c_nul:
-                cc = None
+        st = read_state(state, state_schema)
+        if st:
+            vas = (
+                zip(*([dec_val(v) for v in st[f"win_{a}"]] for a in _VA))
+                if needs_val else repeat(None)
+            )
+            win = [
+                (dec_cls(c, n), int(ln), int(s), va)
+                for c, n, ln, s, va in zip(
+                    st["win_cls"], st["win_nul"], st["win_len"],
+                    st["win_start"], vas,
+                )
+            ]
+            cc = dec_cls(st["cur_cls"], st["cur_nul"])
+            cl, cs, cf, pend = (
+                st["cur_len"], st["cur_start"], st["cur_first"], st["cur_pend"]
+            )
+            c_va = (
+                [dec_val(st[f"cur_{a}"]) for a in _VA] if needs_val else None
+            )
         else:
-            win, buf = [], []
+            win = []
             cc = cl = cs = cf = c_va = None
             pend = 0
+        buf = load_events(st, "buf")
         wm_ms = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for chunk in pdfs:
@@ -770,18 +768,15 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         if idle_evict and not hold and not pend:
             if cl is not None and (cs + within_us) // 1000 >= wm_ms:
                 # live: arm the TTL timer at the open run's within
-                # deadline (clamped like hold_timer_ms) so an idle
+                # deadline (through the timer clamp) so an idle
                 # key re-enters the handler to evict itself
-                ttl_timer = max((cs + within_us) // 1000, wm_ms + 1)
+                ttl_timer = timer_ms((cs + within_us) // 1000, wm_ms)
             elif cl is None or cc not in pattern_clses:
                 # separator (or empty) state: remove outright — see
                 # compile_stream's docstring for the safety argument
                 if state.exists:
                     state.remove()
-                yield pd.DataFrame(
-                    {c: [r[i] for r in out]
-                     for i, c in enumerate(out_cols)}
-                )
+                yield frame(out_schema, out)
                 return
             else:
                 # pattern-class open run past its deadline: STUB —
@@ -790,39 +785,30 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
                 # run; its old start must survive so merged-run
                 # candidates keep failing within, matching batch)
                 win = []
-        base = (
-            ["" if r[0] is None else r[0] for r in win],
-            [1 if r[0] is None else 0 for r in win],
-            [r[1] for r in win],
-            [r[2] for r in win],
-            "" if cc is None else cc,
-            1 if (cl is not None and cc is None) else 0,
-            cl, cs, cf, pend,
-            [e[1] for e in hold],
-            [e[0] for e in hold],
-            ["" if e[2] is None else e[2] for e in hold],
-            [1 if e[2] is None else 0 for e in hold],
-        )
+        fields = {
+            "win_cls": [enc_cls(r[0]) for r in win],
+            "win_nul": [enc_nul(r[0]) for r in win],
+            "win_len": [r[1] for r in win],
+            "win_start": [r[2] for r in win],
+            "cur_cls": enc_cls(cc),
+            "cur_nul": 0 if cl is None else enc_nul(cc),
+            "cur_len": cl, "cur_start": cs, "cur_first": cf,
+            "cur_pend": pend,
+            **dump_events(state_schema, "buf", hold),
+        }
         if needs_val:
-            def enc(v):
-                return nan if v is None else float(v)
-
             cur = c_va if c_va is not None else (None,) * 5
-            base = base + tuple(
-                [[enc(r[3][k]) for r in win] for k in range(5)]
-                + [enc(cur[k]) for k in range(5)]
-                + [[enc(e[3]) for e in hold]]
-            )
-        state.update(base)
+            for k, a in enumerate(_VA):
+                fields[f"win_{a}"] = [enc_val(r[3][k]) for r in win]
+                fields[f"cur_{a}"] = enc_val(cur[k])
+        write_state(state, state_schema, fields)
         if hold:
             state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
         elif ttl_timer is not None:
             state.setTimeoutTimestamp(ttl_timer)
-        yield pd.DataFrame(
-            {c: [r[i] for r in out] for i, c in enumerate(out_cols)}
-        )
+        yield frame(out_schema, out)
 
-    return handler, out_schema, state_schema
+    return Machine(handler, out_schema, state_schema)
 
 
 def pattern_stream(
@@ -862,15 +848,7 @@ def pattern_stream(
             ev = ev.drop(pat.val_col)
     if any(len(s.clses()) > 1 for s in pat.steps):
         ev, pat = canonicalize_alternation(ev, pat)
-    handler, out_schema, state_schema = compile_stream(pat)
-    result = ev.groupBy(pat.key).applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append", checkpoint=checkpoint)
+    return keyed_fold(ev, pat.key, compile_stream(pat), checkpoint=checkpoint)
 
 
 @query(
@@ -1295,21 +1273,15 @@ def pattern_match_afterskip_stream(
 # emission must wait until the watermark proves nothing in the horizon
 # can still arrive — Flink's NFA keeps such candidates in a pending
 # state and resolves them on watermark advance. The automaton below is
-# that pending-state machine directly, and it is SIMPLER than the
-# run-fold: existence of a purchase inside a click's horizon is
-# order-insensitive, so no watermark hold-buffer / re-fold is needed —
-# in-watermark out-of-order arrivals just accumulate into the pending
-# sets, and a click can only resolve >= horizon after its own event
-# time, by which point every in-frame purchase either arrived or is
-# watermark-late (dropped upstream by the same ``ts < wm`` contract
-# the resolution rule is aligned to).
+# that pending-state machine directly (keyed.settle_machine), and it
+# is SIMPLER than the run-fold: existence of a purchase inside a
+# click's horizon is order-insensitive, so no hold-buffer / re-fold
+# is needed — in-watermark out-of-order arrivals just accumulate into
+# the pending sets until the settle rule resolves them.
 
 #: Pending-state schema for the absence automaton: unresolved clicks
 #: (µs + event_id, parallel arrays) and the retained purchase
-#: timestamps (µs). Purchases older than horizon + watermark-delay
-#: can no longer suppress anything and are evicted — state per key is
-#: O(events inside horizon + watermark delay), Flink's NFA bound for
-#: a within-bounded notFollowedBy.
+#: timestamps (µs).
 ABSENCE_STATE_SCHEMA = StructType(
     [
         StructField("click_us", ArrayType(LongType())),
@@ -1326,91 +1298,62 @@ ABSENCE_OUT_SCHEMA = StructType(
 )
 
 
-def compile_absence_stream(
-    anchor_cls: str, absent_cls: str, horizon_us: int
-):
-    """Build the pending-state handler for ``anchor NOT FOLLOWED BY
-    absent WITHIN horizon`` (frame ``[anchor_ts, anchor_ts + horizon]``
-    inclusive at µs precision — the batch key's RANGE frame).
+def compile_horizon_stream(
+    anchor_cls: str, target_cls: str, horizon_us: int, at_least=None
+) -> Machine:
+    """One pending-anchor machine for both horizon directions; each
+    anchor counts the targets inside its frame (inclusive at µs — the
+    batch key's RANGE frame):
 
-    Resolution rule: an anchor emits/suppresses only once
-    ``(anchor_us + horizon_us) // 1000 < wm_ms`` (STRICT): any
-    not-yet-arrived suppressor has ``ts_ms >= wm_ms`` (Spark admits
-    the ``ts == wm`` tie), hence ``ts_us >= wm_ms*1000 >
-    anchor_us + horizon_us`` — outside the frame. The matching oracle
-    filter is the ms-aligned ``(epoch_us(ts) + horizon) // 1000 <
-    final_wm_ms``.
-    """
+    - ``at_least=None`` — ``anchor NOT FOLLOWED BY target WITHIN
+      horizon`` (absence): frame ``[a, a + horizon]``; the anchor
+      settles only once its whole frame is behind the watermark,
+      ``(a_us + horizon_us) // 1000 < wm_ms``, and emits
+      ``(key, anchor_id)`` iff the frame holds no target. Oracle
+      filter: ``(epoch_us(ts) + horizon) // 1000 < final_wm_ms``.
+    - ``at_least=n`` — PRECEDING-horizon count (Flink ``followedBy``
+      with a time bound): frame ``[a − horizon, a]``, which is
+      complete as soon as the anchor itself settles (``a_ms < wm_ms``
+      — every unseen target is strictly after the anchor); emits
+      ``(key, anchor_id, count)`` iff the count reaches ``n``.
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            c_us, c_id, p_us = state.get
-            clicks = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-            purchases = [int(u) for u in p_us]
-        else:
-            clicks, purchases = [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        clicks.append((us, int(eid)))
-                    elif cls == absent_cls:
-                        purchases.append(us)
-        # Resolve every anchor whose horizon the watermark has passed:
-        # emit iff no retained suppressor lands inside its frame.
-        # Suppressors sort once per invocation and each anchor probes
-        # by bisect (ADVICE r12 item 2) — O((A + P)·log P), not
-        # O(A·P), under a key-skewed watermark-delay backlog.
-        emitted, pending = [], []
-        purchases.sort()
-        for us, eid in clicks:
-            if (us + horizon_us) // 1000 < wm_ms:
-                i = bisect.bisect_left(purchases, us)
-                if i == len(purchases) or purchases[i] > us + horizon_us:
-                    emitted.append((key[0], eid))
-            else:
-                pending.append((us, eid))
-        # Evict suppressors no pending or future anchor can reach:
-        # a pending anchor has (us + horizon_us) // 1000 >= wm_ms,
-        # which for non-negative ints is exactly us >= wm_ms*1000 −
-        # horizon_us; a future anchor folds from the hold buffer
-        # (us // 1000 > wm_ms) or a later batch, so its us exceeds
-        # wm_ms*1000 outright. Suppression needs p_us >= anchor_us,
-        # so the exact floor is sound (ADVICE r13 item 4: the former
-        # −999 µs slack was dead conservatism inconsistent with
-        # compile_pairs_stream's exact floor).
-        floor_us = wm_ms * 1000 - horizon_us
-        purchases = [p for p in purchases if p >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                purchases,
+    Targets are retained down to the kernel's exact floor
+    ``wm_ms·1000 − horizon_us`` (a pending anchor sits at or above
+    ``wm_ms·1000 − horizon_us`` in the absence direction and above
+    ``wm_ms·1000`` in the count direction; future anchors above
+    ``wm_ms·1000``), so per-key state is O(events in horizon +
+    watermark delay), Flink's NFA bound. The two directions keep
+    their own state and output schemas (click_/purch_ vs anchor_/
+    target_ fields)."""
+    following = at_least is None
+
+    def resolve(k, due, roles, _wm_ms, _st):
+        t_us = [t[0] for t in roles[tgt]]
+        rows = []
+        for us, eid in due:
+            lo, hi = (us, us + horizon_us) if following else (
+                us - horizon_us, us
             )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(
-                    min((u + horizon_us) // 1000 for u, _ in pending),
-                    wm_ms + 1,
-                )
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "click_event": [r[1] for r in emitted],
-            }
-        )
+            n = bisect.bisect_right(t_us, hi) - bisect.bisect_left(t_us, lo)
+            if following and n == 0:
+                rows.append((k, eid))
+            elif not following and n >= at_least:
+                rows.append((k, eid, n))
+        return rows
 
-    return handler
+    if following:
+        out, st_schema, anc, tgt = (
+            ABSENCE_OUT_SCHEMA, ABSENCE_STATE_SCHEMA, "click", "purch"
+        )
+    else:
+        out, st_schema, anc, tgt = (
+            HORIZON_OUT_SCHEMA, HORIZON_STATE_SCHEMA, "anchor", "target"
+        )
+    return settle_machine(
+        out, st_schema, {anc: (anchor_cls,), tgt: (target_cls,)}, anc,
+        resolve, settle_us=horizon_us if following else 0,
+        retain_us=horizon_us,
+    )
 
 
 @query(
@@ -1451,7 +1394,7 @@ def pattern_detect_notfollowedby_stream(
     10 min), Flink's bound for a within-bounded negation. The oracle
     is the batch key's zero-count SQL plus the ms-aligned
     horizon-closed-before-final-watermark filter (a strict ``<``: see
-    :func:`compile_absence_stream` for the tie argument — this is the
+    :func:`compile_horizon_stream` for the tie argument — this is the
     absence analogue of the run-fold keys' ``<=`` anchor filter).
 
     Scale: irrelevant classes are filtered BEFORE the keyed shuffle
@@ -1473,20 +1416,13 @@ def pattern_detect_notfollowedby_stream(
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_absence_stream("click", "purchase", 6 * 3600 * 1_000_000)
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=ABSENCE_OUT_SCHEMA,
-        stateStructType=ABSENCE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_horizon_stream(
+        "click", "purchase", 6 * 3600 * 1_000_000
+    ))
 
 
 #: Horizon-counting state (pattern_detect_followedby_stream): pending
-#: anchors (µs + event_id) and retained target timestamps (µs) —
-#: the absence machine's schema, reused shape-for-shape.
+#: anchors (µs + event_id) and retained target timestamps (µs).
 HORIZON_STATE_SCHEMA = StructType(
     [
         StructField("anchor_us", ArrayType(LongType())),
@@ -1502,82 +1438,6 @@ HORIZON_OUT_SCHEMA = StructType(
         StructField("clicks_6h", LongType()),
     ]
 )
-
-
-def compile_horizon_count_stream(
-    anchor_cls: str, target_cls: str, horizon_us: int, at_least: int
-):
-    """Handler for PRECEDING-horizon counting (Flink ``followedBy``
-    with a time bound): each anchor counts targets inside
-    ``[anchor_ts − horizon, anchor_ts]`` (inclusive — the batch RANGE
-    frame) and emits when the count reaches ``at_least``.
-
-    A PRECEDING horizon resolves faster than the absence machine's
-    FOLLOWING one: the anchor settles as soon as ``a_ms < wm_ms`` —
-    any unseen target has ``t_ms >= wm_ms > a_ms``, hence
-    ``t_us >= wm_ms·1000 > a_us`` — strictly after the anchor,
-    outside its frame. Target retention mirrors the absence machine:
-    evict below ``wm_ms·1000 − horizon_us`` (nothing pending or
-    future can reach further back), so per-key state is O(events in
-    horizon + watermark delay)."""
-
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            a_us, a_id, t_us = state.get
-            anchors = [(int(u), int(i)) for u, i in zip(a_us, a_id)]
-            targets = [int(u) for u in t_us]
-        else:
-            anchors, targets = [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        anchors.append((us, int(eid)))
-                    elif cls == target_cls:
-                        targets.append(us)
-        # Targets sort once per invocation, each anchor counts its
-        # frame by two bisects (ADVICE r12 item 2) — O((A + T)·log T).
-        emitted, pending = [], []
-        targets.sort()
-        for us, eid in anchors:
-            if us // 1000 < wm_ms:
-                n = bisect.bisect_right(targets, us) - bisect.bisect_left(
-                    targets, us - horizon_us
-                )
-                if n >= at_least:
-                    emitted.append((key[0], eid, n))
-            else:
-                pending.append((us, eid))
-        floor_us = wm_ms * 1000 - horizon_us
-        targets = [t for t in targets if t >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                targets,
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "purchase_event": [r[1] for r in emitted],
-                "clicks_6h": [r[2] for r in emitted],
-            }
-        )
-
-    return handler
 
 
 @query(
@@ -1613,7 +1473,7 @@ def pattern_detect_followedby_stream(
     direction (counting), which settles the moment the watermark
     passes the anchor itself — no horizon wait — because every
     in-frame click is provably already ingested
-    (:func:`compile_horizon_count_stream`). Same filtered-stream
+    (:func:`compile_horizon_stream`). Same filtered-stream
     watermark convention (classes filter before the shuffle, the
     oracle's final-watermark term ranges over click/purchase rows);
     ties match the batch RANGE frame (a click at the purchase's exact
@@ -1625,17 +1485,9 @@ def pattern_detect_followedby_stream(
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_horizon_count_stream(
-        "purchase", "click", 6 * 3600 * 1_000_000, 2
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=HORIZON_OUT_SCHEMA,
-        stateStructType=HORIZON_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_horizon_stream(
+        "purchase", "click", 6 * 3600 * 1_000_000, at_least=2
+    ))
 
 
 @query(
@@ -1969,17 +1821,12 @@ def pattern_match_skipguard_stream(
 # ---------------------------------------------------------------------------
 # Non-deterministic relaxed contiguity (Flink ``followedByAny``) —
 # round 13. Pairing is order-insensitive set logic like the horizon
-# machines (no hold-buffer fold needed): a target settles once the
-# watermark strictly passes it, at which point every in-frame anchor
-# has provably arrived (an anchor with a_us < t_us arriving later
-# would be watermark-late and dropped upstream by the same ts < wm
-# contract the resolution rule aligns to).
+# machines (no hold-buffer fold needed), on the same settle kernel.
 
 #: Pairs-state schema: retained anchors (µs + event_id) and pending
-#: targets (µs + event_id). Anchors older than horizon + watermark
-#: delay evict — no pending or future target's frame reaches them —
-#: so per-key state is O(events inside horizon + watermark delay),
-#: Flink's NFA bound for a within-bounded followedByAny.
+#: targets (µs + event_id); O(events inside horizon + watermark
+#: delay) per key, Flink's NFA bound for a within-bounded
+#: followedByAny.
 PAIRS_STATE_SCHEMA = StructType(
     [
         StructField("anchor_us", ArrayType(LongType())),
@@ -2015,110 +1862,52 @@ def compile_pairs_stream(
     target_cls: str,
     horizon_us: int,
     blocker_cls: str | None = None,
-):
-    """Handler for ``followedByAny`` pairing: each settling target
+) -> Machine:
+    """Machine for ``followedByAny`` pairing: each settling target
     emits one row per retained anchor inside ``[t_us − horizon,
     t_us)`` (the strict-below / inclusive-above frame of
     compile_horizon_pairs, seen from the target side).
 
-    Resolution rule: a target settles once ``t_ms < wm_ms`` (STRICT)
-    — any unseen anchor has ``a_ms >= wm_ms > t_ms``, hence
-    ``a_us >= wm_ms·1000 > t_us``, strictly after the target and
-    outside its frame, so the pair set is complete. Anchors sort once
-    per invocation and each target takes its frame by two bisects
-    (the horizon machines' r13 resolution shape). Anchor eviction
-    floor: pending and future targets have ``t_us >= wm_ms·1000``,
-    so anchors below ``wm_ms·1000 − horizon_us`` are unreachable.
+    Targets are the pending role and settle at ``t_ms < wm_ms`` (the
+    kernel's settle rule with no delay: every unseen anchor is
+    strictly after the target, so the pair set is complete); anchors
+    are retained down to the kernel's floor ``wm_ms·1000 −
+    horizon_us``. Each target takes its frame by two bisects.
 
     ``blocker_cls`` (middle negation — [FLINK-API] ``notFollowedBy``
     BETWEEN steps): a settling target pairs only with anchors that
     have NO blocker strictly between them in (us, id) event order —
     two bisects over the once-sorted blocker buffer per candidate
-    pair. An unseen blocker has ``b_ms >= wm_ms > t_ms`` — after the
-    target, never between — so settlement stays complete; blockers
-    share the anchors' eviction floor. Unblocked patterns keep the
-    base state schema byte-identical."""
+    pair. An unseen blocker is after the target, never between, so
+    settlement stays complete; blockers share the anchors' floor.
+    Unblocked patterns keep the base state schema byte-identical."""
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            if blocker_cls is not None:
-                a_us, a_id, t_us, t_id, b_us, b_id = state.get
-                blockers = [
-                    (int(u), int(i)) for u, i in zip(b_us, b_id)
-                ]
-            else:
-                a_us, a_id, t_us, t_id = state.get
-                blockers = []
-            anchors = [(int(u), int(i)) for u, i in zip(a_us, a_id)]
-            targets = [(int(u), int(i)) for u, i in zip(t_us, t_id)]
-        else:
-            anchors, targets, blockers = [], [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        anchors.append((us, int(eid)))
-                    elif cls == target_cls:
-                        targets.append((us, int(eid)))
-                    elif cls == blocker_cls:
-                        blockers.append((us, int(eid)))
-        emitted, pending = [], []
-        anchors.sort()
-        blockers.sort()
+    def resolve(k, due, roles, _wm_ms, _st):
+        anchors, blockers = roles["anchor"], roles.get("blocker")
         a_keys = [a[0] for a in anchors]
-        for us, eid in targets:
-            if us // 1000 < wm_ms:
-                lo = bisect.bisect_left(a_keys, us - horizon_us)
-                hi = bisect.bisect_left(a_keys, us)
-                for a_u, a_i in anchors[lo:hi]:
-                    if blocker_cls is not None:
-                        # blockers strictly between (a_u, a_i) and
-                        # (us, eid) in (us, id) order — the prefix-
-                        # equality rule the batch join encodes
-                        blo = bisect.bisect_right(blockers, (a_u, a_i))
-                        bhi = bisect.bisect_left(blockers, (us, eid))
-                        if bhi > blo:
-                            continue
-                    emitted.append((key[0], a_i, eid, us - a_u))
-            else:
-                pending.append((us, eid))
-        floor_us = wm_ms * 1000 - horizon_us
-        anchors = [a for a in anchors if a[0] >= floor_us]
-        base = (
-            [u for u, _ in anchors],
-            [i for _, i in anchors],
-            [u for u, _ in pending],
-            [i for _, i in pending],
-        )
-        if blocker_cls is not None:
-            blockers = [b for b in blockers if b[0] >= floor_us]
-            base = base + (
-                [u for u, _ in blockers],
-                [i for _, i in blockers],
-            )
-        state.update(base)
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "click_event": [r[1] for r in emitted],
-                "purchase_event": [r[2] for r in emitted],
-                "gap_us": [r[3] for r in emitted],
-            }
-        )
+        rows = []
+        for us, eid in due:
+            lo = bisect.bisect_left(a_keys, us - horizon_us)
+            hi = bisect.bisect_left(a_keys, us)
+            for a_u, a_i in anchors[lo:hi]:
+                # blockers strictly between (a_u, a_i) and (us, eid) in
+                # (us, id) order — the prefix-equality rule the batch
+                # join encodes
+                if blockers and bisect.bisect_left(
+                    blockers, (us, eid)
+                ) > bisect.bisect_right(blockers, (a_u, a_i)):
+                    continue
+                rows.append((k, a_i, eid, us - a_u))
+        return rows
 
-    return handler
+    roles = {"anchor": (anchor_cls,), "target": (target_cls,)}
+    if blocker_cls is not None:
+        roles["blocker"] = (blocker_cls,)
+    return settle_machine(
+        PAIRS_OUT_SCHEMA,
+        PAIRS_STATE_SCHEMA if blocker_cls is None else PAIRS_STATE_SCHEMA_BLK,
+        roles, "target", resolve, retain_us=horizon_us,
+    )
 
 
 @query(
@@ -2165,17 +1954,9 @@ def pattern_detect_followedbyany_stream(
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream(
+    return keyed_fold(ev, "user_id", compile_pairs_stream(
         "click", "purchase", 24 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -2188,10 +1969,9 @@ def pattern_detect_followedbyany_stream(
 # strictly after the deadline, no hold-buffer fold.
 
 #: Timeout-state schema: pending pattern starts and the retained
-#: second/third-class events (µs + event_id parallel arrays each).
-#: Events below ``wm − horizon − 1ms`` evict (no pending or future
-#: start's frame reaches them), so per-key state is O(events inside
-#: horizon + watermark delay) — the NFA bound for a within-bounded
+#: second/third-class events (µs + event_id parallel arrays each);
+#: O(events inside horizon + watermark delay) per key under the
+#: kernel's eviction floor — the NFA bound for a within-bounded
 #: three-step pattern.
 TIMEOUT_STATE_SCHEMA = StructType(
     [
@@ -2216,14 +1996,14 @@ TIMEOUT_OUT_SCHEMA = StructType(
 
 def compile_timeout_stream(
     first_cls: str, second_cls: str, third_cls: str, horizon_us: int
-):
-    """Handler for the timed-out-partials side output of ``first
+) -> Machine:
+    """Machine for the timed-out-partials side output of ``first
     followedBy second followedBy third within(horizon)``.
 
-    A start resolves once ``(start_us + horizon) // 1000 < wm_ms``
-    (STRICT) — any unseen event has ``ts_ms >= wm_ms``, hence
-    ``ts_us >= wm_ms·1000 > start_us + horizon``, beyond the
-    deadline, so the funnel's fate is fixed: the earliest
+    Starts are the pending role and settle at their deadline (the
+    kernel's settle rule with ``settle_us = horizon``: every unseen
+    event is beyond the deadline), so the funnel's fate is fixed: the
+    earliest
     second-class event strictly after the start (in (us, id) total
     order — the batch rn order restricted to these classes) within
     the deadline, then the earliest third-class event strictly after
@@ -2232,90 +2012,30 @@ def compile_timeout_stream(
     (never early on completion): an earlier second-class event can
     still arrive in-watermark and shift the chain, and the event
     buffers are retained for the horizon regardless — pending-start
-    state is O(starts in horizon), not the bottleneck. Both sides
-    sort once per invocation; each start resolves with two bisects.
+    state is O(starts in horizon), not the bottleneck. Each start
+    resolves with two bisects over the sorted retained sides.
     """
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_us, s_id, b_us, b_id, c_us, c_id = state.get
-            starts = [(int(u), int(i)) for u, i in zip(s_us, s_id)]
-            seconds = [(int(u), int(i)) for u, i in zip(b_us, b_id)]
-            thirds = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-        else:
-            starts, seconds, thirds = [], [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == first_cls:
-                        starts.append((us, int(eid)))
-                    elif cls == second_cls:
-                        seconds.append((us, int(eid)))
-                    elif cls == third_cls:
-                        thirds.append((us, int(eid)))
-        emitted, pending = [], []
-        seconds.sort()
-        thirds.sort()
-        for us, eid in starts:
+    def resolve(k, due, roles, _wm_ms, _st):
+        seconds, thirds = roles["second"], roles["third"]
+        rows = []
+        for us, eid in due:
             deadline = us + horizon_us
-            if deadline // 1000 >= wm_ms:
-                pending.append((us, eid))
-                continue
             i = bisect.bisect_right(seconds, (us, eid))
-            fc = (
-                seconds[i]
-                if i < len(seconds) and seconds[i][0] <= deadline
-                else None
-            )
-            if fc is None:
-                emitted.append((key[0], eid, 1, deadline))
+            if i == len(seconds) or seconds[i][0] > deadline:
+                rows.append((k, eid, 1, deadline))
                 continue
-            j = bisect.bisect_right(thirds, fc)
-            done = j < len(thirds) and thirds[j][0] <= deadline
-            if not done:
-                emitted.append((key[0], eid, 2, deadline))
-        # Exact eviction floor — same derivation as the absence
-        # machine's (a pending anchor's deadline // 1000 >= wm_ms is
-        # exactly us >= wm_ms*1000 − horizon_us; followers must sort
-        # at or after their anchor). ADVICE r13 item 4.
-        floor_us = wm_ms * 1000 - horizon_us
-        seconds = [e for e in seconds if e[0] >= floor_us]
-        thirds = [e for e in thirds if e[0] >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                [u for u, _ in seconds],
-                [i for _, i in seconds],
-                [u for u, _ in thirds],
-                [i for _, i in thirds],
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(
-                    min((u + horizon_us) // 1000 for u, _ in pending),
-                    wm_ms + 1,
-                )
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "start_event": [r[1] for r in emitted],
-                "n_matched": [r[2] for r in emitted],
-                "deadline_us": [r[3] for r in emitted],
-            }
-        )
+            j = bisect.bisect_right(thirds, seconds[i])
+            if j == len(thirds) or thirds[j][0] > deadline:
+                rows.append((k, eid, 2, deadline))
+        return rows
 
-    return handler
+    return settle_machine(
+        TIMEOUT_OUT_SCHEMA, TIMEOUT_STATE_SCHEMA,
+        {"start": (first_cls,), "second": (second_cls,),
+         "third": (third_cls,)},
+        "start", resolve, settle_us=horizon_us, retain_us=horizon_us,
+    )
 
 
 @query(
@@ -2381,17 +2101,9 @@ def pattern_timeout_partial_stream(
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_timeout_stream(
+    return keyed_fold(ev, "user_id", compile_timeout_stream(
         "view", "click", "purchase", 6 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=TIMEOUT_OUT_SCHEMA,
-        stateStructType=TIMEOUT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    ))
 
 
 @query(
@@ -2532,17 +2244,9 @@ def pattern_detect_followedby_nobetween_stream(
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream(
+    return keyed_fold(ev, "user_id", compile_pairs_stream(
         "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA_BLK,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    ))
 
 
 @query(
@@ -2771,7 +2475,7 @@ def compile_suffix_stream(pat: Pattern):
     convention (no run-close shift: nothing here ranges over an open
     run).
 
-    Returns ``(handler, out_schema, state_schema)``. Out columns:
+    Returns a :class:`keyed.Machine`. Out columns:
     key, anchor_event, one (g_<name>, g_<name>_ref) pair per guarded
     step, pattern_start_us, pattern_end_us.
     """
@@ -2843,7 +2547,6 @@ def compile_suffix_stream(pat: Pattern):
         StructField("pattern_end_us", LongType()),
     ]
     out_schema = StructType(fields)
-    out_cols = [f.name for f in out_schema.fields]
     ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
     val_col = pat.val_col
 
@@ -2866,33 +2569,8 @@ def compile_suffix_stream(pat: Pattern):
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def dec(v):
-            return None if v is None or v != v else float(v)
-
-        if state.exists:
-            if needs_val:
-                (w_us, w_id, w_cls, w_nul,
-                 b_id, b_us, b_cls, b_nul, w_val, b_val) = state.get
-            else:
-                (w_us, w_id, w_cls, w_nul,
-                 b_id, b_us, b_cls, b_nul) = state.get
-                w_val = b_val = None
-            win = [
-                (int(u), int(i), None if n else c,
-                 dec(w_val[j]) if needs_val else None)
-                for j, (u, i, c, n) in enumerate(
-                    zip(w_us, w_id, w_cls, w_nul)
-                )
-            ]
-            buf = [
-                (int(u), int(i), None if n else c,
-                 dec(b_val[j]) if needs_val else None)
-                for j, (u, i, c, n) in enumerate(
-                    zip(b_us, b_id, b_cls, b_nul)
-                )
-            ]
-        else:
-            win, buf = [], []
+        st = read_state(state, state_schema)
+        win, buf = load_events(st, "win"), load_events(st, "buf")
         wm_ms = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for chunk in pdfs:
@@ -2902,7 +2580,6 @@ def compile_suffix_stream(pat: Pattern):
                 )
         ready, hold = split_by_watermark(buf, wm_ms)
         out = []
-        nan = float("nan")
         for us, eid, cls, val in ready:
             if cls is not None and cls in anchor_clses:
                 ok = True
@@ -2952,29 +2629,15 @@ def compile_suffix_stream(pat: Pattern):
                     )
             win.append((us, eid, cls, val))
             del win[: max(0, len(win) - w_len)]
-        base = (
-            [e[0] for e in win],
-            [e[1] for e in win],
-            ["" if e[2] is None else e[2] for e in win],
-            [1 if e[2] is None else 0 for e in win],
-            [e[1] for e in hold],
-            [e[0] for e in hold],
-            ["" if e[2] is None else e[2] for e in hold],
-            [1 if e[2] is None else 0 for e in hold],
-        )
-        if needs_val:
-            base = base + (
-                [nan if e[3] is None else float(e[3]) for e in win],
-                [nan if e[3] is None else float(e[3]) for e in hold],
-            )
-        state.update(base)
+        write_state(state, state_schema, {
+            **dump_events(state_schema, "win", win),
+            **dump_events(state_schema, "buf", hold),
+        })
         if hold:
             state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {c: [r[i] for r in out] for i, c in enumerate(out_cols)}
-        )
+        yield frame(out_schema, out)
 
-    return handler, out_schema, state_schema
+    return Machine(handler, out_schema, state_schema)
 
 
 def suffix_pattern_stream(
@@ -2995,15 +2658,7 @@ def suffix_pattern_stream(
         .withWatermark(pat.ts, watermark)
         .select(*cols)
     )
-    handler, out_schema, state_schema = compile_suffix_stream(pat)
-    result = ev.groupBy(pat.key).applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, pat.key, compile_suffix_stream(pat))
 
 
 @query(

@@ -9,6 +9,13 @@ agree on final window contents (SURVEY §2.9 gap #1).
 State store: RocksDB provider (Flink's RocksDB state backend analogue)
 so large-window state spills off-heap; set per-session at runtime.
 
+The hand-built keyed machines here (count session, session timeout,
+TTL, window top-N, count-tumbling, count-sliding, as-of join) run on
+keyed.py, which owns the launcher, the state/event codec, the
+watermark fold and settle rules with their tie contract, the eviction
+floor and the timer clamp; the docstrings below state only what each
+machine adds.
+
 Oracle status (round 5): under bounded replay the emission set of most
 twins is DETERMINISTIC — append mode emits exactly the panes/sessions
 closed by the final watermark (max event ts − delay), stream-stream
@@ -37,12 +44,13 @@ from __future__ import annotations
 import bisect
 import os
 import time
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -56,6 +64,22 @@ from pyspark.sql.types import (
 from ..registry import query
 from ..scratch import scratch_dir
 from ..tables import prep
+from .keyed import (
+    Machine,
+    dec_val,
+    dump_events,
+    enc_val,
+    frame,
+    hold_timer_ms,
+    ingest_chunk,
+    keyed_fold,
+    load_events,
+    read_state,
+    settle_machine,
+    split_by_watermark,
+    timer_ms,
+    write_state,
+)
 
 _SINK_SEQ = 0
 
@@ -83,29 +107,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# Streaming state-store width DEFAULT: each shuffle partition owns a
-# RocksDB store instance whose open/commit cost dominates bounded-
-# replay micro-batches at fixture scale, so the twins run narrower
-# than the batch default. Scale-dependent, so parameterised
-# (optimization r15) — see _stream_width(); a deployment sizes it to
-# its key cardinality / executor count; note that changing it on an
-# EXISTING checkpoint is a state-layout change (Spark pins the width
-# at first run).
+# Streaming state-store width: each shuffle partition owns a RocksDB
+# store instance whose open/commit cost dominates bounded-replay
+# micro-batches at fixture scale, so the twins run narrower than the
+# batch default. A deployment sizes it to its key cardinality /
+# executor count; changing it on an EXISTING checkpoint is a
+# state-layout change (Spark pins the width at first run).
 STREAM_SHUFFLE_PARTITIONS = 8
-
-
-def _stream_width() -> int:
-    """The streaming state-store width, env read at USE time — an
-    import-time read would silently ignore a harness that sets
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS after importing this module
-    (review r15-opt), and a wrong width would then be frozen into the
-    checkpoint's state layout."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-            str(STREAM_SHUFFLE_PARTITIONS),
-        )
-    )
 
 #: stateOperators metrics of the most recent run_to_memory query —
 #: lets tests assert watermark behavior (e.g. numRowsDroppedByWatermark)
@@ -119,74 +127,31 @@ LAST_STATE_METRICS: list[dict] = []
 LAST_STATE_OP_COUNTS: list[int] = []
 
 
-def split_by_watermark(buf, wm_ms):
-    """The watermark hold-buffer protocol, in ONE place (review r12 —
-    the CEP automaton, count-window, and TTL handlers each carried a
-    private copy of the same split/sort, so the tie contract lived in
-    three spots). Returns ``(ready, hold)``: events whose ms-floored
-    timestamp the watermark has passed, in full (ts, order_id)
-    event-time order, and the rest. Buffer elements are tuples whose
-    first two fields are (ts_us, order_id); extra fields ride along.
-
-    Tie contract (shared by every caller, pinned by
-    test_pattern_stream_exact_watermark_tie_folds_in_arrival_order):
-    the fold admits ``ts_ms <= wm_ms`` while Spark's late-drop
-    contract is ``ts < wm`` — an exact-millisecond tie arriving in a
-    later batch folds in arrival order, the documented residual
-    hazard."""
-    ready = sorted(
-        (e for e in buf if e[0] // 1000 <= wm_ms),
-        key=lambda e: (e[0], e[1]),
-    )
-    hold = [e for e in buf if e[0] // 1000 > wm_ms]
-    return ready, hold
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
-def ingest_chunk(buf, chunk, ts_col, id_col, cls_col, val_col=None):
-    """Append one ``applyInPandasWithState`` chunk to a handler's event
-    buffer as ``(ts_us, order_id, cls|None, val|None)`` tuples —
-    vectorized column decode (optimization r16, guide §4.2: the
-    per-row ``zip(chunk[ts], ...)`` walked pandas Series element-wise
-    with a per-event ``pd.Timestamp.value`` unbox + two ``pd.isna``
-    calls; whole-column ``astype/tolist`` builds the identical tuples
-    6× faster at 200 k rows — equality asserted against the old loop
-    at change time and pinned by the fake-GroupState fuzz harness).
-    Shared by the two throughput-gated CEP machines so the decode
-    contract lives in one place, like :func:`split_by_watermark`."""
-    uss = (chunk[ts_col].astype("int64") // 1_000).tolist()
-    eids = chunk[id_col].tolist()
-    clss = chunk[cls_col].to_numpy(dtype=object, copy=True)
-    clss[pd.isna(clss)] = None  # None, float NaN and pd.NA (string[pyarrow])
-    if val_col is None:
-        vs = [None] * len(uss)
-    else:
-        vs = [
-            None if v != v else v
-            for v in chunk[val_col]
-            .to_numpy(dtype="float64", na_value=float("nan"))
-            .tolist()
-        ]
-    buf.extend(zip(uss, eids, clss.tolist(), vs))
-
-
-def hold_timer_ms(hold, wm_ms):
-    """Re-fold timer for a non-empty hold buffer: 1 ms before the
-    earliest held event (so the fold that admits it re-runs the
-    moment the watermark reaches it), clamped above the current
-    watermark as setTimeoutTimestamp requires.
-
-    API-forced residual (review r12): when the clamp engages
-    (``min_hold_ms == wm_ms + 1``) the armed timer fires only once
-    the watermark passes ``min_hold_ms`` — a timestamp that would
-    fire AT ``min_hold_ms`` is not armable (Spark requires the
-    timeout to exceed the current watermark). If the stream's FINAL
-    watermark lands exactly on ``min_hold_ms`` and the key sees no
-    further data, that last fold never runs. This needs an exact-ms
-    coincidence between ``max(ts) − delay`` and a held event's
-    ms-floored timestamp — the same measure-zero class as the
-    documented fold-tie hazard, and any later data for the key heals
-    it (folds re-run on every data invocation)."""
-    return max(min(e[0] for e in hold) // 1000 - 1, wm_ms + 1)
+@contextmanager
+def _pinned_stream_confs(spark: SparkSession):
+    """RocksDB state store and STREAM_SHUFFLE_PARTITIONS for the
+    block, both restored after — the two-phase checkpoint keys pin the
+    provider so their state layout cannot depend on which key ran
+    earlier in the session. ``conf.get`` on a registered conf never
+    raises (unset returns the built-in default), so re-setting the
+    snapshot restores an unset conf too."""
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+        "spark.sql.shuffle.partitions": str(STREAM_SHUFFLE_PARTITIONS),
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def run_to_memory(
@@ -220,12 +185,11 @@ def run_to_memory(
     _SINK_SEQ += 1
     name = f"flws_stream_sink_{_SINK_SEQ}"
     spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_width())
+        "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
     )
     try:
         q = (
@@ -447,17 +411,9 @@ def stateful_count_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         yield from outs
 
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    out = (
-        ev.groupBy("user_id")
-        .applyInPandasWithState(
-            count_since_signup,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        ev, "user_id", Machine(count_since_signup, _OUT_SCHEMA, _STATE_SCHEMA)
     )
-    return run_to_memory(spark, out, mode="append")
 
 
 @query(
@@ -793,9 +749,11 @@ _SESSION_STATE_SCHEMA = StructType(
 )
 
 
-def compile_session_timeout_stream():
-    """Handler for stateful_session_timeout_stream (module-level so the
-    fake-GroupState sweep replays the exact shipped operator)."""
+def compile_session_timeout_stream() -> Machine:
+    """Machine for stateful_session_timeout_stream (semantics in its
+    docstring). It folds each batch in (ts, event_id) order on arrival
+    — no hold buffer — and arms the session's gap deadline through the
+    kernel's timer clamp."""
 
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -807,38 +765,26 @@ def compile_session_timeout_stream():
             state.remove()
         else:
             start, last, n = state.get if state.exists else (None, None, 0)
-            # One sort over the whole batch: the iterator's chunks carry
-            # no cross-chunk order guarantee. (Materialize before the
-            # emptiness test — an iterator is always truthy, so the
-            # guard must check the LIST or pd.concat([]) raises.)
-            chunks = list(pdfs)
-            whole = pd.concat(chunks) if chunks else pd.DataFrame()
-            if len(whole):
-                whole = whole.sort_values(["ts", "event_id"])
-                for ts in whole["ts"]:
-                    ts_us = int(ts.value) // 1_000
-                    if start is None:
-                        start, last, n = ts_us, ts_us, 1
-                    elif ts_us - last < _SESSION_GAP_US:
-                        last, n = ts_us, n + 1
-                    else:
-                        out.append((key[0], start, last, n))
-                        start, last, n = ts_us, ts_us, 1
+            buf = []
+            for chunk in pdfs:
+                ingest_chunk(buf, chunk, "ts", "event_id")
+            for us, *_ in sorted(buf):
+                if start is None:
+                    start, last, n = us, us, 1
+                elif us - last < _SESSION_GAP_US:
+                    last, n = us, n + 1
+                else:
+                    out.append((key[0], start, last, n))
+                    start, last, n = us, us, 1
             if start is not None:
                 state.update((start, last, n))
-                # Event-time timer: fire when the watermark passes the
-                # session's gap deadline (ms granularity).
-                state.setTimeoutTimestamp((last + _SESSION_GAP_US) // 1_000)
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out],
-                "session_start_us": [r[1] for r in out],
-                "last_ts_us": [r[2] for r in out],
-                "n_events": [r[3] for r in out],
-            }
-        )
+                state.setTimeoutTimestamp(timer_ms(
+                    (last + _SESSION_GAP_US) // 1_000,
+                    state.getCurrentWatermarkMs(),
+                ))
+        yield frame(_SESSION_OUT_SCHEMA, out)
 
-    return handler
+    return Machine(handler, _SESSION_OUT_SCHEMA, _SESSION_STATE_SCHEMA)
 
 
 @query(
@@ -898,14 +844,7 @@ def stateful_session_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFra
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_session_timeout_stream(),
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_session_timeout_stream())
 
 
 #: Idle-key state TTL (Flink ``StateTtlConfig`` analogue): state not
@@ -933,13 +872,10 @@ _TTL_STATE_SCHEMA = StructType(
 )
 
 
-def make_ttl_machine():
-    """Build the keyed TTL state machine as a CLOSURE (cloudpickle
-    ships it by value — workers never import this package; same rule
-    as stateful_count_session_stream). Factory is module-level so the
-    multi-batch pytest replays crafted micro-batches through the exact
-    shipped handler. Semantics in stateful_session_ttl_stream's
-    docstring.
+def make_ttl_machine() -> Machine:
+    """The keyed TTL machine (module-level so the multi-batch pytest
+    replays crafted micro-batches through the exact shipped handler).
+    Semantics in stateful_session_ttl_stream's docstring.
 
     Since the r12 review pass the machine uses the CEP automata's
     watermark hold-buffer: arrivals buffer in state and fold into the
@@ -954,29 +890,22 @@ def make_ttl_machine():
     can never rescue a blob past that test (a held event has
     ``ts_ms > wm_ms``, so its gap to ``last`` already exceeds the
     TTL — folding it later starts a fresh generation either way).
-    One API-forced 1 ms residual remains (see :func:`hold_timer_ms`):
-    when a timer must clamp to ``wm + 1`` and the FINAL watermark
-    lands exactly on the boundary, the re-check never runs — the same
-    measure-zero class as the documented ms-tie hazard."""
+    The timer clamp's 1 ms residual applies (keyed.py)."""
     ttl_us = _STATE_TTL_US
 
     def ttl_machine(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         out = []
-        if state.exists:
-            last, n, b_us, b_id = state.get
-            buf = [(int(u), int(i)) for u, i in zip(b_us, b_id)]
-        else:
-            last = n = 0
-            buf = []
+        st = read_state(state, _TTL_STATE_SCHEMA)
+        last, n = (st["last"], st["n"]) if st else (0, 0)
+        buf = load_events(st, "buf")
         wm_ms = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for chunk in pdfs:
-                for ts, eid in zip(chunk["ts"], chunk["event_id"]):
-                    buf.append((int(ts.value) // 1_000, int(eid)))
+                ingest_chunk(buf, chunk, "ts", "event_id")
         ready, hold = split_by_watermark(buf, wm_ms)
-        for us, _eid in ready:
+        for us, *_ in ready:
             if n and us - last >= ttl_us:
                 # lazy expiry on access (last_write + ttl <= now)
                 out.append((key[0], last + ttl_us, last, n))
@@ -998,25 +927,17 @@ def make_ttl_machine():
             # control flow (its None-sentinel role moved to n == 0 in
             # the r12 hold-buffer rewrite) — pure schema weight,
             # dropped per ADVICE r12 item 3.
-            state.update(
-                (last, n, [u for u, _ in hold], [i for _, i in hold])
-            )
-            cands = []
+            write_state(state, _TTL_STATE_SCHEMA, {
+                "last": last, "n": n,
+                **dump_events(_TTL_STATE_SCHEMA, "buf", hold),
+            })
+            timers = [hold_timer_ms(hold, wm_ms)] if hold else []
             if n:
-                cands.append(max((last + ttl_us) // 1_000, wm_ms + 1))
-            if hold:
-                cands.append(hold_timer_ms(hold, wm_ms))
-            state.setTimeoutTimestamp(min(cands))
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out],
-                "evict_at_us": [r[1] for r in out],
-                "last_seen_us": [r[2] for r in out],
-                "n_discarded": [r[3] for r in out],
-            }
-        )
+                timers.append(timer_ms((last + ttl_us) // 1_000, wm_ms))
+            state.setTimeoutTimestamp(min(timers))
+        yield frame(_TTL_OUT_SCHEMA, out)
 
-    return ttl_machine
+    return Machine(ttl_machine, _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA)
 
 
 @query(
@@ -1116,14 +1037,7 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", make_ttl_machine())
 
 
 # The streaming CEP automaton lives in cep_stream.py since round 12:
@@ -1614,27 +1528,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     schema = spark.read.parquet(src).schema
 
-    # Snapshot-and-restore BOTH tuned confs (run_to_memory leaves the
-    # provider set session-wide by design for the twins; this key
-    # restores it so its RocksDB choice cannot make a mixed-key
-    # session order-dependent).
-    # conf.get on a registered conf never raises — when unset it
-    # returns the built-in default (HDFSBackedStateStoreProvider) — so
-    # there is no unset→unset round-trip to preserve (ADVICE r7: the
-    # former except/unset branch was dead code). Restoring by
-    # re-setting prev_provider explicitly is behaviorally identical.
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass"
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_width())
-    )
-    try:
+    with _pinned_stream_confs(spark):
 
         def run_phase() -> None:
             stream = (
@@ -1670,12 +1564,6 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq.write_table(tbl.filter(pc.greater(tbl["ts"], cutoff)), b_path)
         os.utime(b_path, (now + 10, now + 10))
         run_phase()  # restart: resumes offsets/watermark/window state
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            prev_provider,
-        )
 
     return spark.read.parquet(out).select(
         "w_start", F.col("n").cast("long").alias("n")
@@ -1759,28 +1647,7 @@ def stream_rule_update_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, mult int",
         ).coalesce(1).write.mode("overwrite").parquet(rules_dir)
 
-    # Pin the state-store provider for the whole two-phase run (same
-    # snapshot/restore as stream_checkpoint_restart): without this the
-    # checkpoint uses whichever provider the session last left behind
-    # (RocksDB after any run_to_memory key, HDFS-backed otherwise),
-    # which would make this key's state layout depend on session order.
-    # conf.get on a registered conf never raises — when unset it
-    # returns the built-in default (HDFSBackedStateStoreProvider) — so
-    # there is no unset→unset round-trip to preserve (ADVICE r7: the
-    # former except/unset branch was dead code). Restoring by
-    # re-setting prev_provider explicitly is behaviorally identical.
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass"
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_width())
-    )
-    try:
+    with _pinned_stream_confs(spark):
 
         def run_phase() -> None:
             stream = (
@@ -1828,12 +1695,6 @@ def stream_rule_update_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq.write_table(tbl.filter(pc.greater(tbl["ts"], cutoff)), b_path)
         os.utime(b_path, (now + 10, now + 10))
         run_phase()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            prev_provider,
-        )
 
     return spark.read.parquet(out).select(
         "w_start", "event_type", F.col("revenue").cast("double").alias("revenue")
@@ -1914,11 +1775,12 @@ def window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    return run_topn_stream(spark, ev)
+    return keyed_fold(ev, "d_start", compile_topn_stream())
 
 
-def compile_topn_stream(n: int = 2, window_ms: int = 86_400_000):
-    """Handler for the per-window top-N leaderboard (module-level so
+def compile_topn_stream(n: int = 2, window_ms: int = 86_400_000) -> Machine:
+    """Machine for the per-window top-N leaderboard over a prepared
+    (d_start, user_id, ts) stream keyed by d_start (module-level so
     the multi-batch pytest can replay a split directory through the
     EXACT operator the registered key runs)."""
 
@@ -1940,47 +1802,21 @@ def compile_topn_stream(n: int = 2, window_ms: int = 86_400_000):
             top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
             if state.exists:
                 state.remove()
-            yield pd.DataFrame(
-                {
-                    "d_start": [f"{start:%Y-%m-%d %H:%M:%S}"] * len(top),
-                    "user_id": [u for u, _ in top],
-                    "n": [c for _, c in top],
-                    "rn": list(range(1, len(top) + 1)),
-                }
-            )
+            yield frame(_TOPN_OUT_SCHEMA, [
+                (f"{start:%Y-%m-%d %H:%M:%S}", u, c, rn)
+                for rn, (u, c) in enumerate(top, 1)
+            ])
             return
         state.update(
             ([u for u in counts], [counts[u] for u in counts])
         )
-        # Same API-forced 1 ms residual as hold_timer_ms (ADVICE r12
-        # item 1): when the clamp engages (end_ms - 1 <= wm_ms) the
-        # timer arms at wm_ms + 1 and fires only once the watermark
-        # strictly passes it — a FINAL watermark landing exactly on
-        # the armed instant never fires it. Needs an exact-ms
-        # coincidence between max(ts) − delay and the window end; any
-        # later data for the key heals it (the wm_ms >= end_ms branch
-        # above emits on the data path).
-        state.setTimeoutTimestamp(max(end_ms - 1, wm_ms + 1))
-        yield pd.DataFrame(
-            {"d_start": [], "user_id": [], "n": [], "rn": []}
-        )
+        # A clamped timer (end_ms - 1 <= wm_ms) is the kernel's 1 ms
+        # residual; the wm_ms >= end_ms branch above heals it on the
+        # key's next data.
+        state.setTimeoutTimestamp(timer_ms(end_ms - 1, wm_ms))
+        yield frame(_TOPN_OUT_SCHEMA, [])
 
-    return handler
-
-
-def run_topn_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
-    """Keyed top-N operator over a prepared (d_start, user_id, ts)
-    stream (``ts`` stays in the projection solely to carry the
-    watermark attribute to the stateful operator — dropping it raises
-    "Event-time timeout not supported without watermark")."""
-    result = ev.groupBy("d_start").applyInPandasWithState(
-        compile_topn_stream(),
-        outputStructType=_TOPN_OUT_SCHEMA,
-        stateStructType=_TOPN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return Machine(handler, _TOPN_OUT_SCHEMA, _TOPN_STATE_SCHEMA)
 
 
 #: window_count_tumbling_stream keyed state: the open window's
@@ -2012,8 +1848,8 @@ _COUNTWIN_OUT_SCHEMA = StructType(
 )
 
 
-def compile_countwindow_stream(size: int = 5):
-    """Handler for count-tumbling windows (Flink ``countWindow(n)``):
+def compile_countwindow_stream(size: int = 5) -> Machine:
+    """Machine for count-tumbling windows (Flink ``countWindow(n)``):
     per key, every ``size`` consecutive events in event-time order
     form one window, emitted the moment its completing event FOLDS
     (i.e. once the watermark passes it — count windows depend on the
@@ -2022,57 +1858,35 @@ def compile_countwindow_stream(size: int = 5):
     Partial windows never fire — Flink's countWindow contract — so
     the bounded-replay tail stays in state and the oracle filter is
     ``COUNT(*) = size AND last-event-ms <= final_wm_ms``."""
-    nan = float("nan")
-
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            next_idx, cnt, min_id, max_id, sum_val, b_us, b_id, b_val = (
-                state.get
-            )
-            buf = [
-                (int(u), int(i), None if v != v else float(v))
-                for u, i, v in zip(b_us, b_id, b_val)
-            ]
-            sum_val = None if sum_val != sum_val else float(sum_val)
+        st = read_state(state, _COUNTWIN_STATE_SCHEMA)
+        if st:
+            next_idx, cnt = st["next_idx"], st["cnt"]
+            min_id, max_id = st["min_id"], st["max_id"]
+            sum_val = dec_val(st["sum_val"])
         else:
-            next_idx = cnt = 0
-            min_id = max_id = 0
+            next_idx = cnt = min_id = max_id = 0
             sum_val = None
-            buf = []
+        buf = load_events(st, "buf")
         wm_ms = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for chunk in pdfs:
-                for ts, eid, val in zip(
-                    chunk["ts"], chunk["event_id"], chunk["value"]
-                ):
-                    buf.append(
-                        (
-                            int(ts.value) // 1_000,
-                            int(eid),
-                            None if pd.isna(val) else float(val),
-                        )
-                    )
+                ingest_chunk(buf, chunk, "ts", "event_id", val_col="value")
         ready, hold = split_by_watermark(buf, wm_ms)
         out = []
-        for _us_, eid, val in ready:
+        for _us, eid, _cls, val in ready:
             cnt += 1
             min_id = eid if cnt == 1 else min(min_id, eid)
             max_id = eid if cnt == 1 else max(max_id, eid)
             if val is not None:
                 sum_val = val if sum_val is None else sum_val + val
             if cnt == size:
-                out.append(
-                    (
-                        key[0],
-                        next_idx,
-                        cnt,
-                        min_id,
-                        max_id,
-                        None if sum_val is None else round(sum_val, 4),
-                    )
-                )
+                out.append((
+                    key[0], next_idx, cnt, min_id, max_id,
+                    None if sum_val is None else round(sum_val, 4),
+                ))
                 next_idx += 1
                 cnt = 0
                 sum_val = None
@@ -2089,30 +1903,16 @@ def compile_countwindow_stream(size: int = 5):
             if state.exists:
                 state.remove()
         else:
-            state.update(
-                (
-                    next_idx,
-                    cnt,
-                    min_id,
-                    max_id,
-                    nan if sum_val is None else sum_val,
-                    [e[0] for e in hold],
-                    [e[1] for e in hold],
-                    [nan if e[2] is None else e[2] for e in hold],
-                )
-            )
+            write_state(state, _COUNTWIN_STATE_SCHEMA, {
+                "next_idx": next_idx, "cnt": cnt, "min_id": min_id,
+                "max_id": max_id, "sum_val": enc_val(sum_val),
+                **dump_events(_COUNTWIN_STATE_SCHEMA, "buf", hold),
+            })
         if hold:
             state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {
-                c: [r[i] for r in out]
-                for i, c in enumerate(
-                    [f.name for f in _COUNTWIN_OUT_SCHEMA.fields]
-                )
-            }
-        )
+        yield frame(_COUNTWIN_OUT_SCHEMA, out)
 
-    return handler
+    return Machine(handler, _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA)
 
 
 @query(
@@ -2164,14 +1964,7 @@ def window_count_tumbling_stream(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "value")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_countwindow_stream())
 
 
 #: window_count_sliding_stream keyed state: folded-event position,
@@ -2197,8 +1990,10 @@ _COUNTSLIDE_OUT_SCHEMA = StructType(
 )
 
 
-def compile_countwindow_sliding_stream(size: int = 6, slide: int = 2):
-    """Handler for sliding count windows (Flink ``countWindow(6, 2)``
+def compile_countwindow_sliding_stream(
+    size: int = 6, slide: int = 2
+) -> Machine:
+    """Machine for sliding count windows (Flink ``countWindow(6, 2)``
     = CountTrigger(slide) + CountEvictor(size)): per key, window w
     covers event positions [2w, 2w+6) in event-time order; it emits
     the moment its COMPLETING event (position 2w+5) folds — i.e. once
@@ -2213,77 +2008,44 @@ def compile_countwindow_sliding_stream(size: int = 6, slide: int = 2):
     position — O(size) per key, Flink's CountEvictor bound — and the
     watermark hold buffer (round 13 — VERDICT r12 directive 6; the
     one windows.py batch key that lacked a stream twin)."""
-    nan = float("nan")
-
     def handler(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pos, ring_raw, b_us, b_id, b_val = state.get
-            pos = int(pos)
-            ring = [None if v != v else float(v) for v in ring_raw]
-            buf = [
-                (int(u), int(i), None if v != v else float(v))
-                for u, i, v in zip(b_us, b_id, b_val)
-            ]
-        else:
-            pos, ring, buf = 0, [], []
+        st = read_state(state, _COUNTSLIDE_STATE_SCHEMA)
+        pos = int(st["pos"]) if st else 0
+        ring = [dec_val(v) for v in st["ring"]] if st else []
+        buf = load_events(st, "buf")
         wm_ms = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
             for chunk in pdfs:
-                for ts, eid, val in zip(
-                    chunk["ts"], chunk["event_id"], chunk["value"]
-                ):
-                    buf.append(
-                        (
-                            int(ts.value) // 1_000,
-                            int(eid),
-                            None if pd.isna(val) else float(val),
-                        )
-                    )
+                ingest_chunk(buf, chunk, "ts", "event_id", val_col="value")
         ready, hold = split_by_watermark(buf, wm_ms)
         out = []
-        for _us_, _eid, val in ready:
+        for *_, val in ready:
             ring.append(val)
             del ring[: max(0, len(ring) - size)]
             pos += 1
             if pos >= size and (pos - size) % slide == 0:
                 vals = [v for v in ring if v is not None]
-                out.append(
-                    (
-                        key[0],
-                        (pos - size) // slide,
-                        size,
-                        round(sum(vals), 4) if vals else None,
-                    )
-                )
+                out.append((
+                    key[0], (pos - size) // slide, size,
+                    round(sum(vals), 4) if vals else None,
+                ))
         if pos == 0 and not hold:
             # nothing folded and nothing numbered (the count-tumbling
             # rule): don't persist an empty row
             if state.exists:
                 state.remove()
         else:
-            state.update(
-                (
-                    pos,
-                    [nan if v is None else v for v in ring],
-                    [e[0] for e in hold],
-                    [e[1] for e in hold],
-                    [nan if e[2] is None else e[2] for e in hold],
-                )
-            )
+            write_state(state, _COUNTSLIDE_STATE_SCHEMA, {
+                "pos": pos, "ring": [enc_val(v) for v in ring],
+                **dump_events(_COUNTSLIDE_STATE_SCHEMA, "buf", hold),
+            })
         if hold:
             state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {
-                c: [r[i] for r in out]
-                for i, c in enumerate(
-                    [f.name for f in _COUNTSLIDE_OUT_SCHEMA.fields]
-                )
-            }
-        )
+        yield frame(_COUNTSLIDE_OUT_SCHEMA, out)
 
-    return handler
+    return Machine(handler, _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA)
 
 
 @query(
@@ -2340,14 +2102,7 @@ def window_count_sliding_stream(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "value")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_sliding_stream(),
-        outputStructType=_COUNTSLIDE_OUT_SCHEMA,
-        stateStructType=_COUNTSLIDE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_countwindow_sliding_stream())
 
 
 @query(
@@ -2456,97 +2211,48 @@ _ASOF_OUT_SCHEMA = StructType(
 )
 
 
-def compile_asof_stream():
-    """Handler for the streaming as-of join (each error paired with
-    the nearest prior-or-equal click of its key).
+def compile_asof_stream() -> Machine:
+    """Machine for the streaming as-of join (each error paired with
+    the nearest prior-or-equal click of its key) on the kernel's
+    pending-state protocol: errors are the pending role (settling at
+    ``e_ms < wm_ms``, STRICT — any not-yet-arrived click has
+    ``c_us >= wm_ms·1000 > e_us``, strictly after the error, so the
+    match set is complete) and clicks are retained above the floor
+    ``wm_ms·1000``.
 
-    Resolution rule: an error settles once ``e_ms < wm_ms`` (STRICT) —
-    any not-yet-arrived click has ``c_ms >= wm_ms > e_ms``, hence
-    ``c_us >= wm_ms·1000 > e_us`` — strictly after the error, so the
-    match set is complete. Click-buffer compression: once the
-    watermark passes a click, only the MAX (ts, id) among passed
-    clicks can ever win for a future or pending error (both have
-    ``ts_us >= wm_ms·1000``), so the settled side collapses to one
-    version — the temporal-join state bound.
+    Click-buffer compression: a click the floor evicts can still win
+    for a future or pending error (both have ``ts_us >= wm_ms·1000``),
+    but only the MAX (ts, id) among them can — so the rule folds the
+    clicks it is about to lose into one settled version
+    (``best_old_*``), the temporal-join state bound. The click list
+    arrives sorted, and each settling error resolves by bisect over a
+    parallel key list (bisect's ``key=`` needs Python >= 3.10) —
+    O((C + E)·log C) per invocation."""
 
-    Per-invocation cost (ADVICE r12 item 2): the click buffer sorts
-    ONCE per invocation and each settling error resolves by bisect —
-    O((C + E)·log C) instead of the earlier O(E·C) full scan per
-    error, so a key-skewed watermark-delay backlog degrades
-    log-linearly, not quadratically."""
-
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bo_us, bo_id, c_us, c_id, e_us, e_id = state.get
-            best = (int(bo_us), int(bo_id)) if int(bo_us) >= 0 else None
-            clicks = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-            errors = [(int(u), int(i)) for u, i in zip(e_us, e_id)]
-        else:
-            best, clicks, errors = None, [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == "click":
-                        clicks.append((us, int(eid)))
-                    else:
-                        errors.append((us, int(eid)))
-        out, pending = [], []
-        clicks.sort()  # (us, id) asc — prefix max is the last element
-        # parallel key list for the bisect probes: bisect's key=
-        # parameter needs Python >= 3.10, and the other handlers
-        # already bisect over plain lists (ADVICE r13 item 3) —
-        # keep the module interpreter-portable the same way
+    def resolve(k, due, roles, wm_ms, st):
+        clicks = roles["click"]
         click_us = [c[0] for c in clicks]
-        for us, eid in errors:
-            if us // 1000 < wm_ms:
-                # max (ts, id) click with ts <= error ts: bisect for
-                # the prefix boundary; the sorted prefix's last
-                # element IS its max tuple
-                idx = bisect.bisect_right(click_us, us)
-                m = clicks[idx - 1] if idx else None
-                if best is not None and (m is None or best > m):
-                    m = best
-                out.append((eid, None if m is None else m[1]))
-            else:
-                pending.append((us, eid))
-        floor_us = wm_ms * 1000
-        settled = [c for c in clicks if c[0] < floor_us]
+        best = (int(st["best_old_us"]), int(st["best_old_id"]))
+        best = best if best[0] >= 0 else None
+        rows = []
+        for us, eid in due:
+            # the sorted prefix's last element IS its max (ts, id)
+            idx = bisect.bisect_right(click_us, us)
+            m = clicks[idx - 1] if idx else None
+            if best is not None and (m is None or best > m):
+                m = best
+            rows.append((eid, None if m is None else m[1]))
+        settled = [c for c in clicks if c[0] < wm_ms * 1000]
         if settled:
-            top = max(settled)
-            best = top if best is None else max(best, top)
-        clicks = [c for c in clicks if c[0] >= floor_us]
-        state.update(
-            (
-                -1 if best is None else best[0],
-                -1 if best is None else best[1],
-                [u for u, _ in clicks],
-                [i for _, i in clicks],
-                [u for u, _ in pending],
-                [i for _, i in pending],
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "error_id": [r[0] for r in out],
-                "click_id": pd.array(
-                    [r[1] for r in out], dtype="Int64"
-                ),
-            }
-        )
+            best = max(settled + ([best] if best else []))
+            st["best_old_us"], st["best_old_id"] = best
+        return rows
 
-    return handler
+    return settle_machine(
+        _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA,
+        {"click": ("click",), "err": ("error",)}, "err", resolve,
+        init={"best_old_us": -1, "best_old_id": -1},
+    )
 
 
 @query(
@@ -2598,14 +2304,7 @@ def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_asof_stream(),
-        outputStructType=_ASOF_OUT_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_asof_stream())
 
 
 @query(

@@ -321,8 +321,20 @@ def test_pd_na_class_column_folds_like_none():
     """A ``string[pyarrow]`` class column carries NULL as ``pd.NA``,
     which is neither None nor a float NaN: ``ingest_chunk`` must
     decode it to None, or the suffix machine's ``cls in anchor_clses``
-    raises TypeError on NA's ambiguous truth value. Both CEP machines
-    that share the decode emit exactly what the None input emits."""
+    raises TypeError on NA's ambiguous truth value (and the settle
+    kernel's class routing raises on hashing it). Every machine that
+    reads the class column through the shared ingest emits exactly
+    what the None input emits."""
+    from flink_large_window_spark.streaming.cep_stream import (
+        compile_horizon_stream,
+        compile_pairs_stream,
+        compile_timeout_stream,
+    )
+    from flink_large_window_spark.streaming.streams import (
+        compile_asof_stream,
+    )
+
+    h = 6 * 3600 * 1_000_000
     rows = [
         (u, ts, eid, None if eid % 5 == 0 else cls, val)
         for u, ts, eid, cls, val in _random_streams(
@@ -332,6 +344,15 @@ def test_pd_na_class_column_folds_like_none():
     for compile_fn, pat in (
         (compile_stream, STREAM_FUZZ_PATTERNS[0]),
         (compile_suffix_stream, SUFFIX_PATTERNS[0]),
+        (lambda _p: compile_horizon_stream("click", "purchase", h), None),
+        (lambda _p: compile_horizon_stream(
+            "purchase", "click", h, at_least=2), None),
+        (lambda _p: compile_pairs_stream("click", "purchase", h), None),
+        (lambda _p: compile_pairs_stream(
+            "click", "purchase", h, blocker_cls="error"), None),
+        (lambda _p: compile_timeout_stream(
+            "view", "click", "purchase", h), None),
+        (lambda _p: compile_asof_stream(), None),
     ):
         want, _ = _replay(rows, pat, 3, 5, compile_fn=compile_fn)
         got, _ = _replay(
@@ -352,17 +373,7 @@ def test_pending_state_machines_fuzz_match_bruteforce():
     applyInPandasWithState CEP machine in the module now has a
     randomized multi-batch handler-level sweep (round 14)."""
     from flink_large_window_spark.streaming.cep_stream import (
-        ABSENCE_OUT_SCHEMA,
-        ABSENCE_STATE_SCHEMA,
-        HORIZON_OUT_SCHEMA,
-        HORIZON_STATE_SCHEMA,
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA,
-        PAIRS_STATE_SCHEMA_BLK,
-        TIMEOUT_OUT_SCHEMA,
-        TIMEOUT_STATE_SCHEMA,
-        compile_absence_stream,
-        compile_horizon_count_stream,
+        compile_horizon_stream,
         compile_pairs_stream,
         compile_timeout_stream,
     )
@@ -391,9 +402,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         rows = keep({"click", "purchase"})
         got_raw, wm = _replay(
             rows, pat, n_batches, 41,
-            compile_fn=lambda _p: (
-                compile_absence_stream("click", "purchase", h),
-                ABSENCE_OUT_SCHEMA, ABSENCE_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_horizon_stream(
+                "click", "purchase", h
             ),
         )
         got = {(r[0], r[1]) for r in got_raw}
@@ -424,9 +434,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         # --- preceding-horizon count: >= 2 clicks in [p-6h, p] ---
         got_raw, wm = _replay(
             rows, pat, n_batches, 43,
-            compile_fn=lambda _p: (
-                compile_horizon_count_stream("purchase", "click", h, 2),
-                HORIZON_OUT_SCHEMA, HORIZON_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_horizon_stream(
+                "purchase", "click", h, at_least=2
             ),
         )
         got = {(r[0], r[1], r[2]) for r in got_raw}
@@ -446,17 +455,12 @@ def test_pending_state_machines_fuzz_match_bruteforce():
 
         # --- pairs (followedByAny), with and without a blocker ---
         rows3 = keep({"click", "purchase", "error"})
-        for blocker, st_schema in (
-            (None, PAIRS_STATE_SCHEMA),
-            ("error", PAIRS_STATE_SCHEMA_BLK),
-        ):
+        for blocker in (None, "error"):
             src = rows if blocker is None else rows3
             got_raw, wm = _replay(
                 src, pat, n_batches, 47,
-                compile_fn=lambda _p, b=blocker, s=st_schema: (
-                    compile_pairs_stream("click", "purchase", h,
-                                         blocker_cls=b),
-                    PAIRS_OUT_SCHEMA, s,
+                compile_fn=lambda _p, b=blocker: compile_pairs_stream(
+                    "click", "purchase", h, blocker_cls=b
                 ),
             )
             got = {tuple(r) for r in got_raw}
@@ -477,9 +481,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         rows4 = keep({"view", "click", "purchase"})
         got_raw, wm = _replay(
             rows4, pat, n_batches, 53,
-            compile_fn=lambda _p: (
-                compile_timeout_stream("view", "click", "purchase", h),
-                TIMEOUT_OUT_SCHEMA, TIMEOUT_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_timeout_stream(
+                "view", "click", "purchase", h
             ),
         )
         got = {tuple(r) for r in got_raw}
@@ -563,16 +566,6 @@ def test_streams_keyed_machines_fuzz_match_bruteforce():
     one whose emission follows its timer directly, so its reference
     uses the harness rule ``(last + gap) // 1000 <= wm``."""
     from flink_large_window_spark.streaming.streams import (
-        _ASOF_OUT_SCHEMA,
-        _ASOF_STATE_SCHEMA,
-        _COUNTSLIDE_OUT_SCHEMA,
-        _COUNTSLIDE_STATE_SCHEMA,
-        _COUNTWIN_OUT_SCHEMA,
-        _COUNTWIN_STATE_SCHEMA,
-        _SESSION_OUT_SCHEMA,
-        _SESSION_STATE_SCHEMA,
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
         compile_asof_stream,
         compile_countwindow_sliding_stream,
         compile_countwindow_stream,
@@ -673,19 +666,13 @@ def test_streams_keyed_machines_fuzz_match_bruteforce():
         return want
 
     machines = (
-        ("ttl", rows_all, want_ttl, lambda: (
-            make_ttl_machine(), _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA)),
-        ("count_tumbling", rows_all, want_tumbling, lambda: (
-            compile_countwindow_stream(), _COUNTWIN_OUT_SCHEMA,
-            _COUNTWIN_STATE_SCHEMA)),
-        ("count_sliding", rows_all, want_sliding, lambda: (
-            compile_countwindow_sliding_stream(), _COUNTSLIDE_OUT_SCHEMA,
-            _COUNTSLIDE_STATE_SCHEMA)),
-        ("asof", rows_ce, want_asof, lambda: (
-            compile_asof_stream(), _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA)),
-        ("session_timeout", rows_all, want_session, lambda: (
-            compile_session_timeout_stream(), _SESSION_OUT_SCHEMA,
-            _SESSION_STATE_SCHEMA)),
+        ("ttl", rows_all, want_ttl, make_ttl_machine),
+        ("count_tumbling", rows_all, want_tumbling, compile_countwindow_stream),
+        ("count_sliding", rows_all, want_sliding,
+         compile_countwindow_sliding_stream),
+        ("asof", rows_ce, want_asof, compile_asof_stream),
+        ("session_timeout", rows_all, want_session,
+         compile_session_timeout_stream),
     )
     for name, rows, want_fn, build in machines:
         for n_batches, seed in ((1, 3), (4, 17), (6, 29)):

@@ -1148,13 +1148,8 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     evict lazily on access; its final blob (last=t0+300m) is still
     live at replay end and must NOT emit.
     """
-    from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
-        make_ttl_machine,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     batch1 = [
         _event_row(1, 0, 0, "view"),
@@ -1180,14 +1175,7 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -1417,12 +1405,9 @@ def _run_absence_split_stream(spark, d):
     pattern_detect_notfollowedby_stream builds (filter BEFORE the
     watermark declaration), pointed at a split directory."""
     from flink_large_window_spark.streaming.cep_stream import (
-        ABSENCE_OUT_SCHEMA,
-        ABSENCE_STATE_SCHEMA,
-        compile_absence_stream,
+        compile_horizon_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     schema = "user_id long, ts timestamp, event_id long, event_type string"
     stream = (
@@ -1436,17 +1421,9 @@ def _run_absence_split_stream(spark, d):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_absence_stream(
+    return keyed_fold(ev, "user_id", compile_horizon_stream(
         "click", "purchase", 6 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=ABSENCE_OUT_SCHEMA,
-        stateStructType=ABSENCE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    ))
 
 
 def test_absence_stream_parity(spark):
@@ -1507,12 +1484,9 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
     the same click — the every-alternative semantics followedBy
     deliberately lacks."""
     from flink_large_window_spark.streaming.cep_stream import (
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA,
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1543,15 +1517,9 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream("click", "purchase", 24 * 3600 * 1_000_000)
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", compile_pairs_stream(
+        "click", "purchase", 24 * 3600 * 1_000_000
+    ))
     got = {
         (r["user_id"], r["click_event"], r["purchase_event"], r["gap_us"])
         for r in out.collect()
@@ -1575,14 +1543,9 @@ def test_state_reader_redistributes_losslessly(spark):
     residual."""
     from flink_large_window_spark.scratch import scratch_dir
     from flink_large_window_spark.streaming.streams import (
+        STREAM_SHUFFLE_PARTITIONS as stream_width,
         _events_stream,
-        _stream_width,
     )
-
-    # ADVICE r15: resolve the width through the SAME use-time path the
-    # runtime uses, so an env override cannot desynchronize the test
-    # from the code under test.
-    stream_width = _stream_width()
 
     ev = (
         _events_stream(spark, SF_SMOKE)
@@ -1872,13 +1835,10 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     batch late, in-watermark, and still lands at position 3), NULL
     values are sum-skipped, and window 0 — complete — emits while the
     open tail (positions 8+) stays in state."""
+    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
-        _COUNTSLIDE_OUT_SCHEMA,
-        _COUNTSLIDE_STATE_SCHEMA,
         compile_countwindow_sliding_stream,
-        run_to_memory,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     vals = {0: 1.0, 1: 2.0, 2: None, 3: 4.0, 4: 5.0, 5: 6.0,
             6: 7.0, 7: 8.0}
@@ -1900,14 +1860,7 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_sliding_stream(),
-        outputStructType=_COUNTSLIDE_OUT_SCHEMA,
-        stateStructType=_COUNTSLIDE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", compile_countwindow_sliding_stream())
     got = {
         (r["user_id"], r["window_idx"], r["n"], r["sum_value"])
         for r in out.collect()
@@ -1928,12 +1881,9 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
     (click@10 -> p@30); click@20 (after the error) still pairs.
     uid 5: error AFTER the purchase blocks nothing."""
     from flink_large_window_spark.streaming.cep_stream import (
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA_BLK,
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1963,17 +1913,9 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream(
+    out = keyed_fold(ev, "user_id", compile_pairs_stream(
         "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA_BLK,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    ))
     got = {
         (r["user_id"], r["click_event"], r["purchase_event"])
         for r in out.collect()
@@ -1993,12 +1935,9 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
     (7) click arrives out-of-order AFTER its purchase in arrival
         order but in-watermark -> the chain still completes, silent."""
     from flink_large_window_spark.streaming.cep_stream import (
-        TIMEOUT_OUT_SCHEMA,
-        TIMEOUT_STATE_SCHEMA,
         compile_timeout_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "view"),
@@ -2034,17 +1973,9 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_timeout_stream(
+    out = keyed_fold(ev, "user_id", compile_timeout_stream(
         "view", "click", "purchase", 6 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=TIMEOUT_OUT_SCHEMA,
-        stateStructType=TIMEOUT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    ))
     got = {
         (r["user_id"], r["start_event"], r["n_matched"])
         for r in out.collect()
@@ -2107,9 +2038,8 @@ def test_window_topn_stream_multibatch(spark, max_ts, tmp_path):
     import pyarrow.parquet as pq
 
     from flink_large_window_spark.registry import REGISTRY
-    from flink_large_window_spark.streaming.streams import (
-        run_topn_stream,
-    )
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import compile_topn_stream
 
     src = os.path.join(SF_SMOKE, "events.parquet")
     t = pq.read_table(src)
@@ -2141,7 +2071,7 @@ def test_window_topn_stream_multibatch(spark, max_ts, tmp_path):
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    out = run_topn_stream(spark, ev)
+    out = keyed_fold(ev, "d_start", compile_topn_stream())
     got = {
         (r["d_start"], r["user_id"], r["n"], r["rn"]) for r in out.collect()
     }
@@ -2170,13 +2100,10 @@ def _run_countwin_split_stream(spark, d):
     """Replay part_*.parquet files in `d` one per micro-batch through
     the count-window automaton — the same pipeline
     window_count_tumbling_stream builds, pointed at a split dir."""
+    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
-        _COUNTWIN_OUT_SCHEMA,
-        _COUNTWIN_STATE_SCHEMA,
         compile_countwindow_stream,
-        run_to_memory,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     schema = (
         "user_id long, ts timestamp, event_id long, value double"
@@ -2190,14 +2117,7 @@ def _run_countwin_split_stream(spark, d):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_countwindow_stream())
 
 
 def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
@@ -2347,13 +2267,8 @@ def _run_asof_split_stream(spark, d):
     """Replay part_*.parquet files in `d` one per micro-batch through
     the temporal-join automaton — the same pipeline join_asof_stream
     builds, pointed at a split directory."""
-    from flink_large_window_spark.streaming.streams import (
-        _ASOF_OUT_SCHEMA,
-        _ASOF_STATE_SCHEMA,
-        compile_asof_stream,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import compile_asof_stream
 
     schema = "user_id long, ts timestamp, event_id long, event_type string"
     stream = (
@@ -2367,14 +2282,7 @@ def _run_asof_split_stream(spark, d):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_asof_stream(),
-        outputStructType=_ASOF_OUT_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return keyed_fold(ev, "user_id", compile_asof_stream())
 
 
 def test_asof_stream_multibatch(spark, tmp_path):
@@ -2482,12 +2390,9 @@ def test_followedby_stream_multibatch(spark, tmp_path):
     while one just outside does not — the emitted count pins exact
     frame membership."""
     from flink_large_window_spark.streaming.cep_stream import (
-        HORIZON_OUT_SCHEMA,
-        HORIZON_STATE_SCHEMA,
-        compile_horizon_count_stream,
+        compile_horizon_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     d = _write_batches(
         tmp_path,
@@ -2523,17 +2428,9 @@ def test_followedby_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_horizon_count_stream(
-        "purchase", "click", 6 * 3600 * 1_000_000, 2
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=HORIZON_OUT_SCHEMA,
-        stateStructType=HORIZON_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", compile_horizon_stream(
+        "purchase", "click", 6 * 3600 * 1_000_000, at_least=2
+    ))
     got = {
         (r["user_id"], r["purchase_event"], r["clicks_6h"])
         for r in out.collect()
@@ -2573,13 +2470,8 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     blob of 3 evicted by the final watermark. The hold-buffer fold
     must produce exactly that; the pre-review handler emitted a
     fabricated (+0m, n=1) eviction plus a wrong n=2 final blob."""
-    from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
-        make_ttl_machine,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     d = _write_batches(
         tmp_path,
@@ -2600,14 +2492,7 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2634,14 +2519,11 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
-        _COUNTWIN_OUT_SCHEMA,
-        _COUNTWIN_STATE_SCHEMA,
+        compile_topn_stream,
         compile_countwindow_stream,
-        run_topn_stream,
-        run_to_memory,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
     schema = pa.schema(
@@ -2695,7 +2577,7 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    topn = run_topn_stream(spark, ev)
+    topn = keyed_fold(ev, "d_start", compile_topn_stream())
     got = {
         (r["d_start"], r["user_id"], r["n"], r["rn"])
         for r in topn.collect()
@@ -2717,14 +2599,7 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     ev2 = stream2.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    cw = ev2.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, cw, mode="append")
+    out = keyed_fold(ev2, "user_id", compile_countwindow_stream())
     cw_got = {
         (r["user_id"], r["window_idx"], r["sum_value"])
         for r in out.collect()
@@ -2760,13 +2635,8 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     the observability rule's lazy path. (The true held case, where
     the successor stays inside the final tail and neither path is
     observable, is test_ttl_held_successor_tail_case.)"""
-    from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
-        make_ttl_machine,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     d = _write_batches(
         tmp_path,
@@ -2791,14 +2661,7 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2825,15 +2688,10 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     emitted gen-1 unconditionally)."""
     import duckdb
 
-    from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
-        make_ttl_machine,
-        run_to_memory,
-    )
+    from flink_large_window_spark.streaming.keyed import keyed_fold
+    from flink_large_window_spark.streaming.streams import make_ttl_machine
     from flink_large_window_spark import api
     import __spark_entry__ as entry_mod
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     d = _write_batches(
         tmp_path,
@@ -2854,14 +2712,7 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
+    out = keyed_fold(ev, "user_id", make_ttl_machine())
     assert out.count() == 0, out.collect()
     # and the ORACLE on the same events agrees (this is the cell the
     # pre-fix oracle got wrong)

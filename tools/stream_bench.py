@@ -28,6 +28,9 @@ swung well under that). First run wrote STREAM_BENCH.json (the FROZEN
 baseline, never overwritten); every run writes STREAM_BENCH_LAST.json
 and prints one JSON line.
 
+The session comes from ``session.get_spark``: ``SPARK_GRAFT_CPUS``
+sets the local core count, ``SPARK_DRIVER_MEMORY`` the driver heap.
+
 Usage: python tools/stream_bench.py [--k 100] [--sf DIR] [--keys ...]
 """
 
@@ -61,23 +64,17 @@ def main() -> None:
     ap.add_argument("--keys", nargs="*", default=list(DEFAULT_KEYS))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from scale_probe import _replicate_events_arrow
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.driver.maxResultSize", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import flink_large_window_spark.api as api
-    from flink_large_window_spark.tables import prep, row_count
+    from flink_large_window_spark.session import get_spark
+    from flink_large_window_spark.tables import row_count
 
-    prep(spark)  # before any source read (NTZ gotcha)
+    # get_spark sizes the session from SPARK_GRAFT_CPUS /
+    # SPARK_DRIVER_MEMORY, runs the workers under the package daemon
+    # with the package on their path, and preps the session (NTZ).
+    spark = get_spark("stream-bench")
+    spark.sparkContext.setLogLevel("ERROR")
     queries = api.queries()
 
     d = tempfile.mkdtemp(prefix=f"streambench_{args.k}x_")
