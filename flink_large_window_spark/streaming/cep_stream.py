@@ -1307,21 +1307,17 @@ def compile_horizon_stream(
 
     - ``at_least=None`` — ``anchor NOT FOLLOWED BY target WITHIN
       horizon`` (absence): frame ``[a, a + horizon]``; the anchor
-      settles only once its whole frame is behind the watermark,
-      ``(a_us + horizon_us) // 1000 < wm_ms``, and emits
-      ``(key, anchor_id)`` iff the frame holds no target. Oracle
-      filter: ``(epoch_us(ts) + horizon) // 1000 < final_wm_ms``.
+      settles once its whole frame is behind the watermark (settle
+      delay = horizon) and emits ``(key, anchor_id)`` iff the frame
+      holds no target. Oracle filter: ``(epoch_us(ts) + horizon) //
+      1000 < final_wm_ms``.
     - ``at_least=n`` — PRECEDING-horizon count (Flink ``followedBy``
-      with a time bound): frame ``[a − horizon, a]``, which is
-      complete as soon as the anchor itself settles (``a_ms < wm_ms``
-      — every unseen target is strictly after the anchor); emits
+      with a time bound): frame ``[a − horizon, a]``, complete as soon
+      as the anchor itself settles (no settle delay); emits
       ``(key, anchor_id, count)`` iff the count reaches ``n``.
 
-    Targets are retained down to the kernel's exact floor
-    ``wm_ms·1000 − horizon_us`` (a pending anchor sits at or above
-    ``wm_ms·1000 − horizon_us`` in the absence direction and above
-    ``wm_ms·1000`` in the count direction; future anchors above
-    ``wm_ms·1000``), so per-key state is O(events in horizon +
+    Targets are retained down to the kernel's eviction floor with
+    ``retain_us = horizon``, so per-key state is O(events in horizon +
     watermark delay), Flink's NFA bound. The two directions keep
     their own state and output schemas (click_/purch_ vs anchor_/
     target_ fields)."""

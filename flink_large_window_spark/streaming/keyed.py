@@ -272,17 +272,14 @@ def settle_machine(
         due, wait = [], []
         for e in lists[pending]:
             (due if (e[0] + settle_us) // 1000 < wm_ms else wait).append(e)
-        floor_us = wm_ms * 1000 - retain_us
         for p in roles:
             if p != pending:
                 lists[p].sort()
         rows = resolve(key[0], due, lists, wm_ms, st)
-        lists = {
-            p: wait if p == pending else [e for e in evs if e[0] >= floor_us]
-            for p, evs in lists.items()
-        }
+        floor_us = wm_ms * 1000 - retain_us
         for p, evs in lists.items():
-            st.update(dump_events(state_schema, p, evs))
+            kept = wait if p == pending else [e for e in evs if e[0] >= floor_us]
+            st.update(dump_events(state_schema, p, kept))
         write_state(state, state_schema, st)
         if wait:
             state.setTimeoutTimestamp(
