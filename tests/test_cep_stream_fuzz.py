@@ -686,3 +686,65 @@ def test_streams_keyed_machines_fuzz_match_bruteforce():
                 f"extra={sorted(got - want, key=repr)[:3]} "
                 f"missing={sorted(want - got, key=repr)[:3]}"
             )
+
+
+def test_watermark_boundaries_are_exact():
+    """The random sweeps rarely put an event exactly on a watermark, so
+    the kernel's exact boundaries are pinned here by driving handlers
+    at chosen watermarks: a pending event settles only once the
+    watermark STRICTLY passes its deadline (pairs: the target itself;
+    absence: target + horizon); a retained event exactly on the
+    eviction floor ``wm_ms·1000 − horizon`` is kept; TTL state evicts
+    only once the watermark strictly passes ``last + ttl``."""
+    from flink_large_window_spark.streaming.cep_stream import (
+        compile_horizon_stream,
+        compile_pairs_stream,
+    )
+    from flink_large_window_spark.streaming.streams import make_ttl_machine
+
+    h_ms = 6 * 3600 * 1000
+    t0 = pd.Timestamp("2024-03-01 12:00:00")
+    t0_ms = t0.value // 1_000_000
+
+    def step(machine, store, wm_ms, events=()):
+        st = _FakeGroupState(store, 1, wm_ms, timed_out=not events)
+        chunks = iter([pd.DataFrame({
+            "user_id": [1] * len(events),
+            "ts": [t0 + pd.Timedelta(milliseconds=ms) for ms, _, _ in events],
+            "event_id": [eid for _, eid, _ in events],
+            "event_type": [cls for _, _, cls in events],
+        })] if events else [])
+        rows = [tuple(r) for pdf in machine.handler((1,), chunks, st)
+                for r in pdf.itertuples(index=False)]
+        return rows, st.timeout_ms
+
+    # pairs: the target at t0 + 1h settles once wm > its ms
+    m, store = compile_pairs_stream("click", "purchase", h_ms * 1000), {}
+    step(m, store, 0, [(0, 1, "click"), (3_600_000, 2, "purchase")])
+    wm = t0_ms + 3_600_000
+    assert step(m, store, wm) == ([], wm + 1)
+    assert step(m, store, wm + 1)[0] == [(1, 1, 2, 3_600_000_000)]
+
+    # absence: the click settles once wm > click + horizon
+    m, store = compile_horizon_stream("click", "purchase", h_ms * 1000), {}
+    step(m, store, 0, [(0, 1, "click")])
+    assert step(m, store, t0_ms + h_ms) == ([], t0_ms + h_ms + 1)
+    assert step(m, store, t0_ms + h_ms + 1)[0] == [(1, 1)]
+
+    # preceding count: the click sits exactly on the floor while the
+    # purchase (at the watermark) still waits — it must be kept
+    m, store = compile_horizon_stream(
+        "purchase", "click", h_ms * 1000, at_least=1
+    ), {}
+    step(m, store, 0, [(0, 1, "click"), (h_ms, 2, "purchase")])
+    assert step(m, store, t0_ms + h_ms)[0] == []
+    assert step(m, store, t0_ms + h_ms + 1)[0] == [(1, 2, 1)]
+
+    # TTL: the blob evicts once wm > last + ttl
+    ttl_ms = 3600 * 1000
+    m, store = make_ttl_machine(), {}
+    step(m, store, 0, [(0, 1, "view")])
+    assert step(m, store, t0_ms + ttl_ms) == ([], t0_ms + ttl_ms + 1)
+    assert step(m, store, t0_ms + ttl_ms + 1)[0] == [
+        (1, (t0_ms + ttl_ms) * 1000, t0_ms * 1000, 1)
+    ]
