@@ -25,6 +25,9 @@ positions) with arrival order within a batch shuffled: the machine
 sorts via split_by_watermark, and cross-batch out-of-order is pinned
 separately by the targeted parity tests.
 
+The same harness sweeps every other keyed machine (the pending-state
+machines and the streams.py machines) against brute-force references.
+
 Deterministic: numpy PCG64 with fixed seeds.
 """
 
