@@ -13,6 +13,13 @@ sequence with a bounded ``between(1,3)`` quantifier and per-step
 measures — the SQL:2016 MATCH_RECOGNIZE
 ``PATTERN (V C{1,3} P) DEFINE .. MEASURES ..`` shape.
 
+A :class:`Pattern` holds only its steps, a ``within`` bound and a skip
+policy; the event columns every strategy reads are the module
+constants :data:`KEY_COL` .. :data:`VAL_COL`. A key with a streaming
+twin declares its pattern once, as a module-level spec (e.g.
+:data:`MATCH_RECOGNIZE`) that the twin in ``streaming/cep_stream.py``
+compiles too.
+
 Three compilation strategies, chosen by the quantifier structure (each
 is the plan a hand-written Spark implementation would use, so
 compiling adds zero runtime cost — pattern_detect_cep's compiled plan
@@ -106,6 +113,16 @@ GUARD_CMPS = {
     "<=": _op.le,
 }
 
+#: Columns of the keyed event relation every strategy reads: the
+#: ``events`` fixture's names (FIXTURES.md). Like Flink's ``Pattern``
+#: builder, a :class:`Pattern` names conditions, quantifiers and a time
+#: bound, never a column.
+KEY_COL = "user_id"
+TS_COL = "ts"
+ID_COL = "event_id"
+CLS_COL = "event_type"
+VAL_COL = "value"
+
 
 @dataclass(frozen=True)
 class Guard:
@@ -120,11 +137,11 @@ class Guard:
 
     e.g. ``Guard("first", ">", "views", "max")`` on a purchase step =
     "the purchase's value exceeds the largest value seen in the view
-    run" — Flink's canonical iterative-condition example. The value
-    column is named by ``Pattern.val_col``. In the greedy strategy
-    the aggregates range over the step's full MAXIMAL run (the same
-    events the ``n_<name>`` measures count); in the suffix strategy
-    over the step's fixed-count matched events.
+    run" — Flink's canonical iterative-condition example. Both sides
+    read :data:`VAL_COL`. In the greedy strategy the aggregates range
+    over the step's full MAXIMAL run (the same events the ``n_<name>``
+    measures count); in the suffix strategy over the step's
+    fixed-count matched events.
     """
 
     agg: str
@@ -170,7 +187,7 @@ class Step:
     ``until`` (round 15 — VERDICT r14 item 5) is Flink's
     ``oneOrMore().until(condition)`` stop condition ([FLINK-API]
     public surface per SURVEY §0): a ``(cmp, threshold)`` predicate
-    over ``Pattern.val_col`` that TERMINATES the looping step's run.
+    over :data:`VAL_COL` that TERMINATES the looping step's run.
     House semantics under strict contiguity: an event of the step's
     class whose value satisfies the stop condition closes the run at
     that event and is consumed by NO step — it acts as a run boundary
@@ -242,27 +259,27 @@ SKIP_STRATEGIES = ("past_last", "to_next", "no_skip")
 class Pattern:
     """A strict-contiguity CEP pattern over a keyed event stream.
 
-    ``val_col`` names the event value column :class:`Guard` predicates
-    read (required iff any step carries a guard). ``skip`` selects the
-    after-match emission policy (see :data:`SKIP_STRATEGIES`);
-    non-default policies require a ≥2-step pattern and no
-    ``within_hours`` (a sub-match's true start timestamp is not in the
-    runs relation, so the bound cannot be evaluated per sub-match —
-    rejected rather than silently evaluated against the maximal run's
-    start). A guard can never sit on the first step anyway (it must
-    reference an EARLIER step), so guard aggregates are unaffected by
-    the expansion — they range over other steps' maximal runs in both
-    modes.
+    ``skip`` selects the after-match emission policy (see
+    :data:`SKIP_STRATEGIES`); non-default policies require a ≥2-step
+    pattern and no ``within_hours`` (a sub-match's true start timestamp
+    is not in the runs relation, so the bound cannot be evaluated per
+    sub-match — rejected rather than silently evaluated against the
+    maximal run's start). A guard can never sit on the first step
+    anyway (it must reference an EARLIER step), so guard aggregates are
+    unaffected by the expansion — they range over other steps' maximal
+    runs in both modes.
     """
 
     steps: tuple[Step, ...]
     within_hours: int | None = None
-    key: str = "user_id"
-    ts: str = "ts"
-    order_id: str = "event_id"
-    cls_col: str = "event_type"
-    val_col: str | None = None
     skip: str = "past_last"
+
+    @property
+    def reads_value(self) -> bool:
+        """Whether a guard or an ``until`` reads :data:`VAL_COL`."""
+        return any(
+            s.guard is not None or s.until is not None for s in self.steps
+        )
 
     def __post_init__(self) -> None:
         if not self.steps:
@@ -282,10 +299,6 @@ class Pattern:
             if s.max_count is not None and s.max_count < max(s.min_count, 1):
                 raise ValueError(f"step {s.name}: max_count < min_count")
             if s.until is not None:
-                if self.val_col is None:
-                    raise ValueError(
-                        f"step {s.name}: until needs Pattern.val_col"
-                    )
                 if s.max_count is not None:
                     raise ValueError(
                         f"step {s.name}: until requires an unbounded "
@@ -310,16 +323,11 @@ class Pattern:
                             f"step {o.name} — the stop relabeling "
                             "must be a function on classes"
                         )
-            if s.guard is not None:
-                if self.val_col is None:
-                    raise ValueError(
-                        f"step {s.name}: guard needs Pattern.val_col"
-                    )
-                if s.guard.ref_step not in names[:i]:
-                    raise ValueError(
-                        f"step {s.name}: guard.ref_step "
-                        f"{s.guard.ref_step!r} must name an EARLIER step"
-                    )
+            if s.guard is not None and s.guard.ref_step not in names[:i]:
+                raise ValueError(
+                    f"step {s.name}: guard.ref_step "
+                    f"{s.guard.ref_step!r} must name an EARLIER step"
+                )
         if self.skip not in SKIP_STRATEGIES:
             raise ValueError(f"skip must be one of {SKIP_STRATEGIES}")
         if self.skip != "past_last":
@@ -407,17 +415,17 @@ def apply_until(df: DataFrame, pat: Pattern) -> tuple[DataFrame, Pattern]:
     stop condition costs one row-local CASE projection and nothing
     else, at any scale.
     """
-    expr = F.col(pat.cls_col)
+    expr = F.col(CLS_COL)
     for s in pat.steps:
         if s.until is None:
             continue
         cmp, thr = s.until
         expr = F.when(
-            (F.col(pat.cls_col) == s.cls)
-            & GUARD_CMPS[cmp](F.col(pat.val_col), F.lit(thr)),
+            (F.col(CLS_COL) == s.cls)
+            & GUARD_CMPS[cmp](F.col(VAL_COL), F.lit(thr)),
             F.lit(s.cls + UNTIL_STOP_SUFFIX),
         ).otherwise(expr)
-    df = df.withColumn(pat.cls_col, expr)
+    df = df.withColumn(CLS_COL, expr)
     pat = replace(
         pat,
         steps=tuple(
@@ -551,7 +559,7 @@ def compile_pattern(df: DataFrame, pat: Pattern) -> DataFrame:
     return compile_greedy(df, pat)
 
 
-def _suffix_val_agg(w, pat: Pattern, offsets: list[int], agg: str):
+def _suffix_val_agg(w, offsets: list[int], agg: str):
     """Value aggregate over a suffix step's matched events, which sit
     at fixed lag ``offsets`` from the anchor (0 = the anchor itself).
     'first' = the EARLIEST matched event (largest offset); least/
@@ -562,7 +570,7 @@ def _suffix_val_agg(w, pat: Pattern, offsets: list[int], agg: str):
     silently diverging from the greedy/streaming routes' F.sum over
     the same Guard spec (review r12)."""
     lags = [
-        F.lag(pat.val_col, o).over(w) if o else F.col(pat.val_col)
+        F.lag(VAL_COL, o).over(w) if o else F.col(VAL_COL)
         for o in offsets
     ]
     if agg == "first":
@@ -618,33 +626,33 @@ def compile_suffix(df: DataFrame, pat: Pattern) -> DataFrame:
         # must not compile stop conditions silently
         raise ValueError("resolve until via apply_until first")
 
-    w = Window.partitionBy(pat.key).orderBy(pat.ts, pat.order_id)
+    w = Window.partitionBy(KEY_COL).orderBy(TS_COL, ID_COL)
     # Offsets from the anchor (offset 0 = final event), walking the
     # steps backwards: step k's events sit at offsets [acc, acc+n-1].
-    conds = [_matches(F.col(pat.cls_col), last)]
+    conds = [_matches(F.col(CLS_COL), last)]
     cols = [
-        F.col(pat.key),
-        F.col(pat.order_id).alias("anchor_id"),
-        F.col(pat.ts).alias("anchor_ts"),
+        F.col(KEY_COL),
+        F.col(ID_COL).alias("anchor_id"),
+        F.col(TS_COL).alias("anchor_ts"),
     ]
     offsets: dict[str, list[int]] = {last.name: [0]}
     off = 1
     for s in reversed(pat.steps[:-1]):
         offsets[s.name] = list(range(off, off + s.min_count))
         for _ in range(s.min_count):
-            conds.append(_matches(F.lag(pat.cls_col, off).over(w), s))
+            conds.append(_matches(F.lag(CLS_COL, off).over(w), s))
             off += 1
         if s.exact:
-            guard = F.lag(pat.cls_col, off).over(w)
+            guard = F.lag(CLS_COL, off).over(w)
             conds.append(guard.isNull() | ~_matches(guard, s))
     total = off  # pattern length in events
     start_ts = (
-        F.lag(pat.ts, total - 1).over(w) if total > 1 else F.col(pat.ts)
+        F.lag(TS_COL, total - 1).over(w) if total > 1 else F.col(TS_COL)
     )
     cols.append(start_ts.alias("start_ts"))
     if pat.within_hours is not None:
         conds.append(
-            F.col(pat.ts)
+            F.col(TS_COL)
             <= start_ts + F.expr(f"interval {pat.within_hours} hour")
         )
     # Iterative conditions (Guard): both sides are fixed-offset lag
@@ -654,8 +662,8 @@ def compile_suffix(df: DataFrame, pat: Pattern) -> DataFrame:
         if s.guard is None:
             continue
         g = s.guard
-        this = _suffix_val_agg(w, pat, offsets[s.name], g.agg)
-        ref = _suffix_val_agg(w, pat, offsets[g.ref_step], g.ref_agg)
+        this = _suffix_val_agg(w, offsets[s.name], g.agg)
+        ref = _suffix_val_agg(w, offsets[g.ref_step], g.ref_agg)
         rhs = ref if g.factor == 1.0 else ref * F.lit(g.factor)
         conds.append(GUARD_CMPS[g.cmp](this, rhs))
         cols.append(this.alias(f"g_{s.name}"))
@@ -680,31 +688,29 @@ def runs_relation(df: DataFrame, pat: Pattern) -> DataFrame:
     combinable, output strictly smaller than the input. Emits one row
     per run: key, cls, run_len, run_start_ts (first event's ts),
     first_id (first event's id), start_rn (per-key ordinal anchor);
-    when ``pat.val_col`` is set, additionally the per-run value
+    when ``pat.reads_value``, additionally the per-run value
     aggregates Guard predicates read (val_first/val_last/val_min/
     val_max/val_sum — still one map-side-combinable aggregation).
     """
-    w_u = Window.partitionBy(pat.key).orderBy(pat.ts, pat.order_id)
-    w_ut = Window.partitionBy(pat.key, pat.cls_col).orderBy(
-        pat.ts, pat.order_id
-    )
+    w_u = Window.partitionBy(KEY_COL).orderBy(TS_COL, ID_COL)
+    w_ut = Window.partitionBy(KEY_COL, CLS_COL).orderBy(TS_COL, ID_COL)
     sel = [
-        pat.key,
-        pat.ts,
-        pat.order_id,
-        pat.cls_col,
+        KEY_COL,
+        TS_COL,
+        ID_COL,
+        CLS_COL,
         F.row_number().over(w_u).alias("rn"),
         F.row_number().over(w_ut).alias("rn_t"),
     ]
     aggs = [
-        F.min(pat.ts).alias("run_start_ts"),
+        F.min(TS_COL).alias("run_start_ts"),
         F.count(F.lit(1)).alias("run_len"),
         F.min("rn").alias("start_rn"),
-        F.min_by(pat.order_id, F.col("rn")).alias("first_id"),
+        F.min_by(ID_COL, F.col("rn")).alias("first_id"),
     ]
-    if pat.val_col is not None:
-        sel.append(pat.val_col)
-        v = F.col(pat.val_col)
+    if pat.reads_value:
+        sel.append(VAL_COL)
+        v = F.col(VAL_COL)
         aggs += [
             F.min_by(v, F.col("rn")).alias("val_first"),
             F.max_by(v, F.col("rn")).alias("val_last"),
@@ -715,8 +721,8 @@ def runs_relation(df: DataFrame, pat: Pattern) -> DataFrame:
     ordered = df.select(*sel)
     return (
         ordered.groupBy(
-            pat.key,
-            F.col(pat.cls_col).alias("cls"),
+            KEY_COL,
+            F.col(CLS_COL).alias("cls"),
             (F.col("rn") - F.col("rn_t")).alias("island"),
         )
         .agg(*aggs)
@@ -780,7 +786,7 @@ def canonicalize_alternation(
                 f"canonical token {tok!r} collides with a step class; "
                 "rename the conflicting class set"
             )
-    col = F.col(pat.cls_col)
+    col = F.col(CLS_COL)
     expr = col
     for cs, tok in tokens.items():
         expr = F.when(col.isin(*sorted(cs)), F.lit(tok)).otherwise(expr)
@@ -794,7 +800,7 @@ def canonicalize_alternation(
         return s
 
     steps = tuple(_rewrite(s) for s in pat.steps)
-    return df.withColumn(pat.cls_col, expr), replace(pat, steps=steps)
+    return df.withColumn(CLS_COL, expr), replace(pat, steps=steps)
 
 
 def compile_greedy(
@@ -841,7 +847,7 @@ def compile_greedy(
     else:
         runs = _runs  # pre-built (and pre-canonicalized) by the caller
     last = pat.steps[-1]
-    w_r = Window.partitionBy(pat.key).orderBy("start_rn")
+    w_r = Window.partitionBy(KEY_COL).orderBy("start_rn")
     expand = pat.skip != "past_last" and len(pat.steps) > 1
     first = pat.steps[0]
 
@@ -853,7 +859,7 @@ def compile_greedy(
     if last.exact and last.max_count is not None:
         conds.append(F.col("run_len") <= last.max_count)
     cols = [
-        F.col(pat.key),
+        F.col(KEY_COL),
         F.col("first_id").alias("anchor_first_id"),
         F.col("run_start_ts").alias("anchor_start_ts"),
         (
@@ -924,58 +930,46 @@ def compile_greedy(
 
 def compile_horizon(
     df: DataFrame,
-    pat: Pattern,
     *,
     anchor_cls: str | tuple[str, ...],
     target_cls: str | tuple[str, ...],
     hours: int,
-    following: bool = False,
     at_least: int | None = None,
-    absent: bool = False,
 ) -> DataFrame:
     """Relaxed-contiguity count with a time bound (``followedBy`` /
     ``notFollowedBy``): count target-class events in the RANGE frame
-    around each anchor-class event; keep anchors with count ≥
-    ``at_least`` (or == 0 when ``absent``).
+    around each anchor-class event.
+
+    - ``at_least=None`` — absence (``notFollowedBy``): the FOLLOWING
+      frame ``[a, a + hours]``, keep anchors whose count is 0.
+    - ``at_least=n`` — the PRECEDING frame ``[a − hours, a]``, keep
+      anchors whose count is ≥ n.
 
     The RANGE frame needs a numeric order key in Spark: epoch
     microseconds (ties collapse into one frame position, matching
     DuckDB's RANGE-over-timestamp peers exactly — the
-    pattern_detect_followedby formulation).
-
-    ``pat`` supplies ONLY the column names (key/ts/order/cls); the
-    anchor/target classes and the time bound come from the keyword
-    arguments. A Pattern carrying quantifier or within information
-    would be silently ignored, so it is rejected (ADVICE r10 item 3).
+    pattern_detect_followedby formulation). The streaming image is
+    ``cep_stream.compile_horizon_stream``, same convention.
     """
-    if pat.within_hours is not None:
+    absent = at_least is None
+    if not absent and at_least < 1:
         raise ValueError(
-            "compile_horizon takes its time bound from hours=; "
-            "Pattern.within_hours would be silently ignored — unset it"
+            "at_least must be >= 1 (at_least=None selects absence)"
         )
-    for s in pat.steps:
-        if (s.min_count, s.max_count, s.exact) != (1, 1, False):
-            raise ValueError(
-                "compile_horizon uses the Pattern only for column "
-                f"names; step {s.name!r} carries quantifier "
-                "information that would be silently ignored"
-            )
-    if (at_least is None) == (not absent):
-        raise ValueError("exactly one of at_least / absent")
     span = hours * 3600 * 1_000_000
-    frame = (0, span) if following else (-span, Window.currentRow)
+    frame = (0, span) if absent else (-span, Window.currentRow)
     anchor = Step("anchor", anchor_cls)
     target = Step("target", target_cls)
     w = (
-        Window.partitionBy(pat.key)
-        .orderBy(F.unix_micros(pat.ts))
+        Window.partitionBy(KEY_COL)
+        .orderBy(F.unix_micros(TS_COL))
         .rangeBetween(*frame)
     )
     flagged = df.select(
-        pat.key,
-        pat.order_id,
-        pat.cls_col,
-        F.count(F.when(_matches(F.col(pat.cls_col), target), 1))
+        KEY_COL,
+        ID_COL,
+        CLS_COL,
+        F.count(F.when(_matches(F.col(CLS_COL), target), 1))
         .over(w)
         .alias("n_target"),
     )
@@ -983,10 +977,10 @@ def compile_horizon(
         (F.col("n_target") == 0) if absent else (F.col("n_target") >= at_least)
     )
     return (
-        flagged.filter(_matches(F.col(pat.cls_col), anchor) & pred)
+        flagged.filter(_matches(F.col(CLS_COL), anchor) & pred)
         .select(
-            pat.key,
-            F.col(pat.order_id).alias("anchor_id"),
+            KEY_COL,
+            F.col(ID_COL).alias("anchor_id"),
             F.col("n_target"),
         )
     )
@@ -994,7 +988,6 @@ def compile_horizon(
 
 def compile_horizon_pairs(
     df: DataFrame,
-    pat: Pattern,
     *,
     anchor_cls: str | tuple[str, ...],
     target_cls: str | tuple[str, ...],
@@ -1032,22 +1025,8 @@ def compile_horizon_pairs(
     |anchors|·|targets| WITHIN the horizon only (the residual prunes
     the rest), the same output-complexity term Flink's followedByAny
     NFA pays — the match set itself is quadratic in horizon density,
-    so no plan can beat it asymptotically. Same quantifier/within
-    validation as compile_horizon: the Pattern supplies ONLY column
-    names.
+    so no plan can beat it asymptotically.
     """
-    if pat.within_hours is not None:
-        raise ValueError(
-            "compile_horizon_pairs takes its time bound from hours=; "
-            "Pattern.within_hours would be silently ignored — unset it"
-        )
-    for s in pat.steps:
-        if (s.min_count, s.max_count, s.exact) != (1, 1, False):
-            raise ValueError(
-                "compile_horizon_pairs uses the Pattern only for "
-                f"column names; step {s.name!r} carries quantifier "
-                "information that would be silently ignored"
-            )
     span = hours * 3600 * 1_000_000
     anchor = Step("anchor", anchor_cls)
     target = Step("target", target_cls)
@@ -1066,32 +1045,32 @@ def compile_horizon_pairs(
         keep = set(anchor.clses()) | set(target.clses())
         keep.add(not_between_cls)
         w_cum = (
-            Window.partitionBy(pat.key)
-            .orderBy(pat.ts, pat.order_id)
+            Window.partitionBy(KEY_COL)
+            .orderBy(TS_COL, ID_COL)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        base = df.filter(F.col(pat.cls_col).isin(*keep)).withColumn(
+        base = df.filter(F.col(CLS_COL).isin(*keep)).withColumn(
             "__cum",
             F.count(
-                F.when(F.col(pat.cls_col) == not_between_cls, 1)
+                F.when(F.col(CLS_COL) == not_between_cls, 1)
             ).over(w_cum),
         )
         extra_a = [F.col("__cum").alias("a_cum")]
         extra_t = [F.col("__cum").alias("t_cum")]
-    a = base.filter(_matches(F.col(pat.cls_col), anchor)).select(
-        pat.key,
-        F.col(pat.order_id).alias("anchor_id"),
-        F.unix_micros(pat.ts).alias("a_us"),
+    a = base.filter(_matches(F.col(CLS_COL), anchor)).select(
+        KEY_COL,
+        F.col(ID_COL).alias("anchor_id"),
+        F.unix_micros(TS_COL).alias("a_us"),
         *extra_a,
     )
-    t = base.filter(_matches(F.col(pat.cls_col), target)).select(
-        F.col(pat.key).alias("__t_key"),
-        F.col(pat.order_id).alias("target_id"),
-        F.unix_micros(pat.ts).alias("t_us"),
+    t = base.filter(_matches(F.col(CLS_COL), target)).select(
+        F.col(KEY_COL).alias("__t_key"),
+        F.col(ID_COL).alias("target_id"),
+        F.unix_micros(TS_COL).alias("t_us"),
         *extra_t,
     )
     cond = (
-        (F.col(pat.key) == F.col("__t_key"))
+        (F.col(KEY_COL) == F.col("__t_key"))
         & (F.col("t_us") > F.col("a_us"))
         & (F.col("t_us") <= F.col("a_us") + F.lit(span))
     )
@@ -1102,7 +1081,7 @@ def compile_horizon_pairs(
     return (
         a.join(t, cond)
         .select(
-            pat.key,
+            KEY_COL,
             "anchor_id",
             "target_id",
             (F.col("t_us") - F.col("a_us")).alias("gap_us"),
@@ -1112,7 +1091,6 @@ def compile_horizon_pairs(
 
 def compile_timeout_partials(
     df: DataFrame,
-    pat: Pattern,
     *,
     first_cls: str,
     second_cls: str,
@@ -1151,28 +1129,16 @@ def compile_timeout_partials(
     the first-class event count; state in the window frame is a
     running min, not a buffer.
     """
-    if pat.within_hours is not None:
-        raise ValueError(
-            "compile_timeout_partials takes its time bound from "
-            "hours=; Pattern.within_hours would be silently ignored"
-        )
-    for s in pat.steps:
-        if (s.min_count, s.max_count, s.exact) != (1, 1, False):
-            raise ValueError(
-                "compile_timeout_partials uses the Pattern only for "
-                f"column names; step {s.name!r} carries quantifier "
-                "information that would be silently ignored"
-            )
     span = hours * 3600 * 1_000_000
-    cls = F.col(pat.cls_col)
+    cls = F.col(CLS_COL)
     ev = df.filter(cls.isin(first_cls, second_cls, third_cls)).select(
-        pat.key,
-        F.col(pat.cls_col),
-        F.col(pat.order_id).alias("eid"),
-        F.unix_micros(pat.ts).alias("us"),
+        KEY_COL,
+        F.col(CLS_COL),
+        F.col(ID_COL).alias("eid"),
+        F.unix_micros(TS_COL).alias("us"),
     )
     w_fut = (
-        Window.partitionBy(pat.key)
+        Window.partitionBy(KEY_COL)
         .orderBy("us", "eid")
         .rowsBetween(1, Window.unboundedFollowing)
     )
@@ -1203,7 +1169,7 @@ def compile_timeout_partials(
         p2.filter(cls == first_cls)
         .filter(no_second | no_third)
         .select(
-            pat.key,
+            KEY_COL,
             F.col("eid").alias("start_event"),
             F.when(no_second, F.lit(1))
             .otherwise(F.lit(2))
@@ -1264,10 +1230,8 @@ def pattern_timeout_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-free two-pass window plan.
     """
     prep(spark)
-    pat = Pattern(steps=(Step("x", "view"),))
     return compile_timeout_partials(
         table(spark, sf_dir, "events"),
-        pat,
         first_cls="view",
         second_cls="click",
         third_cls="purchase",
@@ -1309,10 +1273,8 @@ def pattern_detect_followedbyany(
     set itself, which any engine must materialize.
     """
     prep(spark)
-    pat = Pattern(steps=(Step("x", "click"),))
     return compile_horizon_pairs(
         table(spark, sf_dir, "events"),
-        pat,
         anchor_cls="click",
         target_cls="purchase",
         hours=24,
@@ -1322,6 +1284,16 @@ def pattern_detect_followedbyany(
         F.col("target_id").alias("purchase_event"),
         "gap_us",
     )
+
+
+MATCH_RECOGNIZE = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step("clicks", "click", 1, 3),
+        Step("purchase", "purchase", 1, None),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -1384,15 +1356,7 @@ def pattern_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded state — identical shape at 100 TB.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 1, 3),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_RECOGNIZE)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1401,6 +1365,15 @@ def pattern_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+MATCH_ALTERNATION = Pattern(
+    steps=(
+        Step("eng", ("view", "click"), 1, None),
+        Step("purchase", "purchase", 1, None),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -1463,14 +1436,7 @@ def pattern_match_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs relation. No joins, no extra exchange for alternation.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("eng", ("view", "click"), 1, None),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_ALTERNATION)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1478,6 +1444,21 @@ def pattern_match_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+DETECT_VALUE_GUARD = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step(
+            "purchase",
+            "purchase",
+            1,
+            None,
+            guard=Guard("first", ">", "views", "max"),
+        ),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -1536,21 +1517,7 @@ def pattern_detect_value_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference matcher in tests/test_cep_fuzz.py.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "purchase",
-                "purchase",
-                1,
-                None,
-                guard=Guard("first", ">", "views", "max"),
-            ),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_VALUE_GUARD)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1560,6 +1527,16 @@ def pattern_detect_value_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+MATCH_OPTIONAL = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step("clicks", "click", 0, 1),
+        Step("purchase", "purchase", 1, None),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -1631,15 +1608,7 @@ def pattern_match_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     step costs no additional scan or shuffle.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 0, 1),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_OPTIONAL)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1648,6 +1617,15 @@ def pattern_match_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+MATCH_AFTERSKIP = Pattern(
+    steps=(
+        Step("clicks", "click", 2, 4),
+        Step("purchase", "purchase", 1, None),
+    ),
+    skip="no_skip",
+)
 
 
 @query(
@@ -1710,20 +1688,29 @@ def pattern_match_afterskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the (much larger) event relation.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 2, 4),
-            Step("purchase", "purchase", 1, None),
-        ),
-        skip="no_skip",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_AFTERSKIP)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
         F.col("start_off").cast("long").alias("start_off"),
         F.col("n_clicks").cast("long").alias("n_clicks"),
     )
+
+
+MATCH_OPTIONAL_GUARD = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step(
+            "clicks",
+            "click",
+            0,
+            1,
+            guard=Guard("first", ">", "views", "min"),
+        ),
+        Step("purchase", "purchase", 1, None),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -1806,22 +1793,7 @@ def pattern_match_optional_guard(
     no extra shuffle.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "clicks",
-                "click",
-                0,
-                1,
-                guard=Guard("first", ">", "views", "min"),
-            ),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_OPTIONAL_GUARD)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1832,6 +1804,21 @@ def pattern_match_optional_guard(
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+MATCH_SKIPGUARD = Pattern(
+    steps=(
+        Step("clicks", "click", 2, 4),
+        Step(
+            "purchase",
+            "purchase",
+            1,
+            None,
+            guard=Guard("first", ">", "clicks", "max"),
+        ),
+    ),
+    skip="to_next",
+)
 
 
 @query(
@@ -1899,21 +1886,7 @@ def pattern_match_skipguard(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, one shuffle, same plan family as pattern_match_afterskip.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 2, 4),
-            Step(
-                "purchase",
-                "purchase",
-                1,
-                None,
-                guard=Guard("first", ">", "clicks", "max"),
-            ),
-        ),
-        skip="to_next",
-        val_col="value",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_SKIPGUARD)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -1922,6 +1895,16 @@ def pattern_match_skipguard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("g_purchase", 4).alias("purchase_val"),
         F.round("g_purchase_ref", 4).alias("clicks_max_val"),
     )
+
+
+MATCH_OPTIONAL_SKIP = Pattern(
+    steps=(
+        Step("views", "view", 2, 4),
+        Step("clicks", "click", 0, 1),
+        Step("purchase", "purchase", 1, None),
+    ),
+    skip="to_next",
+)
 
 
 @query(
@@ -1998,15 +1981,7 @@ def pattern_match_optional_skip(
     anchor filter — the pattern_match_afterskip plan family.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 2, 4),
-            Step("clicks", "click", 0, 1),
-            Step("purchase", "purchase", 1, None),
-        ),
-        skip="to_next",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_OPTIONAL_SKIP)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -2057,10 +2032,8 @@ def pattern_detect_followedby_nobetween(
     strictly between"). See :func:`compile_horizon_pairs`.
     """
     prep(spark)
-    pat = Pattern(steps=(Step("x", "click"),))
     return compile_horizon_pairs(
         table(spark, sf_dir, "events"),
-        pat,
         anchor_cls="click",
         target_cls="purchase",
         hours=24,
@@ -2071,6 +2044,15 @@ def pattern_detect_followedby_nobetween(
         F.col("target_id").alias("purchase_event"),
         "gap_us",
     )
+
+
+DETECT_TIMES_EXACT = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step("clicks", "click", 1, 2, exact=True),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -2129,14 +2111,7 @@ def pattern_detect_times_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical plan class at 100 TB.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 1, 2, exact=True),
-        ),
-        within_hours=24,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_TIMES_EXACT)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("click_event"),
@@ -2145,6 +2120,21 @@ def pattern_detect_times_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+MATCH_FINALGUARD = Pattern(
+    steps=(
+        Step("views", "view", 1, None),
+        Step(
+            "purchases",
+            "purchase",
+            1,
+            None,
+            guard=Guard("max", ">", "views", "max"),
+        ),
+    ),
+    within_hours=24,
+)
 
 
 @query(
@@ -2207,21 +2197,7 @@ def pattern_match_finalguard(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "purchases",
-                "purchase",
-                1,
-                None,
-                guard=Guard("max", ">", "views", "max"),
-            ),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), MATCH_FINALGUARD)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -2232,6 +2208,15 @@ def pattern_match_finalguard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+DETECT_UNTIL = Pattern(
+    steps=(
+        Step("views", "view", 1, None, until=(">", 100.0)),
+        Step("buy", "purchase", 1, None),
+    ),
+    within_hours=6,
+)
 
 
 @query(
@@ -2302,15 +2287,7 @@ def pattern_detect_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     is embarrassingly row-local at 100 TB.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None, until=(">", 100.0)),
-            Step("buy", "purchase", 1, None),
-        ),
-        within_hours=6,
-        val_col="value",
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_UNTIL)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),
@@ -2318,6 +2295,14 @@ def pattern_detect_until(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_ts").cast("string").alias("pattern_start"),
         F.col("anchor_start_ts").cast("string").alias("pattern_end"),
     )
+
+
+DETECT_GROUP_TIMES = Pattern(
+    steps=repeat_group(
+        (Step("v", "view"), Step("c", "click")), 2
+    ),
+    within_hours=72,
+)
 
 
 @query(
@@ -2360,13 +2345,7 @@ def pattern_detect_group_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     156 unbounded).
     """
     prep(spark)
-    pat = Pattern(
-        steps=repeat_group(
-            (Step("v", "view"), Step("c", "click")), 2
-        ),
-        within_hours=72,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_GROUP_TIMES)
     return m.select(
         "user_id",
         F.col("anchor_id").alias("anchor_event"),

@@ -259,6 +259,12 @@ def winfn_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+DETECT_CEP = Pattern(
+    steps=(Step("clicks", "click", 2, 2), Step("buy", "purchase")),
+    within_hours=6,
+)
+
+
 @query(
     "pattern_detect_cep",
     oracle="""
@@ -295,11 +301,7 @@ def pattern_detect_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (ts, event_id) tie-break.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(Step("clicks", "click", 2, 2), Step("buy", "purchase")),
-        within_hours=6,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_CEP)
     return m.select(
         "user_id",
         F.col("start_ts").cast("string").alias("pattern_start"),
@@ -412,7 +414,6 @@ def pattern_detect_followedby(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     m = compile_horizon(
         table(spark, sf_dir, "events"),
-        Pattern(steps=(Step("buy", "purchase"),)),
         anchor_cls="purchase",
         target_cls="click",
         hours=6,
@@ -456,18 +457,15 @@ def pattern_detect_notfollowedby(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the same answer. One shuffle on user_id; the frame is
     watermark-evictable state in the streaming form. Since round 10
     the spec compiles through the generic compiler's horizon strategy
-    (operators/cep.py) with ``absent=True`` — same frame, same
-    zero-count predicate.
+    (operators/cep.py) with no ``at_least`` (absence) — same frame,
+    same zero-count predicate.
     """
     prep(spark)
     m = compile_horizon(
         table(spark, sf_dir, "events"),
-        Pattern(steps=(Step("c", "click"),)),
         anchor_cls="click",
         target_cls="purchase",
         hours=6,
-        following=True,
-        absent=True,
     )
     return m.select("user_id", F.col("anchor_id").alias("click_event"))
 
@@ -533,6 +531,15 @@ def pattern_detect_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+DETECT_ONEORMORE = Pattern(
+    steps=(
+        Step("clicks", "click", 1, None),
+        Step("buy", "purchase", 1, None),
+    ),
+    within_hours=6,
+)
+
+
 @query(
     "pattern_detect_oneormore",
     oracle="""
@@ -580,14 +587,7 @@ def pattern_detect_oneormore(spark: SparkSession, sf_dir: str) -> DataFrame:
     blow-up at 100 TB.
     """
     prep(spark)
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 1, None),
-            Step("buy", "purchase", 1, None),
-        ),
-        within_hours=6,
-    )
-    m = compile_pattern(table(spark, sf_dir, "events"), pat)
+    m = compile_pattern(table(spark, sf_dir, "events"), DETECT_ONEORMORE)
     return m.select(
         "user_id",
         F.col("anchor_first_id").alias("purchase_event"),

@@ -27,11 +27,6 @@ def get_spark(app_name: str = "flink-large-window-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -41,4 +36,5 @@ def get_spark(app_name: str = "flink-large-window-spark") -> SparkSession:
         .config("spark.python.daemon.module", f"{__package__}.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    # prep sets the session time zone and shuffle width
     return prep(builder.getOrCreate())

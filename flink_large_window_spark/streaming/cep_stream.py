@@ -12,7 +12,9 @@ compiler driven by the same Step/Pattern structures the batch
 strategies use, so the watermark-buffered fold works for any
 greedy-strategy pattern — alternation included (the canonical
 relabeling is a row-local expression, applied to the stream exactly
-as to a batch relation).
+as to a batch relation). Each streaming twin compiles its batch key's
+module-level spec (``operators.cep.MATCH_RECOGNIZE`` and its
+siblings), so the two engines read one declaration.
 
 How the compiled automaton works (per key):
 
@@ -152,15 +154,31 @@ from pyspark.sql.types import (
 )
 
 from ..operators.cep import (
+    CLS_COL,
+    DETECT_GROUP_TIMES,
+    DETECT_TIMES_EXACT,
+    DETECT_UNTIL,
+    DETECT_VALUE_GUARD,
     GUARD_CMPS,
-    Guard,
+    ID_COL,
+    KEY_COL,
+    MATCH_AFTERSKIP,
+    MATCH_ALTERNATION,
+    MATCH_FINALGUARD,
+    MATCH_OPTIONAL,
+    MATCH_OPTIONAL_GUARD,
+    MATCH_OPTIONAL_SKIP,
+    MATCH_RECOGNIZE,
+    MATCH_SKIPGUARD,
+    TS_COL,
+    VAL_COL,
     Pattern,
     Step,
     apply_until,
     canonicalize_alternation,
     expand_optional,
-    repeat_group,
 )
+from ..operators.window_functions import DETECT_CEP, DETECT_ONEORMORE
 from ..registry import query
 from ..scratch import scratch_dir
 from .keyed import (
@@ -275,7 +293,7 @@ def stream_out_schema(pat: Pattern) -> StructType:
     compile_greedy's emission), and the pattern's start/end
     timestamps in epoch µs."""
     fields = [
-        StructField(pat.key, LongType()),
+        StructField(KEY_COL, LongType()),
         StructField("anchor_event", LongType()),
     ]
     fields += [
@@ -511,7 +529,6 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         else None
     )
     out_schema = stream_out_schema(pat)
-    ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
     # Iterative conditions (round 12, variant-local since round 13):
     # each variant carries its own plain-python guard spec — (this
     # step index, this agg slot, cmp, ref step index, ref agg slot,
@@ -522,7 +539,6 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
     # anchor run stays open, so a pend-ing match re-reads identical
     # values even a batch later.
     needs_val = bool(guard_names)
-    val_col = pat.val_col
     state_schema = STREAM_STATE_SCHEMA_VAL if needs_val else STREAM_STATE_SCHEMA
 
     def handler(
@@ -557,8 +573,8 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         if not state.hasTimedOut:
             for chunk in pdfs:
                 ingest_chunk(
-                    buf, chunk, ts_col, id_col, cls_col,
-                    val_col if needs_val else None,
+                    buf, chunk, TS_COL, ID_COL, CLS_COL,
+                    VAL_COL if needs_val else None,
                 )
         ready, hold = split_by_watermark(buf, wm_ms)
         out = []
@@ -811,16 +827,31 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
     return Machine(handler, out_schema, state_schema)
 
 
+def _pattern_events(
+    spark: SparkSession, sf_dir: str, pat: Pattern
+) -> DataFrame:
+    """events.parquet as a bounded replay under the 10-minute
+    watermark every stream key uses, projected to the columns ``pat``
+    reads (the value column only when a guard or an until needs it)."""
+    cols = [KEY_COL, TS_COL, ID_COL, CLS_COL]
+    if pat.reads_value:
+        cols.append(VAL_COL)
+    return (
+        _events_stream(spark, sf_dir)
+        .withWatermark(TS_COL, "10 minutes")
+        .select(*cols)
+    )
+
+
 def pattern_stream(
     spark: SparkSession,
     sf_dir: str,
     pat: Pattern,
-    watermark: str = "10 minutes",
     checkpoint: str | None = None,
 ) -> DataFrame:
-    """events.parquet as a bounded replay → resolve until stop
-    conditions + canonicalize alternation (both row-local projections,
-    streaming-safe) → compiled automaton → memory sink.
+    """Replayed events → resolve until stop conditions + canonicalize
+    alternation (both row-local projections, streaming-safe) →
+    compiled automaton → memory sink.
 
     ``checkpoint`` passes through to run_to_memory so state-reader
     keys can re-open the finished query's store offline WITHOUT
@@ -828,27 +859,18 @@ def pattern_stream(
     a hand-rolled copy in stream_state_reader_automaton had already
     dropped the has_until column rule it never knew about; review
     r15)."""
-    has_guard = any(s.guard is not None for s in pat.steps)
-    has_until = any(s.until is not None for s in pat.steps)
-    cols = [pat.key, pat.ts, pat.order_id, pat.cls_col]
-    if pat.val_col is not None and (has_guard or has_until):
-        cols.append(pat.val_col)
-    ev = (
-        _events_stream(spark, sf_dir)
-        .withWatermark(pat.ts, watermark)
-        .select(*cols)
-    )
-    if has_until:
+    ev = _pattern_events(spark, sf_dir, pat)
+    if any(s.until is not None for s in pat.steps):
         # Pure relabel projection (operators/cep.py round 15) — the
         # automaton then sees a plain pattern, with stop events as
         # foreign-class run boundaries; the value column was only
         # needed for the relabel unless guards read it too.
         ev, pat = apply_until(ev, pat)
-        if not has_guard:
-            ev = ev.drop(pat.val_col)
+        if not pat.reads_value:
+            ev = ev.drop(VAL_COL)
     if any(len(s.clses()) > 1 for s in pat.steps):
         ev, pat = canonicalize_alternation(ev, pat)
-    return keyed_fold(ev, pat.key, compile_stream(pat), checkpoint=checkpoint)
+    return keyed_fold(ev, KEY_COL, compile_stream(pat), checkpoint=checkpoint)
 
 
 @query(
@@ -907,15 +929,7 @@ def pattern_match_recognize_stream(spark: SparkSession, sf_dir: str) -> DataFram
     state plus O(watermark delay) buffered events per key, one
     shuffle.
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 1, 3),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_RECOGNIZE)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -985,14 +999,7 @@ def pattern_match_alternation_stream(
     tests/test_streaming_parity.py (2- and 3-way time-split replays
     through the real compiled handler).
     """
-    pat = Pattern(
-        steps=(
-            Step("eng", ("view", "click"), 1, None),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_ALTERNATION)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1071,21 +1078,7 @@ def pattern_detect_value_guard_stream(
     Multi-batch parity is pinned in tests/test_streaming_parity.py
     (the guard case joined the compiled-handler sweep).
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "purchase",
-                "purchase",
-                1,
-                None,
-                guard=Guard("first", ">", "views", "max"),
-            ),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, DETECT_VALUE_GUARD)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1167,15 +1160,7 @@ def pattern_match_optional_stream(
     two-branch UNION with µs timestamps plus the shared ms-aligned
     watermark filter on both branches.
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 0, 1),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_OPTIONAL)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1249,14 +1234,7 @@ def pattern_match_afterskip_stream(
     enumeration SQL with the ms-aligned watermark filter on the anchor
     run's start.
     """
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 2, 4),
-            Step("purchase", "purchase", 1, None),
-        ),
-        skip="no_skip",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_AFTERSKIP)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1352,6 +1330,22 @@ def compile_horizon_stream(
     )
 
 
+def _class_events(
+    spark: SparkSession, sf_dir: str, *classes: str
+) -> DataFrame:
+    """Replayed events of ``classes`` only, for the pending-state
+    machines. The class filter sits BEFORE the watermark, so the
+    watermark advances on the rows the machine sees (see
+    pattern_detect_notfollowedby_stream for why the placement is
+    explicit)."""
+    return (
+        _events_stream(spark, sf_dir)
+        .filter(F.col(CLS_COL).isin(*classes))
+        .select(KEY_COL, TS_COL, ID_COL, CLS_COL)
+        .withWatermark(TS_COL, "10 minutes")
+    )
+
+
 @query(
     "pattern_detect_notfollowedby_stream",
     oracle="""
@@ -1406,13 +1400,8 @@ def pattern_detect_notfollowedby_stream(
     rather than an optimizer artifact.) One shuffle on user_id, no
     joins, no window state.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    return keyed_fold(ev, "user_id", compile_horizon_stream(
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return keyed_fold(ev, KEY_COL, compile_horizon_stream(
         "click", "purchase", 6 * 3600 * 1_000_000
     ))
 
@@ -1475,13 +1464,8 @@ def pattern_detect_followedby_stream(
     ties match the batch RANGE frame (a click at the purchase's exact
     timestamp counts). O(events in 6 h + 10 min) state per key.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    return keyed_fold(ev, "user_id", compile_horizon_stream(
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return keyed_fold(ev, KEY_COL, compile_horizon_stream(
         "purchase", "click", 6 * 3600 * 1_000_000, at_least=2
     ))
 
@@ -1536,14 +1520,7 @@ def pattern_detect_oneormore_stream(
     the runs-lag form the other twins use + the ms-aligned watermark
     filter.
     """
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 1, None),
-            Step("buy", "purchase", 1, None),
-        ),
-        within_hours=6,
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, DETECT_ONEORMORE)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1699,22 +1676,7 @@ def pattern_match_optional_guard_stream(
     five per-run aggregates to the O(pattern length) window; no event
     values retained beyond the watermark buffer.
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "clicks",
-                "click",
-                0,
-                1,
-                guard=Guard("first", ">", "views", "min"),
-            ),
-            Step("purchase", "purchase", 1, None),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_OPTIONAL_GUARD)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1789,21 +1751,7 @@ def pattern_match_skipguard_stream(
     and the ms-aligned watermark filter on the anchor run's start
     (the afterskip_stream convention).
     """
-    pat = Pattern(
-        steps=(
-            Step("clicks", "click", 2, 4),
-            Step(
-                "purchase",
-                "purchase",
-                1,
-                None,
-                guard=Guard("first", ">", "clicks", "max"),
-            ),
-        ),
-        skip="to_next",
-        val_col="value",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_SKIPGUARD)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -1944,13 +1892,8 @@ def pattern_detect_followedbyany_stream(
     the batch key's pair join + the ms-aligned
     settled-before-final-watermark filter on the purchase side.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    return keyed_fold(ev, "user_id", compile_pairs_stream(
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return keyed_fold(ev, KEY_COL, compile_pairs_stream(
         "click", "purchase", 24 * 3600 * 1_000_000
     ))
 
@@ -2091,13 +2034,8 @@ def pattern_timeout_partial_stream(
     deadline-strictly-passed filter (the absence machine's boundary
     polarity — this is a FOLLOWING-horizon resolution).
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("view", "click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    return keyed_fold(ev, "user_id", compile_timeout_stream(
+    ev = _class_events(spark, sf_dir, "view", "click", "purchase")
+    return keyed_fold(ev, KEY_COL, compile_timeout_stream(
         "view", "click", "purchase", 6 * 3600 * 1_000_000
     ))
 
@@ -2173,15 +2111,7 @@ def pattern_match_optional_skip_stream(
     Oracle = the batch two-branch UNION + expansion with the
     ms-aligned watermark filter on the anchor run's start.
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 2, 4),
-            Step("clicks", "click", 0, 1),
-            Step("purchase", "purchase", 1, None),
-        ),
-        skip="to_next",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, MATCH_OPTIONAL_SKIP)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -2234,13 +2164,8 @@ def pattern_detect_followedby_nobetween_stream(
     oracle's final-watermark term includes error rows). Oracle = the
     batch prefix-equality join + the ms-aligned settled filter.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase", "error"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
-    )
-    return keyed_fold(ev, "user_id", compile_pairs_stream(
+    ev = _class_events(spark, sf_dir, "click", "purchase", "error")
+    return keyed_fold(ev, KEY_COL, compile_pairs_stream(
         "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
     ))
 
@@ -2308,14 +2233,7 @@ def pattern_detect_times_exact_stream(
     key; close-mode adds NO state (pend was already persisted) and no
     timers (the closing event re-enters the handler by itself).
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step("clicks", "click", 1, 2, exact=True),
-        ),
-        within_hours=24,
-    )
-    return pattern_stream(spark, sf_dir, pat).select(
+    return pattern_stream(spark, sf_dir, DETECT_TIMES_EXACT).select(
         "user_id",
         F.col("anchor_event").alias("click_event"),
         "n_views",
@@ -2389,21 +2307,7 @@ def pattern_match_finalguard_stream(
     closing fold instead of slot 'first' at open; no new state, no
     timers.
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None),
-            Step(
-                "purchases",
-                "purchase",
-                1,
-                None,
-                guard=Guard("max", ">", "views", "max"),
-            ),
-        ),
-        within_hours=24,
-        val_col="value",
-    )
-    return pattern_stream(spark, sf_dir, pat).select(
+    return pattern_stream(spark, sf_dir, MATCH_FINALGUARD).select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
         "n_views",
@@ -2532,7 +2436,7 @@ def compile_suffix_stream(pat: Pattern):
         SUFFIX_STATE_SCHEMA_VAL if needs_val else SUFFIX_STATE_SCHEMA
     )
     fields = [
-        StructField(pat.key, LongType()),
+        StructField(KEY_COL, LongType()),
         StructField("anchor_event", LongType()),
     ]
     for name, _g in guard_specs:
@@ -2543,8 +2447,6 @@ def compile_suffix_stream(pat: Pattern):
         StructField("pattern_end_us", LongType()),
     ]
     out_schema = StructType(fields)
-    ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
-    val_col = pat.val_col
 
     def _agg(vals, agg):
         """Values listed anchor-first (offset asc). Mirrors
@@ -2571,8 +2473,8 @@ def compile_suffix_stream(pat: Pattern):
         if not state.hasTimedOut:
             for chunk in pdfs:
                 ingest_chunk(
-                    buf, chunk, ts_col, id_col, cls_col,
-                    val_col if needs_val else None,
+                    buf, chunk, TS_COL, ID_COL, CLS_COL,
+                    VAL_COL if needs_val else None,
                 )
         ready, hold = split_by_watermark(buf, wm_ms)
         out = []
@@ -2637,24 +2539,14 @@ def compile_suffix_stream(pat: Pattern):
 
 
 def suffix_pattern_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    pat: Pattern,
-    watermark: str = "10 minutes",
+    spark: SparkSession, sf_dir: str, pat: Pattern
 ) -> DataFrame:
-    """events.parquet as a bounded replay → per-event suffix automaton
-    → memory sink (the suffix-strategy sibling of pattern_stream)."""
-    cols = [pat.key, pat.ts, pat.order_id, pat.cls_col]
-    if pat.val_col is not None and any(
-        s.guard is not None for s in pat.steps
-    ):
-        cols.append(pat.val_col)
-    ev = (
-        _events_stream(spark, sf_dir)
-        .withWatermark(pat.ts, watermark)
-        .select(*cols)
+    """Replayed events → per-event suffix automaton → memory sink (the
+    suffix-strategy sibling of pattern_stream)."""
+    return keyed_fold(
+        _pattern_events(spark, sf_dir, pat), KEY_COL,
+        compile_suffix_stream(pat),
     )
-    return keyed_fold(ev, pat.key, compile_suffix_stream(pat))
 
 
 @query(
@@ -2697,11 +2589,7 @@ def pattern_detect_cep_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine's window — no run lengths, no value slots unguarded), one
     shuffle on user_id, timers only for watermark re-folds.
     """
-    pat = Pattern(
-        steps=(Step("clicks", "click", 2, 2), Step("buy", "purchase")),
-        within_hours=6,
-    )
-    return suffix_pattern_stream(spark, sf_dir, pat).select(
+    return suffix_pattern_stream(spark, sf_dir, DETECT_CEP).select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
         "pattern_start_us",
@@ -2766,15 +2654,7 @@ def pattern_detect_until_stream(
     OPEN fold filter (the original run-fold convention — the anchor
     is a plain unguarded run, nothing ranges over it at emission).
     """
-    pat = Pattern(
-        steps=(
-            Step("views", "view", 1, None, until=(">", 100.0)),
-            Step("buy", "purchase", 1, None),
-        ),
-        within_hours=6,
-        val_col="value",
-    )
-    m = pattern_stream(spark, sf_dir, pat)
+    m = pattern_stream(spark, sf_dir, DETECT_UNTIL)
     return m.select(
         "user_id",
         F.col("anchor_event").alias("purchase_event"),
@@ -2935,11 +2815,7 @@ def pattern_detect_group_times_stream(
     ms-aligned anchor-folded filter (per-event anchoring's original
     emission boundary — nothing ranges over an open run).
     """
-    pat = Pattern(
-        steps=repeat_group((Step("v", "view"), Step("c", "click")), 2),
-        within_hours=72,
-    )
-    return suffix_pattern_stream(spark, sf_dir, pat).select(
+    return suffix_pattern_stream(spark, sf_dir, DETECT_GROUP_TIMES).select(
         "user_id",
         "anchor_event",
         "pattern_start_us",

@@ -162,13 +162,12 @@ def run_to_memory(
 ) -> DataFrame:
     """Drain a streaming DataFrame into a memory sink, return the table.
 
-    RocksDB state store provider is enabled for the run — the Flink
-    RocksDB state-backend analogue for large window state.
-
-    Shuffle partitions are dropped to STREAM_SHUFFLE_PARTITIONS for the
-    run (restored after): a stateful operator opens/commits one state
-    store PER shuffle partition PER micro-batch, so at bounded-replay
-    scale the 32-partition batch default spends most wall time on store
+    The run happens inside :func:`_pinned_stream_confs`: the RocksDB
+    state store provider (the Flink RocksDB state-backend analogue for
+    large window state) and STREAM_SHUFFLE_PARTITIONS, both restored
+    after. A stateful operator opens/commits one state store PER
+    shuffle partition PER micro-batch, so at bounded-replay scale the
+    32-partition batch default spends most wall time on store
     lifecycle, not data (r3 profile: 73s → the store count is the
     driver). The partition count is baked into each checkpoint; every
     run here uses a fresh checkpoint, so lowering it is safe. On a real
@@ -181,17 +180,10 @@ def run_to_memory(
     path, and the copy had already drifted — it skipped the
     LAST_STATE_METRICS capture).
     """
-    global _SINK_SEQ
+    global _SINK_SEQ, LAST_STATE_METRICS, LAST_STATE_OP_COUNTS
     _SINK_SEQ += 1
     name = f"flws_stream_sink_{_SINK_SEQ}"
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
-    )
-    try:
+    with _pinned_stream_confs(spark):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -205,17 +197,14 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-        global LAST_STATE_METRICS, LAST_STATE_OP_COUNTS
-        LAST_STATE_METRICS = [
-            dict(op)
-            for p in q.recentProgress
-            for op in (p.get("stateOperators") or [])
-        ]
-        LAST_STATE_OP_COUNTS = [
-            len(p.get("stateOperators") or []) for p in q.recentProgress
-        ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    LAST_STATE_METRICS = [
+        dict(op)
+        for p in q.recentProgress
+        for op in (p.get("stateOperators") or [])
+    ]
+    LAST_STATE_OP_COUNTS = [
+        len(p.get("stateOperators") or []) for p in q.recentProgress
+    ]
     return spark.table(name)
 
 
@@ -1450,14 +1439,15 @@ def stream_allowed_lateness_reemit(spark: SparkSession, sf_dir: str) -> DataFram
         for r in batch_df.collect():  # pane-count rows only, never events
             log.append((r["w_start"], batch_id, r["n"]))
 
-    q = (
-        agg.writeStream.foreachBatch(record)
-        .outputMode("update")
-        .option("checkpointLocation", scratch_dir("flws_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _pinned_stream_confs(spark):
+        q = (
+            agg.writeStream.foreachBatch(record)
+            .outputMode("update")
+            .option("checkpointLocation", scratch_dir("flws_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.createDataFrame(log, "w_start string, batch_id long, n long")
 
 

@@ -42,61 +42,26 @@ US_15MIN = 15 * 60 * 1_000_000
 US_HOUR = 60 * 60 * 1_000_000
 GAP_US = 30 * 60 * 1_000_000  # session gap
 
-# Sliding-window plan dispatch (SURVEY §4 mitigation, VERDICT r3 #5):
-# native window(ts, size, slide) replicates each ROW into size/slide
-# buckets before the shuffle; the pane/slice form (pre-aggregate per
-# slide bucket, fan out BUCKETS, roll up) replicates pre-aggregated
-# buckets instead — but pays a second aggregation, so it only wins
-# when BOTH hold: fan-out ratio is high enough AND the stream is dense
-# enough that a slide bucket folds multiple events. Measured at sf0.1
-# (r4): 100k events → 98.9k distinct (user × 15-min) buckets, i.e.
-# ~1 event/bucket — prebucket is 0.86s vs native 0.60s, pure overhead.
-# At production density (billions of events/day over a bounded
-# key × slot grid) events-per-bucket is 10³–10⁶ and pane slicing is
-# decisive. Density is a data property the planner can't see at plan
-# time, so callers pass it as a hint (from table stats / ingest
-# metrics in a real deployment).
-SLIDING_PREBUCKET_MIN_RATIO = 4
-SLIDING_PREBUCKET_MIN_DENSITY = 2.0  # events per (key × slide bucket)
-
-
-def sliding_user_counts(
-    events: DataFrame,
-    size_us: int,
-    slide_us: int,
-    events_per_bucket_hint: float | None = None,
+def pane_slice_user_counts(
+    events: DataFrame, size_us: int, slide_us: int
 ) -> DataFrame:
-    """Per-user event counts over sliding windows, auto-selecting the
-    physical plan from fan-out ratio × stream density.
+    """Per-user event counts over sliding windows by pane slicing
+    (SURVEY §4 mitigation, Flink's pane/slice optimization): count once
+    per (slide bucket × user), fan the pre-aggregated BUCKETS into
+    their size/slide windows, and roll up. Native ``window(ts, size,
+    slide)`` replicates each ROW instead; pane slicing pays a second
+    aggregation, so it wins only when a slide bucket folds many events
+    (measured r4 at sf0.1: ~1 event per user × 15-min bucket, 0.86 s
+    against the native plan's 0.60 s).
 
-    ``slide`` must divide ``size`` (pane slicing is only exact then) and
-    the aggregate must be decomposable (count/sum/min/max) — both hold
-    for every §2.9 use. Output: (w_start string, user_id, n) — identical
-    columns, values, and hashes from either plan (pinned by
+    ``slide`` must divide ``size`` (pane slicing is only exact then)
+    and the aggregate must be decomposable. Output: (w_start string,
+    user_id, n), value-equal to the native plan (pinned by
     tests/test_plans.py and the shared DuckDB oracle).
     """
     ratio, rem = divmod(size_us, slide_us)
     if rem:
         raise ValueError(f"slide must divide size ({size_us}/{slide_us})")
-    dense = (
-        events_per_bucket_hint is not None
-        and events_per_bucket_hint >= SLIDING_PREBUCKET_MIN_DENSITY
-    )
-    if ratio < SLIDING_PREBUCKET_MIN_RATIO or not dense:
-        return (
-            events.groupBy(
-                F.window(
-                    "ts", f"{size_us} microseconds", f"{slide_us} microseconds"
-                ).alias("w"),
-                "user_id",
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.col("w.start").cast("string").alias("w_start"),
-                "user_id",
-                "n",
-            )
-        )
     pre = (
         events.groupBy(
             F.window("ts", f"{slide_us} microseconds").alias("b"), "user_id"
@@ -169,16 +134,24 @@ def window_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle reproduces the fan-out explicitly on the epoch-aligned
     15-min grid (window start = 15-min bucket minus k slides, k∈0..3).
-    Physical plan comes from sliding_user_counts' ratio × density
-    dispatch: the fixture stream is sparse (~1 event per user×15-min
-    bucket, measured r4), so no hint is passed and the native
-    single-aggregation plan runs; a dense production stream passes its
-    events-per-bucket stat and gets the pane/slice rollup
-    (window_sliding_agg_prebucket shows that exact plan, hash-equal).
+    The fixture stream is sparse (~1 event per user×15-min bucket,
+    measured r4), so this key runs the native single-aggregation plan;
+    window_sliding_agg_prebucket runs the pane/slice rollup a dense
+    production stream would use, hash-equal.
     """
     prep(spark)
-    return sliding_user_counts(
-        table(spark, sf_dir, "events"), US_HOUR, US_15MIN
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy(
+            F.window(
+                "ts", f"{US_HOUR} microseconds", f"{US_15MIN} microseconds"
+            ).alias("w"),
+            "user_id",
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("w.start").cast("string").alias("w_start"), "user_id", "n"
+        )
     )
 
 
@@ -516,32 +489,12 @@ def window_sliding_agg_prebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the ×(size/slide) replication applies to |buckets| rows instead
     of |events| (at 100 TB: billions of events → millions of buckets).
     This is Flink's pane/slice optimization (Scotty/cutty) expressed as
-    two Catalyst aggregations.
+    two Catalyst aggregations (:func:`pane_slice_user_counts`).
     """
     prep(spark)
-    pre = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "15 minutes").alias("b"), "user_id")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .select(F.col("b.start").alias("b_start"), "user_id", "pn")
+    return pane_slice_user_counts(
+        table(spark, sf_dir, "events"), US_HOUR, US_15MIN
     )
-    slid = pre.select(
-        "b_start",
-        "user_id",
-        "pn",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("k"),
-    ).select(
-        (
-            F.timestamp_micros(
-                F.unix_micros("b_start") - F.col("k").cast("long") * US_15MIN
-            )
-        )
-        .cast("string")
-        .alias("w_start"),
-        "user_id",
-        "pn",
-    )
-    return slid.groupBy("w_start", "user_id").agg(F.sum("pn").alias("n"))
 
 
 @query(

@@ -22,6 +22,7 @@ from flink_large_window_spark.operators.cep import (
     compile_horizon,
     compile_pattern,
     compile_suffix,
+    runs_relation,
 )
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -252,14 +253,12 @@ def test_horizon_absent_and_at_least(spark):
             (3, 1, "purchase"),
         ],
     )
-    pat = Pattern(steps=(Step("c", "click"),))
     absent = compile_horizon(
-        df, pat, anchor_cls="click", target_cls="purchase", hours=6,
-        following=True, absent=True,
+        df, anchor_cls="click", target_cls="purchase", hours=6,
     ).collect()
     assert sorted((r.user_id, r.anchor_id) for r in absent) == [(1, 2), (2, 3)]
     atleast = compile_horizon(
-        df, pat, anchor_cls="purchase", target_cls="click", hours=6,
+        df, anchor_cls="purchase", target_cls="click", hours=6,
         at_least=1,
     ).collect()
     assert [(r.user_id, r.anchor_id, r.n_target) for r in atleast] == [(1, 1, 1)]
@@ -297,9 +296,8 @@ def test_horizon_alternation_counts_class_set(spark):
         spark,
         [(1, 0, "view"), (1, 30, "click"), (1, 60, "purchase")],
     )
-    pat = Pattern(steps=(Step("p", "purchase"),))
     out = compile_horizon(
-        df, pat, anchor_cls="purchase", target_cls=("click", "view"),
+        df, anchor_cls="purchase", target_cls=("click", "view"),
         hours=6, at_least=2,
     ).collect()
     assert [(r.user_id, r.anchor_id, r.n_target) for r in out] == [(1, 2, 2)]
@@ -570,7 +568,6 @@ def test_skip_validation():
                      guard=Guard("first", ">", "c", "max")),
                 Step("p", "purchase", 1, None),
             ),
-            val_col="value",
             skip="no_skip",
         )
 
@@ -599,7 +596,6 @@ def test_greedy_guard_filters_on_prior_step_values(spark):
             Step("p", "purchase", 1, None,
                  guard=Guard("first", ">", "v", "max")),
         ),
-        val_col="value",
     )
     # purchase value 5 > max(view run) 3 → match, with both guard
     # sides emitted as measures
@@ -617,7 +613,6 @@ def test_greedy_guard_factor_scales_reference_side(spark):
             Step("p", "purchase", 1, None,
                  guard=Guard("first", ">=", "v", "sum", factor=0.5)),
         ),
-        val_col="value",
     )
     # sum(view run) = 6; 0.5 * 6 = 3; purchase 3 >= 3 → match
     assert compile_greedy(_guard_events(spark, (4, 2, 3)), pat).count() == 1
@@ -632,7 +627,6 @@ def test_suffix_guard_filters_on_prior_step_values(spark):
             Step("p", "purchase",
                  guard=Guard("first", "<", "v", "min")),
         ),
-        val_col="value",
     )
     # purchase 1 < min(two views) 2 → match
     assert compile_suffix(_guard_events(spark, (3, 2, 1)), pat).count() == 1
@@ -640,19 +634,32 @@ def test_suffix_guard_filters_on_prior_step_values(spark):
     assert compile_suffix(_guard_events(spark, (3, 2, 2.5)), pat).count() == 0
 
 
-def test_guard_validation():
+def test_guard_validation(spark):
     with pytest.raises(ValueError, match="guard agg"):
         Guard("median", ">", "v", "max")
     with pytest.raises(ValueError, match="guard cmp"):
         Guard("first", "!=", "v", "max")
-    with pytest.raises(ValueError, match="val_col"):
-        Pattern(
-            steps=(
-                Step("v", "view", 1, None),
-                Step("p", "purchase", 1, None,
-                     guard=Guard("first", ">", "v", "max")),
-            )
+    # the value column is read exactly when a guard or an until needs it
+    guarded = Pattern(
+        steps=(
+            Step("v", "view", 1, None),
+            Step("p", "purchase", 1, None,
+                 guard=Guard("first", ">", "v", "max")),
         )
+    )
+    until = Pattern(
+        steps=(
+            Step("v", "view", 1, None, until=(">", 100.0)),
+            Step("p", "purchase", 1, None),
+        )
+    )
+    plain = _pat([Step("v", "view", 1, None), Step("p", "purchase", 1, None)])
+    assert guarded.reads_value and until.reads_value
+    assert not plain.reads_value
+    runs = runs_relation(_events(spark, [(1, 0, "view")]), plain)
+    assert not [c for c in runs.columns if c.startswith("val_")]
+    runs = runs_relation(_guard_events(spark, (3, 2, 5)), guarded)
+    assert "val_max" in runs.columns
     with pytest.raises(ValueError, match="EARLIER step"):
         Pattern(
             steps=(
@@ -660,7 +667,6 @@ def test_guard_validation():
                      guard=Guard("first", ">", "p", "max")),
                 Step("p", "purchase", 1, None),
             ),
-            val_col="value",
         )
 
 
@@ -687,33 +693,13 @@ def test_suffix_rejects_ranged_quantifier(spark):
 
 
 def test_horizon_requires_exactly_one_mode(spark):
+    # at_least=None is absence; a count of 0 would read as absence but
+    # count the PRECEDING frame, so it is rejected
     df = _events(spark, [(1, 0, "click")])
-    pat = Pattern(steps=(Step("c", "click"),))
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="at_least"):
         compile_horizon(
-            df, pat, anchor_cls="click", target_cls="purchase", hours=6
-        )
-    with pytest.raises(ValueError):
-        compile_horizon(
-            df, pat, anchor_cls="click", target_cls="purchase", hours=6,
-            at_least=1, absent=True,
-        )
-
-
-def test_horizon_rejects_quantified_or_within_pattern(spark):
-    # ADVICE r10 item 3: compile_horizon uses the Pattern only for
-    # column names — a within_hours or quantifier on it would be
-    # silently ignored, so both are rejected.
-    df = _events(spark, [(1, 0, "click")])
-    with pytest.raises(ValueError, match="within_hours"):
-        compile_horizon(
-            df, Pattern(steps=(Step("c", "click"),), within_hours=6),
-            anchor_cls="click", target_cls="purchase", hours=6, at_least=1,
-        )
-    with pytest.raises(ValueError, match="quantifier"):
-        compile_horizon(
-            df, Pattern(steps=(Step("c", "click", 2, 2),)),
-            anchor_cls="click", target_cls="purchase", hours=6, at_least=1,
+            df, anchor_cls="click", target_cls="purchase", hours=6,
+            at_least=0,
         )
 
 
@@ -740,7 +726,6 @@ def test_stream_compile_guard_validation():
                 Step("purchase", "purchase", 1, None, guard=anchor_guard),
             ),
             within_hours=24,
-            val_col="value",
         )
 
     # unguarded: base schema, byte-identical layout
@@ -821,7 +806,6 @@ def test_suffix_guard_sum_skips_nulls_like_sql(spark):
             Step("p", "purchase", 1, 1,
                  guard=Guard("first", ">", "v", "sum")),
         ),
-        val_col="value",
     )
     # sum over (3.0, NULL) must be 3.0, so purchase 5 > 3 matches
     hit = compile_suffix(
@@ -862,7 +846,6 @@ def test_optional_step_with_guard_on_it(spark):
                  guard=Guard("first", ">", "v", "max")),
             Step("p", "purchase", 1, None),
         ),
-        val_col="value",
     )
     # click present, click value 5 > view max 3 -> present variant
     hit = compile_pattern(
@@ -902,7 +885,6 @@ def test_optional_step_referenced_by_later_guard(spark):
             Step("p", "purchase", 1, None,
                  guard=Guard("first", ">", "c", "max")),
         ),
-        val_col="value",
     )
     # click present, purchase 7 > click 5 -> match
     hit = compile_pattern(
@@ -944,7 +926,6 @@ def _until_pat():
             Step("p", "purchase", 1, None),
         ),
         within_hours=6,
-        val_col="value",
     )
 
 
@@ -1002,15 +983,6 @@ def test_until_validation():
                 Step("v", "view", 1, 3, until=(">", 100.0)),
                 Step("p", "purchase"),
             ),
-            val_col="value",
-        )
-    # needs val_col
-    with pytest.raises(ValueError, match="val_col"):
-        Pattern(
-            steps=(
-                Step("v", "view", 1, None, until=(">", 100.0)),
-                Step("p", "purchase"),
-            ),
         )
     # alternation step cannot carry until
     with pytest.raises(ValueError, match="alternation"):
@@ -1019,7 +991,6 @@ def test_until_validation():
                 Step("v", ("view", "click"), 1, None, until=(">", 1.0)),
                 Step("p", "purchase"),
             ),
-            val_col="value",
         )
     # the until class may not appear in another step
     with pytest.raises(ValueError, match="function on classes"):
@@ -1029,7 +1000,6 @@ def test_until_validation():
                 Step("b", "click", 1, None),
                 Step("c", "view", 1, None),
             ),
-            val_col="value",
         )
     # bad comparator
     with pytest.raises(ValueError, match="until cmp"):
@@ -1098,7 +1068,7 @@ def test_repeat_group_guard_remaps_per_occurrence(spark):
     assert steps[1].guard.ref_step == "v_r1"
     assert steps[3].guard.ref_step == "v_r2"
     # and Pattern validation accepts the remapped references
-    Pattern(steps=steps, val_col="value")
+    Pattern(steps=steps)
 
 
 def test_repeat_group_validation():

@@ -212,9 +212,7 @@ def _canonicalize_ref(rows, pat: Pattern):
         else s
         for s in pat.steps
     )
-    return rows2, Pattern(
-        steps=steps2, within_hours=pat.within_hours, val_col=pat.val_col
-    )
+    return rows2, Pattern(steps=steps2, within_hours=pat.within_hours)
 
 
 GREEDY_PATTERNS = [
@@ -291,7 +289,6 @@ GREEDY_PATTERNS = [
                  guard=Guard("first", ">", "v", "max")),
         ),
         within_hours=24,
-        val_col="value",
     ),
     Pattern(
         steps=(
@@ -299,7 +296,6 @@ GREEDY_PATTERNS = [
             Step("p", "purchase", 1, None,
                  guard=Guard("max", "<=", "c", "sum")),
         ),
-        val_col="value",
     ),
     Pattern(
         steps=(
@@ -310,7 +306,6 @@ GREEDY_PATTERNS = [
                  guard=Guard("sum", ">=", "c", "last")),
         ),
         within_hours=48,
-        val_col="value",
     ),
 ]
 
@@ -349,7 +344,6 @@ SUFFIX_PATTERNS = [
                  guard=Guard("first", "<", "c", "min")),
         ),
         within_hours=48,
-        val_col="value",
     ),
 ]
 
@@ -584,7 +578,6 @@ COMPOSED_PATTERNS = [
             Step("p", "purchase", 1, None),
         ),
         within_hours=24,
-        val_col="value",
     ),
     # guard REFERENCING the optional step (absent variant is killed)
     Pattern(
@@ -595,7 +588,6 @@ COMPOSED_PATTERNS = [
                  guard=Guard("first", "<", "c", "sum")),
         ),
         within_hours=48,
-        val_col="value",
     ),
     # skip x guard, both policies
     Pattern(
@@ -605,7 +597,6 @@ COMPOSED_PATTERNS = [
                  guard=Guard("first", ">", "c", "max")),
         ),
         skip="to_next",
-        val_col="value",
     ),
     Pattern(
         steps=(
@@ -614,7 +605,6 @@ COMPOSED_PATTERNS = [
                  guard=Guard("max", ">=", "v", "first")),
         ),
         skip="no_skip",
-        val_col="value",
     ),
     # optional x skip (non-optional first step)
     Pattern(
@@ -634,7 +624,6 @@ COMPOSED_PATTERNS = [
             Step("p", "purchase", 1, None),
         ),
         skip="no_skip",
-        val_col="value",
     ),
 ]
 
@@ -734,11 +723,10 @@ def _ref_timeouts(rows, first, second, third, horizon_us):
 def test_pairs_and_timeouts_match_bruteforce_on_random_streams(spark):
     rows = _random_streams(n_users=250, max_len=14, seed=53)
     df = _df(spark, rows)
-    pat = Pattern(steps=(Step("x", "click"),))
     h = 12 * 3600 * 1_000_000
 
     m = compile_horizon_pairs(
-        df, pat, anchor_cls="click", target_cls="purchase", hours=12
+        df, anchor_cls="click", target_cls="purchase", hours=12
     )
     got = sorted(
         (r["user_id"], r["anchor_id"], r["target_id"], r["gap_us"])
@@ -748,7 +736,7 @@ def test_pairs_and_timeouts_match_bruteforce_on_random_streams(spark):
     assert got == want and want
 
     m2 = compile_horizon_pairs(
-        df, pat, anchor_cls="click", target_cls="purchase", hours=12,
+        df, anchor_cls="click", target_cls="purchase", hours=12,
         not_between_cls="error",
     )
     got2 = sorted(
@@ -760,7 +748,7 @@ def test_pairs_and_timeouts_match_bruteforce_on_random_streams(spark):
     assert len(want2) < len(want), "negation never fired"
 
     m3 = compile_timeout_partials(
-        df, pat, first_cls="view", second_cls="click",
+        df, first_cls="view", second_cls="click",
         third_cls="purchase", hours=12,
     )
     got3 = sorted(

@@ -91,37 +91,24 @@ def test_no_row_at_a_time_python_udf(spark):
         assert "BatchEvalPython" not in plan, f"{key} uses row-at-a-time Python"
 
 
-def test_sliding_plan_dispatch(spark):
-    """sliding_user_counts picks the pane/slice rollup only when BOTH
-    fan-out ratio and declared stream density clear their thresholds
-    (Generate/explode over pre-aggregated buckets, no Expand of raw
-    rows); sparse or low-ratio streams get the native single-aggregation
-    window (Expand, no Generate) — and both produce identical results."""
+def test_sliding_prebucket_matches_native(spark):
+    """The pane/slice rollup fans out pre-aggregated buckets
+    (Generate/explode, no Expand of raw rows) and produces exactly the
+    native sliding window's result."""
     from flink_large_window_spark.streaming.windows import (
         US_15MIN,
         US_HOUR,
-        sliding_user_counts,
+        pane_slice_user_counts,
     )
     from flink_large_window_spark.tables import table
 
     ev = table(spark, SF_SMOKE, "events")
-    # ratio 4 + dense hint → pane/slice rollup
-    prebucket = sliding_user_counts(
-        ev, US_HOUR, US_15MIN, events_per_bucket_hint=8.0
-    )
-    # ratio 4, no density hint (fixture streams are sparse) → native
-    native = sliding_user_counts(ev, US_HOUR, US_15MIN)
-    # dense but ratio 2 → still native (ratio gate)
-    low_ratio = sliding_user_counts(
-        ev, US_HOUR, 2 * US_15MIN, events_per_bucket_hint=8.0
-    )
-    p_pre, p_nat, p_low = _plan(prebucket), _plan(native), _plan(low_ratio)
+    prebucket = pane_slice_user_counts(ev, US_HOUR, US_15MIN)
+    p_pre = _plan(prebucket)
     assert "Generate" in p_pre and "Expand" not in p_pre
-    assert "Expand" in p_nat and "Generate" not in p_nat
-    assert "Expand" in p_low and "Generate" not in p_low
 
-    # dispatched ratio-4 result == forced-native ratio-4 result
-    forced = (
+    # ratio-4 rollup == native ratio-4 window
+    native = (
         ev.groupBy(
             F.window("ts", "1 hour", "15 minutes").alias("w"), "user_id"
         )
@@ -130,8 +117,8 @@ def test_sliding_plan_dispatch(spark):
             F.col("w.start").cast("string").alias("w_start"), "user_id", "n"
         )
     )
-    assert prebucket.exceptAll(forced).count() == 0
-    assert forced.exceptAll(prebucket).count() == 0
+    assert prebucket.exceptAll(native).count() == 0
+    assert native.exceptAll(prebucket).count() == 0
 
 
 def test_sliding_prebucket_parity_other_ratios(spark):
@@ -141,7 +128,7 @@ def test_sliding_prebucket_parity_other_ratios(spark):
     import datetime as dt
 
     from flink_large_window_spark.streaming.windows import (
-        sliding_user_counts,
+        pane_slice_user_counts,
     )
 
     t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
@@ -154,9 +141,7 @@ def test_sliding_prebucket_parity_other_ratios(spark):
     minute = 60 * 1_000_000
     for size_min, slide_min in ((60, 15), (90, 15), (40, 5)):
         size_us, slide_us = size_min * minute, slide_min * minute
-        pre = sliding_user_counts(
-            ev, size_us, slide_us, events_per_bucket_hint=100.0
-        )
+        pre = pane_slice_user_counts(ev, size_us, slide_us)
         nat = (
             ev.groupBy(
                 F.window(

@@ -614,12 +614,19 @@ def test_two_phase_streaming_keys_restore_session_confs(spark):
     RocksDB state-store provider (and a narrower shuffle width) for
     their two-phase checkpoint runs and promise to restore BOTH confs
     afterwards (ADVICE r6: an unpinned provider made checkpoint layout
-    depend on which key ran earlier in the session). Pin the
+    depend on which key ran earlier in the session). run_to_memory
+    (window_tumbling_agg_stream) pins the same way. Pin the
     restoration: whatever the session's conf state is before the key
-    runs must be exactly the state after."""
+    runs must be exactly the state after. The provider is set to a
+    non-RocksDB store before each call, so a run that leaves RocksDB
+    behind fails."""
     from flink_large_window_spark.registry import REGISTRY
 
     prov_key = "spark.sql.streaming.stateStore.providerClass"
+    hdfs = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    )
 
     def conf_state():
         try:
@@ -628,13 +635,21 @@ def test_two_phase_streaming_keys_restore_session_confs(spark):
             prov = None
         return prov, spark.conf.get("spark.sql.shuffle.partitions")
 
-    for key in ("stream_checkpoint_restart", "stream_rule_update_enrich"):
-        before = conf_state()
-        REGISTRY[key](spark, "/root/testdata/sf0.001").collect()
-        after = conf_state()
-        assert after == before, (
-            f"{key} leaked session conf state: {before} -> {after}"
-        )
+    try:
+        for key in (
+            "stream_checkpoint_restart",
+            "stream_rule_update_enrich",
+            "window_tumbling_agg_stream",
+        ):
+            spark.conf.set(prov_key, hdfs)
+            before = conf_state()
+            REGISTRY[key](spark, "/root/testdata/sf0.001").collect()
+            after = conf_state()
+            assert after == before, (
+                f"{key} leaked session conf state: {before} -> {after}"
+            )
+    finally:
+        spark.conf.unset(prov_key)
 
 
 def test_tws_registration_tracks_protobuf_presence(spark):
@@ -709,11 +724,12 @@ def _cep_stream_cases():
     sweep all of them, so alternation's canonical relabel AND the
     guarded value-aggregate state (round 12) are exercised through
     the REAL compiled handler, not just the bounded one-batch
-    replay."""
-    from flink_large_window_spark.operators.cep import (
-        Guard,
-        Pattern,
-        Step,
+    replay. Each case replays its key's own spec; the times twin
+    declares its own (its final step is unbounded)."""
+    from flink_large_window_spark.operators import cep
+    from flink_large_window_spark.operators.cep import Pattern, Step
+    from flink_large_window_spark.operators.window_functions import (
+        DETECT_ONEORMORE,
     )
 
     return [
@@ -721,70 +737,31 @@ def _cep_stream_cases():
             "pattern_match_recognize_stream",
             "pattern_match_recognize",
             ("n_views", "n_clicks"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step("clicks", "click", 1, 3),
-                    Step("purchase", "purchase", 1, None),
-                ),
-                within_hours=24,
-            ),
+            cep.MATCH_RECOGNIZE,
         ),
         (
             "pattern_match_alternation_stream",
             "pattern_match_alternation",
             ("n_eng",),
-            Pattern(
-                steps=(
-                    Step("eng", ("view", "click"), 1, None),
-                    Step("purchase", "purchase", 1, None),
-                ),
-                within_hours=24,
-            ),
+            cep.MATCH_ALTERNATION,
         ),
         (
             "pattern_detect_value_guard_stream",
             "pattern_detect_value_guard",
             ("n_views", "purchase_val", "views_max_val"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step(
-                        "purchase",
-                        "purchase",
-                        1,
-                        None,
-                        guard=Guard("first", ">", "views", "max"),
-                    ),
-                ),
-                within_hours=24,
-                val_col="value",
-            ),
+            cep.DETECT_VALUE_GUARD,
         ),
         (
             "pattern_match_optional_stream",
             "pattern_match_optional",
             ("n_views", "n_clicks"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step("clicks", "click", 0, 1),
-                    Step("purchase", "purchase", 1, None),
-                ),
-                within_hours=24,
-            ),
+            cep.MATCH_OPTIONAL,
         ),
         (
             "pattern_detect_oneormore_stream",
             "pattern_detect_oneormore",
             ("n_clicks",),
-            Pattern(
-                steps=(
-                    Step("clicks", "click", 1, None),
-                    Step("buy", "purchase", 1, None),
-                ),
-                within_hours=6,
-            ),
+            DETECT_ONEORMORE,
         ),
         (
             "pattern_detect_times_stream",
@@ -803,21 +780,7 @@ def _cep_stream_cases():
             "pattern_match_optional_guard_stream",
             "pattern_match_optional_guard",
             ("n_views", "n_clicks", "click_val", "views_min_val"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step(
-                        "clicks",
-                        "click",
-                        0,
-                        1,
-                        guard=Guard("first", ">", "views", "min"),
-                    ),
-                    Step("purchase", "purchase", 1, None),
-                ),
-                within_hours=24,
-                val_col="value",
-            ),
+            cep.MATCH_OPTIONAL_GUARD,
         ),
     ]
 
@@ -1313,7 +1276,6 @@ def test_skipguard_stream_guard_gates_expansion_across_batches(
             ),
         ),
         skip="to_next",
-        val_col="value",
     )
     out = _run_compiled_split_stream(spark, d, pat)
     got = {
@@ -1379,7 +1341,6 @@ def test_optional_guard_stream_variant_remap_across_batches(
             Step("purchase", "purchase", 1, None),
         ),
         within_hours=24,
-        val_col="value",
     )
     out = _run_compiled_split_stream(spark, d, pat)
     got = {
@@ -1793,7 +1754,6 @@ def test_cep_idle_evict_guarded_stub_keeps_value_aggregates(
             ),
         ),
         within_hours=1,
-        val_col="value",
     )
     out = _run_compiled_split_stream(spark, d, pat, idle_evict=True)
     got = {
@@ -2739,11 +2699,7 @@ def _cep_runclose_cases():
     the open-emission keys': a match emits only once its anchor run
     is CLOSED (next run on the key starts) before the final
     watermark."""
-    from flink_large_window_spark.operators.cep import (
-        Guard,
-        Pattern,
-        Step,
-    )
+    from flink_large_window_spark.operators import cep
 
     return [
         (
@@ -2751,13 +2707,7 @@ def _cep_runclose_cases():
             "pattern_detect_times_exact",
             "click_event",
             ("n_views", "n_clicks"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step("clicks", "click", 1, 2, exact=True),
-                ),
-                within_hours=24,
-            ),
+            cep.DETECT_TIMES_EXACT,
         ),
         (
             "pattern_match_finalguard_stream",
@@ -2765,20 +2715,7 @@ def _cep_runclose_cases():
             "purchase_event",
             ("n_views", "n_purchases", "purchases_max_val",
              "views_max_val"),
-            Pattern(
-                steps=(
-                    Step("views", "view", 1, None),
-                    Step(
-                        "purchases",
-                        "purchase",
-                        1,
-                        None,
-                        guard=Guard("max", ">", "views", "max"),
-                    ),
-                ),
-                within_hours=24,
-                val_col="value",
-            ),
+            cep.MATCH_FINALGUARD,
         ),
     ]
 
@@ -3007,7 +2944,6 @@ def test_runclose_finalguard_settles_on_full_run_not_first_event(
             ),
         ),
         within_hours=24,
-        val_col="value",
     )
     t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
 
