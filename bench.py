@@ -9,7 +9,9 @@ stdout:
   {"metric": "...", "value": <total median sec>, "unit": "sec",
    "queries": {key: sec, ...}, "sf": "<dir>"}
 
-and writes BENCH_LAST.json with per-run detail + env. BENCH.json is
+and writes BENCH_LAST.json with per-run detail + env, and per key the
+classes compiled during the warm-ups and during the timed runs
+(``codegen_compiles``; the timed runs should compile none). BENCH.json is
 the FROZEN baseline (BASELINE.md) and is never rewritten here — later
 rounds must stay within 2× of it per query. All entries are the
 round-1 freeze except dedup_near_minhash and dedup_simhash, formally
@@ -282,10 +284,28 @@ def bench_one(spark, fn, sf_dir: str, runs: int = 3, warmups: int = 2) -> dict:
     # aggregate columns), and their measured run trajectory still
     # decays through run 5 (1.82 → 1.31 s) — a 2-warm-up median there
     # records C2 tier-up, not the query.
+    # Classes Janino compiled, counted outside the timed calls: a warm
+    # run should compile nothing (session.py sizes the class cache), so
+    # a nonzero "runs" count names per-run recompiles as the regression.
+    c0 = _codegen_compiles(spark)
     for _ in range(warmups):
         run()
+    c1 = _codegen_compiles(spark)
     times = [run() for _ in range(runs)]
-    return {"median_s": round(statistics.median(times), 4), "runs": [round(t, 4) for t in times]}
+    c2 = _codegen_compiles(spark)
+    return {
+        "median_s": round(statistics.median(times), 4),
+        "runs": [round(t, 4) for t in times],
+        "codegen_compiles": {"warmups": c1 - c0, "runs": c2 - c1},
+    }
+
+
+def _codegen_compiles(spark) -> int:
+    """Classes the session's JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram counts one per cache
+    miss)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> None:

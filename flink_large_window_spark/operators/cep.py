@@ -1049,7 +1049,7 @@ def compile_horizon_pairs(
             .orderBy(TS_COL, ID_COL)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        base = df.filter(F.col(CLS_COL).isin(*keep)).withColumn(
+        base = df.filter(F.col(CLS_COL).isin(*sorted(keep))).withColumn(
             "__cum",
             F.count(
                 F.when(F.col(CLS_COL) == not_between_cls, 1)

@@ -11,9 +11,11 @@ cutoff, per-key isolation, and spec validation.
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 
+from flink_large_window_spark import api
 from flink_large_window_spark.operators.cep import (
     Guard,
     Pattern,
@@ -24,6 +26,7 @@ from flink_large_window_spark.operators.cep import (
     compile_suffix,
     runs_relation,
 )
+from tests.conftest import SF_SMOKE
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -262,6 +265,16 @@ def test_horizon_absent_and_at_least(spark):
         at_least=1,
     ).collect()
     assert [(r.user_id, r.anchor_id, r.n_target) for r in atleast] == [(1, 1, 1)]
+
+
+def test_horizon_pairs_class_filter_order_is_stable(spark):
+    # The class filter's IN list is built from a set; sorted, so the
+    # plan does not follow PYTHONHASHSEED.
+    df = api.queries()["pattern_detect_followedby_nobetween"](spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    lists = [m.split(",") for m in re.findall(r" IN \(([^)]*)\)", plan)]
+    assert ["click", "error", "purchase"] in lists
+    assert all(cls == sorted(cls) for cls in lists)
 
 
 # ------------------------------------------------------------ alternation
