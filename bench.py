@@ -284,6 +284,7 @@ def bench_one(spark, fn, sf_dir: str, runs: int = 3, warmups: int = 2) -> dict:
     # aggregate columns), and their measured run trajectory still
     # decays through run 5 (1.82 → 1.31 s) — a 2-warm-up median there
     # records C2 tier-up, not the query.
+    #
     # Classes Janino compiled, counted outside the timed calls: a warm
     # run should compile nothing (session.py sizes the class cache), so
     # a nonzero "runs" count names per-run recompiles as the regression.
