@@ -1,5 +1,5 @@
-"""Physical-plan strategies and inspection (SURVEY.md §4): skew
-salting, plan assertions used by tests."""
+"""Physical-plan strategies (SURVEY.md §4): skew salting and
+bucketed layouts."""
 
 from importlib import import_module
 

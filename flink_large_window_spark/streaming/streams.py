@@ -9,6 +9,17 @@ agree on final window contents (SURVEY §2.9 gap #1).
 State store: RocksDB provider (Flink's RocksDB state backend analogue)
 so large-window state spills off-heap; set per-session at runtime.
 
+Ordered replays: a key or test that needs several micro-batches in a
+set order (a late slice after the on-time one, a phase after a
+restart, a key's events split across batches) writes its slices with
+write_batches and reads them back with batch_stream, one slice per
+micro-batch. Spark's file source takes the unread file with the oldest
+modification time first, and slices written back to back can share a
+timestamp (Hadoop reports milliseconds; some file systems keep whole
+seconds), which falls back to listing order. So write_batches pins
+each slice's mtime one second past the previous one instead of
+sleeping between writes.
+
 The hand-built keyed machines here (count session, session timeout,
 TTL, window top-N, count-tumbling, count-sliding, as-of join) run on
 keyed.py, which owns the launcher, the state/event codec, the
@@ -105,6 +116,33 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def write_batches(d: str, *tables) -> str:
+    """Append each pyarrow table to ``d`` as the next
+    ``part_NNN.parquet`` (numbered after the ``part_*`` files already
+    there) with its mtime pinned one second per index ahead of now, so
+    :func:`batch_stream` replays the slices in write order, across
+    calls too. Returns ``d``."""
+    import pyarrow.parquet as pq
+
+    start = sum(name.startswith("part_") for name in os.listdir(d))
+    for i, tbl in enumerate(tables, start):
+        path = os.path.join(d, f"part_{i:03d}.parquet")
+        pq.write_table(tbl, path)
+        mtime = time.time() + i
+        os.utime(path, (mtime, mtime))
+    return d
+
+
+def batch_stream(spark: SparkSession, d: str, schema) -> DataFrame:
+    """The :func:`write_batches` slices in ``d`` as a file-source
+    stream, one slice per micro-batch."""
+    prep(spark)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "part_*.parquet")
+        .parquet(d)
+    )
 
 
 # Streaming state-store width: each shuffle partition owns a RocksDB
@@ -1237,23 +1275,10 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeper = the max-ts on-time row again; it lands in the final
     # (open, never-emitted) pane, so it cannot distort emitted counts
     keeper = ontime.take([pc.index(ontime["ts"], pc.max(ontime["ts"])).as_py()])
-    pq.write_table(ontime, os.path.join(replay, "0-ontime.parquet"))
-    pq.write_table(keeper, os.path.join(replay, "1-keeper.parquet"))
-    pq.write_table(tbl.filter(mod10), os.path.join(replay, "2-late.parquet"))
-    # FileStreamSource orders batches by modification time (ms
-    # granularity, listing order on ties); the demo depends on
-    # ontime → keeper → late, so pin strictly increasing mtimes.
-    now = time.time()
-    for i, name in enumerate(
-        ("0-ontime.parquet", "1-keeper.parquet", "2-late.parquet")
-    ):
-        os.utime(os.path.join(replay, name), (now + i, now + i))
+    # the demo depends on the order ontime → keeper → late
+    write_batches(replay, ontime, keeper, tbl.filter(mod10))
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
-    )
+    stream = batch_stream(spark, replay, spark.read.parquet(src).schema)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1415,17 +1440,9 @@ def stream_allowed_lateness_reemit(spark: SparkSession, sf_dir: str) -> DataFram
         pc.subtract(tbl["event_id"], pc.multiply(pc.divide(tbl["event_id"], 10), 10)),
         0,
     )
-    pq.write_table(tbl.filter(pc.invert(mod10)), os.path.join(replay, "0-ontime.parquet"))
-    pq.write_table(tbl.filter(mod10), os.path.join(replay, "1-late.parquet"))
-    now = time.time()
-    for i, name in enumerate(("0-ontime.parquet", "1-late.parquet")):
-        os.utime(os.path.join(replay, name), (now + i, now + i))
+    write_batches(replay, tbl.filter(pc.invert(mod10)), tbl.filter(mod10))
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
-    )
+    stream = batch_stream(spark, replay, spark.read.parquet(src).schema)
     agg = (
         stream.withWatermark("ts", "45 days")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1507,24 +1524,19 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = pc.subtract(
         pc.max(tbl["ts"]), pa.scalar(24 * 3600 * 1_000_000, type=pa.duration("us"))
     )
-    schema = spark.read.parquet(src).schema
+    agg = (
+        batch_stream(spark, replay, spark.read.parquet(src).schema)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").cast("string").alias("w_start"), "n")
+    )
 
+    # phase A runs and stops (checkpoint + open panes survive); the
+    # restart resumes offsets, watermark and window state
     with _pinned_stream_confs(spark):
-
-        def run_phase() -> None:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(replay)
-            )
-            agg = (
-                stream.withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("w.start").cast("string").alias("w_start"), "n"
-                )
-            )
+        for phase in (pc.less_equal, pc.greater):
+            write_batches(replay, tbl.filter(phase(tbl["ts"], cutoff)))
             q = (
                 agg.writeStream.format("parquet")
                 .option("path", out)
@@ -1534,17 +1546,6 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-
-        now = time.time()
-        a_path = os.path.join(replay, "0-phase-a.parquet")
-        pq.write_table(tbl.filter(pc.less_equal(tbl["ts"], cutoff)), a_path)
-        os.utime(a_path, (now, now))
-        run_phase()  # ... job stops; checkpoint + open panes survive
-
-        b_path = os.path.join(replay, "1-phase-b.parquet")
-        pq.write_table(tbl.filter(pc.greater(tbl["ts"], cutoff)), b_path)
-        os.utime(b_path, (now + 10, now + 10))
-        run_phase()  # restart: resumes offsets/watermark/window state
 
     return spark.read.parquet(out).select(
         "w_start", F.col("n").cast("long").alias("n")
@@ -1620,22 +1621,18 @@ def stream_rule_update_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = pc.subtract(
         pc.max(tbl["ts"]), pa.scalar(24 * 3600 * 1_000_000, type=pa.duration("us"))
     )
-    schema = spark.read.parquet(src).schema
+    stream = batch_stream(spark, replay, spark.read.parquet(src).schema)
 
-    def write_rules(version: dict) -> None:
-        spark.createDataFrame(
-            [(k, v) for k, v in sorted(version.items())],
-            "event_type string, mult int",
-        ).coalesce(1).write.mode("overwrite").parquet(rules_dir)
-
+    # phase A under rules v1 stops; the rules table is overwritten to
+    # v2 (the mid-stream rule push) and phase B resumes the checkpoint
     with _pinned_stream_confs(spark):
-
-        def run_phase() -> None:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(replay)
-            )
+        for phase, version in (
+            (pc.less_equal, _RULES_V1), (pc.greater, _RULES_V2)
+        ):
+            write_batches(replay, tbl.filter(phase(tbl["ts"], cutoff)))
+            spark.createDataFrame(
+                sorted(version.items()), "event_type string, mult int"
+            ).coalesce(1).write.mode("overwrite").parquet(rules_dir)
             rules = spark.read.parquet(rules_dir)
             agg = (
                 stream.withWatermark("ts", "10 minutes")
@@ -1663,19 +1660,6 @@ def stream_rule_update_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-
-        now = time.time()
-        a_path = os.path.join(replay, "0-phase-a.parquet")
-        pq.write_table(tbl.filter(pc.less_equal(tbl["ts"], cutoff)), a_path)
-        os.utime(a_path, (now, now))
-        write_rules(_RULES_V1)
-        run_phase()
-
-        write_rules(_RULES_V2)  # the mid-stream rule push
-        b_path = os.path.join(replay, "1-phase-b.parquet")
-        pq.write_table(tbl.filter(pc.greater(tbl["ts"], cutoff)), b_path)
-        os.utime(b_path, (now + 10, now + 10))
-        run_phase()
 
     return spark.read.parquet(out).select(
         "w_start", "event_type", F.col("revenue").cast("double").alias("revenue")

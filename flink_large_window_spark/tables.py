@@ -301,12 +301,6 @@ def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     )
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for spark.sql queries."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def scan_units(sf_dir: str, name: str) -> int:
     """Number of independently-scannable units (parquet ROW GROUPS,
     summed across part files) for a fixture table — footer metadata

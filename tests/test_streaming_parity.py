@@ -13,14 +13,25 @@ passed. So the contract asserted here is:
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from flink_large_window_spark.streaming.keyed import keyed_fold
+from flink_large_window_spark.streaming.streams import (
+    batch_stream,
+    write_batches,
+)
 from tests.conftest import SF_SMOKE
 
 WM = dt.timedelta(minutes=10)
+
+#: replay-slice schema of the synthetic event rows (_event_row)
+EV_SCHEMA = "user_id long, ts timestamp, event_id long, event_type string"
+#: ... and of the count-window rows, which carry a value, not a class
+CW_SCHEMA = "user_id long, ts timestamp, event_id long, value double"
 
 
 def _rows(df, cols):
@@ -829,37 +840,20 @@ def _run_compiled_split_stream(spark, d, pat, idle_evict=False):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from flink_large_window_spark.tables import prep
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    prep(spark)
     guarded = any(s.guard is not None for s in pat.steps)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
+    schema = EV_SCHEMA
     cols = ["user_id", "ts", "event_id", "event_type"]
     if guarded:
         schema += ", value double"
         cols.append("value")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, schema)
     ev = stream.withWatermark("ts", "10 minutes").select(*cols)
     if any(len(s.clses()) > 1 for s in pat.steps):
         ev, pat = canonicalize_alternation(ev, pat)
-    handler, out_schema, state_schema = compile_stream(
-        pat, idle_evict=idle_evict
+    return keyed_fold(
+        ev, "user_id", compile_stream(pat, idle_evict=idle_evict)
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 @pytest.mark.parametrize("n_files", [2, 3])
@@ -868,7 +862,7 @@ def test_pattern_stream_multibatch(spark, max_ts, tmp_path, n_files, case):
     """Cross-batch state continuation for the COMPILED automaton: the
     fixture replay is a single micro-batch (one file), so this test
     splits events into N files by event time and replays them as N
-    batches (maxFilesPerTrigger=1, modification order = time order).
+    batches (one file per micro-batch, in event-time order).
     Runs that straddle a file boundary must continue across batches,
     earlier batches' buffered events must fold once a later batch
     advances the watermark, and the final emission set must STILL
@@ -879,35 +873,10 @@ def test_pattern_stream_multibatch(spark, max_ts, tmp_path, n_files, case):
     BOTH registered patterns, so alternation + ranged quantifiers run
     the generic fold under real multi-batch replay (round 12 —
     VERDICT r11 directive 1's done-criterion)."""
-    import os
-    import time as _time
-
-    import pyarrow.parquet as pq
-
     from flink_large_window_spark.registry import REGISTRY
 
     stream_key, batch_key, measures, pat = _cep_stream_cases()[case]
-    src = os.path.join(SF_SMOKE, "events.parquet")
-    t = pq.read_table(src)
-    ts_series = t["ts"].to_pandas()
-    order = ts_series.sort_values().index
-    d = str(tmp_path)
-    lo = ts_series.min() - pd.Timedelta(seconds=1)
-    penult_cut = None  # upper time bound of file n_files-2
-    for part in range(n_files):
-        hi_idx = min(len(order) * (part + 1) // n_files, len(order)) - 1
-        hi = ts_series.iloc[order[hi_idx]]
-        mask = (ts_series > lo) & (ts_series <= hi)
-        if part > 0:
-            _time.sleep(1.1)  # file source orders by modification time
-        pq.write_table(
-            t.filter(mask.values),
-            os.path.join(d, f"part_{part:03d}.parquet"),
-        )
-        if part == n_files - 2:
-            penult_cut = hi
-        lo = hi
-
+    d, cuts = _split_fixture_by_time(tmp_path, n_files)
     out = _run_compiled_split_stream(spark, d, pat)
     # Guarded case: the raw guard sides round to 4dp (same F.round the
     # registered keys apply) so the float columns compare exactly.
@@ -946,34 +915,87 @@ def test_pattern_stream_multibatch(spark, max_ts, tmp_path, n_files, case):
     # legitimately have every anchor in the last file's range — the
     # meaningfulness guard only applies when there are enough matches
     # for the split to plausibly straddle them.
-    cut_us = int(penult_cut.value) // 1000  # pandas Timestamp
+    cut_us = int(cuts[-2].value) // 1000  # pandas Timestamp
     assert len(expected) < 3 or any(r[-1] <= cut_us for r in got), (
         "split produced no pre-final-batch anchors"
     )
 
 
 def _write_batches(tmp_path, *batches):
-    import os
-    import time as _time
-
+    """Write lists of event-row dicts as ordered replay slices
+    (streams.write_batches); each slice's columns are its rows' keys,
+    typed like the fixture events."""
     import pyarrow as pa
+
+    types = {
+        "user_id": pa.int64(),
+        "ts": pa.timestamp("us"),
+        "event_id": pa.int64(),
+        "event_type": pa.string(),
+        "value": pa.float64(),
+    }
+    return write_batches(str(tmp_path), *(
+        pa.Table.from_pylist(b, schema=pa.schema([(c, types[c]) for c in b[0]]))
+        for b in batches
+    ))
+
+
+def _split_fixture_by_time(tmp_path, n_files):
+    """Write the SF_SMOKE events as `n_files` equal-count slices in
+    event-time order; returns the dir and each slice's upper ts bound
+    (pandas Timestamps)."""
     import pyarrow.parquet as pq
 
-    schema = pa.schema(
-        [
-            pa.field("user_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("event_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-        ]
-    )
-    d = str(tmp_path)
-    for i, batch in enumerate(batches):
-        if i > 0:
-            _time.sleep(1.1)  # file source orders by modification time
-        pq.write_table(pa.Table.from_pylist(batch, schema=schema),
-                       os.path.join(d, f"part_{i:03d}.parquet"))
-    return d
+    t = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    ts = t["ts"].to_pandas()
+    order = ts.sort_values().index
+    lo = ts.min() - pd.Timedelta(seconds=1)
+    slices, cuts = [], []
+    for part in range(n_files):
+        hi = ts.iloc[order[len(order) * (part + 1) // n_files - 1]]
+        slices.append(t.filter(((ts > lo) & (ts <= hi)).values))
+        cuts.append(hi)
+        lo = hi
+    return write_batches(str(tmp_path), *slices), cuts
+
+
+def test_write_batches_replays_slices_in_write_order(spark, tmp_path):
+    """The ordered-replay contract every multi-batch test and the
+    two-phase keys stand on: slices written back to back, with no
+    sleep, replay one per micro-batch in write order; a slice written
+    later into the same dir arrives as the next batch of a query
+    restarted on the same checkpoint."""
+    import pyarrow as pa
+
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    ckpt = str(tmp_path / "ckpt")
+    stream = batch_stream(spark, d, "i long")
+    log = []
+
+    def drain():
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda df, bid: log.append(
+                    (bid, sorted(r["i"] for r in df.collect()))
+                )
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    def one(i):
+        return pa.table({"i": pa.array([i], pa.int64())})
+
+    write_batches(d, one(0), one(1), one(2))
+    drain()
+    assert log == [(0, [0]), (1, [1]), (2, [2])], log
+    write_batches(d, one(3))
+    assert sorted(os.listdir(d))[-1] == "part_003.parquet"
+    drain()
+    assert log == [(0, [0]), (1, [1]), (2, [2]), (3, [3])], log
 
 
 def _event_row(uid, minutes, eid, cls, t0=dt.datetime(2024, 3, 1, 12, 0, 0)):
@@ -1111,7 +1133,6 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     evict lazily on access; its final blob (last=t0+300m) is still
     live at replay end and must NOT emit.
     """
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     batch1 = [
@@ -1127,14 +1148,7 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
         _event_row(2, 300, 7, "view"),
     ]
     d = _write_batches(tmp_path, batch1, batch2, batch3)
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
@@ -1204,32 +1218,6 @@ def test_afterskip_stream_enumerates_submatches_across_batches(
     assert got == {(1, 3, 1, 2), (1, 3, 1, 3), (1, 3, 2, 2)}, got
 
 
-def _write_batches_valued(tmp_path, *batches):
-    """_write_batches with a value column (guarded-pattern tests)."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema(
-        [
-            pa.field("user_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("event_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-            pa.field("value", pa.float64()),
-        ]
-    )
-    d = str(tmp_path)
-    for i, batch in enumerate(batches):
-        if i > 0:
-            _time.sleep(1.1)
-        pq.write_table(pa.Table.from_pylist(batch, schema=schema),
-                       os.path.join(d, f"part_{i:03d}.parquet"))
-    return d
-
-
 def _vrow(uid, minutes, eid, cls, value):
     r = _event_row(uid, minutes, eid, cls)
     r["value"] = value
@@ -1263,7 +1251,7 @@ def test_skipguard_stream_guard_gates_expansion_across_batches(
         _vrow(3, 15, 13, "purchase", 2.0),
         _vrow(2, 60, 4, "view", 0.0),  # watermark tail
     ]
-    d = _write_batches_valued(tmp_path, batch1, batch2)
+    d = _write_batches(tmp_path, batch1, batch2)
     pat = Pattern(
         steps=(
             Step("clicks", "click", 2, 4),
@@ -1327,7 +1315,7 @@ def test_optional_guard_stream_variant_remap_across_batches(
         _vrow(4, 10, 42, "purchase", 9.0),
         _vrow(2, 60, 9, "view", 0.0),  # watermark tail
     ]
-    d = _write_batches_valued(tmp_path, batch1, batch2)
+    d = _write_batches(tmp_path, batch1, batch2)
     pat = Pattern(
         steps=(
             Step("views", "view", 1, None),
@@ -1368,15 +1356,8 @@ def _run_absence_split_stream(spark, d):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_horizon_stream,
     )
-    from flink_large_window_spark.streaming.keyed import keyed_fold
 
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(F.col("event_type").isin("click", "purchase"))
         .select("user_id", "ts", "event_id", "event_type")
@@ -1447,7 +1428,6 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1466,13 +1446,7 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
         _event_row(2, 90, 9, "click"),
     ]
     d = _write_batches(tmp_path, batch1, batch2)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(F.col("event_type").isin("click", "purchase"))
         .select("user_id", "ts", "event_id", "event_type")
@@ -1741,7 +1715,7 @@ def test_cep_idle_evict_guarded_stub_keeps_value_aggregates(
         _vrow(2, 135, 21, "purchase", 5.0),
         _vrow(8, 150, 80, "click", 0.0),  # final wm -> t0+140m
     ]
-    d = _write_batches_valued(tmp_path, batch1, batch2, batch3, batch4)
+    d = _write_batches(tmp_path, batch1, batch2, batch3, batch4)
     pat = Pattern(
         steps=(
             Step("views", "view", 1, None),
@@ -1795,7 +1769,6 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     batch late, in-watermark, and still lands at position 3), NULL
     values are sum-skipped, and window 0 — complete — emits while the
     open tail (positions 8+) stays in state."""
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
         compile_countwindow_sliding_stream,
     )
@@ -1806,17 +1779,8 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     batch2 = [_vrow(1, 3, 3, "click", vals[3])] + [
         _vrow(1, m, m, "click", vals[m]) for m in (6, 7)
     ] + [_vrow(2, 60, 9, "view", 0.0)]
-    d = _write_batches_valued(tmp_path, batch1, batch2)
-    schema = (
-        "user_id long, ts timestamp, event_id long, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    d = _write_batches(tmp_path, batch1, batch2)
+    stream = batch_stream(spark, d, EV_SCHEMA + ", value double")
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -1843,7 +1807,6 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1859,13 +1822,7 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
         _event_row(2, 90, 9, "click"),  # watermark tail
     ]
     d = _write_batches(tmp_path, batch1, batch2)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(
             F.col("event_type").isin("click", "purchase", "error")
@@ -1897,7 +1854,6 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_timeout_stream,
     )
-    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     batch1 = [
         _event_row(1, 0, 0, "view"),
@@ -1919,13 +1875,7 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
         _event_row(2, 380, 9, "click"),  # watermark tail -> wm 370min
     ]
     d = _write_batches(tmp_path, batch1, batch2)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(
             F.col("event_type").isin("view", "click", "purchase")
@@ -1992,41 +1942,12 @@ def test_window_topn_stream_multibatch(spark, max_ts, tmp_path):
     (timer firing on a batch where the window's key is silent); the
     final never-closed day must emit nothing. Expected = the batch
     window_topn filtered to windows the final watermark closed."""
-    import os
-    import time as _time
-
-    import pyarrow.parquet as pq
-
     from flink_large_window_spark.registry import REGISTRY
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import compile_topn_stream
 
-    src = os.path.join(SF_SMOKE, "events.parquet")
-    t = pq.read_table(src)
-    ts_series = t["ts"].to_pandas()
-    order = ts_series.sort_values().index
-    d = str(tmp_path)
-    lo = ts_series.min() - pd.Timedelta(seconds=1)
-    n_files = 3
-    for part in range(n_files):
-        hi_idx = min(len(order) * (part + 1) // n_files, len(order)) - 1
-        hi = ts_series.iloc[order[hi_idx]]
-        mask = (ts_series > lo) & (ts_series <= hi)
-        if part > 0:
-            _time.sleep(1.1)
-        pq.write_table(
-            t.filter(mask.values),
-            os.path.join(d, f"part_{part:03d}.parquet"),
-        )
-        lo = hi
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    d, _cuts = _split_fixture_by_time(tmp_path, 3)
+    schema = spark.read.parquet(SF_SMOKE + "/events.parquet").schema
+    stream = batch_stream(spark, d, schema)
     ev = (
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
@@ -2060,20 +1981,11 @@ def _run_countwin_split_stream(spark, d):
     """Replay part_*.parquet files in `d` one per micro-batch through
     the count-window automaton — the same pipeline
     window_count_tumbling_stream builds, pointed at a split dir."""
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
         compile_countwindow_stream,
     )
 
-    schema = (
-        "user_id long, ts timestamp, event_id long, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, CW_SCHEMA)
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -2089,12 +2001,6 @@ def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
     window's membership (and min/max/sum) must be identical to the
     batch order, not arrival order; (uid 3) a 3-event partial tail
     must never fire."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
 
     def row(uid, minutes, eid, val):
@@ -2105,14 +2011,6 @@ def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
             "value": val,
         }
 
-    schema = pa.schema(
-        [
-            pa.field("user_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("event_id", pa.int64()),
-            pa.field("value", pa.float64()),
-        ]
-    )
     batches = [
         # batch 1: uid1 gets 3 of 5; uid2 gets positions 0,2,3 (pos 1
         # arrives later); uid3 partial
@@ -2132,15 +2030,7 @@ def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
         # batch 3: watermark driver far in the future closes everything
         [row(9, 1000, 99, 0.0)],
     ]
-    d = str(tmp_path)
-    for i, b in enumerate(batches):
-        if i > 0:
-            _time.sleep(1.1)
-        pq.write_table(
-            pa.Table.from_pylist(b, schema=schema),
-            os.path.join(d, f"part_{i:03d}.parquet"),
-        )
-    out = _run_countwin_split_stream(spark, d)
+    out = _run_countwin_split_stream(spark, _write_batches(tmp_path, *batches))
     got = {
         (
             r["user_id"], r["window_idx"], r["n"],
@@ -2227,16 +2117,9 @@ def _run_asof_split_stream(spark, d):
     """Replay part_*.parquet files in `d` one per micro-batch through
     the temporal-join automaton — the same pipeline join_asof_stream
     builds, pointed at a split directory."""
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import compile_asof_stream
 
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(F.col("event_type").isin("click", "error"))
         .select("user_id", "ts", "event_id", "event_type")
@@ -2352,7 +2235,6 @@ def test_followedby_stream_multibatch(spark, tmp_path):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_horizon_stream,
     )
-    from flink_large_window_spark.streaming.keyed import keyed_fold
 
     d = _write_batches(
         tmp_path,
@@ -2376,13 +2258,7 @@ def test_followedby_stream_multibatch(spark, tmp_path):
             _event_row(9, 1000, 99, "click"),  # final wm driver
         ],
     )
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(str(d))
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = (
         stream.filter(F.col("event_type").isin("click", "purchase"))
         .select("user_id", "ts", "event_id", "event_type")
@@ -2430,7 +2306,6 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     blob of 3 evicted by the final watermark. The hold-buffer fold
     must produce exactly that; the pre-review handler emitted a
     fabricated (+0m, n=1) eviction plus a wrong n=2 final blob."""
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     d = _write_batches(
@@ -2441,14 +2316,7 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
             _event_row(9, 300, 9, "view"),  # wm driver; own blob live
         ],
     )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
@@ -2473,27 +2341,12 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     — rn must be deterministic); (b) count windows accumulate NULL
     values like SQL SUM (sum_value NULL iff every value in the window
     is NULL, else the non-NULL sum)."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import (
         compile_topn_stream,
         compile_countwindow_stream,
     )
 
     t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
-    schema = pa.schema(
-        [
-            pa.field("user_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("event_id", pa.int64()),
-            pa.field("value", pa.float64()),
-        ]
-    )
 
     def row(uid, minutes, eid, val):
         return {
@@ -2503,7 +2356,6 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
             "value": val,
         }
 
-    d = str(tmp_path)
     rows = [
         # day 1: users 7 and 3 both have 2 events; user 9 has 1.
         # top-2 must be (3, rn=1), (7, rn=2) — user_id ASC on the tie.
@@ -2519,20 +2371,9 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
         row(6, 1513, 23, None), row(6, 1514, 24, None),
     ]
     wm_driver = [row(1, 3000, 99, 0.0)]  # closes day 1 + all windows
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
-                   os.path.join(d, "part_000.parquet"))
-    _time.sleep(1.1)
-    pq.write_table(pa.Table.from_pylist(wm_driver, schema=schema),
-                   os.path.join(d, "part_001.parquet"))
+    d = _write_batches(tmp_path, rows, wm_driver)
 
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, CW_SCHEMA)
     ev = (
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
@@ -2548,14 +2389,7 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
         ("2024-03-01 00:00:00", 7, 2, 2),
     }, got
 
-    stream2 = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream2 = batch_stream(spark, d, CW_SCHEMA)
     ev2 = stream2.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
@@ -2595,7 +2429,6 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     the observability rule's lazy path. (The true held case, where
     the successor stays inside the final tail and neither path is
     observable, is test_ttl_held_successor_tail_case.)"""
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import make_ttl_machine
 
     d = _write_batches(
@@ -2610,14 +2443,7 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
             _event_row(2, 300, 12, "view"),  # wm driver via user 2 only
         ],
     )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
@@ -2648,7 +2474,6 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     emitted gen-1 unconditionally)."""
     import duckdb
 
-    from flink_large_window_spark.streaming.keyed import keyed_fold
     from flink_large_window_spark.streaming.streams import make_ttl_machine
     from flink_large_window_spark import api
     import __spark_entry__ as entry_mod
@@ -2661,14 +2486,7 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
             _event_row(9, 85, 9, "view"),  # max-ts driver
         ],
     )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
+    stream = batch_stream(spark, d, EV_SCHEMA)
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
@@ -2725,8 +2543,6 @@ def _next_run_start_us(sf_dir):
     run is the user's last) from the fixture events — the closing
     instant the run-close oracle filter reads, computed independently
     of both engines (pandas, not SQL)."""
-    import os
-
     import pandas as pd
 
     ev = pd.read_parquet(os.path.join(sf_dir, "events.parquet"),
@@ -2812,32 +2628,10 @@ def test_pattern_stream_runclose_multibatch(
     must emit at the closing fold with the full run's length/value
     aggregates — and the final emission set must still equal the
     closed-before-final-watermark batch filter."""
-    import os
-    import time as _time
-
-    import pyarrow.parquet as pq
-
     stream_key, batch_key, anchor_col, measures, pat = (
         _cep_runclose_cases()[case]
     )
-    src = os.path.join(SF_SMOKE, "events.parquet")
-    t = pq.read_table(src)
-    ts_series = t["ts"].to_pandas()
-    order = ts_series.sort_values().index
-    d = str(tmp_path)
-    lo = ts_series.min() - pd.Timedelta(seconds=1)
-    for part in range(n_files):
-        hi_idx = min(len(order) * (part + 1) // n_files, len(order)) - 1
-        hi = ts_series.iloc[order[hi_idx]]
-        mask = (ts_series > lo) & (ts_series <= hi)
-        if part > 0:
-            _time.sleep(1.1)  # file source orders by modification time
-        pq.write_table(
-            t.filter(mask.values),
-            os.path.join(d, f"part_{part:03d}.parquet"),
-        )
-        lo = hi
-
+    d, _cuts = _split_fixture_by_time(tmp_path, n_files)
     out = _run_compiled_split_stream(spark, d, pat)
     guard_cols = []
     for s in pat.steps:
@@ -2919,13 +2713,6 @@ def test_runclose_finalguard_settles_on_full_run_not_first_event(
     (the deferred check reads the closed run's aggregates) — the
     exact case open-boundary emission gets wrong, proving the 'defer'
     candidacy is load-bearing rather than a re-labeled open check."""
-    import datetime as dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import os
-    import time as _time
-
     from flink_large_window_spark.operators.cep import (
         Guard,
         Pattern,
@@ -2945,48 +2732,26 @@ def test_runclose_finalguard_settles_on_full_run_not_first_event(
         ),
         within_hours=24,
     )
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def row(uid, minutes, eid, cls, val):
-        return {
-            "user_id": uid, "ts": t0 + dt.timedelta(minutes=minutes),
-            "event_id": eid, "event_type": cls, "value": val,
-        }
-
-    schema = pa.schema(
-        [
-            pa.field("user_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us")),
-            pa.field("event_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-            pa.field("value", pa.float64()),
-        ]
-    )
     batches = [
         [
             # user 1: view(5.0) then purchase(3.0) — guard FALSE on
             # the first anchor event
-            row(1, 0, 10, "view", 5.0),
-            row(1, 1, 11, "purchase", 3.0),
+            _vrow(1, 0, 10, "view", 5.0),
+            _vrow(1, 1, 11, "purchase", 3.0),
             # user 2: guard true on first event, run closes in batch 2
-            row(2, 0, 20, "view", 1.0),
-            row(2, 1, 21, "purchase", 4.0),
+            _vrow(2, 0, 20, "view", 1.0),
+            _vrow(2, 1, 21, "purchase", 4.0),
         ],
         [
             # user 1's run EXTENDS with 8.0 -> max(3,8) > 5 — guard
             # flips TRUE at close
-            row(1, 2, 12, "purchase", 8.0),
-            row(1, 3, 13, "error", 0.0),  # closes user 1's run
-            row(2, 2, 22, "error", 0.0),  # closes user 2's run
-            row(3, 600, 31, "signup", 0.0),  # watermark push
+            _vrow(1, 2, 12, "purchase", 8.0),
+            _vrow(1, 3, 13, "error", 0.0),  # closes user 1's run
+            _vrow(2, 2, 22, "error", 0.0),  # closes user 2's run
+            _vrow(3, 600, 31, "signup", 0.0),  # watermark push
         ],
     ]
-    d = str(tmp_path)
-    for i, batch in enumerate(batches):
-        if i > 0:
-            _time.sleep(1.1)
-        pq.write_table(pa.Table.from_pylist(batch, schema=schema),
-                       os.path.join(d, f"part_{i:03d}.parquet"))
+    d = _write_batches(tmp_path, *batches)
     out = _run_compiled_split_stream(spark, d, pat)
     got = {
         (r["user_id"], r["anchor_event"], r["n_purchases"],
@@ -3008,19 +2773,13 @@ def test_state_reader_decodes_cep_automaton_state(spark):
     watermark. This is VERDICT r13 item 5's second half: the reader
     handles arbitrary user-defined composite state, not just built-in
     aggregate buffers."""
-    import os
     import tempfile
-    from collections import defaultdict
 
     import pandas as pd
 
     from flink_large_window_spark.operators.cep import Pattern, Step
     from flink_large_window_spark.streaming.cep_stream import compile_stream
-    from flink_large_window_spark.streaming.streams import (
-        _events_stream,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import _events_stream
 
     pat = Pattern(
         steps=(
@@ -3029,21 +2788,13 @@ def test_state_reader_decodes_cep_automaton_state(spark):
         ),
         within_hours=24,
     )
-    handler, out_schema, state_schema = compile_stream(pat)
     ev = (
         _events_stream(spark, SF_SMOKE)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "event_type")
     )
-    res = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
     ckpt = tempfile.mkdtemp(prefix="flws_test_cepstate_")
-    run_to_memory(spark, res, mode="append", checkpoint=ckpt)
+    keyed_fold(ev, "user_id", compile_stream(pat), checkpoint=ckpt)
 
     st = spark.read.format("statestore").option("path", ckpt).load()
     got = {}
@@ -3132,19 +2883,10 @@ def test_suffix_stream_window_straddles_batches(spark, tmp_path):
     state), and a click run longer than the pattern must match via
     its suffix per-event — the two properties that distinguish this
     machine from the run-fold automaton."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from flink_large_window_spark.operators.cep import Pattern, Step
     from flink_large_window_spark.streaming.cep_stream import (
         compile_suffix_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from flink_large_window_spark.tables import prep
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     pat = Pattern(
         steps=(Step("clicks", "click", 2, 2), Step("buy", "purchase")),
@@ -3171,25 +2913,8 @@ def test_suffix_stream_window_straddles_batches(spark, tmp_path):
             _event_row(4, 600, 40, "signup"),  # watermark push
         ],
     )
-    prep(spark)
-    handler, out_schema, state_schema = compile_suffix_stream(pat)
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part_*.parquet")
-        .parquet(d)
-    )
-    ev = stream.withWatermark("ts", "10 minutes")
-    res = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, res, mode="append")
+    ev = batch_stream(spark, d, EV_SCHEMA).withWatermark("ts", "10 minutes")
+    out = keyed_fold(ev, "user_id", compile_suffix_stream(pat))
     got = {(r["user_id"], r["anchor_event"]) for r in out.collect()}
     assert got == {(1, 12), (2, 23)}, got
 
@@ -3246,11 +2971,6 @@ def test_runclose_pend_blocks_idle_evict_until_closing_fold(
     from flink_large_window_spark.streaming.cep_stream import (
         compile_stream,
     )
-    from flink_large_window_spark.streaming.streams import (
-        LAST_STATE_METRICS,
-        run_to_memory,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
     import flink_large_window_spark.streaming.streams as S
 
     pat = Pattern(
@@ -3283,27 +3003,12 @@ def test_runclose_pend_blocks_idle_evict_until_closing_fold(
     )
 
     def run(idle_evict):
-        handler, out_schema, state_schema = compile_stream(
-            pat, idle_evict=idle_evict
+        ev = batch_stream(spark, d, EV_SCHEMA).withWatermark(
+            "ts", "10 minutes"
         )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, event_id long,"
-                " event_type string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "part_*.parquet")
-            .parquet(d)
+        out = keyed_fold(
+            ev, "user_id", compile_stream(pat, idle_evict=idle_evict)
         )
-        ev = stream.withWatermark("ts", "10 minutes")
-        res = ev.groupBy("user_id").applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        out = run_to_memory(spark, res, mode="append")
         rows = {
             (r["user_id"], r["anchor_event"], r["n_views"], r["n_clicks"])
             for r in out.collect()
@@ -3338,8 +3043,6 @@ def test_state_reader_window_watermark_tie_evicts(spark, tmp_path):
     event at exactly 02:10:00.000 → final watermark = 02:00.000 ==
     the first window's end. Expected store: ONLY the final event's
     own window [02:00, 03:00)."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -3385,8 +3088,6 @@ def test_state_reader_automaton_late_only_user_null_open_run(
     (the handler's no-run encoding) and the reader must decode it
     back to NULL to match the oracle's outer join, with the events
     counted in n_buf."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -3452,8 +3153,6 @@ def test_state_reader_session_tie_polarities(spark, tmp_path):
     and user 2's own [00:50, 01:20) are retained. A second fixture
     dir pins the eviction tie exactly: user 1 event at 00:00 (end
     00:30), tail at 00:40 → wm == 00:30 == end → evicted."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 

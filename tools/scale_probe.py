@@ -20,6 +20,9 @@ Replication protocols (each preserves cross-engine comparability):
 - similarity: embeddings vec_id·K+k, same vectors → duplicate-heavy,
   the shape the distinct-vector IVF quantizer hardens against.
 
+The shuffle width comes from $SPARK_GRAFT_SHUFFLE_PARTITIONS (32 when
+unset): tables.prep() sets it, and every table() read calls prep().
+
 Gotchas baked in (learned the hard way, round 8):
 - prep() runs BEFORE the source read, else events.ts is written as
   TIMESTAMP_NTZ into the copy and timestamp keys break downstream.
@@ -426,7 +429,6 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", "64")
         .config("spark.driver.memory", "48g")
         # The streaming twins drain into a MEMORY sink (driver-
         # resident by design — the bounded-replay harness, not the
