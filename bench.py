@@ -19,8 +19,8 @@ re-frozen in round 7 (the round-1 numbers measured a retired
 non-deterministic kernel's lucky mode on a faster VM — full record in
 BASELINE.md "Round-7 RE-FREEZE"), and dedup_simhash_hamming,
 re-frozen DOWNWARD in round 10 after the capped-bucket reshape cut
-its clean median 1.93 → 1.10 s (a heavy-class probe key must read
-~1.0 on a baseline-speed VM; BASELINE.md "Round-10 RE-FREEZE").
+its clean median 1.93 → 1.10 s (a drift-reference key must read ~1.0
+on a baseline-speed VM; BASELINE.md "Round-10 RE-FREEZE").
 
 Known measurement hazards (round 6): (1) CacheManager substitutes
 cached data by canonical plan, so a key that persists without
@@ -131,12 +131,12 @@ WATCH_LIST_RUNS = {
     # Python-worker-churn sensitivity; median over 5.
     "dedup_embed_cosine": 5,
     # r8 (VERDICT r7 item 5): the two iterative kernels swung
-    # 1.22-1.24x r6→r7 on unchanged plans (VM drift); n=5 medians plus
-    # the probe normalization below keep noise out of their ratios.
+    # 1.22-1.24x r6→r7 on unchanged plans (VM drift); n=5 medians keep
+    # noise out of their ratios.
     "emb_kmeans_assign": 5,
-    # r9 (ADVICE r8): every probe key runs n=5 — probe-key noise
-    # multiplies directly into every norm ratio, so the normalizer
-    # must be at least as stable as the keys it corrects.
+    # r9 (ADVICE r8): the four plan-stable keys whose swings have
+    # always tracked VM drift, never code — read side by side with the
+    # raw ratios to tell drift from a regression, so they need n=5.
     "dedup_exact": 5,
     "agg_hash_grouped": 5,
     "join_sortmerge_large": 5,
@@ -196,46 +196,6 @@ WATCH_LIST_RUNS = {
     # its steady state.
     "pattern_detect_followedbyany": 5,
 }
-
-# Environment probes, two CLASSES since round 9 (VERDICT r8 item 4).
-# r7/r8 measured that VM drift is key-class-dependent: sustained
-# multi-core multi-stage keys ran 10-20% slower in throttled sessions
-# while light keys stayed normal, and conversely a fast-probe session
-# (r8 probe_factor 0.62) made the single light-probe normalizer
-# OVER-correct the heavy keys. Each class probes with two plan-stable
-# keys whose swings have always tracked VM drift, never code:
-# - light: dedup_exact (verify notes r6: 0.53 s vs 0.26 s baseline on
-#   identical code), agg_hash_grouped (the flagship, single-exchange).
-# - heavy: join_sortmerge_large (two sorted exchanges, steady
-#   multi-core), dedup_simhash_hamming (the suite's widest unrolled
-#   codegen + band-join — the shape the r7 throttling hit hardest).
-# The per-class probe_factor — geometric mean of (same-session median
-# / governing baseline) over the class's probes — normalizes the keys
-# ASSIGNED to that class (HEAVY_NORM_KEYS below; everything else is
-# light). Raw ratios remain the 2x gate; norm is diagnostic context
-# that now works in both drift directions.
-PROBE_CLASSES = {
-    "light": ("dedup_exact", "agg_hash_grouped"),
-    "heavy": ("join_sortmerge_large", "dedup_simhash_hamming"),
-}
-
-# Keys whose measured drift tracks the heavy class: the iterative /
-# multi-stage / sustained-multi-core keys (the watch-list cohort plus
-# the heavy probes themselves — a probe's own norm is self-referential
-# by construction, same as the light probes always were).
-HEAVY_NORM_KEYS = frozenset(
-    {
-        "dedup_cluster_cc",
-        "emb_kmeans_assign",
-        "dedup_embed_cosine",
-        "dedup_simhash",
-        "dedup_near_minhash",
-        "dedup_simhash_hamming",
-        "join_sortmerge_large",
-        "join_bucketed_noshuffle",
-        "llm_corpus_pipeline",
-    }
-)
 
 # Governing baseline for keys NOT in the frozen round-1 BENCH.json:
 # the partsupp quartet's first recorded medians (BENCH_r07; BASELINE.md
@@ -356,42 +316,8 @@ def main() -> None:
         sum(r["median_s"] for k, r in results.items() if k not in frozen_keys),
         4,
     )
-    # Probe normalization (see PROBE_CLASSES above): geometric mean
-    # keeps one noisy probe from dominating, and factor 1.0 ==
-    # baseline VM. Each key normalizes by ITS class's factor.
-    probe_factors = {
-        cls: round(
-            statistics.geometric_mean(
-                results[k]["median_s"] / governing[k] for k in probes
-            ),
-            4,
-        )
-        for cls, probes in PROBE_CLASSES.items()
-    }
-    # Per-probe ratios alongside the class geomean (late r10): the
-    # geomean HID a probe-specific shift this round — hamming read
-    # 1.49 while its class partner read 0.71 in the same session,
-    # which is a code/plan signal on the probe itself, not VM drift.
-    # Decomposed, that divergence is visible at a glance.
-    probe_detail = {
-        cls: {k: round(results[k]["median_s"] / governing[k], 3) for k in probes}
-        for cls, probes in PROBE_CLASSES.items()
-    }
-    # kept for cross-round comparability with BENCH_r08 (= old single
-    # light-class factor)
-    probe_factor = probe_factors["light"]
     ratios = {
-        k: {
-            "raw": round(results[k]["median_s"] / governing[k], 3),
-            "norm": round(
-                results[k]["median_s"]
-                / governing[k]
-                / probe_factors[
-                    "heavy" if k in HEAVY_NORM_KEYS else "light"
-                ],
-                3,
-            ),
-        }
+        k: {"raw": round(results[k]["median_s"] / governing[k], 3)}
         for k in HEADLINE
     }
     env = {
@@ -406,9 +332,6 @@ def main() -> None:
                 "queries": results,
                 "total_s": total,
                 "new_keys_total_s": new_total,
-                "probe_factor": probe_factor,
-                "probe_factors": probe_factors,
-                "probe_detail": probe_detail,
                 "ratios": ratios,
                 "env": env,
             },

@@ -1,10 +1,12 @@
 """Multimodal column operators (SURVEY.md §2.10).
 
 Image/audio/video are opaque ``binary`` columns with typed metadata.
-The decode step is STUBBED (the decode libraries are not in this
-container — see ``decode_image``); everything Spark-side is real and
+The decode step is a deterministic fake over the documents' text bytes
+(no media codec is a dependency); everything Spark-side is real and
 tested: binary schema, Arrow batch shape through mapInPandas,
-partitioning, and the aggregate over extracted features.
+partitioning, and the aggregate over extracted features. A real codec
+replaces only the per-blob function inside each operator's batch
+loop.
 
 Scale notes (100 TB): media blobs dominate bytes — the pipeline keeps
 them in their own column, prunes it unless the stage needs it, and
@@ -23,31 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..tables import prep, table
-
-
-try:  # optional codec: used automatically when the deployment ships it
-    from PIL import Image as _PIL_Image  # type: ignore
-except ImportError:  # pragma: no cover - this container has no codec
-    _PIL_Image = None
-
-
-def decode_image(blob: bytes) -> dict:
-    """Decode an image blob → {width, height, mode}.
-
-    Uses PIL when importable (round-4: real decode auto-enables —
-    tests/test_llm_quality.py covers it under ``importorskip``);
-    otherwise raises NotImplementedError, and the operators below run
-    their deterministic fake instead. This container ships no codec,
-    so the stub path is what CI exercises here.
-    """
-    if _PIL_Image is None:
-        raise NotImplementedError(
-            "image codec not available in this container"
-        )
-    import io
-
-    with _PIL_Image.open(io.BytesIO(blob)) as im:
-        return {"width": im.width, "height": im.height, "mode": im.mode}
 
 
 @query(
@@ -124,7 +101,7 @@ def multimodal_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed metadata), flowing through the exact plumbing a real decoder
     would use: Arrow batches in, per-row feature struct out. The
     "decode" is a deterministic fake (blob length + first/last byte);
-    ``decode_image`` marks where the real codec goes.
+    a real codec replaces ``extract``'s per-blob expressions.
     """
     prep(spark)
     blobs = table(spark, sf_dir, "documents").select(
@@ -161,13 +138,6 @@ def multimodal_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_video_frames(blob: bytes, stride: int) -> "object":
-    """Decode + frame-sample a video blob. STUB — no codec in this
-    container; real deployments replace this. The deterministic fake in
-    multimodal_frame_sample exercises the identical Spark plumbing."""
-    raise NotImplementedError("video codec not available in this container")
-
-
 @query(
     "multimodal_frame_sample",
     oracle="""
@@ -190,7 +160,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (truncated to its first 16 bytes) — one output row per sampled
     frame. This is the exact mapInPandas shape a real video pipeline
     uses (one input row → N frame rows, Arrow-batched, constant
-    memory); only decode_video_frames' body changes in production.
+    memory); in production a real decoder replaces the byte slicing
+    in ``sample``.
     """
     prep(spark)
     frame, stride, thumb = 64, 4, 16

@@ -11,19 +11,11 @@ integer columns (ids + rank), never raw similarity.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import query
-from ..tables import (
-    prep,
-    register_invalidation_hook,
-    table,
-    table_sql_ref,
-    temp_view_ref,
-)
+from ..tables import memo, prep, table, table_sql_ref, temp_view_ref
 
 
 def _with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
@@ -211,33 +203,16 @@ IVF_CENTS_SQL = f"""cents AS (
 
 # Trained-quantizer memo: centroid selection is a derived artifact of
 # an immutable corpus dir, so it is computed ONCE per (session, dir)
-# and reused — exactly how IVF deploys (train the coarse quantizer
-# once, assign forever). Without the memo every invocation pays the
-# distinct-vector agg + top-16 as fixed stage overhead (~0.2 s at
-# fixture scale regardless of data size). The memo holds the built
-# 16-row DataFrame, not the rows: it must be an Arrow-materialized
-# LocalTableScan (JVM-side), because the plain-tuple createDataFrame
-# path yields a Python-backed `Scan ExistingRDD` that launches a
-# Python worker on EVERY downstream execution (~0.2 s/run — measured;
-# that would re-lose what the memo saves). Keyed like
-# tables._RESOLVED (same immutable-dir contract);
-# tables.invalidate() evicts via the registered hook below.
-_TRAINED_CENTROIDS: dict[tuple[str, int, str], DataFrame] = {}
-
-# Same soft cap rationale as tables._CACHE_CAP: a long-lived process
-# training on many fresh scratch corpora (fuzz loops, per-test dirs —
-# which by contract never call invalidate) would otherwise accumulate
-# one 16-row DataFrame per dir forever, each pinning its SparkSession.
-# Clear-on-overflow is sound: the next call simply retrains.
-_CENTROID_CACHE_CAP = 128
-
-
-def _evict_centroids(ab: str) -> None:
-    for k in [k for k in _TRAINED_CENTROIDS if k[2] == ab]:
-        del _TRAINED_CENTROIDS[k]
-
-
-register_invalidation_hook(_evict_centroids)
+# through tables.memo and reused — exactly how IVF deploys (train the
+# coarse quantizer once, assign forever). Without the memo every
+# invocation pays the distinct-vector agg + top-16 as fixed stage
+# overhead (~0.2 s at fixture scale regardless of data size). The memo
+# holds the built 16-row DataFrame, not the rows: it must be an
+# Arrow-materialized LocalTableScan (JVM-side), because the plain-tuple
+# createDataFrame path yields a Python-backed `Scan ExistingRDD` that
+# launches a Python worker on EVERY downstream execution (~0.2 s/run —
+# measured; that would re-lose what the memo saves).
+# tables.invalidate(sf_dir) drops it with the dir's other entries.
 
 
 def ivf_centroids_sql_ref(spark: SparkSession, sf_dir: str) -> str:
@@ -246,9 +221,9 @@ def ivf_centroids_sql_ref(spark: SparkSession, sf_dir: str) -> str:
     build-cost remedy). The view wraps the memoized 16-row
     LocalTableScan, so referencing it in SQL is as cheap as the
     DataFrame handle. Registered through ``tables.temp_view_ref``, so
-    it shares ``table_sql_ref``'s once-per-(session, dir) registry,
-    catalog revalidation and ``tables.invalidate`` eviction (which
-    also retrains the quantizer via ``_evict_centroids``)."""
+    it shares ``table_sql_ref``'s once-per-(session, dir) memo and
+    ``tables.invalidate`` eviction (which also drops the trained
+    quantizer, so the next call retrains)."""
     return temp_view_ref(
         spark, sf_dir, "flws_ivf_cents", lambda: ivf_centroids(spark, sf_dir)
     )
@@ -266,18 +241,16 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; at 100 TB the key becomes a vector digest with the
     representative row joined back — same semantics, narrow rows.
     Subsequent calls replay the 16 memoized rows as a local relation
-    (see _TRAINED_CENTROIDS) — float values round-trip exactly
-    (collect/createDataFrame are both IEEE-double paths), so the plan
-    downstream is bit-identical either way.
+    (see the trained-quantizer memo note above) — float values
+    round-trip exactly (collect/createDataFrame are both IEEE-double
+    paths), so the plan downstream is bit-identical either way.
     """
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        os.path.abspath(sf_dir),
+    return memo(
+        spark, sf_dir, "ivf_centroids", lambda: _train_centroids(spark, sf_dir)
     )
-    cached = _TRAINED_CENTROIDS.get(key)
-    if cached is not None:
-        return cached
+
+
+def _train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = (
         table(spark, sf_dir, "embeddings")
         .groupBy("embedding")
@@ -334,9 +307,6 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set(arrow_key, prev)
         spark.conf.set(fb_key, prev_fb)
-    if len(_TRAINED_CENTROIDS) >= _CENTROID_CACHE_CAP:
-        _TRAINED_CENTROIDS.clear()
-    _TRAINED_CENTROIDS[key] = cents
     return cents
 
 

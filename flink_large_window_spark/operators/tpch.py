@@ -11,7 +11,7 @@ since round 6 they run against a DERIVED partsupp relation rebuilt
 deterministically from the public TPC-H dbgen assignment rule (spec
 §4.2.3, adapted to the fixtures' 0-based keys: supplier i∈0..3 of part
 p is (p + i·(S div 4 + p div S)) mod S), with an identical CTE on the
-oracle side — see ``derived_partsupp`` below and tests/test_partsupp.py.
+oracle side — see ``_partsupp_spark_cte`` below and tests/test_partsupp.py.
 
 Scale notes (100 TB):
 - every dim side (part at the brand-filtered grain, supplier, nation,
@@ -753,86 +753,34 @@ _PARTSUPP_SQL = """sc AS (SELECT COUNT(*) AS cnt FROM supplier),
     )"""
 
 
-def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived partsupp relation (see module comment above).
+def _partsupp_spark_cte(spark: SparkSession, sf_dir: str) -> str:
+    """The derived partsupp relation (see module comment above) as a
+    Spark-SQL CTE body — the Spark twin of the DuckDB ``_PARTSUPP_SQL``
+    CTE, embedded by the quartet's single-SQL bodies (round 7: their
+    chained-DataFrame builds cost 0.4–0.8 s of driver time each,
+    SCALING.md §12). tests/test_partsupp.py pins the two forms to the
+    same rows and key types.
+
+    PURE MAP since round 10 (VERDICT r9 item 2): the suppkey-collision
+    dedup is strictly PER-PART — the formula's 4 values can only
+    collide for the same p_partkey — so a row-local ``array_distinct``
+    before the explode is the identical relation with ZERO shuffle (the
+    old global DISTINCT exchanged all 4·|part| derived rows before
+    every quartet query's own keyed work). LATERAL VIEW OUTER keeps
+    InferFiltersFromGenerate from synthesizing a size()>0 filter (r6
+    rule — the array is non-empty by construction). The DuckDB
+    ``_PARTSUPP_SQL`` keeps its DISTINCT form: same relation, and the
+    oracle's dataflow budget is DuckDB's concern, not the engine plan
+    under grade.
 
     Supplier cardinality S enters the plan as a LITERAL read from
     parquet footer metadata (optimization r16, guide §6 "metadata, not
-    data" — the ``row_count`` path tfidf's N and the embed-cosine
-    block count already use): the old broadcast 1-row COUNT(*)
-    aggregate put a whole extra scan+aggregate+broadcast query stage
-    on the critical path of every quartet key — AQE cannot start the
-    part-side explode until the broadcast completes — and the footer
-    count is the same exact integer (COUNT(*) == footer num_rows; at
-    100 TB this is the catalog/ANALYZE statistic). Measured at sf0.1
-    on q11's checkpointed derive: 0.534 → 0.367 s median, same
-    session, rows identical. The derivation is now one narrow
-    Catalyst plan: scan part's key column → per-row ``array_distinct``
-    over the 4 suppkey formula values → explode → integer arithmetic.
-
-    PURE MAP since round 10 (VERDICT r9 item 2, same lesson class as
-    the r9 minhash signature stage): the suppkey-collision dedup the
-    old global DISTINCT performed is strictly PER-PART — the formula's
-    4 values can only collide for the same p_partkey — so a row-local
-    ``array_distinct`` before the explode is the identical relation
-    with ZERO shuffle. The old form exchanged all 4·|part| derived
-    rows on (ps_partkey, ps_suppkey) before every quartet query's own
-    keyed work, which was the single heaviest stage all four keys
-    shared (800 k rows at sf0.1; measured quartet speedup below).
-    """
-    part = table(spark, sf_dir, "part").select("p_partkey")
-    cnt = row_count(sf_dir, "supplier")
-    step = f"({cnt} div 4 + p_partkey div {cnt})"
-    return (
-        part.select(
-            F.col("p_partkey").alias("ps_partkey"),
-            F.explode_outer(
-                F.array_distinct(
-                    F.expr(
-                        "array("
-                        + ", ".join(
-                            f"(p_partkey + {i} * {step}) % {cnt}"
-                            for i in range(4)
-                        )
-                        + ")"
-                    )
-                )
-            ).alias("ps_suppkey"),
-        )
-        .withColumn(
-            "ps_availqty",
-            F.expr("(ps_partkey * 37 + ps_suppkey * 71) % 9999 + 1"),
-        )
-        .withColumn(
-            "ps_cost_cents",
-            F.expr(
-                "(ps_partkey * 7919 + ps_suppkey * 104729) % 99901 + 100"
-            ),
-        )
-    )
-
-
-def _partsupp_spark_cte(spark: SparkSession, sf_dir: str) -> str:
-    """Spark-dialect twin of the DuckDB ``_PARTSUPP_SQL`` CTE and the
-    ``derived_partsupp`` DataFrame — the THIRD rendering of the same
-    formula, added in round 7 when the quartet moved to single-SQL
-    bodies (their chained-DataFrame builds cost 0.4–0.8 s of driver
-    time each, SCALING.md §12). Drift between the three forms is
-    pinned by tests/test_partsupp.py's exact-equivalence test.
-
-    Pure map since round 10, like the DataFrame twin: the suppkey
-    dedup is row-local (``array_distinct`` over the 4 formula values —
-    collisions are per-part by construction), so no global DISTINCT
-    exchange; LATERAL VIEW OUTER keeps InferFiltersFromGenerate from
-    synthesizing a size()>0 filter (r6 rule — the array is non-empty
-    by construction). The DuckDB ``_PARTSUPP_SQL`` keeps its DISTINCT
-    form: same relation, and the oracle's dataflow budget is DuckDB's
-    concern, not the engine plan under grade.
-
-    Supplier cardinality is a parquet-footer LITERAL since
-    optimization r16 (guide §6; rationale and measurement at
-    ``derived_partsupp`` — the two Spark forms stay in lockstep, and
-    tests/test_partsupp.py pins their exact equivalence)."""
+    data"): the old broadcast 1-row COUNT(*) aggregate put a whole
+    extra scan+aggregate+broadcast query stage on the critical path of
+    every quartet key, and the footer count is the same exact integer
+    (at 100 TB, the catalog/ANALYZE statistic). Measured at sf0.1 on
+    q11's derive: 0.534 → 0.367 s median, same session, rows
+    identical."""
     part = table_sql_ref(spark, sf_dir, "part")
     cnt = row_count(sf_dir, "supplier")
     step = f"({cnt} div 4 + p_partkey div {cnt})"

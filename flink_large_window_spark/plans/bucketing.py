@@ -11,19 +11,19 @@ bucketed tables, re-read through the catalog, join, and fail loudly if
 an Exchange sneaks back into the physical plan.
 
 Since round 9 the bucketed materialization is memoized per
-(session, fixture dir): bucketing is an INGEST-TIME storage decision —
-the write is paid once, then every join on the bucket key is
-shuffle-free. Re-writing both tables on every invocation (rounds 1–8)
-measured the ingest, not the join; the first call per session+dir
-still pays the full write, and repeat calls measure what the technique
-actually buys (the exchange-free SMJ + partial agg). The frozen
+(session, fixture dir), through ``tables.memo``: bucketing is an
+INGEST-TIME storage decision — the write is paid once, then every join
+on the bucket key is shuffle-free. Re-writing both tables on every
+invocation (rounds 1–8) measured the ingest, not the join; the first
+call per session+dir still pays the full write, and repeat calls
+measure what the technique actually buys (the exchange-free SMJ +
+partial agg). The frozen
 baseline for ``join_bucketed_noshuffle`` predates this and includes
 two writes per run — recorded in BASELINE.md next to the entry.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pyspark.sql.functions as F
@@ -31,25 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..scratch import scratch_dir
-from ..tables import prep, register_invalidation_hook, table
+from ..tables import dir_tag, memo, prep, table
 
 N_BUCKETS = 8
-
-# (applicationId, id(spark), abspath(sf_dir)) -> (orders, lineitem)
-# catalog-backed DataFrames. Same cap-and-clear policy as the trained
-# quantizer memo (similarity._TRAINED_CENTROIDS): a long-lived process
-# over many scratch corpora must not pin one bucketed copy per dir
-# forever. Clear-on-overflow is sound — the next call re-materializes.
-_BUCKETED: dict[tuple[str, int, str], tuple[DataFrame, DataFrame]] = {}
-_BUCKETED_CAP = 32
-
-
-def _evict_bucketed(ab: str) -> None:
-    for k in [k for k in _BUCKETED if k[2] == ab]:
-        del _BUCKETED[k]
-
-
-register_invalidation_hook(_evict_bucketed)
 
 
 def _bucketed_table(
@@ -77,19 +61,19 @@ def _bucketed_pair(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Memoized bucketed (orders, lineitem) for ``sf_dir`` — written on
-    first use per session+dir, evicted via tables.invalidate hooks.
-    Catalog names carry an md5 of the dir abspath so two fixture dirs
-    in one session can never silently serve each other's data (the
+    first use per session+dir, dropped by ``tables.invalidate``.
+    Catalog names carry the dir's ``dir_tag`` so two fixture dirs in
+    one session can never silently serve each other's data (the
     pre-memo fixed names were safe only because every call re-wrote)."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        os.path.abspath(sf_dir),
+    return memo(
+        spark, sf_dir, "bucketed_pair", lambda: _write_pair(spark, sf_dir)
     )
-    pair = _BUCKETED.get(memo_key)
-    if pair is not None:
-        return pair
-    suffix = hashlib.md5(memo_key[2].encode()).hexdigest()[:16]
+
+
+def _write_pair(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    suffix = dir_tag(sf_dir)
     base = scratch_dir("flws_bucketed_")
     orders = _bucketed_table(
         spark,
@@ -107,9 +91,6 @@ def _bucketed_pair(
         f"flws_lineitem_bkt_{suffix}",
         base,
     )
-    if len(_BUCKETED) >= _BUCKETED_CAP:
-        _BUCKETED.clear()
-    _BUCKETED[memo_key] = (orders, lineitem)
     return orders, lineitem
 
 

@@ -7,12 +7,21 @@ table under ``{sf_dir}/``.
 At 100 TB these would be partitioned datasets (events partitioned by
 ``date(ts)``, lineitem bucketed by ``l_orderkey``); the loaders keep a
 single entry point so that layout change stays in one place.
+
+Everything resolved from a dir — relations, temp views, and the
+artifacts other modules derive from them — is built once per session
+through one memo (``memo``, keyed by session, dir and name), and footer
+counts through one ``lru_cache``; ``invalidate(sf_dir)`` drops both for
+a rewritten dir.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,6 +39,8 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+T = TypeVar("T")
 
 
 def prep(spark: SparkSession) -> SparkSession:
@@ -65,71 +76,61 @@ def prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Resolved-relation cache (round 7): `spark.read.parquet` re-lists the
-# files and re-reads the footer schema on EVERY call — ~0.10-0.19 s of
-# driver time per table reference, which multi-table queries pay per
-# table per build (a 6-table TPC-H build spent more time re-resolving
-# static relations than analyzing its joins; SCALING.md §12). The
-# fixture dirs are immutable for the life of a process (read-only
-# /root/testdata; scratch sf_dirs are mkdtemp-fresh and written before
-# first read), so the resolved DataFrame — file index + schema — is
-# cached per (application, dir, table) and reused. This is the
-# driver-side analogue of a catalog/metastore at 100 TB: relation
-# metadata is resolved once, not per query. DataFrames are immutable
-# plan handles, so sharing one across queries composes safely.
+# Session memo (round 7, one mechanism since): `spark.read.parquet`
+# re-lists the files and re-reads the footer schema on EVERY call —
+# ~0.10-0.19 s of driver time per table reference, which multi-table
+# queries pay per table per build (SCALING.md §12). Relation metadata
+# and the artifacts derived from it — temp-view registrations, the
+# trained IVF quantizer, the bucketed join copies — are built once per
+# (session, dir, name) and reused: the driver-side analogue of a
+# catalog/metastore at 100 TB. DataFrames are immutable plan handles,
+# so sharing one across queries composes safely.
 #
-# The immutability assumption is a CONTRACT, not an enforced check
-# (ADVICE r7): a caller that rewrites a table file in-place in a dir
-# this process has already read would get stale listings — silently
-# wrong rows, or FileNotFound at scan. Writers must use fresh mkdtemp
-# dirs (every scratch caller does), or call ``invalidate(sf_dir)``
-# below before re-reading a rewritten dir.
-_RESOLVED: dict[tuple[str, int, str, str], DataFrame] = {}
+# The key holds the SparkSession object itself. SparkSession defines no
+# __eq__/__hash__, so it hashes by identity; a session held as a key
+# cannot be collected, so its id is never reused by another session. A
+# second session in the same application (``spark.newSession()``, whose
+# temp views are invisible to the first) gets its own entries.
+#
+# The fixture dirs are immutable for the life of a process (read-only
+# test data; scratch sf_dirs are mkdtemp-fresh and written before first
+# read). That is a CONTRACT, not an enforced check: a caller that
+# rewrites a table file in place in a dir this process has already read
+# gets stale listings — wrong rows, or FileNotFound at scan — unless it
+# calls ``invalidate(sf_dir)`` first.
+_MEMO: dict[tuple[SparkSession, str, str], object] = {}
 
-
-# Soft cap on cache entries: a long-lived process resolving many
-# scratch sf_dirs (fuzz corpora, per-test scratch fixtures) would
-# otherwise accumulate one metadata-sized DataFrame per (session, dir,
-# table) forever. A full clear on overflow is crude but sound — the
-# next call simply re-resolves — and avoids a WeakKeyDictionary on the
-# session, which would never collect anyway (cached DataFrames hold a
-# strong reference back to their session).
+# One cap for the memo and the footer cache: a long-lived process over
+# many scratch dirs (fuzz corpora, per-test fixtures) would otherwise
+# pin one entry per (session, dir, name) forever. The memo clears in
+# full on overflow — crude but sound, the next call simply rebuilds;
+# the footer cache drops its least recently used entry.
 _CACHE_CAP = 512
 
 
-def _resolve_key(
-    spark: SparkSession, sf_dir: str, name: str
-) -> tuple[str, int, str, str]:
-    # Both the DataFrame and the temp-view registration are SESSION
-    # state, not application state (a temp view registered in one
-    # SparkSession is invisible to spark.newSession()'s catalog), so
-    # the key carries the Python session object's identity alongside
-    # the applicationId — a second session in the same app resolves
-    # fresh instead of inheriting views/frames it cannot see. id()
-    # reuse after a dead session is NOT fully harmless for the view
-    # cache (a stale hit would name a view only the dead session's
-    # catalog ever held), which is why temp_view_ref revalidates
-    # catalog visibility on every cache hit.
-    return (
-        spark.sparkContext.applicationId,
-        id(spark),
-        os.path.abspath(sf_dir),
-        name,
-    )
+def memo(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], T]) -> T:
+    """``build()`` once per (session, abspath of ``sf_dir``, ``name``);
+    later calls return the same object until :func:`invalidate`."""
+    key = (spark, os.path.abspath(sf_dir), name)
+    if key in _MEMO:
+        return _MEMO[key]
+    value = build()
+    if len(_MEMO) >= _CACHE_CAP:
+        _MEMO.clear()
+    _MEMO[key] = value
+    return value
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame (schema-on-read, resolved
-    relation cached per process — see ``_RESOLVED``)."""
+    relation memoized per session — see ``_MEMO``)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     prep(spark)  # idempotent; the driver's session never calls prep itself
-    key = _resolve_key(spark, sf_dir, name)
-    df = _RESOLVED.get(key)
-    if df is not None:
-        return df
-    if len(_RESOLVED) >= _CACHE_CAP:
-        _RESOLVED.clear()
+    return memo(spark, sf_dir, name, lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # ns-long → µs-floored timestamp (`div` = integer division; a
@@ -138,50 +139,32 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    _RESOLVED[key] = df
     return df
 
 
-# Modules that keep their own per-dir derived caches (e.g. the trained
-# IVF quantizer in llm/similarity.py) register a callback here so
-# ``invalidate`` clears them too, without this module importing them
-# (they import tables — a direct reference would be a cycle). Each hook
-# receives the ABSPATH of the invalidated dir.
-_INVALIDATION_HOOKS: list = []
-
-
-def register_invalidation_hook(fn) -> None:
-    """Register ``fn(abspath)`` to run whenever :func:`invalidate`
-    drops a dir — for derived-data caches owned by other modules."""
-    _INVALIDATION_HOOKS.append(fn)
-
-
 def invalidate(sf_dir: str) -> None:
-    """Drop every cached resolved relation and temp-view registration
-    for ``sf_dir`` (all sessions), so the next ``table()`` /
-    ``table_sql_ref()`` call re-lists files and re-reads footers.
+    """Drop every memo entry for ``sf_dir`` (all sessions) and the
+    footer counts, so the next ``table()`` / ``table_sql_ref()`` call
+    re-lists files and re-reads footers, and derived artifacts (the IVF
+    quantizer, the bucketed join copies) rebuild.
 
     The escape hatch for the immutable-dir contract above: call this
     after rewriting a table file in-place in a dir this process has
     already read. Existing DataFrame handles returned earlier still
     hold the stale file index — re-obtain them through ``table()``.
-    Registered invalidation hooks (derived-data caches in other
-    modules) run for the same dir.
     """
     ab = os.path.abspath(sf_dir)
-    for cache in (_RESOLVED, _VIEW_REGISTERED):
-        for key in [k for k in cache if k[2] == ab]:
-            del cache[key]
-    for key in [k for k in _FOOTER_SUMS if k[0] == ab]:
-        del _FOOTER_SUMS[key]
-    for fn in _INVALIDATION_HOOKS:
-        fn(ab)
+    for key in [k for k in _MEMO if k[1] == ab]:
+        del _MEMO[key]
+    _footer_sums.cache_clear()
 
 
-def _footer_sums(sf_dir: str, name: str) -> tuple[int, int]:
-    """(num_rows, num_row_groups) for a fixture table, summed across
-    part files, from parquet FOOTER metadata only — O(footer bytes) on
-    the driver, zero Spark jobs, zero data scanned.
+@functools.lru_cache(maxsize=_CACHE_CAP)
+def _footer_sums(ab: str, name: str) -> tuple[int, int]:
+    """(num_rows, num_row_groups) for a fixture table under the dir
+    ABSPATH ``ab``, summed across part files, from parquet FOOTER
+    metadata only — O(footer bytes) on the driver, zero Spark jobs,
+    zero data scanned.
 
     The ONE footer walk behind :func:`row_count` / :func:`scan_units` /
     :func:`spread_width` (ADVICE r9: the two public metrics used to
@@ -192,22 +175,16 @@ def _footer_sums(sf_dir: str, name: str) -> tuple[int, int]:
     stats / Delta log) or a parallel footer read over the file listing;
     either way it is metadata, not a table scan.
 
-    Memoized per (abspath, table) under the same immutable-dir
-    contract as ``_RESOLVED`` (late r10): spread decisions run on
-    EVERY query build, and a multi-part production layout pays one
-    footer open per part file per walk — the metadata answer cannot
-    change while the dir is immutable, and :func:`invalidate` evicts
-    alongside the relation cache for rewritten dirs.
+    Cached under the same immutable-dir contract as ``_MEMO`` (late
+    r10): spread decisions run on EVERY query build, and a multi-part
+    production layout pays one footer open per part file per walk.
+    :func:`invalidate` clears it for rewritten dirs.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    memo_key = (os.path.abspath(sf_dir), name)
-    hit = _FOOTER_SUMS.get(memo_key)
-    if hit is not None:
-        return hit
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = os.path.join(ab, f"{name}.parquet")
     if os.path.isdir(path):
         files = [
             os.path.join(root, f)
@@ -222,25 +199,25 @@ def _footer_sums(sf_dir: str, name: str) -> tuple[int, int]:
         md = pq.ParquetFile(f).metadata
         rows += md.num_rows
         groups += md.num_row_groups
-    if len(_FOOTER_SUMS) >= _CACHE_CAP:
-        _FOOTER_SUMS.clear()
-    _FOOTER_SUMS[memo_key] = (rows, groups)
     return rows, groups
-
-
-# (abspath, table) -> (num_rows, num_row_groups); same immutable-dir
-# contract and invalidate() eviction as _RESOLVED.
-_FOOTER_SUMS: dict[tuple[str, str], tuple[int, int]] = {}
 
 
 def row_count(sf_dir: str, name: str) -> int:
     """Exact row count of a fixture table from parquet FOOTER metadata
     (see :func:`_footer_sums`): sizing decisions (block counts, salt
     fan-out) never need a pre-pass over the data."""
-    return _footer_sums(sf_dir, name)[0]
+    return _footer_sums(os.path.abspath(sf_dir), name)[0]
 
 
-_VIEW_REGISTERED: dict[tuple[str, int, str, str], str] = {}
+def dir_tag(sf_dir: str) -> str:
+    """md5-16 of the dir's abspath: the suffix that keeps catalog names
+    (temp views, bucketed tables) of two dirs in one session apart.
+
+    64 bits (ADVICE r7): the former 32-bit crc32 made a silent cross-dir
+    collision merely improbable; a collision rebinds a shared name to
+    another dir's data. 16 hex digits puts a birthday collision past
+    ~10^9 distinct dirs."""
+    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
 
 
 def temp_view_ref(
@@ -250,36 +227,23 @@ def temp_view_ref(
     build: Callable[[], DataFrame],
 ) -> str:
     """Register ``build()`` — a relation derived from ``sf_dir`` — as
-    the temp view ``{prefix}_<md5-16 of the dir>`` once per
-    (application, session, dir, prefix) and return the view name.
+    the temp view ``{prefix}_<dir_tag>`` once per (session, dir,
+    prefix) through the memo and return the view name.
 
-    The shared registry behind :func:`table_sql_ref` and the IVF
+    The one registry behind :func:`table_sql_ref` and the IVF
     quantizer's ``ivf_centroids_sql_ref``; :func:`invalidate` evicts
     its entries for a dir, and the next call re-registers over the
-    same name.
+    same name. The view lives in the catalog of the session that is
+    part of the memo key, so a hit always names a view that session
+    can see.
     """
-    key = _resolve_key(spark, sf_dir, prefix)
-    view = _VIEW_REGISTERED.get(key)
-    # Revalidate catalog visibility even on a hit: the id()-keyed
-    # entry could (pathologically) have been registered by a dead
-    # session whose id() was reused, and the temp view lives in THAT
-    # session's catalog. One cheap catalog lookup per build removes
-    # the whole failure mode.
-    if view is not None and spark.catalog.tableExists(view):
-        return view
-    if len(_VIEW_REGISTERED) >= _CACHE_CAP:
-        _VIEW_REGISTERED.clear()
-    import hashlib
 
-    # 64 bits of md5 over the abspath (ADVICE r7): the former 32-bit
-    # crc32 made a silent cross-dir view collision merely improbable;
-    # a collision here rebinds the shared view name to another dir's
-    # data and tableExists revalidation cannot see it. 16 hex digits
-    # puts a birthday collision past ~10^9 distinct dirs.
-    view = f"{prefix}_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
-    build().createOrReplaceTempView(view)
-    _VIEW_REGISTERED[key] = view
-    return view
+    def register() -> str:
+        view = f"{prefix}_{dir_tag(sf_dir)}"
+        build().createOrReplaceTempView(view)
+        return view
+
+    return memo(spark, sf_dir, prefix, register)
 
 
 def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -292,7 +256,7 @@ def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     re-list + footer re-read a raw ``parquet.`path``` reference pays
     per occurrence (~0.10-0.19 s each — the dominant build term for
     multi-table SQL bodies). Registration happens once per
-    (application, dir, table); layout knowledge stays in this module.
+    (session, dir, table); layout knowledge stays in this module.
     Because the view wraps ``table()``, events' ns→µs timestamp
     conversion rides along too.
     """
@@ -313,7 +277,7 @@ def scan_units(sf_dir: str, name: str) -> int:
     ``maxPartitionBytes``. At 100 TB the same number comes from the
     file listing / catalog manifest.
     """
-    return _footer_sums(sf_dir, name)[1]
+    return _footer_sums(os.path.abspath(sf_dir), name)[1]
 
 
 def spread_small_corpus(
@@ -358,7 +322,7 @@ def spread_width(spark: SparkSession, sf_dir: str, name: str) -> int | None:
 
     No-op unless the layout scans at less than half the target width
     (the slack rationale is in :func:`spread_small_corpus`)."""
-    n, units = _footer_sums(sf_dir, name)
+    n, units = _footer_sums(os.path.abspath(sf_dir), name)
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     target = max(4, min(width, n // 150))
     if units * 2 >= target:

@@ -14,27 +14,6 @@ def test_every_headline_key_has_a_governing_baseline():
     assert not missing, f"headline keys without baseline: {missing}"
 
 
-def test_probe_keys_are_headline_baselined_and_stable():
-    g, _ = bench.governing_baselines()
-    for probes in bench.PROBE_CLASSES.values():
-        for k in probes:
-            assert k in bench.HEADLINE, k
-            assert k in g, k
-            # ADVICE r8: probe noise multiplies into every norm ratio,
-            # so every probe must run at watch-list n=5.
-            assert bench.WATCH_LIST_RUNS.get(k) == 5, k
-
-
-def test_heavy_norm_keys_are_headline():
-    extra = [k for k in bench.HEAVY_NORM_KEYS if k not in bench.HEADLINE]
-    assert not extra, f"heavy-norm keys outside HEADLINE: {extra}"
-    # the heavy probes normalize by their own class
-    for k in bench.PROBE_CLASSES["heavy"]:
-        assert k in bench.HEAVY_NORM_KEYS, k
-    for k in bench.PROBE_CLASSES["light"]:
-        assert k not in bench.HEAVY_NORM_KEYS, k
-
-
 def test_new_key_baselines_do_not_shadow_frozen():
     """If a NEW_KEY_BASELINES key is ever frozen into BENCH.json, the
     frozen value governs (dict build order) — and the hardcoded copy

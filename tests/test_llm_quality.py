@@ -210,38 +210,6 @@ def test_pack_chunks_invariants(spark):
         assert cum >= (r["pack_id"] + 1) * 2048, r
 
 
-def test_decode_image_with_codec():
-    """Real decode path, exercised wherever a codec ships (skipped in
-    this container — no PIL). The stub path is covered by
-    multimodal_blob_features' rows-only run."""
-    import pytest
-
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from flink_large_window_spark.llm.multimodal import decode_image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (4, 3)).save(buf, format="PNG")
-    meta = decode_image(buf.getvalue())
-    assert meta == {"width": 4, "height": 3, "mode": "RGB"}
-
-
-def test_decode_image_stub_raises_without_codec():
-    import importlib.util
-
-    import pytest
-
-    if importlib.util.find_spec("PIL") is not None:
-        pytest.skip("codec present; stub path not reachable")
-    from flink_large_window_spark.llm.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
 def test_minhash_hot_bucket_cap_drops_degenerate_buckets(spark):
     """LSH_BUCKET_CAP (round 7): a band bucket with more than CAP
     members is dropped as non-discriminative, which is what keeps

@@ -11,10 +11,18 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from flink_large_window_spark.operators.tpch import derived_partsupp
+from flink_large_window_spark.operators.tpch import _partsupp_spark_cte
 from flink_large_window_spark.registry import REGISTRY
 from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.test_plans import _plan
+
+
+def derived_partsupp(spark, sf_dir):
+    """The derived partsupp relation exactly as the quartet's SQL
+    bodies embed it."""
+    return spark.sql(
+        "WITH " + _partsupp_spark_cte(spark, sf_dir) + " SELECT * FROM partsupp"
+    )
 
 
 def test_partsupp_primary_key_and_ranges(spark):
@@ -124,28 +132,27 @@ def test_q16_antijoin_is_broadcast(spark):
 
 
 def test_partsupp_three_forms_identical(spark):
-    """The derived-partsupp formula exists in three renderings — the
-    DuckDB oracle CTE (_PARTSUPP_SQL), the DataFrame builder
-    (derived_partsupp), and since round 7 the Spark-SQL CTE the
-    quartet's single-SQL bodies embed (_partsupp_spark_cte). Any drift
-    between them silently shifts four hash-checked keys, so pin
-    Spark-SQL ≡ DataFrame exactly (the DuckDB twin is pinned
-    transitively by the quartet's oracle hash checks)."""
+    """The derived-partsupp formula has two renderings: the DuckDB
+    oracle CTE (_PARTSUPP_SQL) and the Spark-SQL CTE the quartet's
+    single-SQL bodies embed (_partsupp_spark_cte). Any drift between
+    them silently shifts four hash-checked keys, so pin Spark ≡ DuckDB
+    directly: the same row set, and 64-bit keys on both sides (equal
+    rows alone would let a dtype drift through whenever the fixture
+    keys happen to fit either type)."""
     from pyspark.sql.types import LongType
 
-    from flink_large_window_spark.operators.tpch import _partsupp_spark_cte
+    from flink_large_window_spark.operators.tpch import _PARTSUPP_SQL
+    from tests.check_oracle import duck_con
 
     cols = ("ps_partkey", "ps_suppkey", "ps_availqty", "ps_cost_cents")
-    sql_df = spark.sql(
-        "WITH " + _partsupp_spark_cte(spark, SF_ORACLE)
-        + f" SELECT {', '.join(cols)} FROM partsupp"
-    )
-    df_df = derived_partsupp(spark, SF_ORACLE).select(*cols)
-    # Equal rows alone would let a dtype drift through whenever the
-    # fixture keys happen to fit either type; pin the schema too.
-    assert sql_df.schema == df_df.schema
+    sql_df = derived_partsupp(spark, SF_ORACLE).select(*cols)
     for key in ("ps_partkey", "ps_suppkey"):
         assert isinstance(sql_df.schema[key].dataType, LongType), key
-    assert sorted(map(tuple, sql_df.collect())) == sorted(
-        map(tuple, df_df.collect())
+    con = duck_con(SF_ORACLE)
+    duck = con.sql(
+        "WITH " + _PARTSUPP_SQL + f" SELECT {', '.join(cols)} FROM partsupp"
     )
+    duck_types = dict(zip(duck.columns, map(str, duck.types)))
+    for key in ("ps_partkey", "ps_suppkey"):
+        assert duck_types[key] == "BIGINT", (key, duck_types[key])
+    assert sorted(map(tuple, sql_df.collect())) == sorted(duck.fetchall())

@@ -406,7 +406,7 @@ def test_bucketed_join_memo_serves_without_rewrite(spark):
     """The bucketed materialization is written once per session+dir
     (r9: bucketing is ingest-time layout); repeat calls must serve the
     SAME catalog-backed DataFrames, tables.invalidate must evict, and
-    the retrained result must be value-identical."""
+    the rebuilt result must be value-identical."""
     from flink_large_window_spark import tables
     from flink_large_window_spark.plans import bucketing
 
@@ -414,20 +414,28 @@ def test_bucketed_join_memo_serves_without_rewrite(spark):
     first = sorted(
         map(tuple, bucketing.join_bucketed_noshuffle(spark, SF_SMOKE).collect())
     )
-    key = [k for k in bucketing._BUCKETED if k[2] == SF_SMOKE]
-    assert len(key) == 1, "memo should hold exactly this dir's pair"
-    pair = bucketing._BUCKETED[key[0]]
+    pair = bucketing._bucketed_pair(spark, SF_SMOKE)
+    tag = tables.dir_tag(SF_SMOKE)
+    names = {
+        t.name for t in spark.catalog.listTables()
+        if "_bkt_" in t.name and t.name.endswith(tag)
+    }
+    assert names == {f"flws_orders_bkt_{tag}", f"flws_lineitem_bkt_{tag}"}, (
+        "memo should hold exactly this dir's pair"
+    )
     bucketing.join_bucketed_noshuffle(spark, SF_SMOKE)
-    assert bucketing._BUCKETED[key[0]] is pair, "repeat call re-materialized"
+    assert bucketing._bucketed_pair(spark, SF_SMOKE) is pair, (
+        "repeat call re-materialized"
+    )
 
     tables.invalidate(SF_SMOKE)
-    assert not [k for k in bucketing._BUCKETED if k[2] == SF_SMOKE], (
-        "invalidation hook did not evict this dir's pair"
-    )
     again = sorted(
         map(tuple, bucketing.join_bucketed_noshuffle(spark, SF_SMOKE).collect())
     )
-    assert again == first, "retrained bucketed join changed values"
+    assert bucketing._bucketed_pair(spark, SF_SMOKE) is not pair, (
+        "invalidate did not evict this dir's pair"
+    )
+    assert again == first, "rebuilt bucketed join changed values"
 
 
 def test_compiled_cep_plans_are_join_free(spark):

@@ -323,9 +323,10 @@ def test_operators_unchanged_on_partitioned_directory_layout(spark):
 
 def test_invalidate_refreshes_rewritten_dir(spark, tmp_path_factory):
     """tables.invalidate(sf_dir) is the escape hatch for the
-    immutable-dir contract of the resolved-relation cache (ADVICE r7):
-    after rewriting a table file in-place, invalidate + re-table()
-    must observe the new data (and refresh the table_sql_ref view)."""
+    immutable-dir contract of the session memo (ADVICE r7): repeat
+    calls serve the memoized relation, view and footer counts; after
+    rewriting a table file in-place, invalidate + re-table() must
+    observe the new data (and refresh the table_sql_ref view)."""
     import os
 
     import pyarrow as pa
@@ -347,30 +348,69 @@ def test_invalidate_refreshes_rewritten_dir(spark, tmp_path_factory):
             path,
         )
 
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
     write(3)
-    assert tables.table(spark, d, "region").count() == 3
+    first = tables.table(spark, d, "region")
+    assert first.count() == 3
+    assert tables.table(spark, d, "region") is first
     view = tables.table_sql_ref(spark, d, "region")
     assert spark.sql(f"SELECT COUNT(*) c FROM {view}").collect()[0]["c"] == 3
+    assert tables.table_sql_ref(spark, d, "region") == view
+
+    # a rebuild over unchanged data is a new relation with the same rows
+    tables.invalidate(d)
+    rebuilt = tables.table(spark, d, "region")
+    assert rebuilt is not first
+    assert rows(rebuilt) == rows(first)
 
     # footer-metric memo (late r10) obeys the same contract: cached
     # while the dir is immutable, evicted by invalidate
     assert tables.row_count(d, "region") == 3
-    assert (os.path.abspath(d), "region") in tables._FOOTER_SUMS
 
     write(5)  # in-place rewrite: caches are now stale by contract
+    assert tables.row_count(d, "region") == 3, "footer counts not cached"
+    assert tables.table(spark, d, "region") is rebuilt
     tables.invalidate(d)
-    assert (os.path.abspath(d), "region") not in tables._FOOTER_SUMS
     assert tables.row_count(d, "region") == 5
     assert tables.table(spark, d, "region").count() == 5
     view2 = tables.table_sql_ref(spark, d, "region")
     assert spark.sql(f"SELECT COUNT(*) c FROM {view2}").collect()[0]["c"] == 5
 
 
+def test_memo_is_scoped_per_session(spark):
+    """The memo key holds the session: repeat calls in one session
+    return the same relation and view name, while spark.newSession()
+    — whose temp-view catalog is its own — resolves its own relation
+    and registers the view in its own catalog."""
+    from flink_large_window_spark import tables
+
+    df = tables.table(spark, SF_SMOKE, "nation")
+    assert tables.table(spark, SF_SMOKE, "nation") is df
+    view = tables.table_sql_ref(spark, SF_SMOKE, "nation")
+    assert tables.table_sql_ref(spark, SF_SMOKE, "nation") == view
+    n = spark.sql(f"SELECT COUNT(*) c FROM {view}").collect()[0]["c"]
+
+    other = spark.newSession()
+    assert not other.catalog.tableExists(view), "temp views leak across sessions"
+    other_df = tables.table(other, SF_SMOKE, "nation")
+    assert other_df is not df
+    assert tables.table(other, SF_SMOKE, "nation") is other_df
+    other_view = tables.table_sql_ref(other, SF_SMOKE, "nation")
+    assert other_view == view  # same dir, same name, other catalog
+    assert other.catalog.tableExists(other_view)
+    assert other.sql(f"SELECT COUNT(*) c FROM {other_view}").collect()[0]["c"] == n
+    assert tables.table(spark, SF_SMOKE, "nation") is df
+
+
 def test_invalidate_evicts_trained_quantizer(spark, tmp_path_factory):
-    """The IVF quantizer memo (similarity._TRAINED_CENTROIDS) is a
-    derived-data cache over the same immutable-dir contract, evicted
-    through the tables.invalidate hook: after an in-place corpus
-    rewrite + invalidate, the quantizer must retrain on the new data."""
+    """The IVF quantizer memo (similarity.ivf_centroids through
+    tables.memo) is a derived-data cache over the same immutable-dir
+    contract: repeat calls serve the same 16-row relation, a retrain
+    over unchanged data is value-identical, and after an in-place
+    corpus rewrite + invalidate the quantizer must retrain on the new
+    data."""
     import os
 
     import numpy as np
@@ -399,19 +439,25 @@ def test_invalidate_evicts_trained_quantizer(spark, tmp_path_factory):
             path,
         )
 
+    def cents(df):
+        return {r["cent_id"]: tuple(r["c_vec"]) for r in df.collect()}
+
     write(40, 0.0)
     first_df = ivf_centroids(spark, d)
-    first = {r["cent_id"]: tuple(r["c_vec"]) for r in first_df.collect()}
+    first = cents(first_df)
     # memo hit must return the SAME DataFrame object — value equality
     # alone is vacuous here, since retraining on unchanged data yields
     # identical centroids anyway (review r8)
     assert ivf_centroids(spark, d) is first_df
 
+    tables.invalidate(d)
+    again_df = ivf_centroids(spark, d)
+    assert again_df is not first_df, "invalidate did not drop the quantizer"
+    assert cents(again_df) == first, "retrain on unchanged data changed values"
+
     write(40, 5.0)  # rewrite in place with different vectors
     tables.invalidate(d)
-    retrained = {
-        r["cent_id"]: tuple(r["c_vec"]) for r in ivf_centroids(spark, d).collect()
-    }
+    retrained = cents(ivf_centroids(spark, d))
     assert retrained != first, "quantizer served stale centroids after invalidate"
 
 
