@@ -116,14 +116,16 @@ bounded window of the last W folded events (W = pattern event length
 with it, EVERY batch CEP shape has a streaming twin
 (pattern_detect_cep_stream closes the last documented residual).
 
-Every machine here — the run-fold and suffix automata above and the
-pending-state machines (absence / preceding-horizon count, pairs ±
-blocker, timed-out partials) below — runs on keyed.py: one launcher
-(:func:`keyed.keyed_fold`), one state/event codec, and for the
-pending-state machines one settle kernel (:func:`keyed.settle_machine`)
-that owns class routing, the settle rule, the eviction floor, the
-clamped deadline timer and the emission frame; each machine keeps only
-its resolve rule.
+Every machine here runs on keyed.py: one launcher
+(:func:`keyed.keyed_fold`), one state/event codec, and two kernels
+that own the per-group protocol. The run-fold and suffix automata
+above are fold steps on the hold-buffer kernel
+(:func:`keyed.fold_machine`: ingest, the fold rule, the hold-buffer
+write-back, the re-fold timer and the emission frame). The
+pending-state machines below (absence / preceding-horizon count,
+pairs ± blocker, timed-out partials) are resolve rules on the settle
+kernel (:func:`keyed.settle_machine`: class routing, the settle rule,
+the eviction floor, the clamped deadline timer and the frame).
 
 Scale: state per key is O(pattern length) for the run window plus
 O(events inside the watermark delay) for the buffer — the same bound
@@ -138,12 +140,9 @@ from __future__ import annotations
 
 import bisect
 from itertools import repeat
-from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -189,16 +188,10 @@ from .keyed import (
     enc_cls,
     enc_nul,
     enc_val,
-    frame,
-    hold_timer_ms,
-    ingest_chunk,
+    fold_machine,
     keyed_fold,
     load_events,
-    read_state,
     settle_machine,
-    split_by_watermark,
-    timer_ms,
-    write_state,
 )
 from .streams import _events_stream
 
@@ -233,8 +226,7 @@ STREAM_STATE_SCHEMA = StructType(
 #: inside the double arrays (array elements survive the state store
 #: either way; NaN is the unambiguous in-band choice because a real
 #: NaN compares false in every guard exactly like SQL NULL).
-#: Unguarded patterns keep the base schema byte-identical — the two
-#: shipped round-11/12 stream keys' state layout does not change.
+#: Unguarded patterns keep the base schema.
 STREAM_STATE_SCHEMA_VAL = StructType(
     list(STREAM_STATE_SCHEMA.fields)
     + [
@@ -262,20 +254,19 @@ def _emit_on_close(pat: Pattern) -> bool:
     """True when the pattern's FINAL step carries semantics that range
     over the MAXIMAL anchor run — ``exact`` (the run's total length
     must sit in [min, max]) or a non-``first`` guard aggregate (it
-    reads the whole run's values). Both were compile_stream
-    rejections through round 13; round 14 lifts them by moving the
-    emission boundary from anchor-run OPEN to anchor-run CLOSE (the
-    next event of a different class on the key), where the maximal
-    run is a settled fact — the same deferral the absence machine has
-    always used for its watermark-proved negations (VERDICT r13 item
-    4). The oracle convention shifts accordingly: batch SQL plus a
+    reads the whole run's values). Such patterns move the emission
+    boundary from anchor-run OPEN to anchor-run CLOSE (the next event
+    of a different class on the key), where the maximal run is a
+    settled fact — the same deferral the absence machine uses for its
+    watermark-proved negations. The oracle convention shifts
+    accordingly: batch SQL plus a
     ms-aligned run-CLOSED-before-final-watermark filter (the closing
     run's start, not the anchor run's)."""
     last = pat.steps[-1]
     # exact with max_count=None is a no-op in the batch compiler
     # (compile_greedy caps the anchor run only when a max exists), so
-    # it must not shift the stream's emission boundary either
-    # (review r14): the pattern is semantically the non-exact twin.
+    # it must not shift the stream's emission boundary either: the
+    # pattern is semantically the non-exact twin.
     return (last.exact and last.max_count is not None) or (
         last.guard is not None and last.guard.agg != "first"
     )
@@ -300,7 +291,7 @@ def stream_out_schema(pat: Pattern) -> StructType:
         StructField(f"n_{s.name}", LongType()) for s in pat.steps[:-1]
     ]
     if _emit_on_close(pat):
-        # run-CLOSE emission (round 14): the anchor run is closed by
+        # run-CLOSE emission: the anchor run is closed by
         # the time the match emits, so its maximal length IS known —
         # emitted like compile_greedy's n_<last> measure
         fields.append(StructField(f"n_{pat.steps[-1].name}", LongType()))
@@ -324,19 +315,17 @@ def stream_out_schema(pat: Pattern) -> StructType:
 
 
 def compile_stream(pat: Pattern, idle_evict: bool = False):
-    """Compile a greedy-strategy Pattern into an
-    ``applyInPandasWithState`` :class:`keyed.Machine` (handler,
-    out schema, STREAM_STATE_SCHEMA or its guarded extension).
+    """Compile a greedy-strategy Pattern into a run-fold step on
+    :func:`keyed.fold_machine` (out schema, STREAM_STATE_SCHEMA or its
+    guarded extension).
 
     The caller canonicalizes alternation on the stream FIRST (see
     :func:`pattern_stream`), so every ``Step.cls`` reaching the
     automaton is a single class string.
 
-    ``idle_evict=True`` (round 13 — VERDICT r12 directive 7) layers
-    the stateful_session_ttl_stream idle-key eviction onto the
-    automaton, with the pattern's ``within`` bound as the TTL:
-    requires ``within_hours``, and proves the cep_stream module
-    docstring's long-promised "layer a TTL on top" claim. A key whose
+    ``idle_evict=True`` layers the stateful_session_ttl_stream
+    idle-key eviction onto the automaton, with the pattern's
+    ``within`` bound as the TTL (requires ``within_hours``). A key whose
     open run's within-deadline the watermark has STRICTLY passed
     (``(cur_start + within) // 1000 < wm_ms``), with no pending
     anchor and no held events, can no longer contribute its retained
@@ -363,9 +352,9 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
     unexpired within-deadline — pinned by
     tests/test_streaming_parity.py's idle-evict battery.
 
-    **Residual state floor** (ADVICE r13 item 1 — "idle keys evict"
-    would overstate; this is what actually remains, and why each
-    piece is correctness-forced rather than a TODO):
+    **Residual state floor** ("idle keys evict" would overstate; this
+    is what actually remains, and why each piece is correctness-forced
+    rather than a TODO):
 
     - a STUB-bed pattern-class key retains its O(1) scalars FOREVER,
       with no timer re-armed: maximal-run contiguity has no time
@@ -397,15 +386,14 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             "the final (anchor) step cannot be optional — a pattern "
             "must end on a concrete anchor run"
         )
-    # optional x skip composes since round 13: Pattern itself rejects
+    # optional x skip composes: Pattern itself rejects
     # an optional FIRST step under a skip strategy (the expansion
     # base would differ per variant), and with the first step pinned
     # non-optional every variant shares the same expansion step — the
     # emit-local enumeration reads the variant's own run lengths, so
     # nothing else changes (pattern_match_optional_skip_stream).
-    # Final-step exact / non-'first' final guards (round 14 — the
-    # last two compile_stream carve-outs, rejected r12/r13 with the
-    # maximal-anchor-run argument): both become decidable by moving
+    # Final-step exact / non-'first' final guards range over the
+    # maximal anchor run: both become decidable by moving
     # this pattern's emission boundary from anchor-run OPEN to
     # anchor-run CLOSE — see :func:`_emit_on_close`. Everything else
     # (candidacy, window, guards on closed runs) is unchanged; the
@@ -433,16 +421,15 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
 
     # Plain-python spec (closure must pickle to executors without
     # dragging Pattern/Step class state along). Optional steps
-    # (round 12) compile as VARIANTS over the SAME closed-run window:
+    # compile as VARIANTS over the SAME closed-run window:
     # expand_optional's present/absent sub-patterns are mutually
     # exclusive per anchor under maximal-run contiguity (its batch
     # proof), so candidacy tries each variant's non-final step list
     # against the window suffix and at most one matches — no automaton
     # union, no extra state; the window is sized by the FULL step
-    # list. A non-optional pattern is the one-variant special case
-    # (identical checks to the pre-r12 single-mids path).
+    # list. A non-optional pattern is the one-variant special case.
     step_names = tuple(s.name for s in pat.steps[:-1])
-    # After-match skip strategies (round 12): under to_next / no_skip
+    # After-match skip strategies: under to_next / no_skip
     # the FIRST step's max bounds the CONSUMED count, not the run
     # (compile_greedy's exact rule) — candidacy must not reject a
     # longer first run, so its max is lifted from the candidacy spec
@@ -471,9 +458,8 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
 
     def _variant_spec(v, dropped):
         """Per-variant compile: structural mids + VARIANT-LOCAL guard
-        indices (round 13 — VERDICT r12 directive 1). Guard
-        step-indexing formerly assumed the full step list, which is
-        wrong the moment a variant drops an optional step; remapping
+        indices. Indexing into the full step list would be wrong the
+        moment a variant drops an optional step; remapping
         into the variant's own step positions is exactly what the
         batch compiler does by re-running compile_greedy per variant
         (cep.py), expressed here as index translation because the
@@ -529,7 +515,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         else None
     )
     out_schema = stream_out_schema(pat)
-    # Iterative conditions (round 12, variant-local since round 13):
+    # Iterative conditions (variant-local):
     # each variant carries its own plain-python guard spec — (this
     # step index, this agg slot, cmp, ref step index, ref agg slot,
     # factor), all indices into the VARIANT's step list (local index
@@ -541,10 +527,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
     needs_val = bool(guard_names)
     state_schema = STREAM_STATE_SCHEMA_VAL if needs_val else STREAM_STATE_SCHEMA
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = read_state(state, state_schema)
+    def step(key, ready, st, wm_ms, held):
         if st:
             vas = (
                 zip(*([dec_val(v) for v in st[f"win_{a}"]] for a in _VA))
@@ -568,15 +551,6 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             win = []
             cc = cl = cs = cf = c_va = None
             pend = 0
-        buf = load_events(st, "buf")
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(
-                    buf, chunk, TS_COL, ID_COL, CLS_COL,
-                    VAL_COL if needs_val else None,
-                )
-        ready, hold = split_by_watermark(buf, wm_ms)
         out = []
 
         def run_va(i: int, k: int, closed: bool):
@@ -585,8 +559,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             window suffix; the anchor (i == k) exposes only 'first'
             while its run is still OPEN (fixed at open — the only
             anchor aggregate the open-emission mode admits), and the
-            full five once the run is CLOSED (run-close emission,
-            round 14)."""
+            full five once the run is CLOSED (run-close emission)."""
             if i == k:
                 if closed:
                     return tuple(c_va)
@@ -660,7 +633,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             first run's sub-matches enumerate emit-locally — every
             (start_off, consumed-length) pair is fixed by the closed
             first run, the incremental image of compile_greedy's
-            row-local explode. Under run-CLOSE emission (round 14)
+            row-local explode. Under run-CLOSE emission
             the anchor run is settled too: its final-step guard is
             re-checked here against the FULL run aggregates (the one
             check 'defer' candidacy skipped at open), and its maximal
@@ -677,7 +650,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             lens = {
                 n: win[-k + j][1] for j, n in enumerate(v_names)
             }
-            head = [key[0], int(cf)]
+            head = [key, int(cf)]
             # run-close: n_<last> = the closed anchor run's length,
             # capped at max_count when non-exact (compile_greedy's
             # least(run_len, max) consumed-measure convention)
@@ -743,7 +716,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             # open the new run. Run-CLOSE emission fires HERE — the
             # closing event settles the anchor run's maximal length
             # and full value aggregates, so exact bounds and the
-            # deferred final-step guard are decidable (round 14); the
+            # deferred final-step guard are decidable; the
             # emission must precede the window shift (candidacy reads
             # the window WITHOUT the anchor run).
             if cl is not None:
@@ -780,20 +753,17 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
                     pend = 0
                 else:
                     pend = 1
-        ttl_timer = None
-        if idle_evict and not hold and not pend:
+        deadline = None
+        if idle_evict and not held and not pend:
             if cl is not None and (cs + within_us) // 1000 >= wm_ms:
                 # live: arm the TTL timer at the open run's within
-                # deadline (through the timer clamp) so an idle
-                # key re-enters the handler to evict itself
-                ttl_timer = timer_ms((cs + within_us) // 1000, wm_ms)
+                # deadline so an idle key re-enters the handler to
+                # evict itself
+                deadline = (cs + within_us) // 1000
             elif cl is None or cc not in pattern_clses:
                 # separator (or empty) state: remove outright — see
                 # compile_stream's docstring for the safety argument
-                if state.exists:
-                    state.remove()
-                yield frame(out_schema, out)
-                return
+                return out, False, None
             else:
                 # pattern-class open run past its deadline: STUB —
                 # drop the closed-run window, keep the open run's
@@ -801,30 +771,23 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
                 # run; its old start must survive so merged-run
                 # candidates keep failing within, matching batch)
                 win = []
-        fields = {
-            "win_cls": [enc_cls(r[0]) for r in win],
-            "win_nul": [enc_nul(r[0]) for r in win],
-            "win_len": [r[1] for r in win],
-            "win_start": [r[2] for r in win],
-            "cur_cls": enc_cls(cc),
-            "cur_nul": 0 if cl is None else enc_nul(cc),
-            "cur_len": cl, "cur_start": cs, "cur_first": cf,
-            "cur_pend": pend,
-            **dump_events(state_schema, "buf", hold),
-        }
+        st.update(
+            win_cls=[enc_cls(r[0]) for r in win],
+            win_nul=[enc_nul(r[0]) for r in win],
+            win_len=[r[1] for r in win],
+            win_start=[r[2] for r in win],
+            cur_cls=enc_cls(cc),
+            cur_nul=0 if cl is None else enc_nul(cc),
+            cur_len=cl, cur_start=cs, cur_first=cf, cur_pend=pend,
+        )
         if needs_val:
             cur = c_va if c_va is not None else (None,) * 5
-            for k, a in enumerate(_VA):
-                fields[f"win_{a}"] = [enc_val(r[3][k]) for r in win]
-                fields[f"cur_{a}"] = enc_val(cur[k])
-        write_state(state, state_schema, fields)
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        elif ttl_timer is not None:
-            state.setTimeoutTimestamp(ttl_timer)
-        yield frame(out_schema, out)
+            for i, a in enumerate(_VA):
+                st[f"win_{a}"] = [enc_val(r[3][i]) for r in win]
+                st[f"cur_{a}"] = enc_val(cur[i])
+        return out, True, deadline
 
-    return Machine(handler, out_schema, state_schema)
+    return fold_machine(out_schema, state_schema, step)
 
 
 def _pattern_events(
@@ -2319,7 +2282,7 @@ def pattern_match_finalguard_stream(
     )
 
 
-#: Suffix-automaton state (round 14 — per-EVENT anchoring): the last
+#: Suffix-automaton state (per-EVENT anchoring): the last
 #: W folded events (W = the pattern's event length − 1, +1 when the
 #: earliest step is exact and needs its far-boundary event) plus the
 #: watermark hold buffer. Unlike the run-fold machine there is no run
@@ -2349,12 +2312,10 @@ SUFFIX_STATE_SCHEMA_VAL = StructType(
 
 
 def compile_suffix_stream(pat: Pattern):
-    """Compile a FIXED-count pattern into a per-EVENT-anchored
-    ``applyInPandasWithState`` handler — the streaming image of
-    :func:`operators.cep.compile_suffix` (round 14; retires the last
-    'does not stream' line in the CEP inventory: the suffix-anchored
-    start that the run-fold machine's compression discards, carried
-    since round 12 as pattern_detect_cep's documented residual).
+    """Compile a FIXED-count pattern into a per-EVENT-anchored fold
+    step on :func:`keyed.fold_machine` — the streaming image of
+    :func:`operators.cep.compile_suffix`: the suffix-anchored start
+    that the run-fold machine's compression discards.
 
     Per-event anchoring is trivially incremental: every predecessor a
     suffix match reads sits at a FIXED lag offset, so a window of the
@@ -2370,7 +2331,7 @@ def compile_suffix_stream(pat: Pattern):
     (min/max/sum skip NULL values; all-NULL → NULL → no match).
 
     Emission boundary: the anchor's own fold (``ts_ms <= wm_ms``,
-    split_by_watermark's admission) — the oracle is the batch SQL
+    the kernel's fold rule) — the oracle is the batch SQL
     plus the ms-aligned anchor-folded filter, the ORIGINAL run-fold
     convention (no run-close shift: nothing here ranges over an open
     run).
@@ -2385,7 +2346,7 @@ def compile_suffix_stream(pat: Pattern):
     if last.min_count != 1:
         raise ValueError("suffix strategy anchors on a single final event")
     if last.exact:
-        # ADVICE r14 — mirror compile_suffix: the exact_guards walk
+        # mirror compile_suffix: the exact_guards walk
         # covers steps[:-1] only, so a strict FINAL boundary (a
         # one-event lookahead past the anchor) would compile silently
         # unchecked; per-event anchoring decides each anchor on its
@@ -2399,7 +2360,7 @@ def compile_suffix_stream(pat: Pattern):
         # mirror compile_pattern's routing contract: skip strategies
         # compile through the greedy sub-match expansion, never the
         # suffix path — compiling here would silently drop the
-        # start_off enumeration (review r14)
+        # start_off enumeration
         raise ValueError(
             "suffix streaming supports only skip='past_last'; "
             "skip strategies expand sub-matches through the greedy "
@@ -2464,19 +2425,8 @@ def compile_suffix_stream(pat: Pattern):
             return max(nn)
         return sum(nn)
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = read_state(state, state_schema)
-        win, buf = load_events(st, "win"), load_events(st, "buf")
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(
-                    buf, chunk, TS_COL, ID_COL, CLS_COL,
-                    VAL_COL if needs_val else None,
-                )
-        ready, hold = split_by_watermark(buf, wm_ms)
+    def step(k, ready, st, _wm_ms, _held):
+        win = load_events(st, "win")
         out = []
         for us, eid, cls, val in ready:
             if cls is not None and cls in anchor_clses:
@@ -2522,20 +2472,15 @@ def compile_suffix_stream(pat: Pattern):
                         gvals += [lhs, rhs]
                 if ok:
                     out.append(
-                        tuple([key[0], int(eid)] + gvals
+                        tuple([k, int(eid)] + gvals
                               + [int(start_us), int(us)])
                     )
             win.append((us, eid, cls, val))
             del win[: max(0, len(win) - w_len)]
-        write_state(state, state_schema, {
-            **dump_events(state_schema, "win", win),
-            **dump_events(state_schema, "buf", hold),
-        })
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield frame(out_schema, out)
+        st.update(dump_events(state_schema, "win", win))
+        return out, True, None
 
-    return Machine(handler, out_schema, state_schema)
+    return fold_machine(out_schema, state_schema, step)
 
 
 def suffix_pattern_stream(

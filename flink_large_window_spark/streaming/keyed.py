@@ -2,7 +2,11 @@
 ``applyInPandasWithState`` machine in streams.py and cep_stream.py is
 launched, decodes and encodes its state, ingests events, splits them
 at the watermark, arms its timer and builds its emission frame through
-this module.
+this module. Two kernels own the whole per-group protocol:
+:func:`fold_machine` for the five hold-buffer machines (run-fold and
+suffix CEP automata, TTL, count-tumbling, count-sliding) and
+:func:`settle_machine` for the pending-state machines; each machine
+supplies only its fold step or resolve rule.
 
 The contract it encodes (the watermark/timer contract of "Watermarks
 in Stream Processing Systems", VLDB 2021):
@@ -10,9 +14,10 @@ in Stream Processing Systems", VLDB 2021):
 - **Drop rule** (Spark's): an input row with ``ts < wm`` is late and
   never reaches a handler, so every event a handler sees has
   ``ts_ms >= wm_ms`` at ingest.
-- **Fold rule** (hold-buffer machines, :func:`split_by_watermark`):
-  a buffered event folds once ``ts_ms <= wm_ms``, in full
-  ``(ts, order_id)`` order across batches. Because Spark admits the
+- **Fold rule** (hold-buffer machines, :func:`fold_machine`): a
+  buffered event folds once ``ts_ms <= wm_ms``, in full
+  ``(ts, order_id)`` order across batches, and a timer 1 ms before
+  the earliest held event re-folds. Because Spark admits the
   ``ts == wm`` tie, an exact-millisecond tie arriving in a LATER batch
   folds in arrival order — the documented residual hazard, pinned by
   tests/test_streaming_parity.py::
@@ -122,7 +127,7 @@ def write_state(state: GroupState, schema: StructType, fields: dict) -> None:
 def load_events(st: dict | None, prefix: str) -> list[tuple]:
     """``(us, id, cls, val)`` tuples from the ``<prefix>_*`` arrays of
     a state dict; an array the state does not hold decodes as None."""
-    if st is None:
+    if not st:
         return []
     us = [int(u) for u in st[f"{prefix}_us"]]
     none = [None] * len(us)
@@ -204,13 +209,6 @@ def timer_ms(deadline_ms, wm_ms):
     return max(deadline_ms, wm_ms + 1)
 
 
-def hold_timer_ms(hold, wm_ms):
-    """Re-fold timer for a non-empty hold buffer: 1 ms before the
-    earliest held event, so the fold that admits it runs the moment
-    the watermark reaches it."""
-    return timer_ms(min(e[0] for e in hold) // 1000 - 1, wm_ms)
-
-
 def frame(schema: StructType, rows) -> pd.DataFrame:
     """The emission frame: one column per ``schema`` field from row
     tuples. A LongType column holding a NULL goes through pandas'
@@ -222,6 +220,57 @@ def frame(schema: StructType, rows) -> pd.DataFrame:
             col = pd.array(col, dtype="Int64")
         cols[f.name] = col
     return pd.DataFrame(cols)
+
+
+def fold_machine(
+    out_schema: StructType, state_schema: StructType, step: Callable
+) -> Machine:
+    """The hold-buffer kernel (run-fold and suffix CEP automata, TTL,
+    count-tumbling and count-sliding windows). Arrivals buffer in the
+    state's ``buf_*`` arrays and fold by the module's fold rule; the
+    class column is ingested iff the state holds ``buf_cls``, the value
+    column iff it holds ``buf_val``.
+
+    ``step(key, ready, st, wm_ms, held)`` gets the events the fold
+    rule admits (sorted), the state dict (empty for a new key), and
+    whether events are still held. It folds ``ready`` into ``st`` in
+    place, setting every non-buffer field, and returns ``(rows, keep,
+    deadline_ms)``. The kernel removes the state only when the step
+    drops it (``keep`` false) and nothing is held; otherwise it writes
+    ``st`` back with the hold buffer and arms the timer at the earlier
+    of the hold re-fold and ``deadline_ms`` (None: no deadline),
+    through the clamp."""
+    names = state_schema.fieldNames()
+    cls_col = "event_type" if "buf_cls" in names else None
+    val_col = "value" if "buf_val" in names else None
+
+    def handler(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = read_state(state, state_schema) or {}
+        buf = load_events(st, "buf")
+        wm_ms = state.getCurrentWatermarkMs()
+        if not state.hasTimedOut:
+            for chunk in pdfs:
+                ingest_chunk(buf, chunk, "ts", "event_id", cls_col, val_col)
+        ready, hold = split_by_watermark(buf, wm_ms)
+        rows, keep, deadline = step(key[0], ready, st, wm_ms, bool(hold))
+        if keep or hold:
+            st.update(dump_events(state_schema, "buf", hold))
+            write_state(state, state_schema, st)
+            if hold:
+                # re-fold 1 ms before the earliest held event, so the
+                # fold that admits it runs the moment the watermark
+                # reaches it
+                refold = min(e[0] for e in hold) // 1000 - 1
+                deadline = refold if deadline is None else min(deadline, refold)
+            if deadline is not None:
+                state.setTimeoutTimestamp(timer_ms(deadline, wm_ms))
+        elif state.exists:
+            state.remove()
+        yield frame(out_schema, rows)
+
+    return Machine(handler, out_schema, state_schema)
 
 
 def settle_machine(

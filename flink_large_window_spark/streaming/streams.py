@@ -78,18 +78,13 @@ from ..tables import prep
 from .keyed import (
     Machine,
     dec_val,
-    dump_events,
     enc_val,
+    fold_machine,
     frame,
-    hold_timer_ms,
     ingest_chunk,
     keyed_fold,
-    load_events,
-    read_state,
     settle_machine,
-    split_by_watermark,
     timer_ms,
-    write_state,
 )
 
 _SINK_SEQ = 0
@@ -895,38 +890,28 @@ def make_ttl_machine() -> Machine:
     replays crafted micro-batches through the exact shipped handler).
     Semantics in stateful_session_ttl_stream's docstring.
 
-    Since the r12 review pass the machine uses the CEP automata's
-    watermark hold-buffer: arrivals buffer in state and fold into the
-    blob in (ts, event_id) order only once the watermark passes them.
-    The earlier form folded in arrival order (sorted per batch only),
-    so a legal in-watermark out-of-order arrival across micro-batches
-    could fabricate or suppress an eviction the globally-sorted SQL
-    oracle does not have. Eviction of the live blob is an EXPLICIT
-    watermark test (``(last + ttl) // 1000 < wm_ms``, ms-aligned —
-    the oracle's timer-path filter uses the identical expression)
-    rather than trusting the timer's own fire boundary; held events
-    can never rescue a blob past that test (a held event has
-    ``ts_ms > wm_ms``, so its gap to ``last`` already exceeds the
-    TTL — folding it later starts a fresh generation either way).
-    The timer clamp's 1 ms residual applies (keyed.py)."""
+    The machine folds through the hold buffer (keyed.fold_machine):
+    arrivals fold into the blob in (ts, event_id) order only once the
+    watermark passes them. Folding in arrival order (sorted per batch
+    only) would let a legal in-watermark out-of-order arrival across
+    micro-batches fabricate or suppress an eviction the
+    globally-sorted SQL oracle does not have. Eviction of the live
+    blob is an EXPLICIT watermark test (``(last + ttl) // 1000 <
+    wm_ms``, ms-aligned — the oracle's timer-path filter uses the
+    identical expression) rather than trusting the timer's own fire
+    boundary; held events can never rescue a blob past that test (a
+    held event has ``ts_ms > wm_ms``, so its gap to ``last`` already
+    exceeds the TTL — folding it later starts a fresh generation
+    either way). The timer clamp's 1 ms residual applies (keyed.py)."""
     ttl_us = _STATE_TTL_US
 
-    def ttl_machine(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(k, ready, st, wm_ms, _held):
         out = []
-        st = read_state(state, _TTL_STATE_SCHEMA)
-        last, n = (st["last"], st["n"]) if st else (0, 0)
-        buf = load_events(st, "buf")
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(buf, chunk, "ts", "event_id")
-        ready, hold = split_by_watermark(buf, wm_ms)
+        last, n = st.get("last", 0), st.get("n", 0)
         for us, *_ in ready:
             if n and us - last >= ttl_us:
                 # lazy expiry on access (last_write + ttl <= now)
-                out.append((key[0], last + ttl_us, last, n))
+                out.append((k, last + ttl_us, last, n))
                 n = 0
             if n == 0:
                 last, n = us, 1
@@ -934,28 +919,12 @@ def make_ttl_machine() -> Machine:
                 last, n = max(last, us), n + 1
         if n and (last + ttl_us) // 1000 < wm_ms:
             # idle-key GC: the watermark strictly passed the deadline
-            out.append((key[0], last + ttl_us, last, n))
+            out.append((k, last + ttl_us, last, n))
             last = n = 0
-        if n == 0 and not hold:
-            if state.exists:
-                state.remove()
-        else:
-            # State is (last, n) only since r13: the old 'first' field
-            # was restored/persisted but never read for emission or
-            # control flow (its None-sentinel role moved to n == 0 in
-            # the r12 hold-buffer rewrite) — pure schema weight,
-            # dropped per ADVICE r12 item 3.
-            write_state(state, _TTL_STATE_SCHEMA, {
-                "last": last, "n": n,
-                **dump_events(_TTL_STATE_SCHEMA, "buf", hold),
-            })
-            timers = [hold_timer_ms(hold, wm_ms)] if hold else []
-            if n:
-                timers.append(timer_ms((last + ttl_us) // 1_000, wm_ms))
-            state.setTimeoutTimestamp(min(timers))
-        yield frame(_TTL_OUT_SCHEMA, out)
+        st.update(last=last, n=n)
+        return out, n != 0, (last + ttl_us) // 1000 if n else None
 
-    return Machine(ttl_machine, _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA)
+    return fold_machine(_TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA, step)
 
 
 @query(
@@ -1823,10 +1792,8 @@ def compile_countwindow_stream(size: int = 5) -> Machine:
     Partial windows never fire — Flink's countWindow contract — so
     the bounded-replay tail stays in state and the oracle filter is
     ``COUNT(*) = size AND last-event-ms <= final_wm_ms``."""
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = read_state(state, _COUNTWIN_STATE_SCHEMA)
+
+    def step(k, ready, st, _wm_ms, _held):
         if st:
             next_idx, cnt = st["next_idx"], st["cnt"]
             min_id, max_id = st["min_id"], st["max_id"]
@@ -1834,12 +1801,6 @@ def compile_countwindow_stream(size: int = 5) -> Machine:
         else:
             next_idx = cnt = min_id = max_id = 0
             sum_val = None
-        buf = load_events(st, "buf")
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(buf, chunk, "ts", "event_id", val_col="value")
-        ready, hold = split_by_watermark(buf, wm_ms)
         out = []
         for _us, eid, _cls, val in ready:
             cnt += 1
@@ -1849,35 +1810,27 @@ def compile_countwindow_stream(size: int = 5) -> Machine:
                 sum_val = val if sum_val is None else sum_val + val
             if cnt == size:
                 out.append((
-                    key[0], next_idx, cnt, min_id, max_id,
+                    k, next_idx, cnt, min_id, max_id,
                     None if sum_val is None else round(sum_val, 4),
                 ))
                 next_idx += 1
                 cnt = 0
                 sum_val = None
-        if cnt == 0 and not hold and next_idx == 0:
-            # Nothing folded and nothing numbered: mirror the TTL
-            # machine's exhausted-state removal (ADVICE r12 item 4)
-            # rather than persisting an all-zero row forever. A key
-            # with next_idx > 0 must KEEP its row even when the buffer
-            # drains: next_idx is live state — window numbering
-            # continues from it, so removing would restart a future
-            # window at idx 0 (Flink's countWindow likewise keeps the
-            # per-key count state for the stream's lifetime; bounding
-            # it is a TTL layering, which renumbers by design).
-            if state.exists:
-                state.remove()
-        else:
-            write_state(state, _COUNTWIN_STATE_SCHEMA, {
-                "next_idx": next_idx, "cnt": cnt, "min_id": min_id,
-                "max_id": max_id, "sum_val": enc_val(sum_val),
-                **dump_events(_COUNTWIN_STATE_SCHEMA, "buf", hold),
-            })
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield frame(_COUNTWIN_OUT_SCHEMA, out)
+        st.update(
+            next_idx=next_idx, cnt=cnt, min_id=min_id, max_id=max_id,
+            sum_val=enc_val(sum_val),
+        )
+        # Nothing folded and nothing numbered: drop the state rather
+        # than persist an all-zero row forever. A key with next_idx > 0
+        # must KEEP its row even when the buffer drains: next_idx is
+        # live state — window numbering continues from it, so removing
+        # would restart a future window at idx 0 (Flink's countWindow
+        # likewise keeps the per-key count state for the stream's
+        # lifetime; bounding it is a TTL layering, which renumbers by
+        # design).
+        return out, bool(cnt or next_idx), None
 
-    return Machine(handler, _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA)
+    return fold_machine(_COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA, step)
 
 
 @query(
@@ -1971,20 +1924,11 @@ def compile_countwindow_sliding_stream(
 
     State: the ring of the last ≤ size folded VALUES plus the fold
     position — O(size) per key, Flink's CountEvictor bound — and the
-    watermark hold buffer (round 13 — VERDICT r12 directive 6; the
-    one windows.py batch key that lacked a stream twin)."""
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = read_state(state, _COUNTSLIDE_STATE_SCHEMA)
+    watermark hold buffer."""
+
+    def step(k, ready, st, _wm_ms, _held):
         pos = int(st["pos"]) if st else 0
         ring = [dec_val(v) for v in st["ring"]] if st else []
-        buf = load_events(st, "buf")
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(buf, chunk, "ts", "event_id", val_col="value")
-        ready, hold = split_by_watermark(buf, wm_ms)
         out = []
         for *_, val in ready:
             ring.append(val)
@@ -1993,24 +1937,15 @@ def compile_countwindow_sliding_stream(
             if pos >= size and (pos - size) % slide == 0:
                 vals = [v for v in ring if v is not None]
                 out.append((
-                    key[0], (pos - size) // slide, size,
+                    k, (pos - size) // slide, size,
                     round(sum(vals), 4) if vals else None,
                 ))
-        if pos == 0 and not hold:
-            # nothing folded and nothing numbered (the count-tumbling
-            # rule): don't persist an empty row
-            if state.exists:
-                state.remove()
-        else:
-            write_state(state, _COUNTSLIDE_STATE_SCHEMA, {
-                "pos": pos, "ring": [enc_val(v) for v in ring],
-                **dump_events(_COUNTSLIDE_STATE_SCHEMA, "buf", hold),
-            })
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield frame(_COUNTSLIDE_OUT_SCHEMA, out)
+        st.update(pos=pos, ring=[enc_val(v) for v in ring])
+        # nothing folded and nothing numbered (the count-tumbling
+        # rule): don't persist an empty row
+        return out, pos > 0, None
 
-    return Machine(handler, _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA)
+    return fold_machine(_COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA, step)
 
 
 @query(

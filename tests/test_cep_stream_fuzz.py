@@ -698,12 +698,20 @@ def test_watermark_boundaries_are_exact():
     watermark STRICTLY passes its deadline (pairs: the target itself;
     absence: target + horizon); a retained event exactly on the
     eviction floor ``wm_ms·1000 − horizon`` is kept; TTL state evicts
-    only once the watermark strictly passes ``last + ttl``."""
+    only once the watermark strictly passes ``last + ttl``. The
+    hold-buffer kernel (driven through count-tumbling): a held event
+    arms the re-fold timer at ``max(held_ms − 1, wm_ms + 1)``, an event
+    with ``ts_ms == wm_ms`` folds, and a key holding only buffered
+    events keeps its state until the step drops it with nothing
+    held."""
     from flink_large_window_spark.streaming.cep_stream import (
         compile_horizon_stream,
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.streams import make_ttl_machine
+    from flink_large_window_spark.streaming.streams import (
+        compile_countwindow_stream,
+        make_ttl_machine,
+    )
 
     h_ms = 6 * 3600 * 1000
     t0 = pd.Timestamp("2024-03-01 12:00:00")
@@ -716,6 +724,7 @@ def test_watermark_boundaries_are_exact():
             "ts": [t0 + pd.Timedelta(milliseconds=ms) for ms, _, _ in events],
             "event_id": [eid for _, eid, _ in events],
             "event_type": [cls for _, _, cls in events],
+            "value": [1.0] * len(events),
         })] if events else [])
         rows = [tuple(r) for pdf in machine.handler((1,), chunks, st)
                 for r in pdf.itertuples(index=False)]
@@ -751,3 +760,27 @@ def test_watermark_boundaries_are_exact():
     assert step(m, store, t0_ms + ttl_ms + 1)[0] == [
         (1, (t0_ms + ttl_ms) * 1000, t0_ms * 1000, 1)
     ]
+
+    # count-tumbling (size 2) on the hold-buffer kernel
+    m, store = compile_countwindow_stream(size=2), {}
+    # held above the watermark: re-fold timer 1 ms before the event,
+    # and the key keeps its state with nothing folded
+    assert step(m, store, t0_ms, [(5_000, 1, "view")]) == (
+        [], t0_ms + 4_999
+    )
+    held_only = store[1]
+    assert held_only[:2] == (0, 0)  # next_idx, cnt
+    # the watermark 1 ms short of it: still held, the timer clamps to
+    # wm_ms + 1
+    assert step(m, store, t0_ms + 4_999) == ([], t0_ms + 5_000)
+    # ts_ms == wm_ms folds (both events), completing window 0; nothing
+    # is held, so no timer, and next_idx keeps the state
+    assert step(m, store, t0_ms + 5_000, [(5_000, 2, "view")]) == (
+        [(1, 0, 2, 1, 2, 2.0)], None
+    )
+    assert 1 in store
+    # the held-only state with its buffer drained (nothing folded,
+    # nothing held): the step drops it and the kernel removes it
+    store[1] = held_only[:5] + ([], [], [])
+    assert step(m, store, t0_ms + 5_000) == ([], None)
+    assert 1 not in store
