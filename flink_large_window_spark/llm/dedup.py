@@ -1257,7 +1257,7 @@ SUBSTR_W = 12  # duplicated-span granularity: 12-word shingles
     """,
 )
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-SUBSTRING dedup (round 12 — VERDICT r11 directive 6): the
+    """Exact-SUBSTRING dedup: the
     training-data curation step none of the whole-doc/LSH keys cover —
     find spans duplicated ACROSS documents, not documents duplicated
     wholesale (the Lee et al. 2022 "Deduplicating Training Data Makes

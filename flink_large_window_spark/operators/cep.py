@@ -1500,8 +1500,8 @@ DETECT_VALUE_GUARD = Pattern(
     """,
 )
 def pattern_detect_value_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative condition showcase (round 12 — VERDICT r11 directive
-    2, [FLINK-API] ``IterativeCondition``): ``PATTERN (V+ P+)`` within
+    """Iterative condition showcase ([FLINK-API]
+    ``IterativeCondition``): ``PATTERN (V+ P+)`` within
     24 h where the purchase matches only if its VALUE exceeds the
     maximum value seen across the whole preceding view run —
     ``Guard("first", ">", "views", "max")`` — i.e. a predicate over
@@ -1587,8 +1587,8 @@ MATCH_OPTIONAL = Pattern(
     """,
 )
 def pattern_match_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optional-step showcase (round 12 — VERDICT r11 directive 3,
-    [FLINK-API] ``Pattern.optional()``): ``PATTERN (V+ C? P+)`` within
+    """Optional-step showcase ([FLINK-API] ``Pattern.optional()``):
+    ``PATTERN (V+ C? P+)`` within
     24 h — a view run, OPTIONALLY exactly one click, then a purchase.
     ``Step("clicks", "click", 0, 1)`` lifts the round-11
     ``min_count >= 1`` restriction; :func:`compile_pattern` expands
@@ -1666,8 +1666,8 @@ MATCH_AFTERSKIP = Pattern(
     """,
 )
 def pattern_match_afterskip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """After-match skip-strategy showcase (round 12 — VERDICT r11
-    directive 3, [FLINK-API] ``AfterMatchSkipStrategy.noSkip``):
+    """After-match skip-strategy showcase ([FLINK-API]
+    ``AfterMatchSkipStrategy.noSkip``):
     ``PATTERN (C{2,4} P+)`` with ``skip='no_skip'`` — for every
     click-run-then-purchase anchor, EVERY (start_off, consumed-length)
     sub-match within the quantifier bounds is a separate match, the
@@ -1769,8 +1769,8 @@ MATCH_OPTIONAL_GUARD = Pattern(
 def pattern_match_optional_guard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Guard × optional composition showcase (round 13 — VERDICT r12
-    directive 1; [FLINK-API] ``Pattern.optional().where(iterative)``):
+    """Guard × optional composition showcase ([FLINK-API]
+    ``Pattern.optional().where(iterative)``):
     ``PATTERN (V+ C? P+)`` within 24 h where the OPTIONAL click
     matches only if its value exceeds the MIN value across the
     preceding view run.
@@ -1864,8 +1864,8 @@ MATCH_SKIPGUARD = Pattern(
     """,
 )
 def pattern_match_skipguard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Guard × skip-strategy composition showcase (round 13 — VERDICT
-    r12 directive 1; [FLINK-API] ``AfterMatchSkipStrategy.skipToNext``
+    """Guard × skip-strategy composition showcase ([FLINK-API]
+    ``AfterMatchSkipStrategy.skipToNext``
     + ``IterativeCondition``): ``PATTERN (C{2,4} P+)`` under
     ``skip='to_next'`` where the purchase anchors only if its FIRST
     value exceeds the MAX value across the click run.
@@ -1957,8 +1957,7 @@ MATCH_OPTIONAL_SKIP = Pattern(
 def pattern_match_optional_skip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Optional × skip-strategy composition (round 13 — erases the
-    last implementable pairwise carve-out; [FLINK-API]
+    """Optional × skip-strategy composition ([FLINK-API]
     ``optional()`` + ``AfterMatchSkipStrategy.skipToNext``):
     ``PATTERN (V{2,4} C? P+)`` under ``skip='to_next'`` — a view run,
     optionally exactly one click, then a purchase, with every
@@ -2092,8 +2091,8 @@ DETECT_TIMES_EXACT = Pattern(
     """,
 )
 def pattern_detect_times_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FINAL-step exact quantifier (round 14 — VERDICT r13 item 4's
-    batch half): ``PATTERN (V+ C{1,2})`` within 24 h where the click
+    """FINAL-step exact quantifier: ``PATTERN (V+ C{1,2})`` within
+    24 h where the click
     run must be a maximal run of EXACTLY 1–2 clicks — ``exact=True``
     caps the ANCHOR run itself, so a 3-click run matches nowhere (vs
     the default anchor contract ``run_len >= min`` under which it
@@ -2177,8 +2176,8 @@ MATCH_FINALGUARD = Pattern(
     """,
 )
 def pattern_match_finalguard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FINAL-step guard with a non-``first`` aggregate (round 14 —
-    VERDICT r13 item 4's batch half): ``PATTERN (V+ P+)`` within 24 h
+    """FINAL-step guard with a non-``first`` aggregate: ``PATTERN
+    (V+ P+)`` within 24 h
     where the purchase run matches only if the MAXIMUM value across
     the WHOLE purchase run exceeds the maximum across the preceding
     view run — ``Guard("max", ">", "views", "max")`` on the anchor
@@ -2259,7 +2258,7 @@ DETECT_UNTIL = Pattern(
     """,
 )
 def pattern_detect_until(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Loop stop condition (round 15 — VERDICT r14 item 5): Flink's
+    """Loop stop condition: Flink's
     ``begin("views").where(view).oneOrMore().until(value > 100)
     .next("buy").where(purchase).within(6h)`` ([FLINK-API] public
     surface per SURVEY §0) — a maximal run of consecutive views NONE
@@ -2328,7 +2327,7 @@ DETECT_GROUP_TIMES = Pattern(
     """,
 )
 def pattern_detect_group_times(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nested group pattern, fixed repetition (round 15): Flink's
+    """Nested group pattern, fixed repetition: Flink's
     ``Pattern.begin(Pattern.begin("v").where(view).next("c")
     .where(click)).times(2).within(72h)`` — the (view click){2}
     sequence, strict contiguity, anchored on the final click

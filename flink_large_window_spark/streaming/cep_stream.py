@@ -1,15 +1,13 @@
 """Generic STREAMING CEP: compile any batch ``Pattern`` spec
-(operators/cep.py) into an incremental keyed-state automaton —
-round 12, VERDICT r11 directive 1.
+(operators/cep.py) into an incremental keyed-state automaton.
 
 Flink analogue: CEP's event-time NFA ([FLINK-API] public surface per
 SURVEY §0 — the reference snapshot is empty), which detects a pattern
 INCREMENTALLY with keyed state. Spark has no built-in operator for
 this (window functions are unsupported on streams), so the automaton
-runs in ``applyInPandasWithState``. Round 11 shipped ONE hardwired
-automaton for ``V+ C{1,3} P+``; this module replaces it with a
-compiler driven by the same Step/Pattern structures the batch
-strategies use, so the watermark-buffered fold works for any
+runs in ``applyInPandasWithState``, compiled from the same
+Step/Pattern structures the batch strategies use, so the
+watermark-buffered fold works for any
 greedy-strategy pattern — alternation included (the canonical
 relabeling is a row-local expression, applied to the stream exactly
 as to a batch relation). Each streaming twin compiles its batch key's
@@ -36,13 +34,12 @@ How the compiled automaton works (per key):
   means nothing can extend a closed run. The candidate emits once
   the anchor run reaches ``min_count`` folded events (immediately at
   open for the common ``min_count=1``); the watermark has necessarily
-  passed that event, which is the same emission boundary the oracle's
-  closed-before-final-watermark filter encodes.
+  passed that event.
 
 Compilable subset (validated by :func:`compile_stream`): any
 greedy-strategy pattern — ranged/unbounded quantifiers, alternation,
-NULL-safe runs, within bounds — plus, since round 12, each of the
-batch compiler's extensions individually:
+NULL-safe runs, within bounds — plus each of the batch compiler's
+extensions individually:
 
 - **iterative-condition guards**: non-final guards with any aggregate
   (their runs are CLOSED at candidacy) and final-step guards
@@ -60,8 +57,8 @@ batch compiler's extensions individually:
   run at anchor open, so the enumeration happens emit-locally — the
   incremental image of compile_greedy's row-local explode
   (pattern_match_afterskip_stream).
-- **guards × optional steps** and **guards × skip strategies**
-  (round 13 — VERDICT r12 directive 1): guard specs compile
+- **guards × optional steps** and **guards × skip strategies**:
+  guard specs compile
   PER-VARIANT with indices remapped into each variant's own step
   positions (the incremental image of the batch compiler re-running
   compile_greedy per expanded variant); a guard ON a dropped optional
@@ -73,8 +70,8 @@ batch compiler's extensions individually:
   (pattern_match_skipguard_stream).
 
 - **final-step guards with any aggregate but 'first'** and
-  **exact=True on the final step** (round 14 — the last two
-  carve-outs, lifted): both range over the MAXIMAL anchor run, so
+  **exact=True on the final step**: both range over the MAXIMAL
+  anchor run, so
   the automaton moves THESE patterns' emission boundary from
   anchor-run OPEN to anchor-run CLOSE (the next different-class
   event on the key), where the run's length and value aggregates are
@@ -82,21 +79,17 @@ batch compiler's extensions individually:
   Candidacy at run open still pins the window (pend blocks eviction);
   the deferred final-step guard and exact bounds are re-checked at
   the closing fold, and the closed anchor's maximal length joins the
-  emission as ``n_<last>``. The oracle convention shifts with the
-  boundary: batch SQL plus a ms-aligned run-CLOSED-before-final-
-  watermark filter on the NEXT run's start
-  (pattern_detect_times_exact_stream,
-  pattern_match_finalguard_stream). A run never closed by a
-  different-class event never emits — mirrored by the oracle's
-  closing-run EXISTS.
+  emission as ``n_<last>``. A run never closed by a different-class
+  event never emits (pattern_detect_times_exact_stream,
+  pattern_match_finalguard_stream).
 
 No semantic rejections remain: every batch-compilable greedy pattern
 now compiles for the stream (an optional FIRST step under a skip
 strategy is rejected by Pattern itself, for both engines, because
 the expansion base would differ per variant).
 
-- **until stop conditions** (round 15 — VERDICT r14 item 5, Flink
-  ``oneOrMore().until(cond)``): resolved BEFORE the machine by the
+- **until stop conditions** (Flink ``oneOrMore().until(cond)``):
+  resolved BEFORE the machine by the
   same row-local relabel the batch compiler uses
   (``operators.cep.apply_until``, called by :func:`pattern_stream`):
   stop events arrive as a private synthetic class that closes the
@@ -106,15 +99,15 @@ the expansion base would differ per variant).
   UNRESOLVED until explicitly (it would silently consume stop
   events into runs).
 
-The module's SECOND machine, :func:`compile_suffix_stream` (round
-14), streams the batch SUFFIX strategy — per-EVENT anchoring over
+The module's SECOND machine, :func:`compile_suffix_stream`, streams
+the batch SUFFIX strategy — per-EVENT anchoring over
 fixed-count steps, where the run-fold machine's compression is
 exactly wrong (a purchase inside a longer click run matches via its
 last-2-clicks suffix; the run window has no per-event positions). A
 bounded window of the last W folded events (W = pattern event length
 − 1, compile-time constant) decides each anchor at its own fold;
 with it, EVERY batch CEP shape has a streaming twin
-(pattern_detect_cep_stream closes the last documented residual).
+(pattern_detect_cep_stream).
 
 Every machine here runs on keyed.py: one launcher
 (:func:`keyed.keyed_fold`), one state/event codec, and two kernels
@@ -133,7 +126,7 @@ Flink CEP's event-time NFA keeps. No joins, no window state; the one
 shuffle is the groupBy(key). Handlers never remove state mid-stream
 (a run must survive batches in which its key is silent); a
 long-running deployment layers an idle-key TTL on top — demonstrated
-by stateful_session_ttl_stream (streams.py, round 12).
+by stateful_session_ttl_stream (streams.py).
 """
 
 from __future__ import annotations
@@ -194,6 +187,14 @@ from .keyed import (
     settle_machine,
 )
 from .streams import _events_stream
+from .twins import (
+    PATTERN_END_US,
+    PATTERN_US,
+    event_us,
+    folded,
+    settled,
+    twin_oracle,
+)
 
 #: Generic automaton state: the closed-run window (arrays, most recent
 #: last, bounded at len(steps)-1), the current open run, the anchor
@@ -258,10 +259,7 @@ def _emit_on_close(pat: Pattern) -> bool:
     boundary from anchor-run OPEN to anchor-run CLOSE (the next event
     of a different class on the key), where the maximal run is a
     settled fact — the same deferral the absence machine uses for its
-    watermark-proved negations. The oracle convention shifts
-    accordingly: batch SQL plus a
-    ms-aligned run-CLOSED-before-final-watermark filter (the closing
-    run's start, not the anchor run's)."""
+    watermark-proved negations."""
     last = pat.steps[-1]
     # exact with max_count=None is a no-op in the batch compiler
     # (compile_greedy caps the anchor run only when a max exists), so
@@ -818,13 +816,11 @@ def pattern_stream(
 
     ``checkpoint`` passes through to run_to_memory so state-reader
     keys can re-open the finished query's store offline WITHOUT
-    copying this launch block (the ADVICE r13 lesson one layer up —
-    a hand-rolled copy in stream_state_reader_automaton had already
-    dropped the has_until column rule it never knew about; review
-    r15)."""
+    copying this launch block, whose until and alternation rules a
+    copy would have to track."""
     ev = _pattern_events(spark, sf_dir, pat)
     if any(s.until is not None for s in pat.steps):
-        # Pure relabel projection (operators/cep.py round 15) — the
+        # Pure relabel projection (operators/cep.py) — the
         # automaton then sees a plain pattern, with stop events as
         # foreign-class run boundaries; the value column was only
         # needed for the relabel unless guards read it too.
@@ -838,55 +834,18 @@ def pattern_stream(
 
 @query(
     "pattern_match_recognize_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, run_len, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(event_type, 2) OVER w AS c2, LAG(run_len, 2) OVER w AS l2,
-             LAG(run_start, 2) OVER w AS s2
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(l2 AS BIGINT) AS n_views,
-           CAST(l1 AS BIGINT) AS n_clicks,
-           epoch_us(s2) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase'
-      AND c1 = 'click' AND l1 BETWEEN 1 AND 3
-      AND c2 = 'view'
-      AND run_start <= s2 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_match_recognize", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_match_recognize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the generic-CEP showcase: the SAME pattern
     spec as pattern_match_recognize (``PATTERN (V+ C{1,3} P+)`` within
     24 h, maximal-run semantics — operators/cep.py) detected
-    INCREMENTALLY with keyed state. Since round 12 the automaton is
-    COMPILED from the Step/Pattern spec by :func:`compile_stream` (the
-    round-11 handler hardwired this one shape — VERDICT r11 directive
-    1); the compiled fold is behavior-identical for this pattern
+    INCREMENTALLY with keyed state by the automaton
+    :func:`compile_stream` compiles from the Step/Pattern spec
     (watermark buffer, run window, candidacy at anchor-run open,
-    emission at the fold that passes the anchor), so the oracle — the
-    batch SQL plus the ms-aligned closed-before-final-watermark filter
-    — is unchanged from round 11.
+    emission at the fold that passes the anchor).
 
     Scale: see the module docstring — O(pattern length) run-window
     state plus O(watermark delay) buffered events per key, one
@@ -905,60 +864,22 @@ def pattern_match_recognize_stream(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "pattern_match_alternation_stream",
-    oracle="""
-    WITH relabeled AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN event_type IN ('click', 'view')
-                  THEN 'click' || chr(31) || 'view'
-                  ELSE event_type END AS event_type
-      FROM events
-    ), ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM relabeled
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, run_len, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(run_start, 1) OVER w AS s1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_eng,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase'
-      AND c1 = 'click' || chr(31) || 'view'
-      AND run_start <= s1 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_match_alternation", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_match_alternation_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_alternation —
-    ``PATTERN ((V|C)+ P+)`` within 24 h, incremental (round 12,
-    VERDICT r11 directive 1's done-criterion). Alternation costs the
+    ``PATTERN ((V|C)+ P+)`` within 24 h, incremental. Alternation
+    costs the
     stream NOTHING extra: canonicalize_alternation's relabel is a
     row-local expression applied to the streaming DataFrame before the
     keyed fold (exactly as the batch key fuses it into the scan), so
     the compiled automaton sees single-class runs — a mixed view/click
     run is ONE run whose n_eng spans both classes, and an interleaved
-    error still breaks contiguity. The oracle applies the identical
-    relabel (the CASE map) plus the same ms-aligned watermark filter
-    as pattern_match_recognize_stream; multi-batch parity is pinned by
+    error still breaks contiguity. Multi-batch parity is pinned by
     tests/test_streaming_parity.py (2- and 3-way time-split replays
     through the real compiled handler).
     """
@@ -974,43 +895,9 @@ def pattern_match_alternation_stream(
 
 @query(
     "pattern_detect_value_guard_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id,
-             ARG_MIN(value, rn) AS val_first, MAX(value) AS val_max
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, run_len, first_id, val_first,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(run_start, 1) OVER w AS s1, LAG(val_max, 1) OVER w AS m1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_views,
-           ROUND(val_first, 4) AS purchase_val,
-           ROUND(m1, 4) AS views_max_val,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase'
-      AND c1 = 'view'
-      AND val_first > m1
-      AND run_start <= s1 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_value_guard", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_detect_value_guard_stream(
     spark: SparkSession, sf_dir: str
@@ -1019,8 +906,7 @@ def pattern_detect_value_guard_stream(
     condition ([FLINK-API] ``IterativeCondition``) evaluated
     INCREMENTALLY: ``PATTERN (V+ P+)`` within 24 h where the purchase
     matches only if its value exceeds the max value across the
-    preceding view run (round 12, extending VERDICT r11 directives
-    1+2 into the compiled automaton).
+    preceding view run.
 
     Why this is streamable at all: the guard's reference side (max
     over the view run) ranges over a CLOSED run — fixed the moment
@@ -1033,10 +919,7 @@ def pattern_detect_value_guard_stream(
     the watermark buffer, so per-key state stays O(pattern length +
     watermark delay) exactly as the unguarded automaton.
 
-    Oracle = the batch key's SQL (same runs algebra, same guard
-    conjunction) with µs timestamps plus the ms-aligned
-    closed-before-final-watermark filter, the convention every
-    compiled stream key shares. Guard sides emit as purchase_val /
+    Guard sides emit as purchase_val /
     views_max_val (rounded 4dp both engines — the float-output rule).
     Multi-batch parity is pinned in tests/test_streaming_parity.py
     (the guard case joined the compiled-handler sweep).
@@ -1055,62 +938,15 @@ def pattern_detect_value_guard_stream(
 
 @query(
     "pattern_match_optional_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, run_len, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(run_start, 1) OVER w AS s1,
-             LAG(event_type, 2) OVER w AS c2, LAG(run_len, 2) OVER w AS l2,
-             LAG(run_start, 2) OVER w AS s2
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    ), wm AS (
-      SELECT epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000 AS ms
-    )
-    SELECT user_id, first_id AS purchase_event,
-           CAST(l2 AS BIGINT) AS n_views,
-           CAST(1 AS BIGINT) AS n_clicks,
-           epoch_us(s2) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq, wm
-    WHERE event_type = 'purchase'
-      AND c1 = 'click' AND l1 = 1
-      AND c2 = 'view'
-      AND run_start <= s2 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000 <= wm.ms
-    UNION ALL
-    SELECT user_id, first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_views,
-           CAST(0 AS BIGINT) AS n_clicks,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq, wm
-    WHERE event_type = 'purchase'
-      AND c1 = 'view'
-      AND run_start <= s1 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000 <= wm.ms
-    """,
+    oracle=twin_oracle(
+        "pattern_match_optional", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_match_optional_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_optional — ``PATTERN
-    (V+ C? P+)`` within 24 h detected incrementally (round 12; closes
-    the 'optional steps are expansion-based, out of scope' carve-out
-    the module docstring used to declare).
+    (V+ C? P+)`` within 24 h detected incrementally.
 
     No automaton union is needed: expand_optional's present/absent
     variants are mutually exclusive PER ANCHOR under maximal-run
@@ -1119,9 +955,7 @@ def pattern_match_optional_stream(
     closed-run window at candidacy — one extra tuple comparison per
     anchor open, zero extra state (the window is already sized by the
     full step list). The absent variant emits ``n_clicks = 0``,
-    mirroring the batch union's fill-in. Oracle = the batch key's
-    two-branch UNION with µs timestamps plus the shared ms-aligned
-    watermark filter on both branches.
+    mirroring the batch union's fill-in.
     """
     m = pattern_stream(spark, sf_dir, MATCH_OPTIONAL)
     return m.select(
@@ -1136,53 +970,16 @@ def pattern_match_optional_stream(
 
 @query(
     "pattern_match_afterskip_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type, COUNT(*) AS run_len,
-             MIN(ts) AS run_start,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_len, run_start, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    ), matches AS (
-      SELECT user_id, first_id, CAST(l1 AS INT) AS l1
-      FROM seq
-      WHERE event_type = 'purchase' AND c1 = 'click' AND l1 >= 2
-        AND epoch_us(run_start) // 1000
-            <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    ), starts AS (
-      SELECT user_id, first_id, l1,
-             UNNEST(generate_series(1, l1 - 1)) AS start_off
-      FROM matches
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(start_off AS BIGINT) AS start_off,
-           CAST(UNNEST(generate_series(2, LEAST(4, l1 - start_off + 1)))
-                AS BIGINT) AS n_clicks
-    FROM starts
-    """,
+    oracle=twin_oracle(
+        "pattern_match_afterskip", folded(event_us("purchase_event"))
+    ),
 )
 def pattern_match_afterskip_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_afterskip — ``PATTERN (C{2,4}
     P+)`` under ``AfterMatchSkipStrategy.noSkip``, detected
-    incrementally (round 12; closes the last composable carve-out in
-    the compiled automaton — only maximal-run-dependent semantics,
-    final-step exact/non-'first' guards, remain batch-only by
-    necessity).
+    incrementally.
 
     Every (start_off, consumed-length) sub-match is fixed by the
     CLOSED first run the moment the anchor run opens, so the
@@ -1193,9 +990,7 @@ def pattern_match_afterskip_stream(
     fan out (bounded by the quantifier width × run length, exactly the
     batch fan-out). The first step's ``max_count=4`` bounds CONSUMED
     counts, not the run, so candidacy lifts it and emit re-applies it
-    per sub-match — the compile_greedy rule. Oracle = the batch key's
-    enumeration SQL with the ms-aligned watermark filter on the anchor
-    run's start.
+    per sub-match — the compile_greedy rule.
     """
     m = pattern_stream(spark, sf_dir, MATCH_AFTERSKIP)
     return m.select(
@@ -1207,7 +1002,7 @@ def pattern_match_afterskip_stream(
 
 
 # ---------------------------------------------------------------------------
-# Absence CEP (Flink ``notFollowedBy(..).within(..)``) — round 12.
+# Absence CEP (Flink ``notFollowedBy(..).within(..)``).
 #
 # Negation is the one CEP shape the compiled run-fold automaton above
 # cannot express: a match is declared by the ABSENCE of an event, so
@@ -1250,8 +1045,8 @@ def compile_horizon_stream(
       horizon`` (absence): frame ``[a, a + horizon]``; the anchor
       settles once its whole frame is behind the watermark (settle
       delay = horizon) and emits ``(key, anchor_id)`` iff the frame
-      holds no target. Oracle filter: ``(epoch_us(ts) + horizon) //
-      1000 < final_wm_ms``.
+      holds no target: it settles at ``(ts_us + horizon) // 1000 <
+      wm_ms``.
     - ``at_least=n`` — PRECEDING-horizon count (Flink ``followedBy``
       with a time bound): frame ``[a − horizon, a]``, complete as soon
       as the anchor itself settles (no settle delay); emits
@@ -1311,23 +1106,12 @@ def _class_events(
 
 @query(
     "pattern_detect_notfollowedby_stream",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id, event_type,
-             COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) OVER (
-               PARTITION BY user_id ORDER BY ts
-               RANGE BETWEEN CURRENT ROW AND INTERVAL 6 HOUR FOLLOWING
-             ) AS purchases_6h
-      FROM events
-    )
-    SELECT user_id, event_id AS click_event
-    FROM flagged
-    WHERE event_type = 'click' AND purchases_6h = 0
-      AND (epoch_us(ts) + 21600000000) // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('click', 'purchase'))) // 1000
-            - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_notfollowedby",
+        settled(
+            event_us("click_event") + " + 21600000000", "click", "purchase"
+        ),
+    ),
 )
 def pattern_detect_notfollowedby_stream(
     spark: SparkSession, sf_dir: str
@@ -1335,20 +1119,18 @@ def pattern_detect_notfollowedby_stream(
     """Streaming twin of pattern_detect_notfollowedby — abandoned
     clicks (no same-user purchase in the following 6 h) detected
     INCREMENTALLY, the Flink ``notFollowedBy(..).within(6h)`` pending
-    NFA state (round 12; the one CEP shape the compiled run-fold
-    automaton cannot express, because the match is declared by
-    ABSENCE and must wait for the watermark to prove it).
+    NFA state (the one CEP shape the compiled run-fold automaton
+    cannot express, because the match is declared by ABSENCE and must
+    wait for the watermark to prove it).
 
     A click becomes a pending candidate on arrival; an event-time
     timer at its horizon (click_ts + 6 h) resolves it once the
     watermark passes — suppressed if any purchase landed inside the
     frame, emitted otherwise. Purchases retain for horizon +
     watermark-delay then evict, so per-key state is O(events in 6 h +
-    10 min), Flink's bound for a within-bounded negation. The oracle
-    is the batch key's zero-count SQL plus the ms-aligned
-    horizon-closed-before-final-watermark filter (a strict ``<``: see
-    :func:`compile_horizon_stream` for the tie argument — this is the
-    absence analogue of the run-fold keys' ``<=`` anchor filter).
+    10 min), Flink's bound for a within-bounded negation. A click
+    settles strictly after its horizon (the keyed settle rule; see
+    :func:`compile_horizon_stream` for the tie argument).
 
     Scale: irrelevant classes are filtered BEFORE the keyed shuffle
     (predicate reaches the file-source scan), so only click/purchase
@@ -1390,24 +1172,10 @@ HORIZON_OUT_SCHEMA = StructType(
 
 @query(
     "pattern_detect_followedby_stream",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts, event_id, event_type,
-             COUNT(CASE WHEN event_type = 'click' THEN 1 END) OVER (
-               PARTITION BY user_id ORDER BY ts
-               RANGE BETWEEN INTERVAL 6 HOUR PRECEDING AND CURRENT ROW
-             ) AS clicks_6h
-      FROM events
-    )
-    SELECT user_id, event_id AS purchase_event,
-           CAST(clicks_6h AS BIGINT) AS clicks_6h
-    FROM flagged
-    WHERE event_type = 'purchase' AND clicks_6h >= 2
-      AND epoch_us(ts) // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('click', 'purchase'))) // 1000
-            - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_followedby",
+        settled(event_us("purchase_event"), "click", "purchase"),
+    ),
 )
 def pattern_detect_followedby_stream(
     spark: SparkSession, sf_dir: str
@@ -1422,9 +1190,9 @@ def pattern_detect_followedby_stream(
     passes the anchor itself — no horizon wait — because every
     in-frame click is provably already ingested
     (:func:`compile_horizon_stream`). Same filtered-stream
-    watermark convention (classes filter before the shuffle, the
-    oracle's final-watermark term ranges over click/purchase rows);
-    ties match the batch RANGE frame (a click at the purchase's exact
+    watermark convention (classes filter before the shuffle, so the
+    watermark ranges over click/purchase rows); ties match the batch
+    RANGE frame (a click at the purchase's exact
     timestamp counts). O(events in 6 h + 10 min) state per key.
     """
     ev = _class_events(spark, sf_dir, "click", "purchase")
@@ -1435,39 +1203,9 @@ def pattern_detect_followedby_stream(
 
 @query(
     "pattern_detect_oneormore_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, first_id,
-             LAG(event_type, 1) OVER w AS c1,
-             LAG(run_len, 1)    OVER w AS l1,
-             LAG(run_start, 1)  OVER w AS s1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_clicks,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase' AND c1 = 'click'
-      AND run_start <= s1 + INTERVAL 6 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_oneormore", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_detect_oneormore_stream(
     spark: SparkSession, sf_dir: str
@@ -1476,12 +1214,8 @@ def pattern_detect_oneormore_stream(
     6 h (Flink ``oneOrMore().greedy()``), detected incrementally by
     the compiled automaton. Nothing new in the machine: the spec is
     the alternation twin's shape minus the class set, so this key's
-    value is COVERAGE — every batch pattern_detect_* key the generic
-    compiler serves now has a driver-checkable streaming twin or a
-    documented reason it cannot (final-step exact / maximal-anchor
-    semantics). Oracle = the batch key's runs algebra re-expressed in
-    the runs-lag form the other twins use + the ms-aligned watermark
-    filter.
+    value is COVERAGE: every batch pattern_detect_* key the generic
+    compiler serves has a driver-checkable streaming twin.
     """
     m = pattern_stream(spark, sf_dir, DETECT_ONEORMORE)
     return m.select(
@@ -1495,38 +1229,9 @@ def pattern_detect_oneormore_stream(
 
 @query(
     "pattern_detect_times_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, first_id,
-             LAG(event_type, 1) OVER w AS c1,
-             LAG(run_len, 1)    OVER w AS l1,
-             LAG(run_start, 1)  OVER w AS s1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase' AND c1 = 'click' AND l1 = 2
-      AND run_start <= s1 + INTERVAL 6 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_times", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_detect_times_stream(
     spark: SparkSession, sf_dir: str
@@ -1534,12 +1239,11 @@ def pattern_detect_times_stream(
     """Streaming twin of pattern_detect_times — EXACTLY two
     consecutive clicks then a purchase within 6 h (Flink
     ``times(2).consecutive()``). The exactness lives on a NON-final
-    step, which the incremental automaton supports (the click run is
-    CLOSED at candidacy, so ``run_len == 2`` is checkable — only
-    FINAL-step exactness is impossible incrementally, the documented
-    carve-out in :func:`compile_stream`). Oracle: the maximal-run
-    ``l1 = 2`` IS times(2)-with-exactness in the runs algebra; the
-    batch key's lag formulation (prev3-guard) is row-equal.
+    step, which the automaton checks at anchor-run open (the click run
+    is CLOSED at candidacy, so ``run_len == 2`` is known). The
+    maximal-run ``l1 = 2`` IS times(2)-with-exactness in the runs
+    algebra, row-equal to the batch key's lag formulation (prev3
+    guard).
     """
     pat = Pattern(
         steps=(
@@ -1559,68 +1263,16 @@ def pattern_detect_times_stream(
 
 @query(
     "pattern_match_optional_guard_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id,
-             ARG_MIN(value, rn) AS val_first, MIN(value) AS val_min
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, run_len, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(run_start, 1) OVER w AS s1, LAG(val_first, 1) OVER w AS f1,
-             LAG(event_type, 2) OVER w AS c2, LAG(run_len, 2) OVER w AS l2,
-             LAG(run_start, 2) OVER w AS s2, LAG(val_min, 2) OVER w AS m2
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    ), wm AS (
-      SELECT epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000 AS ms
-    )
-    SELECT user_id, first_id AS purchase_event,
-           CAST(l2 AS BIGINT) AS n_views,
-           CAST(1 AS BIGINT) AS n_clicks,
-           ROUND(f1, 4) AS click_val,
-           ROUND(m2, 4) AS views_min_val,
-           epoch_us(s2) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq, wm
-    WHERE event_type = 'purchase'
-      AND c1 = 'click' AND l1 = 1
-      AND c2 = 'view'
-      AND f1 > m2
-      AND run_start <= s2 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000 <= wm.ms
-    UNION ALL
-    SELECT user_id, first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_views,
-           CAST(0 AS BIGINT) AS n_clicks,
-           CAST(NULL AS DOUBLE) AS click_val,
-           CAST(NULL AS DOUBLE) AS views_min_val,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq, wm
-    WHERE event_type = 'purchase'
-      AND c1 = 'view'
-      AND run_start <= s1 + INTERVAL 24 HOUR
-      AND epoch_us(run_start) // 1000 <= wm.ms
-    """,
+    oracle=twin_oracle(
+        "pattern_match_optional_guard", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_match_optional_guard_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_optional_guard — the guard ×
-    optional composition detected INCREMENTALLY (round 13, VERDICT
-    r12 directive 1: the last implementable carve-out in
-    :func:`compile_stream`, lifted by per-variant guard remapping).
+    optional composition detected INCREMENTALLY through per-variant
+    guard remapping in :func:`compile_stream`.
 
     What the remapping buys: guard specs compile with indices into
     each VARIANT's step positions, so the present variant evaluates
@@ -1629,11 +1281,7 @@ def pattern_match_optional_guard_stream(
     optional step — matches unguarded and emits NULL guard measures,
     the batch union's fill-in. Both decisions stay fixed at anchor-run
     open (the click and view runs are CLOSED by then), so the
-    emission boundary and the oracle's watermark filter are unchanged
-    from the unguarded optional twin. Oracle = the batch key's
-    two-branch UNION with µs timestamps, the guard conjunct on the
-    present branch, and the shared ms-aligned
-    closed-before-final-watermark filter.
+    emission boundary is the unguarded optional twin's.
 
     Scale: see the module docstring — the guarded state schema adds
     five per-run aggregates to the O(pattern length) window; no event
@@ -1654,55 +1302,15 @@ def pattern_match_optional_guard_stream(
 
 @query(
     "pattern_match_skipguard_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type, COUNT(*) AS run_len,
-             MIN(ts) AS run_start,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id,
-             ARG_MIN(value, rn) AS val_first, MAX(value) AS val_max
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_len, run_start, first_id, val_first,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(val_max, 1) OVER w AS x1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    ), matches AS (
-      SELECT user_id, first_id, CAST(l1 AS INT) AS l1,
-             ROUND(val_first, 4) AS purchase_val,
-             ROUND(x1, 4) AS clicks_max_val
-      FROM seq
-      WHERE event_type = 'purchase' AND c1 = 'click' AND l1 >= 2
-        AND val_first > x1
-        AND epoch_us(run_start) // 1000
-            <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    ), starts AS (
-      SELECT user_id, first_id, l1, purchase_val, clicks_max_val,
-             UNNEST(generate_series(1, l1 - 1)) AS start_off
-      FROM matches
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(start_off AS BIGINT) AS start_off,
-           CAST(LEAST(4, l1 - start_off + 1) AS BIGINT) AS n_clicks,
-           purchase_val, clicks_max_val
-    FROM starts
-    """,
+    oracle=twin_oracle(
+        "pattern_match_skipguard", folded(event_us("purchase_event"))
+    ),
 )
 def pattern_match_skipguard_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_skipguard — guard ×
-    skip-strategy composition detected incrementally (round 13,
-    VERDICT r12 directive 1's "then do skip×guard the same way").
+    skip-strategy composition detected incrementally.
 
     The composition is orthogonal in the automaton exactly as in the
     batch compiler: the guard evaluates at candidacy against the
@@ -1710,9 +1318,7 @@ def pattern_match_skipguard_stream(
     anchor, fixed at open), and emit() fans the (start_off,
     consumed-count) sub-matches out emission-locally AFTER that
     decision — ``to_next`` emits one greedy sub-match per admissible
-    start. Oracle = the batch enumeration SQL with the guard conjunct
-    and the ms-aligned watermark filter on the anchor run's start
-    (the afterskip_stream convention).
+    start.
     """
     m = pattern_stream(spark, sf_dir, MATCH_SKIPGUARD)
     return m.select(
@@ -1726,8 +1332,8 @@ def pattern_match_skipguard_stream(
 
 
 # ---------------------------------------------------------------------------
-# Non-deterministic relaxed contiguity (Flink ``followedByAny``) —
-# round 13. Pairing is order-insensitive set logic like the horizon
+# Non-deterministic relaxed contiguity (Flink ``followedByAny``).
+# Pairing is order-insensitive set logic like the horizon
 # machines (no hold-buffer fold needed), on the same settle kernel.
 
 #: Pairs-state schema: retained anchors (µs + event_id) and pending
@@ -1819,21 +1425,10 @@ def compile_pairs_stream(
 
 @query(
     "pattern_detect_followedbyany_stream",
-    oracle="""
-    SELECT c.user_id,
-           c.event_id AS click_event,
-           p.event_id AS purchase_event,
-           epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-    FROM events c JOIN events p
-      ON p.user_id = c.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND epoch_us(p.ts) > epoch_us(c.ts)
-     AND epoch_us(p.ts) <= epoch_us(c.ts) + 86400000000
-    WHERE epoch_us(p.ts) // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('click', 'purchase'))) // 1000
-            - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_followedbyany",
+        settled(event_us("purchase_event"), "click", "purchase"),
+    ),
 )
 def pattern_detect_followedbyany_stream(
     spark: SparkSession, sf_dir: str
@@ -1850,10 +1445,8 @@ def pattern_detect_followedbyany_stream(
     and one state row per key, versus the join's two buffered sides.
 
     Same filtered-stream watermark convention as the other horizon
-    twins (classes filter before the shuffle; the oracle's
-    final-watermark term ranges over click/purchase rows). Oracle =
-    the batch key's pair join + the ms-aligned
-    settled-before-final-watermark filter on the purchase side.
+    twins (classes filter before the shuffle, so the watermark
+    ranges over click/purchase rows).
     """
     ev = _class_events(spark, sf_dir, "click", "purchase")
     return keyed_fold(ev, KEY_COL, compile_pairs_stream(
@@ -1863,7 +1456,7 @@ def pattern_detect_followedbyany_stream(
 
 # ---------------------------------------------------------------------------
 # Timed-out partial-match side output (Flink
-# ``TimedOutPartialMatchHandler``) — round 13. The inverse of the
+# ``TimedOutPartialMatchHandler``). The inverse of the
 # run-fold automaton's emission rule: a row emits only when the
 # watermark proves the match can NO LONGER complete (deadline passed
 # with the funnel unfinished), so this is a pending-state machine in
@@ -1942,40 +1535,10 @@ def compile_timeout_stream(
 
 @query(
     "pattern_timeout_partial_stream",
-    oracle="""
-    WITH f AS (
-      SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-      FROM events WHERE event_type IN ('view', 'click', 'purchase')
-    ), p1 AS (
-      SELECT *, MIN(CASE WHEN event_type = 'purchase'
-                         THEN struct_pack(us := us, id := event_id) END)
-                OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-                  AS fp
-      FROM f
-    ), p2 AS (
-      SELECT *, MIN(CASE WHEN event_type = 'click'
-                         THEN struct_pack(us := us, id := event_id,
-                                          pus := fp.us, pid := fp.id) END)
-                OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-                  AS fc
-      FROM p1
-    )
-    SELECT user_id,
-           event_id AS start_event,
-           CAST(CASE WHEN fc IS NULL OR fc.us > us + 21600000000
-                     THEN 1 ELSE 2 END AS BIGINT) AS n_matched,
-           us + 21600000000 AS deadline_us
-    FROM p2
-    WHERE event_type = 'view'
-      AND (fc IS NULL OR fc.us > us + 21600000000
-           OR fc.pus IS NULL OR fc.pus > us + 21600000000)
-      AND (us + 21600000000) // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('view', 'click', 'purchase')
-                     )) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_timeout_partial",
+        settled("b.deadline_us", "view", "click", "purchase"),
+    ),
 )
 def pattern_timeout_partial_stream(
     spark: SparkSession, sf_dir: str
@@ -1991,10 +1554,9 @@ def pattern_timeout_partial_stream(
     alert, with n_matched telling WHERE the funnel stalled.
 
     Same filtered-stream watermark convention as the other pending-
-    state twins (the three classes filter before the shuffle; the
-    oracle's final-watermark term ranges over view/click/purchase
-    rows). Oracle = the batch side-output SQL + the ms-aligned
-    deadline-strictly-passed filter (the absence machine's boundary
+    state twins (the three classes filter before the shuffle, so the
+    watermark ranges over view/click/purchase rows). A start settles
+    once its deadline strictly passes (the absence machine's boundary
     polarity — this is a FOLLOWING-horizon resolution).
     """
     ev = _class_events(spark, sf_dir, "view", "click", "purchase")
@@ -2005,65 +1567,15 @@ def pattern_timeout_partial_stream(
 
 @query(
     "pattern_match_optional_skip_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM events
-    ), runs AS (
-      SELECT user_id, event_type, COUNT(*) AS run_len,
-             MIN(ts) AS run_start,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_len, run_start, first_id,
-             LAG(event_type, 1) OVER w AS c1, LAG(run_len, 1) OVER w AS l1,
-             LAG(event_type, 2) OVER w AS c2, LAG(run_len, 2) OVER w AS l2
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    ), wm AS (
-      SELECT epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000 AS ms
-    ), present AS (
-      SELECT user_id, first_id, CAST(l2 AS INT) AS lv,
-             CAST(1 AS BIGINT) AS n_clicks
-      FROM seq, wm
-      WHERE event_type = 'purchase' AND c1 = 'click' AND l1 = 1
-        AND c2 = 'view' AND l2 >= 2
-        AND epoch_us(run_start) // 1000 <= wm.ms
-    ), absent AS (
-      SELECT user_id, first_id, CAST(l1 AS INT) AS lv,
-             CAST(0 AS BIGINT) AS n_clicks
-      FROM seq, wm
-      WHERE event_type = 'purchase' AND c1 = 'view' AND l1 >= 2
-        AND epoch_us(run_start) // 1000 <= wm.ms
-    ), anchors AS (
-      SELECT * FROM present UNION ALL SELECT * FROM absent
-    ), starts AS (
-      SELECT user_id, first_id, lv, n_clicks,
-             UNNEST(generate_series(1, lv - 1)) AS start_off
-      FROM anchors
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(start_off AS BIGINT) AS start_off,
-           CAST(LEAST(4, lv - start_off + 1) AS BIGINT) AS n_views,
-           n_clicks
-    FROM starts
-    """,
+    oracle=twin_oracle(
+        "pattern_match_optional_skip", folded(event_us("purchase_event"))
+    ),
 )
 def pattern_match_optional_skip_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_match_optional_skip — optional × skip
-    detected incrementally (round 13; with guard × optional and
-    guard × skip shipped this round, the compiled automaton now
-    serves every pairwise extension composition whose semantics
-    permit incremental emission — only maximal-anchor dependencies,
-    final-step exact / non-'first' anchor guards, remain batch-only).
+    detected incrementally.
 
     Nothing new in the machine: Pattern pins the first step
     non-optional under a skip strategy (both engines), so every
@@ -2071,8 +1583,6 @@ def pattern_match_optional_skip_stream(
     from the closed-run window and emit() enumerates (start_off,
     consumed) over that variant's own first-run length — dropped
     optional steps emit n_<name> = 0 inside each sub-match row.
-    Oracle = the batch two-branch UNION + expansion with the
-    ms-aligned watermark filter on the anchor run's start.
     """
     m = pattern_stream(spark, sf_dir, MATCH_OPTIONAL_SKIP)
     return m.select(
@@ -2086,28 +1596,10 @@ def pattern_match_optional_skip_stream(
 
 @query(
     "pattern_detect_followedby_nobetween_stream",
-    oracle="""
-    WITH f AS (
-      SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-             COUNT(CASE WHEN event_type = 'error' THEN 1 END) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS cum
-      FROM events WHERE event_type IN ('click', 'purchase', 'error')
-    )
-    SELECT c.user_id,
-           c.event_id AS click_event,
-           p.event_id AS purchase_event,
-           p.us - c.us AS gap_us
-    FROM f c JOIN f p
-      ON p.user_id = c.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND p.us > c.us AND p.us <= c.us + 86400000000
-     AND p.cum = c.cum
-    WHERE p.us // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('click', 'purchase', 'error')
-                     )) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_followedby_nobetween",
+        settled(event_us("purchase_event"), "click", "purchase", "error"),
+    ),
 )
 def pattern_detect_followedby_nobetween_stream(
     spark: SparkSession, sf_dir: str
@@ -2122,10 +1614,8 @@ def pattern_detect_followedby_nobetween_stream(
     provably after the settling target, so the negation is final at
     settlement (:func:`compile_pairs_stream`).
 
-    The watermark convention now ranges over THREE classes (the
-    blocker participates in the filter before the shuffle, so the
-    oracle's final-watermark term includes error rows). Oracle = the
-    batch prefix-equality join + the ms-aligned settled filter.
+    The watermark ranges over THREE classes (the blocker
+    participates in the filter before the shuffle).
     """
     ev = _class_events(spark, sf_dir, "click", "purchase", "error")
     return keyed_fold(ev, KEY_COL, compile_pairs_stream(
@@ -2177,11 +1667,10 @@ def pattern_detect_times_exact_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of pattern_detect_times_exact — the FINAL-step
-    exact quantifier, the first of the two run-CLOSE emission shapes
-    (round 14 — VERDICT r13 item 4 closed): ``PATTERN (V+ C{1,2})``
-    within 24 h where the click run must be a maximal run of EXACTLY
-    1–2 clicks. Exactness ranges over the MAXIMAL anchor run — the
-    r12/r13 rejection argument — so the compiled automaton defers this
+    exact quantifier, the first of the two run-CLOSE emission shapes:
+    ``PATTERN (V+ C{1,2})`` within 24 h where the click run must be a
+    maximal run of EXACTLY 1–2 clicks. Exactness ranges over the
+    MAXIMAL anchor run, so the compiled automaton defers this
     pattern's emission from anchor-run OPEN to anchor-run CLOSE: the
     next different-class event on the key settles the run's length,
     and the match (or its rejection, for a 3-click run) is decided at
@@ -2254,9 +1743,9 @@ def pattern_match_finalguard_stream(
 ) -> DataFrame:
     """Streaming twin of pattern_match_finalguard — the FINAL-step
     guard with a non-``first`` aggregate, the second run-CLOSE
-    emission shape (round 14 — VERDICT r13 item 4 closed):
-    ``PATTERN (V+ P+)`` within 24 h, match iff MAX(value over the
-    WHOLE purchase run) > MAX(value over the view run). The guard's
+    emission shape: ``PATTERN (V+ P+)`` within 24 h, match iff
+    MAX(value over the WHOLE purchase run) > MAX(value over the view
+    run). The guard's
     left side ranges over the maximal anchor run, so candidacy at run
     open DEFERS it (structure + non-final guards still pin the
     window, pend blocks eviction) and the closing fold re-checks it
@@ -2331,10 +1820,8 @@ def compile_suffix_stream(pat: Pattern):
     (min/max/sum skip NULL values; all-NULL → NULL → no match).
 
     Emission boundary: the anchor's own fold (``ts_ms <= wm_ms``,
-    the kernel's fold rule) — the oracle is the batch SQL
-    plus the ms-aligned anchor-folded filter, the ORIGINAL run-fold
-    convention (no run-close shift: nothing here ranges over an open
-    run).
+    the kernel's fold rule; no run-close shift: nothing here ranges
+    over an open run).
 
     Returns a :class:`keyed.Machine`. Out columns:
     key, anchor_event, one (g_<name>, g_<name>_ref) pair per guarded
@@ -2518,17 +2005,14 @@ def suffix_pattern_stream(
     """,
 )
 def pattern_detect_cep_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of pattern_detect_cep — per-EVENT anchoring
-    (round 14): strictly consecutive click → click → purchase within
-    6 h, every qualifying purchase EVENT a match even inside a longer
-    click run (the semantics the run-fold automaton's compression
-    deliberately discards, documented since round 12 as the one CEP
-    key without a stream twin). The suffix machine keeps only the
-    last W = 2 folded events per key — per-event anchoring with O(1)
+    """Streaming twin of pattern_detect_cep — per-EVENT anchoring:
+    strictly consecutive click → click → purchase within 6 h, every
+    qualifying purchase EVENT a match even inside a longer click run
+    (the semantics the run-fold automaton's compression deliberately
+    discards). The suffix machine keeps only the last W = 2 folded
+    events per key — per-event anchoring with O(1)
     compile-time-constant state — and decides each anchor the moment
-    it folds, so the oracle is the batch SQL plus the ORIGINAL
-    ms-aligned anchor-folded filter. With this key every batch CEP
-    key streams; no carve-out lines remain.
+    it folds (the ms-aligned fold of the purchase itself).
 
     Scale: O(pattern length) state per key (smaller than the run-fold
     machine's window — no run lengths, no value slots unguarded), one
@@ -2544,60 +2028,24 @@ def pattern_detect_cep_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pattern_detect_until_stream",
-    oracle="""
-    WITH relabeled AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN event_type = 'view' AND value > 100
-                  THEN 'view||stop' ELSE event_type END AS event_type
-      FROM events
-    ), ordered AS (
-      SELECT user_id, ts, event_id, event_type,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn_t
-      FROM relabeled
-    ), runs AS (
-      SELECT user_id, event_type,
-             MIN(ts) AS run_start, COUNT(*) AS run_len,
-             MIN(rn) AS start_rn, ARG_MIN(event_id, rn) AS first_id
-      FROM ordered
-      GROUP BY user_id, event_type, rn - rn_t
-    ), seq AS (
-      SELECT user_id, event_type, run_start, first_id,
-             LAG(event_type, 1) OVER w AS c1,
-             LAG(run_len, 1)    OVER w AS l1,
-             LAG(run_start, 1)  OVER w AS s1
-      FROM runs
-      WINDOW w AS (PARTITION BY user_id ORDER BY start_rn)
-    )
-    SELECT user_id,
-           first_id AS purchase_event,
-           CAST(l1 AS BIGINT) AS n_views,
-           epoch_us(s1) AS pattern_start_us,
-           epoch_us(run_start) AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'purchase' AND c1 = 'view'
-      AND run_start <= s1 + INTERVAL 6 HOUR
-      AND epoch_us(run_start) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_until", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_detect_until_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Streaming twin of pattern_detect_until (round 15 — VERDICT r14
-    item 5): Flink ``oneOrMore().until(value > 100)`` detected
+    """Streaming twin of pattern_detect_until: Flink
+    ``oneOrMore().until(value > 100)`` detected
     incrementally. The stop condition is resolved by the SAME
     row-local relabel the batch compiler uses (``apply_until``,
     applied by :func:`pattern_stream` on the stream BEFORE the
     automaton — streaming-safe, stateless): stop events arrive at the
     run-fold machine as a foreign synthetic class, closing the open
     view run exactly like any class change, so the compiled automaton
-    is byte-identical to the oneOrMore twin's. Oracle = the batch
-    runs algebra over the relabeled CTE + the ms-aligned anchor-run
-    OPEN fold filter (the original run-fold convention — the anchor
-    is a plain unguarded run, nothing ranges over it at emission).
+    is byte-identical to the oneOrMore twin's. It emits at anchor-run
+    OPEN (the anchor is a plain unguarded run, nothing ranges over it
+    at emission).
     """
     m = pattern_stream(spark, sf_dir, DETECT_UNTIL)
     return m.select(
@@ -2655,18 +2103,16 @@ def pattern_detect_until_stream(
 def stream_state_reader_automaton(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """USER-DEFINED composite state read back from a checkpoint (round
-    15 — VERDICT r14 item 6): completes the state-reader trio (flat
-    keyed count / windowed built-in aggregate / arbitrary
-    applyInPandasWithState blob) with driver-checkable evidence for
-    the third member, previously pytest-only
-    (test_state_reader_decodes_cep_automaton_state).
+    """USER-DEFINED composite state read back from a checkpoint: the
+    third state reader (flat keyed count / windowed built-in aggregate
+    / arbitrary applyInPandasWithState blob), checked by the driver as
+    well as by test_state_reader_decodes_cep_automaton_state.
 
     The compiled run-fold CEP automaton (``V+ P+`` within 24 h) runs
     to completion against a fresh checkpoint; the ``statestore``
     source then decodes each key's state blob OFFLINE — nested under
     ``value.groupState.<field>`` beside the operator's
-    ``timeoutTimestamp`` (the r14-pinned layout), arrays included.
+    ``timeoutTimestamp``, arrays included.
     Emitted per user: the OPEN run the fold last carried (class /
     length / first event id), the closed-run window depth
     (``n_win``, bounded at pattern length − 1 = 1 here), and the
@@ -2682,8 +2128,8 @@ def stream_state_reader_automaton(
     folded prefix (no eviction without idle_evict).
 
     Scale: the state source reads RocksDB SST files per partition in
-    parallel without replaying the stream (the r14 1000× probe read
-    a 1.5 M-key store in 27.3 s); auditing a live CEP deployment's
+    parallel without replaying the stream (a 1.5 M-key store read in
+    27.3 s at 1000× scale); auditing a live CEP deployment's
     automata at 100 TB touches only the checkpoint.
     """
     pat = Pattern(
@@ -2695,7 +2141,7 @@ def stream_state_reader_automaton(
     )
     ckpt = scratch_dir("flws_statereader_cep_")
     # the shared launcher owns the column rules / machine wiring —
-    # never copy its launch block (review r15)
+    # never copy its launch block
     pattern_stream(spark, sf_dir, pat, checkpoint=ckpt)
     state = spark.read.format("statestore").option("path", ckpt).load()
     g = "value.groupState"
@@ -2706,7 +2152,7 @@ def stream_state_reader_automaton(
         # as cur_nul=1 — decode BOTH back to SQL NULL or a user
         # whose every event is held above the final watermark (no
         # folded run) would emit '' where the oracle's outer join
-        # yields NULL (review r15).
+        # yields NULL.
         F.when(
             F.col(f"{g}.cur_len").isNotNull()
             & (F.col(f"{g}.cur_nul") == 0),
@@ -2725,27 +2171,9 @@ def stream_state_reader_automaton(
 
 @query(
     "pattern_detect_group_times_stream",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, ts, event_id, event_type,
-             LAG(event_type, 1) OVER w AS c1,
-             LAG(event_type, 2) OVER w AS c2,
-             LAG(event_type, 3) OVER w AS c3,
-             LAG(ts, 3)         OVER w AS ts0
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT user_id,
-           event_id AS anchor_event,
-           epoch_us(ts0) AS pattern_start_us,
-           epoch_us(ts)  AS pattern_end_us
-    FROM seq
-    WHERE event_type = 'click'
-      AND c1 = 'view' AND c2 = 'click' AND c3 = 'view'
-      AND ts <= ts0 + INTERVAL 72 HOUR
-      AND epoch_us(ts) // 1000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "pattern_detect_group_times", folded(PATTERN_END_US), PATTERN_US
+    ),
 )
 def pattern_detect_group_times_stream(
     spark: SparkSession, sf_dir: str
@@ -2756,9 +2184,8 @@ def pattern_detect_group_times_stream(
     BEFORE compilation, so compile_suffix_stream sees a flat
     four-step fixed pattern — zero machine change (the same
     sugar-not-machinery story as the batch half), W = 3 folded
-    predecessors per anchor. Oracle = the batch lag conjunction + the
-    ms-aligned anchor-folded filter (per-event anchoring's original
-    emission boundary — nothing ranges over an open run).
+    predecessors per anchor, each decided at its own fold (nothing
+    ranges over an open run).
     """
     return suffix_pattern_stream(spark, sf_dir, DETECT_GROUP_TIMES).select(
         "user_id",

@@ -27,21 +27,13 @@ watermark fold and settle rules with their tie contract, the eviction
 floor and the timer clamp; the docstrings below state only what each
 machine adds.
 
-Oracle status (round 5): under bounded replay the emission set of most
-twins is DETERMINISTIC — append mode emits exactly the panes/sessions
-closed by the final watermark (max event ts − delay), stream-stream
-joins emit all inner matches plus null-padded rows for closed panes,
-and single-batch UPDATE-mode queries fire each group once with final
-counts. Those twins now carry full DuckDB oracles (the batch oracle
-plus the closed-before-watermark filter), verified hash-equal at
-sf0.001/0.01/0.1; the pytest parity suite remains as the semantic
-cross-check. Round 6 added stream_allowed_lateness_reemit: its
-two-batch emission log is also deterministic (UPDATE mode emits
-exactly the panes changed per batch), so "batch sequencing" was not a
-barrier there after all, and stream_watermark_skew followed in the
-round-6 tail (the min-policy emission set is the lagging frontier's
-closed panes — SQL-derivable; only the lag METRIC is progress-only).
-Still rows-only by design: window_large_day_stream
+Oracles: under bounded replay each twin's emission set is
+deterministic. Append mode emits exactly what the final watermark
+(max event ts − delay) closed, stream-stream joins emit all inner
+matches plus null-padded rows for closed panes, and UPDATE mode emits
+exactly the groups each batch changed. A twin with a batch key of the
+same name derives its oracle from that key (twins.py); the others
+carry their own SQL. Rows-only by design: window_large_day_stream
 (approx_count_distinct — the estimate is implementation-defined),
 source_rate_stream (wall-clock), and stream_late_drop, whose point is
 Spark's runtime drop accounting (numRowsDroppedByWatermark exists
@@ -85,6 +77,14 @@ from .keyed import (
     keyed_fold,
     settle_machine,
     timer_ms,
+)
+from .twins import closed, event_us, folded, settled, twin_oracle
+from .windows import (
+    session_agg,
+    session_dynamic_gap_agg,
+    sliding_agg,
+    tumbling_agg,
+    tumbling_offset_agg,
 )
 
 _SINK_SEQ = 0
@@ -201,17 +201,15 @@ def run_to_memory(
     after. A stateful operator opens/commits one state store PER
     shuffle partition PER micro-batch, so at bounded-replay scale the
     32-partition batch default spends most wall time on store
-    lifecycle, not data (r3 profile: 73s → the store count is the
-    driver). The partition count is baked into each checkpoint; every
+    lifecycle, not data (the store count drives a replay's wall).
+    The partition count is baked into each checkpoint; every
     run here uses a fresh checkpoint, so lowering it is safe. On a real
     cluster this is sized to state volume ÷ executor memory instead.
 
     ``checkpoint`` overrides the auto-generated checkpoint location —
     the state-reader keys pass their own so they can re-open the
-    finished query's state store offline (ADVICE r13 item 2: the
-    reader formerly hand-copied this whole launch block to learn the
-    path, and the copy had already drifted — it skipped the
-    LAST_STATE_METRICS capture).
+    finished query's state store offline without copying this launch
+    block.
     """
     global _SINK_SEQ, LAST_STATE_METRICS, LAST_STATE_OP_COUNTS
     _SINK_SEQ += 1
@@ -243,80 +241,27 @@ def run_to_memory(
 
 @query(
     "window_tumbling_agg_stream",
-    oracle="""
-    SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS w_start,
-           event_type,
-           COUNT(*)             AS n,
-           ROUND(SUM(value), 4) AS sum_value
-    FROM events
-    WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-          < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    GROUP BY date_trunc('hour', ts), event_type
-    """,
+    oracle=twin_oracle(
+        "window_tumbling_agg",
+        closed("CAST(b.w_start AS TIMESTAMP) + INTERVAL 1 HOUR"),
+    ),
 )
 def window_tumbling_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of window_tumbling_agg (10-min watermark)."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            F.col("w.start").cast("string").alias("w_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    return run_to_memory(spark, agg, mode="append")
+    return run_to_memory(spark, tumbling_agg(ev))
 
 
 @query(
     "window_session_agg_stream",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, epoch_us(ts) AS us,
-             epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS gap_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, ts, event_id, us,
-             CASE WHEN gap_us IS NULL OR gap_us >= 1800000000 THEN 1 ELSE 0 END AS is_new
-      FROM ordered
-    ), sessions AS (
-      SELECT user_id, ts, us,
-             SUM(is_new) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    )
-    SELECT user_id,
-           CAST(MIN(ts) AS VARCHAR)                              AS s_start,
-           CAST(make_timestamp(MAX(us) + 1800000000) AS VARCHAR) AS s_end,
-           COUNT(*)                                              AS n_events,
-           MAX(us) + 1800000000 - MIN(us)                        AS duration_us
-    FROM sessions
-    GROUP BY user_id, sess_id
-    HAVING make_timestamp(MAX(us) + 1800000000)
-           < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    """,
+    oracle=twin_oracle(
+        "window_session_agg", closed("CAST(b.s_end AS TIMESTAMP)")
+    ),
 )
 def window_session_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of window_session_agg (session_window + watermark)."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("string").alias("s_start"),
-            F.col("w.end").cast("string").alias("s_end"),
-            "n_events",
-            (F.unix_micros("w.end") - F.unix_micros("w.start")).alias("duration_us"),
-        )
-    )
-    return run_to_memory(spark, agg, mode="append")
+    return run_to_memory(spark, session_agg(ev))
 
 
 @query("window_large_day_stream")  # rows-only
@@ -375,21 +320,7 @@ _OUT_SCHEMA = StructType(
 
 @query(
     "stateful_count_session_stream",
-    oracle="""
-    WITH seg AS (
-      SELECT event_id, user_id, ts,
-             SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS seg_id
-      FROM events
-    )
-    SELECT event_id, user_id,
-           CAST(ROW_NUMBER() OVER (
-             PARTITION BY user_id, seg_id ORDER BY ts, event_id
-           ) AS INTEGER) AS n_since_signup
-    FROM seg
-    """,
+    oracle=twin_oracle("stateful_count_session"),
 )
 def stateful_count_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of stateful_count_session via applyInPandasWithState.
@@ -431,19 +362,10 @@ def stateful_count_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "window_sliding_agg_stream",
-    oracle="""
-    WITH slid AS (
-      SELECT user_id,
-             make_timestamp((epoch_us(ts) // 900000000) * 900000000
-                            - CAST(k.k AS BIGINT) * 900000000) AS w_start
-      FROM events, (SELECT UNNEST([0, 1, 2, 3]) AS k) k
-    )
-    SELECT CAST(w_start AS VARCHAR) AS w_start, user_id, COUNT(*) AS n
-    FROM slid
-    WHERE w_start + INTERVAL 1 HOUR
-          < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    GROUP BY w_start, user_id
-    """,
+    oracle=twin_oracle(
+        "window_sliding_agg",
+        closed("CAST(b.w_start AS TIMESTAMP) + INTERVAL 1 HOUR"),
+    ),
 )
 def window_sliding_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of window_sliding_agg (1h window / 15min slide).
@@ -452,23 +374,12 @@ def window_sliding_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark fan-out analogue of Flink's SlidingEventTimeWindows.
     """
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").cast("string").alias("w_start"), "user_id", "n")
-    )
-    return run_to_memory(spark, agg, mode="append")
+    return run_to_memory(spark, sliding_agg(ev))
 
 
 @query(
     "join_interval_stream",
-    oracle="""
-    SELECT e1.event_id AS signup_id, e2.event_id AS purchase_id, e1.user_id
-    FROM events e1 JOIN events e2
-      ON e1.user_id = e2.user_id
-     AND e1.event_type = 'signup' AND e2.event_type = 'purchase'
-     AND e2.ts >= e1.ts AND e2.ts <= e1.ts + INTERVAL 1 HOUR
-    """,
+    oracle=twin_oracle("join_interval"),
 )
 def join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of join_interval: stream-stream inner join with an
@@ -538,22 +449,14 @@ def window_early_fire_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # transformWithStateInPandas (the successor stateful API, closest to
 # Flink's KeyedProcessFunction with typed state + timers) requires
 # google.protobuf for its driver-worker protocol, which this container
-# does not ship — gate the key on that dependency (brief: stub or gate
-# anything the environment lacks behind an import-try).
-#
-# Round 10 (VERDICT r9 item 4): the registration condition is now
-# PINNED by tests/test_streaming_parity.py::
+# does not ship — gate the key on that dependency. The condition is
+# pinned by tests/test_streaming_parity.py::
 # test_tws_registration_tracks_protobuf_presence — registered ⇔
-# google.protobuf importable, asserted both directions, and on a
-# protobuf-present box the test RUNS the tWS path and requires
-# cell-identical output to the applyInPandasWithState twin, so the
-# runtime path is exercised the moment the dependency appears instead
-# of silently never. Unconditional registration with a call-time
-# raise was considered and rejected: a registered key that throws
-# when the driver's rotating window reaches it records a permanent
-# ERR on the correctness board for an environmental absence this
-# engine cannot fix — the pinned-test arm of the VERDICT's "done"
-# criterion documents exactly why not.
+# google.protobuf importable, asserted both directions, and with
+# protobuf present the test runs the tWS path against the
+# applyInPandasWithState twin. Unconditional registration with a
+# call-time raise would make the key fail on every host without
+# protobuf, an environmental absence this engine cannot fix.
 try:
     from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
 
@@ -682,7 +585,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     if state["gen"] < 0:
         # Zero micro-batches fired (empty replay): return the target's
         # schema with no rows instead of reading a generation that was
-        # never written (ADVICE r1: 'g-1' path error).
+        # never written.
         return spark.createDataFrame(
             [], "user_id long, event_type string, n long, sum_value double"
         )
@@ -697,13 +600,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_window_tumbling_stream",
-    oracle="""
-    SELECT e1.event_id AS click_id, e2.event_id AS purchase_id, e1.user_id
-    FROM (SELECT * FROM events WHERE event_type = 'click') e1
-    JOIN (SELECT * FROM events WHERE event_type = 'purchase') e2
-      ON e1.user_id = e2.user_id
-     AND date_trunc('hour', e1.ts) = date_trunc('hour', e2.ts)
-    """,
+    oracle=twin_oracle("join_window_tumbling"),
 )
 def join_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of join_window_tumbling: stream-stream inner join
@@ -975,7 +872,7 @@ def make_ttl_machine() -> Machine:
 def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed-state TTL with idle-key eviction — Flink's
     ``StateTtlConfig`` (OnCreateAndWrite update type, 1h TTL) mapped
-    onto event-time timers (VERDICT r11 item 7 / ADVICE r11 item 4).
+    onto event-time timers.
 
     Per user the state is a running (last_seen, n_events) blob
     refreshed by every write. Two expiry paths, both discarding
@@ -1004,11 +901,9 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     its deadline strictly passed (timer path:
     ``(last + ttl)//1000 < final_wm_ms``). A gap ≥ TTL whose proving
     successor event is still HELD at replay end evicts on neither
-    path — the r12 continuation review caught the oracle emitting
-    such generations unconditionally (``gen < maxg`` with no
-    watermark guard) while the hold-buffer handler correctly waits;
-    the oracle now applies the observability rule, and the repro is
-    pinned in tests. State still live at replay end is never emitted
+    path, and the oracle must not emit such generations (a ``gen <
+    maxg`` test with no watermark guard would; the repro is pinned in
+    tests). State still live at replay end is never emitted
     (tests/test_streaming_parity.py pins that evicted keys emit
     nothing after their TTL and that a post-eviction generation
     restarts its count from zero — the state was really dropped, not
@@ -1025,14 +920,6 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "event_id")
     )
     return keyed_fold(ev, "user_id", make_ttl_machine())
-
-
-# The streaming CEP automaton lives in cep_stream.py since round 12:
-# the round-11 hardwired V+ C{1,3} P+ handler (formerly _pmr_recognize
-# here) generalized into compile_stream, which compiles any
-# greedy-strategy Pattern spec from operators/cep.py into the same
-# watermark-buffered fold. pattern_match_recognize_stream and
-# pattern_match_alternation_stream are registered there.
 
 
 @query(
@@ -1111,7 +998,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-side sources Catalyst pushes each filter below its
     watermark node, making the join watermark min(max click ts, max
     purchase ts) − delay — hours behind the stream end, leaving the
-    last closed panes unflushed (the r3 deterministic parity failure).
+    last closed panes unflushed (a deterministic parity failure).
     Sharing the source also means one scan instead of two. Rows in
     panes the final watermark has not passed remain unemitted — exactly
     the suffix the parity test excludes (tests/test_streaming_parity.py
@@ -1174,7 +1061,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     window coGroup with outer emission on both sides).
 
     Same load-bearing plan shape as the left-outer key (see its
-    docstring, r4): ONE shared watermarked source so the watermark
+    docstring): ONE shared watermarked source so the watermark
     tracks the full stream; state per side is pane-scoped and
     watermark-evicted, so at 100 TB the join state is O(open panes ×
     active keys), independent of stream length.
@@ -1295,13 +1182,12 @@ def stream_watermark_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     to arrive past-watermark (stream_late_drop shows that fate).
     tests/test_streaming_parity.py pins both pane accountings.
 
-    SQL oracle since round 6 (upgraded from rows-only): under bounded
-    replay the min-policy emission set is deterministic — the query
-    watermark is the LAGGING frontier (max odd-user ts ≤ max ts − 48h)
-    − 10min, and the emitted panes are exactly those closed before it,
-    counted over the replayed subset (all even-user rows + odd-user
-    rows up to the lag cutoff). What stays beyond SQL's reach is only
-    the runtime lag METRIC (per-source watermark gap in query
+    Under bounded replay the min-policy emission set is deterministic —
+    the query watermark is the LAGGING frontier (max odd-user ts ≤ max
+    ts − 48h) − 10min, and the emitted panes are exactly those closed
+    before it, counted over the replayed subset (all even-user rows +
+    odd-user rows up to the lag cutoff). What stays beyond SQL's reach
+    is only the runtime lag METRIC (per-source watermark gap in query
     progress), which the pytest accounting covers.
 
     At scale the two replay dirs are Kafka partitions and the lag is
@@ -1384,7 +1270,7 @@ def stream_allowed_lateness_reemit(spark: SparkSession, sf_dir: str) -> DataFram
     fires AGAIN with its updated count. foreachBatch logs each
     emission with its batch id; the returned frame is that log
     (w_start, batch_id, n), so refires are rows, not prose. The log is
-    SQL-derivable (round 6, upgraded from rows-only): UPDATE mode
+    SQL-derivable: UPDATE mode
     emits exactly the panes CHANGED per batch, so batch 0 is every
     pane with an on-time row at its on-time count, and batch 1 is
     every pane with a late row at its cumulative count — the 45-day
@@ -1656,22 +1542,10 @@ _TOPN_OUT_SCHEMA = StructType(
 
 @query(
     "window_topn_stream",
-    oracle="""
-    SELECT d_start, user_id, n, rn FROM (
-      SELECT CAST(CAST(date_trunc('day', ts) AS TIMESTAMP) AS VARCHAR)
-               AS d_start,
-             user_id, COUNT(*) AS n,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY date_trunc('day', ts)
-               ORDER BY COUNT(*) DESC, user_id ASC
-             ) AS INTEGER) AS rn
-      FROM events
-      GROUP BY date_trunc('day', ts), user_id
-    )
-    WHERE rn <= 2
-      AND epoch_us(CAST(d_start AS TIMESTAMP)) // 1000 + 86400000
-          <= epoch_us((SELECT MAX(ts) FROM events)) // 1000 - 600000
-    """,
+    oracle=twin_oracle(
+        "window_topn",
+        folded("epoch_us(CAST(b.d_start AS TIMESTAMP) + INTERVAL 1 DAY)"),
+    ),
 )
 def window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of window_topn — Flink SQL's *window Top-N*
@@ -1697,12 +1571,9 @@ def window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     one day per task, also Flink's layout for a PARTITION BY
     window-only rank; with a secondary partition key (Flink's
     ``PARTITION BY window, key``) the same handler shards by
-    (window, key). The oracle is the batch key's rank SQL plus the
-    ms-aligned window-closed-before-final-watermark filter
-    (``end_ms <= final_wm_ms`` — the timer arms at ``end_ms − 1``,
-    firing once the watermark reaches the end, the same boundary the
-    built-in windowed aggregation emits at: its twin's oracle uses
-    the equivalent strict ``<`` at µs precision).
+    (window, key). A day emits at ``end_ms <= wm_ms``: the timer
+    arms at ``end_ms − 1`` and fires once the watermark reaches the
+    end, the boundary the built-in windowed aggregation emits at.
     """
     ev = (
         _events_stream(spark, sf_dir)
@@ -2007,40 +1878,9 @@ def window_count_sliding_stream(
 
 @query(
     "window_session_dynamic_gap_stream",
-    oracle="""
-    WITH gapped AS (
-      SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             CASE event_type WHEN 'click' THEN 1800000000
-                             WHEN 'view'  THEN 3600000000
-                             ELSE 900000000 END AS gap_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, event_id, us, gap_us,
-             CASE WHEN us >= MAX(us + gap_us) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) OR MAX(us + gap_us) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) IS NULL THEN 1 ELSE 0 END AS is_new
-      FROM gapped
-    ), sessions AS (
-      SELECT user_id, us, gap_us,
-             SUM(is_new) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    )
-    SELECT user_id,
-           CAST(make_timestamp(MIN(us)) AS VARCHAR)          AS s_start,
-           CAST(make_timestamp(MAX(us + gap_us)) AS VARCHAR) AS s_end,
-           COUNT(*)                                          AS n_events
-    FROM sessions
-    GROUP BY user_id, sess_id
-    HAVING make_timestamp(MAX(us + gap_us))
-           < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    """,
+    oracle=twin_oracle(
+        "window_session_dynamic_gap", closed("CAST(b.s_end AS TIMESTAMP)")
+    ),
 )
 def window_session_dynamic_gap_stream(
     spark: SparkSession, sf_dir: str
@@ -2050,19 +1890,12 @@ def window_session_dynamic_gap_stream(
     Flink's ``SessionWindowTimeGapExtractor``) through Spark's
     NATIVE dynamic-gap ``session_window`` in append mode, which
     merges overlapping panes incrementally in state and emits each
-    merged session once the watermark passes its end. The oracle is
-    the batch key's running-max island SQL (a deliberately different
-    formulation of the merge rule) plus the same strict
-    closed-before-final-watermark filter window_session_agg_stream
-    uses — so the hash check pins Spark's incremental merge against
-    an independent derivation under streaming emission semantics.
-    (That filter is µs-strict like the fixed-gap twin's — the
-    established convention for the BUILT-IN operators, empirically
-    stable since r5; a session end landing inside the final
-    watermark's sub-millisecond window is the same measure-zero
-    residual the CEP ms-tie note documents. The hand-built handlers
-    ms-align their filters instead because their eviction test is
-    explicit.)
+    merged session once the watermark passes its end. The batch
+    key's oracle is a running-max island SQL (a deliberately different
+    formulation of the merge rule), so the hash check pins Spark's
+    incremental merge against an independent derivation. A session
+    end landing inside the final watermark's sub-millisecond window
+    is the same measure-zero residual as the CEP ms tie.
 
     Scale: one keyed shuffle; state per key is one interval per open
     session (merge is incremental), evicted at emission — identical
@@ -2070,22 +1903,7 @@ def window_session_dynamic_gap_stream(
     expression fused into the scan projection.
     """
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    gap = (
-        F.when(F.col("event_type") == "click", "30 minutes")
-        .when(F.col("event_type") == "view", "60 minutes")
-        .otherwise("15 minutes")
-    )
-    agg = (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("string").alias("s_start"),
-            F.col("w.end").cast("string").alias("s_end"),
-            "n_events",
-        )
-    )
-    return run_to_memory(spark, agg, mode="append")
+    return run_to_memory(spark, session_dynamic_gap_agg(ev))
 
 
 #: join_asof_stream keyed state: the settled side compressed to ONE
@@ -2156,23 +1974,9 @@ def compile_asof_stream() -> Machine:
 
 @query(
     "join_asof_stream",
-    oracle="""
-    SELECT error_id, click_id FROM (
-      SELECT e.event_id AS error_id, c.event_id AS click_id,
-             epoch_us(e.ts) AS e_us,
-             ROW_NUMBER() OVER (
-               PARTITION BY e.event_id
-               ORDER BY c.ts DESC NULLS LAST, c.event_id DESC NULLS LAST
-             ) AS rn
-      FROM (SELECT * FROM events WHERE event_type = 'error') e
-      LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON c.user_id = e.user_id AND c.ts <= e.ts
-    ) WHERE rn = 1
-      AND e_us // 1000
-          < epoch_us((SELECT MAX(ts) FROM events
-                      WHERE event_type IN ('click', 'error'))) // 1000
-            - 600000
-    """,
+    oracle=twin_oracle(
+        "join_asof", settled(event_us("error_id"), "click", "error")
+    ),
 )
 def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of join_asof — the event-time TEMPORAL join
@@ -2190,12 +1994,10 @@ def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Classes filter before the keyed shuffle with the watermark
     declared on the filtered stream (the
-    pattern_detect_notfollowedby_stream convention — the oracle's
-    final-watermark term ranges over click/error rows). Ties match
+    pattern_detect_notfollowedby_stream convention, so the watermark
+    ranges over click/error rows). Ties match
     the batch key: a click at the error's exact timestamp wins
-    (``c_us <= e_us``), higher event_id among equal-ts clicks. Oracle
-    = the batch as-of SQL + the ms-aligned settled-before-final-
-    watermark filter on the error side.
+    (``c_us <= e_us``), higher event_id among equal-ts clicks.
     """
     ev = (
         _events_stream(spark, sf_dir)
@@ -2208,17 +2010,10 @@ def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_tumbling_offset_stream",
-    oracle="""
-    SELECT CAST(CAST(date_trunc('hour', ts - INTERVAL 15 MINUTE) AS TIMESTAMP)
-                + INTERVAL 15 MINUTE AS STRING) AS w_start,
-           event_type,
-           COUNT(*) AS n
-    FROM events
-    WHERE CAST(date_trunc('hour', ts - INTERVAL 15 MINUTE) AS TIMESTAMP)
-          + INTERVAL 75 MINUTE
-          < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    GROUP BY 1, 2
-    """,
+    oracle=twin_oracle(
+        "window_tumbling_offset",
+        closed("CAST(b.w_start AS TIMESTAMP) + INTERVAL 1 HOUR"),
+    ),
 )
 def window_tumbling_offset_stream(
     spark: SparkSession, sf_dir: str
@@ -2228,25 +2023,11 @@ def window_tumbling_offset_stream(
     through the native ``window(ts, 1h, 1h, 15min)`` in append mode:
     the startTime knob shifts pane boundaries, watermark emission is
     otherwise identical to the unshifted twin (a pane emits once the
-    watermark passes its SHIFTED end — the oracle filter adds the
-    15-minute offset to the hour boundary: 60 + 15 minutes past the
-    shifted truncation). Same single-shuffle shape and per-pane state
-    bound as window_tumbling_agg_stream.
+    watermark passes its SHIFTED end). Same single-shuffle shape and
+    per-pane state bound as window_tumbling_agg_stream.
     """
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(
-            F.window("ts", "1 hour", "1 hour", "15 minutes").alias("w"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").cast("string").alias("w_start"),
-            "event_type",
-            "n",
-        )
-    )
-    return run_to_memory(spark, agg, mode="append")
+    return run_to_memory(spark, tumbling_offset_agg(ev))
 
 
 @query(
@@ -2309,24 +2090,9 @@ def window_cascading_rollup_stream(
 
 @query(
     "ts_ohlc_bars_stream",
-    oracle="""
-    SELECT DISTINCT
-           CAST(CAST(date_trunc('day', ts) AS TIMESTAMP) AS VARCHAR)
-             AS bar_day,
-           event_type,
-           ROUND(FIRST_VALUE(value) OVER w, 4) AS open,
-           ROUND(MAX(value) OVER w, 4)         AS high,
-           ROUND(MIN(value) OVER w, 4)         AS low,
-           ROUND(LAST_VALUE(value) OVER w, 4)  AS close
-    FROM events
-    WINDOW w AS (
-      PARTITION BY date_trunc('day', ts), event_type
-      ORDER BY ts, event_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-    )
-    QUALIFY CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY
-            < (SELECT MAX(ts) FROM events) - INTERVAL 10 MINUTE
-    """,
+    oracle=twin_oracle(
+        "ts_ohlc_bars", closed("CAST(b.bar_day AS TIMESTAMP) + INTERVAL 1 DAY")
+    ),
 )
 def ts_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ts_ohlc_bars — daily OHLC bars maintained
@@ -2339,7 +2105,7 @@ def ts_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate state is four scalars + the two order keys per
     bar — O(1), vs the buffered-fold machinery order-dependent
     operators otherwise need. Emission at watermark close of the day
-    pane; oracle = the batch full-frame SQL + the closed-day filter.
+    pane.
     """
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     key = F.struct(F.col("ts"), F.col("event_id"))
@@ -2374,9 +2140,7 @@ def ts_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed state read back as a DataFrame — the Flink *State
     Processor API* analogue (reading keyed state out of a savepoint),
-    via Spark's ``statestore`` data source (round 13; upgrades the
-    carried 'state rescaling' gap from pure documentation to a
-    half-capability).
+    via Spark's ``statestore`` data source.
 
     A bounded replay runs a keyed streaming aggregation (per-user
     event count, UPDATE mode) against a fresh checkpoint; the
@@ -2427,19 +2191,19 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_state_reader_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPOSITE state read back from a checkpoint (round 14 — VERDICT
-    r13 item 5): where stream_state_reader reads a flat keyed count,
-    this key reads a WINDOWED aggregation's state store, whose key is
-    a nested struct — ``(window(start ts, end ts), event_type)`` —
-    and whose value carries two aggregate buffers (count, sum). The
-    ``statestore`` source decodes both levels schema-faithfully; the
-    live query's own eviction defines the expected relation exactly:
-    a watermark-evicted tumbling aggregation retains precisely the
-    windows the final watermark has NOT closed (end > MAX(ts) − 10
-    min; at every fixture SF the boundary window is strictly clear of
-    the watermark, probed r14), with each retained window's FULL
-    count/sum — so the oracle is the batch GROUP BY restricted to
-    those tail windows, ms-aligned like every streaming oracle here.
+    """COMPOSITE state read back from a checkpoint: where
+    stream_state_reader reads a flat keyed count, this key reads a
+    WINDOWED aggregation's state store, whose key is a nested struct —
+    ``(window(start ts, end ts), event_type)`` — and whose value carries
+    two aggregate buffers (count, sum). The ``statestore`` source
+    decodes both levels schema-faithfully; the live query's own eviction
+    defines the expected relation exactly: a watermark-evicted tumbling
+    aggregation retains precisely the windows the final watermark has
+    NOT closed (end > MAX(ts) − 10 min; at every fixture SF the boundary
+    window is strictly clear of the watermark), with each retained
+    window's FULL count/sum — so the oracle is the batch GROUP BY
+    restricted to those tail windows, ms-aligned like every streaming
+    oracle here.
     tests/test_streaming_parity.py additionally pins the decode of an
     ``applyInPandasWithState`` automaton state blob (arrays inside
     the value struct) — the compiled CEP machine's own schema — so
@@ -2508,8 +2272,8 @@ def stream_state_reader_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_state_reader_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SESSION-window state read back from a checkpoint (round 15 —
-    completes the state-reader QUARTET: flat keyed count / tumbling
+    """SESSION-window state read back from a checkpoint (the fourth
+    state reader after flat keyed count / tumbling
     composite / user-defined automaton blob / MERGING session
     windows, the one store class whose key is not a static grouping
     but a dynamically-merged interval). Flink analogue: the State
@@ -2521,7 +2285,7 @@ def stream_state_reader_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations); the ``statestore`` source then decodes the
     session store OFFLINE: key = (user_id, sessionStartTime), value
     carries the merged ``session_window`` struct and the aggregate
-    buffer (probed this round; one retained session at sf0.001).
+    buffer (one retained session at sf0.001).
     Retention rule: a streaming session aggregation stores EVERY
     admitted event's session (merging as it goes) and emits/evicts a
     session once the watermark passes its end, so the final store

@@ -100,9 +100,13 @@ def pane_slice_user_counts(
 def window_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling window × event_type (TumblingEventTimeWindows)."""
     prep(spark)
+    return tumbling_agg(table(spark, sf_dir, "events"))
+
+
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """window_tumbling_agg over ``events``: a table or a watermarked stream."""
     return (
-        table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -140,9 +144,13 @@ def window_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     production stream would use, hash-equal.
     """
     prep(spark)
+    return sliding_agg(table(spark, sf_dir, "events"))
+
+
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """window_sliding_agg over ``events``: a table or a watermarked stream."""
     return (
-        table(spark, sf_dir, "events")
-        .groupBy(
+        events.groupBy(
             F.window(
                 "ts", f"{US_HOUR} microseconds", f"{US_15MIN} microseconds"
             ).alias("w"),
@@ -190,9 +198,15 @@ def window_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (EventTimeSessionWindows.withGap). Spark ``session_window`` merges
     half-open [ts, ts+gap) panes; session end = last ts + gap."""
     prep(spark)
+    return session_agg(table(spark, sf_dir, "events"))
+
+
+def session_agg(events: DataFrame) -> DataFrame:
+    """window_session_agg over ``events``: a table or a watermarked stream."""
     return (
-        table(spark, sf_dir, "events")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        events.groupBy(
+            F.session_window("ts", "30 minutes").alias("w"), "user_id"
+        )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -632,9 +646,14 @@ def window_tumbling_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same offset as its 4th argument (startTime).
     """
     prep(spark)
+    return tumbling_offset_agg(table(spark, sf_dir, "events"))
+
+
+def tumbling_offset_agg(events: DataFrame) -> DataFrame:
+    """window_tumbling_offset over ``events``: a table or a
+    watermarked stream."""
     return (
-        table(spark, sf_dir, "events")
-        .groupBy(
+        events.groupBy(
             F.window("ts", "1 hour", "1 hour", "15 minutes").alias("w"),
             "event_type",
         )
@@ -769,14 +788,19 @@ def window_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-gap session.
     """
     prep(spark)
+    return session_dynamic_gap_agg(table(spark, sf_dir, "events"))
+
+
+def session_dynamic_gap_agg(events: DataFrame) -> DataFrame:
+    """window_session_dynamic_gap over ``events``: a table or a
+    watermarked stream."""
     gap = (
         F.when(F.col("event_type") == "click", "30 minutes")
         .when(F.col("event_type") == "view", "60 minutes")
         .otherwise("15 minutes")
     )
     return (
-        table(spark, sf_dir, "events")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",

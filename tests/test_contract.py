@@ -174,6 +174,43 @@ def test_oracle_sql_subset_and_aligned():
     assert list(oracles) == [k for k in q if k in oracles]
 
 
+def test_stream_twins_derive_their_oracle_or_say_why():
+    # A *_stream key with a same-named batch key either derives its
+    # oracle as SELECT <map> FROM (<batch ORACLES text>) AS b WHERE
+    # <closing rule at the final watermark> (or reads the batch oracle
+    # as it is), or keeps its own with a recorded reason. The derived
+    # form contains the batch SQL verbatim, so it reads no builder and
+    # no Pattern.
+    from flink_large_window_spark.streaming.twins import OWN_ORACLE
+
+    oracles = api.oracle_sql()
+    twins = {
+        k: k[: -len("_stream")]
+        for k in REGISTRY
+        if k.endswith("_stream") and k[: -len("_stream")] in REGISTRY
+    }
+    assert set(OWN_ORACLE) <= set(twins)
+    derived = []
+    for key, batch in twins.items():
+        sql, base = oracles.get(key), oracles.get(batch)
+        wrapped = f" FROM (\n{base}\n) AS b\nWHERE "
+        is_derived = base is not None and (
+            sql == base
+            or (
+                sql is not None
+                and sql.startswith("SELECT ")
+                and wrapped in sql
+                and "(SELECT MAX(ts) FROM events" in sql.split(wrapped)[1]
+            )
+        )
+        assert is_derived != (key in OWN_ORACLE), key
+        if is_derived:
+            derived.append(key)
+        else:
+            assert OWN_ORACLE[key].strip(), key
+    assert len(derived) >= 25, derived
+
+
 def test_recheck_keys_have_sql_oracles():
     # The point of a window slot is hash-match evidence, except for the
     # declared rows-only keys, whose rows>0 evidence also ages.

@@ -99,6 +99,7 @@ def test_sliding_prebucket_matches_native(spark):
         US_15MIN,
         US_HOUR,
         pane_slice_user_counts,
+        sliding_agg,
     )
     from flink_large_window_spark.tables import table
 
@@ -108,15 +109,7 @@ def test_sliding_prebucket_matches_native(spark):
     assert "Generate" in p_pre and "Expand" not in p_pre
 
     # ratio-4 rollup == native ratio-4 window
-    native = (
-        ev.groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), "user_id"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").cast("string").alias("w_start"), "user_id", "n"
-        )
-    )
+    native = sliding_agg(ev)
     assert prebucket.exceptAll(native).count() == 0
     assert native.exceptAll(prebucket).count() == 0
 

@@ -83,17 +83,15 @@ def test_round_divergence_is_understood(spark):
 def test_session_split_semantics(spark, offsets_us):
     """Session windows split exactly when gap >= 30 min — the pinned
     contract the window_session_agg oracle reproduces."""
+    from flink_large_window_spark.streaming.windows import session_agg
+
     base = 1_704_067_200_000_000  # 2024-01-01 UTC in µs
     ts = sorted(base + sum(offsets_us[: i + 1]) for i in range(len(offsets_us)))
     rows = [(1, t) for t in ts]
     df = spark.createDataFrame(rows, "user_id long, us long").select(
         "user_id", F.timestamp_micros(F.col("us")).alias("ts")
     )
-    sessions = (
-        df.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+    sessions = session_agg(df).collect()
     # reference: gaps-and-islands split at >= 30 min
     gap_us = 30 * 60 * 1_000_000
     n_sessions, prev = 0, None
@@ -102,7 +100,7 @@ def test_session_split_semantics(spark, offsets_us):
             n_sessions += 1
         prev = t
     assert len(sessions) == n_sessions
-    assert sum(r["n"] for r in sessions) == len(ts)
+    assert sum(r["n_events"] for r in sessions) == len(ts)
 
 
 def test_hash_sampling_partition_invariant(spark):
